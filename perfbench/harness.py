@@ -293,6 +293,10 @@ def _session(tmp_root: str):
     conf = dict(RETAIN_CONF)
     conf["spark.local.dir"] = os.path.join(tmp_root, "spark-local")
     conf["spark.sql.warehouse.dir"] = os.path.join(tmp_root, "warehouse")
+    # the JVM's temp files go under tmp_root too; without perf data it
+    # keeps no hsperfdata file in /tmp
+    conf["spark.driver.extraJavaOptions"] = \
+        f"-XX:-UsePerfData -Djava.io.tmpdir={tmp_root}"
     return get_spark("perfbench", extra_conf=conf)
 
 

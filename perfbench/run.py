@@ -1,14 +1,15 @@
 """Seeded benchmark for the engine: one workload per run.
 
     python3 perfbench/run.py --workload nfl_pressure --seed 1 \\
-        --seconds 10 --trace 0
+        --seconds 4 --trace 0
 
 Run from the repository root. The last stdout line is the result
 object ``{"correct", "attempted", "failed", "metrics"}``; the line
 before it is a compact report (set-up breakdown, input properties,
-failed_frac, tail percentile). Everything the run writes goes under
-``.perfbench_tmp/`` (removed at exit) and ``.perfbench_out/`` (the
-full report with spans) in the current directory. See README.md.
+latencies, tail, peak RSS, failed_frac). Everything the run writes
+goes under ``.perfbench_tmp/`` (removed at exit) and
+``.perfbench_out/`` (the full report with spans) in the current
+directory. See README.md.
 """
 
 from __future__ import annotations
@@ -59,6 +60,9 @@ def main(argv: list[str]) -> int:
     # every temp file of this process, its Python workers and the
     # engine's own mkdtemp calls lands under tmp_root
     os.environ["TMPDIR"] = tmp_root
+    os.environ["SPARK_LOCAL_DIRS"] = os.path.join(tmp_root, "spark-local")
+    # spark-submit's launcher JVM: no hsperfdata file in /tmp
+    os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     tempfile.tempdir = None
     os.environ["SPARK_GRAFT_CPUS"] = TASK_SLOTS
     sys.path[:0] = [root, HERE]

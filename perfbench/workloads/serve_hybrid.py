@@ -21,7 +21,6 @@ DOCS = 4_000
 K = 10
 FETCH_K = 2 * K           # hybrid_topk's default over-fetch per leg
 PER_REQUEST = 8
-DENSE_CHECK_QUERIES = 32  # fixed pool prefix checked against numpy
 WARMUP_REQUESTS = 2
 WARMUP_OFFSET = 1_000_000
 QUERY_SCHEMA = "query_id long, query_text string, embedding array<float>"
@@ -91,28 +90,19 @@ class ServeHybrid:
         self.build_s = time.perf_counter() - t0
 
     def warmup(self) -> None:
-        """Requests from a range the measured phases never use, then
-        the dense-leg check, which runs the index search once more."""
+        """Requests from a range the measured phases never use."""
         self.start_phase()
         for i in range(WARMUP_OFFSET, WARMUP_OFFSET + WARMUP_REQUESTS):
             payload, _ = self.offer(i)
             self.check(i, self.operate(payload, i, Tracer(False)))
-        self._check_dense_leg()
 
-    def _check_dense_leg(self) -> None:
-        """The index's dense leg over a fixed query subset returns the
-        numpy brute-force cosine top-k."""
-        from big_data_bowl___2023_spark.similarity import ann_index_search
-
-        qs = self._queries(np.arange(DENSE_CHECK_QUERIES))
-        hits = ann_index_search(
-            self.spark, self.index_dir,
-            qs.selectExpr("query_id as doc_id", "embedding"), FETCH_K,
-            vec_col="embedding", id_col="doc_id", exclude_self=False)
+    def _check_dense_leg(self, rows: np.ndarray, dense) -> None:
+        """The dense leg's top-k of every query in a traced request
+        equals the numpy brute-force cosine top-k."""
         got: dict[int, list] = {}
-        for r in hits.orderBy("query_id", "rank").collect():
+        for r in dense.orderBy("query_id", "rank").collect():
             got.setdefault(r.query_id, []).append(r.neighbor_id)
-        for j in range(DENSE_CHECK_QUERIES):
+        for j in rows:
             cos = self._cosines(j)
             ids, top = numpy_topk(cos, self.ids, FETCH_K)
             expect(same_topk(got.get(int(self.q_ids[j]), []), ids, top,
@@ -142,18 +132,20 @@ class ServeHybrid:
             hybrid_topk,
         )
 
+        res = {"rows": self.rows}
         if tracer.enabled:
-            fused = self._traced_legs(queries, tracer)
+            fused, res["dense"] = self._traced_legs(queries, tracer)
         else:
             fused = hybrid_topk(self.corpus, queries, k=K, dense="index",
                                 index_dir=self.index_dir).collect()
-        return {"rows": self.rows,
-                "fused": sorted((r.query_id, r.rank, r.doc_id,
-                                 r.rrf_score) for r in fused)}
+        res["fused"] = sorted((r.query_id, r.rank, r.doc_id, r.rrf_score)
+                              for r in fused)
+        return res
 
-    def _traced_legs(self, queries, tr) -> list:
+    def _traced_legs(self, queries, tr) -> tuple:
         """``hybrid_topk(dense="index")``'s three calls with its
-        arguments, each leg pinned inside its own span."""
+        arguments, each leg pinned inside its own span; returns the
+        fused rows and the pinned dense leg."""
         from pyspark.sql import functions as F
 
         from big_data_bowl___2023_spark.session import pin
@@ -175,14 +167,18 @@ class ServeHybrid:
                 FETCH_K, vec_col="embedding", id_col="doc_id",
                 exclude_self=False))
         with tr.span("similarity.rrf_fuse"):
-            return rrf_fuse(
+            fused = rrf_fuse(
                 [sparse, dense.withColumnRenamed("neighbor_id", "doc_id")],
                 k=K, c=60.0, weights=(1.0, 1.0)).collect()
+        return fused, dense
 
     def check(self, i: int, res: dict) -> None:
         """Per query: exactly k ranked, distinct, score-ordered hits;
         each hit is in the numpy dense top-k or shares a query word
-        (a BM25 hit); and the fusion kept at least one dense hit."""
+        (a BM25 hit); and the fusion kept at least one dense hit. A
+        traced request also checks its dense leg against numpy."""
+        if "dense" in res:
+            self._check_dense_leg(res["rows"], res.pop("dense"))
         by_q: dict[int, list] = {}
         for qid, rank, doc, score in res["fused"]:
             by_q.setdefault(qid, []).append((rank, doc, score))
