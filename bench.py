@@ -397,20 +397,25 @@ def _stream_batch_plan_frames(spark, sf_dir):
     * ``stream_curation_ingest__batch_plan`` — the non-audit chain
       (gates → dedup → history anti-join) as one lazy plan;
     * ``stream_curation_ingest_audit__batch_plan`` — the per-batch
-      audit lineage frame over a RECORDING (non-pinning) hook, so the
-      fused flags boundary and the drop anti-joins are visible in one
-      plan instead of split across pins.
+      audit lineage (``drop_lineage``, the attribution the loop
+      writes) over a RECORDING (non-pinning) hook, so the flag
+      projection and the drop joins are visible in one plan instead
+      of split across pins.
 
     Returns (frames dict, temp base dir — caller removes it)."""
     import tempfile
 
     from pyspark.sql import functions as F
 
+    from big_data_bowl___2023_spark.pipelines.curation import (
+        drop_lineage,
+    )
     from big_data_bowl___2023_spark.sources.io import load_table
     from big_data_bowl___2023_spark.streaming.curation import (
-        _stream_batch_audit,
+        benchmark_shingle_set,
         curate_document_stream,
         make_curation_ingest_batch_fn,
+        stream_gates,
     )
 
     base = tempfile.mkdtemp(prefix="bench_stream_plan_")
@@ -426,19 +431,18 @@ def _stream_batch_plan_frames(spark, sf_dir):
     fn(docs.filter(F.col("doc_id") % 4 == 0), 0)
     batch1 = docs.filter(F.col("doc_id") % 4 == 1)
     history = spark.read.parquet(f"{base}/fps")
+    shingles = benchmark_shingle_set(benchmark)
     plain = curate_document_stream(batch1, history=history,
-                                   benchmark=benchmark, min_words=20)
-    captured: list = []
-
-    def record(key, frame):
-        if key != "stream_input":
-            captured.append((key, frame))
-        return frame
-
+                                   benchmark=benchmark, min_words=20,
+                                   bench_shingles=shingles)
+    captured: dict = {}
     curate_document_stream(batch1, history=history,
                            benchmark=benchmark, min_words=20,
-                           stage_hook=record)
-    audit = _stream_batch_audit(batch1, captured, 20)
+                           bench_shingles=shingles,
+                           stage_hook=captured.__setitem__)
+    audit = drop_lineage(
+        batch1, stream_gates(benchmark, min_words=20,
+                             bench_shingles=shingles), captured)
     return ({"stream_curation_ingest__batch_plan": plain,
              "stream_curation_ingest_audit__batch_plan": audit},
             base)

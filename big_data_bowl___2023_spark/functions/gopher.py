@@ -231,9 +231,20 @@ def repetition_filter(df: DataFrame, text_col: str = "text",
     sig = repetition_signals(df, text_col, id_col,
                              top_ns=tuple(top_max),
                              dup_ns=tuple(dup_max))
+    return (sig.filter(repetition_pass(top_max, dup_max))
+            .select(*df.columns))
+
+
+def repetition_pass(top_max: dict | None = None,
+                    dup_max: dict | None = None) -> Column:
+    """AND of every repetition ceiling over the columns
+    `repetition_signals` attaches (published Gopher defaults) — the
+    keep predicate `repetition_filter` applies."""
+    top_max = TOP_NGRAM_MAX if top_max is None else top_max
+    dup_max = DUP_NGRAM_MAX if dup_max is None else dup_max
     cond = F.lit(True)
     for n, t in top_max.items():
         cond = cond & (F.col(f"top_{n}gram_char_frac") <= F.lit(t))
     for n, t in dup_max.items():
         cond = cond & (F.col(f"dup_{n}gram_char_frac") <= F.lit(t))
-    return sig.filter(cond).select(*df.columns)
+    return cond

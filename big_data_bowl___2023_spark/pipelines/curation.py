@@ -23,19 +23,30 @@ a raw document table into packed training shards:
     SemDeDup runs separately on the embeddings table
     (dedup/semantic.py) because it keys on vectors, not text.
 
-Stages compose as Catalyst chains between PINNED fan-out boundaries
-(session.pin — the scrub input, the dedup survivor sets): a boundary
-consumed by two downstream subtrees materializes once instead of
-re-deriving the whole upstream per consumer. The returned stats (one
-count per stage) are the audit record a curation run must emit
-anyway. At 100 TB each stage keeps its own scale contract
+The row-local stages up to PII redaction are GATES, defined once in
+:func:`curation_gates` — the table the streaming chain
+(streaming/curation.py) runs too. Both chains run it in one shape
+(``_gated``): a flag projection (every rewrite applied, one boolean
+per gate) that a stage hook sees as ``curation_flags``, then each
+gate's boundary as a cumulative filter view of it. Both take the
+same hook protocol (``_hook``) and explain drops with one
+attribution (:func:`drop_lineage`).
+
+Later stages compose as Catalyst chains between PINNED fan-out
+boundaries (session.pin — the scrub input, the dedup survivor sets):
+a boundary consumed by two downstream subtrees materializes once
+instead of re-deriving the whole upstream per consumer. The returned
+stats (one count per stage) are the audit record a curation run must
+emit anyway. At 100 TB each stage keeps its own scale contract
 (documented in its module) — the composition adds no new shuffles
 beyond the stages themselves.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..dedup import (
@@ -47,14 +58,291 @@ from ..dedup import (
 from ..dedup.decontaminate import decontaminate
 from ..dedup.winnow import fingerprint_overlap_pairs
 from ..operators.dsir import dsir_resample
-from ..functions.gopher import gopher_filter
-from ..functions.quality_model import model_quality_filter
-from ..functions.redact import redact_documents
 from ..functions import text as Tx
 from ..operators.chunking import chunk_sequences
 from ..operators.sampling import cap_per_group, pack_by_budget
 from ..session import pin
 from ..sources.io import write_jsonl
+
+
+class Gate(NamedTuple):
+    """One row-local curation gate. ``key`` is the hook key of the
+    boundary it closes; ``reason`` the audit label of its drops — a
+    Column when the label is computed from the text the gate saw (the
+    Gopher rule that failed first), None for a text rewrite, which
+    never drops; ``column`` the keep flag, or the rewritten text.
+    ``attach(frame, prior)``, when set, adds the columns ``column``
+    reads (``prior`` is the AND of the earlier flags)."""
+    key: str
+    reason: str | Column | None
+    column: Column
+    attach: Callable | None = None
+
+    @property
+    def flag(self) -> str:
+        return "__" + self.key.removeprefix("after_")
+
+
+# audit reason of every boundary after the gates, both chains
+_STAGE_REASONS = {
+    "after_line_dedup": "emptied_by_line_scrub",
+    "after_exact_dedup": "exact_duplicate",
+    "after_stream_dedup": "exact_duplicate",
+    "after_history_dedup": "history_duplicate",
+    "after_near_dedup": "near_duplicate",
+    "after_overlap_dedup": "verbatim_overlap",
+    "after_decontamination": "benchmark_contaminated",
+    "after_dsir_selection": "not_selected_dsir",
+    "after_source_cap": "source_quota",
+}
+
+_GATE_ARGS = ("html_input", "lang_keep", "repetition_rules",
+              "quality_model", "quality_model_threshold")
+
+
+def curation_gates(min_words: int = 50, html_input: bool = False,
+                   lang_keep: list | None = None,
+                   repetition_rules: bool = False, quality_model=None,
+                   quality_model_threshold: float = 0.5,
+                   decon: Column | None = None,
+                   gopher_key: str = "after_quality"
+                   ) -> tuple[Gate, ...]:
+    """The row-local curation gates in chain order — the ONE
+    definition both chains run (:func:`curation_frame` and
+    ``streaming.curation.curate_document_stream``):
+
+        [html extraction] → [language] → Gopher → [n-gram
+        repetition] → [learned quality model] → PII redaction →
+        [map-side decontamination]
+
+    ``decon`` is the streaming chain's decontamination keep
+    predicate (batch decontaminates later, shuffle-side, with
+    per-item semantics); ``gopher_key`` names the Gopher boundary —
+    ``after_quality`` in batch, ``after_gopher`` in streaming, whose
+    lineage is persisted data. The Columns are plan-independent, so
+    a long-lived caller (the ingest loop) builds the table once."""
+    from ..functions.gopher import (
+        all_pass,
+        flags as gopher_rules,
+        repetition_pass,
+        repetition_signals,
+    )
+    from ..functions.quality_model import score_documents
+    from ..functions.redact import redact_text
+
+    text = F.col("text")
+    gates = []
+    if html_input:
+        # web-crawl front door (C4 §2.1 / RefinedWeb §3.1): every
+        # later rule sees prose, not tag soup (functions/html.py)
+        from ..functions.html import extract_html_text
+        gates.append(Gate("after_html_extract", None,
+                          extract_html_text(text)))
+    if lang_keep is not None:
+        # language before quality (the CCNet / RefinedWeb order):
+        # off-language pages spend no quality/dedup compute
+        gates.append(Gate("after_lang_filter", "wrong_language",
+                          Tx.detect_lang(text).isin(list(lang_keep))))
+    first_failing_rule = F.coalesce(
+        *[F.when(~passes, F.lit(name)) for name, passes in
+          gopher_rules(text, min_words=min_words).items()],
+        F.lit("null_text"))
+    gates.append(Gate(gopher_key, first_failing_rule,
+                      all_pass(text, min_words=min_words)))
+    if repetition_rules:
+        # the aggregation half of the Gopher rules (A1 n-gram
+        # ceilings): one (id, n, gram) shuffle whose grams come only
+        # from rows passing the earlier flags (text nulled elsewhere),
+        # left-joined back by id
+        gates.append(Gate(
+            "after_repetition", "ngram_repetition", repetition_pass(),
+            lambda frame, prior: repetition_signals(
+                frame.withColumn("__rep_text", F.when(prior, text)),
+                text_col="__rep_text")))
+    if quality_model is not None:
+        # learned second gate (functions/quality_model.py): a
+        # broadcast-model map pass, no shuffle
+        gates.append(Gate(
+            "after_model_quality", "quality_model",
+            F.col("quality_prob") >= quality_model_threshold,
+            lambda frame, prior: score_documents(quality_model, frame)))
+    gates.append(Gate("after_redaction", None, redact_text(text)))
+    if decon is not None:
+        gates.append(Gate("after_decontamination",
+                          "benchmark_contaminated", decon))
+    return tuple(gates)
+
+
+def _hook(stage_hook) -> Callable:
+    """The one hook protocol: ``stage_hook(key, frame)`` is called at
+    every boundary; a returned DataFrame REPLACES the boundary in the
+    chain (how an audit pins each boundary so the chain evaluates
+    once — changing the rows is the hook author's foot-gun), any
+    other return value is ignored."""
+    def hook(key: str, frame: DataFrame) -> DataFrame:
+        r = None if stage_hook is None else stage_hook(key, frame)
+        return r if isinstance(r, DataFrame) else frame
+    return hook
+
+
+def _gated(frame: DataFrame, gates, hook) -> DataFrame:
+    """Run the gate table in the one chain shape: rewrites ahead of
+    every flag (html extraction) are boundaries of their own; then
+    ONE flag projection — later rewrites applied, one boolean column
+    per gate — handed to the hook as ``curation_flags``, and every
+    gate's boundary is a cumulative filter view of it. Returns the
+    last view without the flags.
+
+    Under a hook the audit pins just the projection, and its views
+    read the same flags the lineage attributes from. Without one the
+    optimizer pushes each view's filter below the projection, so the
+    plan is the sequential gates' plan (pinned by
+    tests/test_curation_gates.py). A redaction rewrite is projected
+    before the decontamination flag reads it: CollapseProject
+    refuses to inline the regex chain into two consumers."""
+    lead = next(i for i, g in enumerate(gates) if g.reason is not None)
+    for g in gates[:lead]:
+        frame = hook(g.key, frame.withColumn("text", g.column))
+    flags: list[str] = []
+    for g in gates[lead:]:
+        if g.reason is None:
+            frame = frame.withColumn("text", g.column)
+            continue
+        if g.attach is None:
+            frame = frame.withColumn(g.flag, g.column)
+        else:
+            # of what attach adds (scores, signals) only the flag stays
+            prior = F.lit(True)
+            for f in flags:
+                prior = prior & F.col(f)
+            frame = g.attach(frame, prior).select(
+                *frame.columns, g.column.alias(g.flag))
+        flags.append(g.flag)
+    view = hook("curation_flags", frame)
+    for g in gates[lead:]:
+        if g.reason is not None:
+            view = view.filter(F.col(g.flag))
+        view = hook(g.key, view)
+    return view.drop(*flags)
+
+
+def _gate_text(docs: DataFrame, gates, key: str) -> DataFrame:
+    """(doc_id, text) as the gate closing boundary ``key`` saw it:
+    ``docs``' text with every earlier rewrite applied."""
+    out = docs.select("doc_id", "text")
+    for g in gates:
+        if g.key == key:
+            break
+        if g.reason is None:
+            out = out.withColumn("text", g.column)
+    return out
+
+
+def drop_lineage(docs: DataFrame, gates, boundaries: dict) -> DataFrame:
+    """Per-DOCUMENT drop lineage, the one attribution for both chains:
+    (doc_id, source, stage, reason, detail) — for every row of
+    ``docs`` (the chain input: doc_id, source, text), the FIRST
+    boundary that dropped it with a debuggable reason, or
+    ``stage="kept"``.
+
+    ``boundaries`` maps hook keys to the frames a stage hook captured
+    (insertion order = chain order) and must hold
+    ``curation_flags``. Gate drops come from the flags alone: a
+    ``when`` chain in gate order, ``coalesce(flag, False)`` matching
+    the views' NULL-drops; a Column ``reason`` (the Gopher rule that
+    failed first) is evaluated over the text the gate saw, joined
+    back for the drop-sized subset only. Every later boundary drops
+    the survivors missing from its frame (id-only anti joins), with
+    three refinements:
+
+    * the line scrub never drops a row — it EMPTIES fully
+      boilerplate docs, whose husks would die later at exact dedup —
+      so the docs it empties are attributed to it, "empty" meaning
+      what the fingerprint means (zero normalized tokens);
+    * batch exact dedup names the kept twin: the min-id SURVIVOR
+      sharing the pre-redaction fingerprint, NULL when an upstream
+      rewrite created the collision (detail never names a doc absent
+      from the curated corpus);
+    * streaming exact dedup names the survivor sharing the
+      post-redaction fingerprint it keyed on."""
+    from ..dedup.exact import fingerprint_docs
+
+    flags = boundaries["curation_flags"]
+    stage = reason = None
+    for g in gates:
+        if g.reason is None:
+            continue
+        failed = ~F.coalesce(F.col(g.flag), F.lit(False))
+        label = g.reason if isinstance(g.reason, str) else None
+        stage = (F.when(failed, F.lit(g.key)) if stage is None
+                 else stage.when(failed, F.lit(g.key)))
+        reason = (F.when(failed, F.lit(label)) if reason is None
+                  else reason.when(failed, F.lit(label)))
+    attrib = flags.select("doc_id", "source", stage.alias("stage"),
+                          reason.cast("string").alias("reason"),
+                          F.lit(None).cast("string").alias("detail"))
+    prev = attrib.filter(F.col("stage").isNull()).select("doc_id",
+                                                        "source")
+    dropped = attrib.filter(F.col("stage").isNotNull())
+    parts = []
+    for g in gates:
+        if isinstance(g.reason, Column):
+            mine = F.col("stage") == g.key
+            parts.append(dropped.filter(mine)
+                         .join(_gate_text(docs, gates, g.key), "doc_id")
+                         .select("doc_id", "source", "stage",
+                                 g.reason.alias("reason"), "detail"))
+            dropped = dropped.filter(~mine)
+    parts.insert(0, dropped)
+
+    gate_keys = {g.key for g in gates}
+    for key, frame in boundaries.items():
+        if key in gate_keys or key not in _STAGE_REASONS:
+            continue
+        if key == "after_line_dedup":
+            frame = frame.filter(~F.coalesce(
+                F.size(Tx.norm_tokens(F.col("text"))) == 0,
+                F.lit(False)))
+        cur = frame.select("doc_id")
+        lost = prev.join(cur, "doc_id", "left_anti").select(
+            "doc_id", "source", F.lit(key).alias("stage"),
+            F.lit(_STAGE_REASONS[key]).alias("reason"))
+        if key == "after_exact_dedup":
+            fp = fingerprint_docs(
+                _gate_text(docs, gates, "after_redaction")
+            ).select("doc_id", "fingerprint")
+            twins = (fp.join(cur, "doc_id", "semi")
+                     .groupBy("fingerprint")
+                     .agg(F.min("doc_id").cast("string")
+                          .alias("detail")))
+            lost = (lost.join(fp, "doc_id")
+                    .join(twins, "fingerprint", "left"))
+        elif key == "after_stream_dedup":
+            twins = frame.select(
+                "fingerprint",
+                F.col("doc_id").cast("string").alias("detail"))
+            lost = (lost.join(flags.select("doc_id", "text"), "doc_id")
+                    .withColumn("fingerprint",
+                                Tx.fingerprint(F.col("text")))
+                    .join(twins, "fingerprint", "left"))
+        else:
+            lost = lost.withColumn("detail",
+                                   F.lit(None).cast("string"))
+        parts.append(lost.select("doc_id", "source", "stage", "reason",
+                                 "detail"))
+        prev = prev.join(cur, "doc_id", "semi")
+
+    out = prev.select("doc_id", "source", F.lit("kept").alias("stage"),
+                      F.lit("kept").alias("reason"),
+                      F.lit(None).cast("string").alias("detail"))
+    for p in parts:
+        out = out.unionByName(p)
+    return out
+
+
+def _dsir_default_n(n_input: int) -> int:
+    """DSIR selects half the RAW input unless told otherwise."""
+    return max(1, n_input // 2)
 
 
 def curation_frame(docs: DataFrame,
@@ -82,16 +370,14 @@ def curation_frame(docs: DataFrame,
     build time (see below); everything between them stays one lazy
     Catalyst chain.
 
-    ``stage_hook(key, frame)``, when given, is called at every stage
-    boundary — ``curate_and_export`` uses it for the per-stage audit
-    counts. A hook that returns the row count (as the audit tally
-    does) lets the DSIR default reuse it instead of re-counting the
-    raw corpus. A hook that returns a **DataFrame** REPLACES the
-    boundary frame in the chain — the injection point
-    `curation_audit` uses to pin each stage's output so every stage
-    evaluates exactly once instead of once per downstream prefix
-    (any value-preserving wrap is legal; changing the rows is the
-    hook author's foot-gun).
+    The gates (:func:`curation_gates`) run as a flag projection plus
+    cumulative filter views (``_gated``). ``stage_hook(key, frame)``,
+    when given, is called at every boundary — ``input``, each gate's
+    view (the Gopher one is ``after_quality``), ``curation_flags``,
+    every later stage and ``chunks`` — under the one hook protocol
+    (``_hook``): a returned DataFrame REPLACES the boundary, any
+    other return is ignored. ``curate_and_export`` uses it for the
+    per-stage counts, :func:`curation_audit` to pin boundaries.
 
     Fan-out boundaries consumed by MORE THAN ONE downstream subtree
     (the scrub input, the exact-dedup output, the near-dup survivor
@@ -103,58 +389,18 @@ def curation_frame(docs: DataFrame,
     pins materialize at plan-build time, so the chain is no longer
     construction-lazy; it still computes everything from the inputs
     on every call, and the caller-visible rows are unchanged in
-    every pin-durability mode."""
-    def hook(key: str, frame: DataFrame):
-        if stage_hook is None:
-            return None, frame, False
-        r = stage_hook(key, frame)
-        if isinstance(r, DataFrame):
-            return None, r, True
-        return r, frame, False
+    every pin-durability mode. The DSIR default selects half the raw
+    input (one count, unless ``dsir_n_docs`` is given)."""
+    hook = _hook(stage_hook)
 
-    input_n, docs, _ = hook("input", docs)
+    def boundary(key: str, frame: DataFrame, fan_out: bool = False):
+        out = hook(key, frame)
+        return pin(out) if fan_out and out is frame else out
 
-    if html_input:
-        # web-crawl front door (C4 §2.1 / RefinedWeb §3.1): markup +
-        # boilerplate-line extraction BEFORE any quality/dedup stage,
-        # so every downstream rule sees prose, not tag soup. A pure
-        # projection — Catalyst fuses it into the gopher_filter scan,
-        # adding zero jobs or shuffles (functions/html.py).
-        from ..functions.html import extract_html_text
-        docs = docs.withColumn("text", extract_html_text(F.col("text")))
-        _, docs, _ = hook("after_html_extract", docs)
-
-    if lang_keep is not None:
-        # language gate BEFORE the quality rules (the CCNet /
-        # RefinedWeb order: off-language pages shouldn't spend
-        # quality/dedup compute): marker-stopword language ID
-        # (functions/text.py::detect_lang) — a pure codegen
-        # predicate, fused into the same scan as everything else
-        docs = docs.filter(Tx.detect_lang(F.col("text"))
-                           .isin(list(lang_keep)))
-        _, docs, _ = hook("after_lang_filter", docs)
-
-    quality = gopher_filter(docs, min_words=min_words)
-    _, quality, _ = hook("after_quality", quality)
-
-    if repetition_rules:
-        # the aggregation half of the Gopher rule set (A1 top/dup
-        # n-gram character ceilings): one extra (id, n, gram)
-        # shuffle over the quality survivors only — after the cheap
-        # projection gate, before any dedup pays per-doc cost
-        from ..functions.gopher import repetition_filter
-        quality = repetition_filter(quality)
-        _, quality, _ = hook("after_repetition", quality)
-
-    if quality_model is not None:
-        # learned second gate (functions/quality_model.py): scoring
-        # is a broadcast-model map pass, no shuffle added.
-        quality = model_quality_filter(
-            quality, quality_model,
-            threshold=quality_model_threshold).drop("quality_prob")
-        _, quality, _ = hook("after_model_quality", quality)
-
-    clean = redact_documents(quality)
+    docs = hook("input", docs)
+    clean = _gated(docs, curation_gates(
+        min_words, html_input, lang_keep, repetition_rules,
+        quality_model, quality_model_threshold), hook)
 
     if line_dedup_min_chars is not None:
         # corpus-wide boilerplate scrub (C4 repeated-span rule) BEFORE
@@ -163,30 +409,26 @@ def curation_frame(docs: DataFrame,
         # consumes its input twice (stats pass + rewrite pass) — pin
         # the gate/redaction prefix so both passes read one
         # materialization instead of re-running the upstream chain.
-        clean = pin(clean)
-        clean = remove_repeated_lines(clean,
-                                      min_chars=line_dedup_min_chars)
-        _, clean, _ = hook("after_line_dedup", clean)
+        clean = boundary("after_line_dedup", remove_repeated_lines(
+            pin(clean), min_chars=line_dedup_min_chars))
 
-    deduped = exact_dedup(clean).drop("fingerprint")
-    _, deduped, replaced = hook("after_exact_dedup", deduped)
-    if not replaced:
-        # fan-out: consumed by the MinHash pair mine AND the survivor
-        # window below
-        deduped = pin(deduped)
+    # fan-out: consumed by the MinHash pair mine AND the survivor
+    # window below
+    deduped = boundary("after_exact_dedup",
+                       exact_dedup(clean).drop("fingerprint"),
+                       fan_out=True)
 
     pairs = minhash_band_pairs(deduped, jaccard_threshold)
     # keep the longest doc per near-dup cluster (id tiebreak)
     withlen = deduped.withColumn("__len", F.length("text"))
-    canon = (canonical_docs(withlen, pairs, prefer_col="__len")
-             .drop("__len", "cluster_id"))
-    _, canon, replaced = hook("after_near_dedup", canon)
-    if not replaced and (overlap_shared is not None
-                        or benchmark is not None):
-        # fan-out: the winnow stage consumes canon for fingerprints
-        # AND the keep-longest window; decontamination consumes it
-        # for the shingle probe AND the anti-join pass-through
-        canon = pin(canon)
+    # fan-out: the winnow stage consumes canon for fingerprints AND
+    # the keep-longest window; decontamination consumes it for the
+    # shingle probe AND the anti-join pass-through
+    canon = boundary("after_near_dedup",
+                     canonical_docs(withlen, pairs, prefer_col="__len")
+                     .drop("__len", "cluster_id"),
+                     fan_out=(overlap_shared is not None
+                              or benchmark is not None))
 
     if overlap_shared is not None:
         # verbatim-overlap (winnowed fingerprint) dedup: same
@@ -194,39 +436,37 @@ def curation_frame(docs: DataFrame,
         ov = fingerprint_overlap_pairs(canon, min_shared=overlap_shared,
                                        max_doc_freq=1000)
         withlen = canon.withColumn("__len", F.length("text"))
-        canon = (canonical_docs(withlen, ov, prefer_col="__len")
-                 .drop("__len", "cluster_id"))
-        _, canon, replaced = hook("after_overlap_dedup", canon)
-        if not replaced and benchmark is not None:
-            canon = pin(canon)
+        canon = boundary("after_overlap_dedup",
+                         canonical_docs(withlen, ov, prefer_col="__len")
+                         .drop("__len", "cluster_id"),
+                         fan_out=benchmark is not None)
 
     if benchmark is not None:
-        canon = decontaminate(canon, benchmark)
-        _, canon, replaced = hook("after_decontamination", canon)
-        if not replaced and dsir_target is not None:
-            # DSIR consumes its raw side twice (feature pass + the
-            # final selected join)
-            canon = pin(canon)
+        # DSIR consumes its raw side twice (feature pass + the final
+        # selected join)
+        canon = boundary("after_decontamination",
+                         decontaminate(canon, benchmark),
+                         fan_out=dsir_target is not None)
 
     if dsir_target is not None:
-        n_sel = dsir_n_docs or max(
-            1, (input_n if input_n is not None else docs.count()) // 2)
-        canon = dsir_resample(canon, dsir_target, n_sel) \
-            .drop("logw", "key")
-        _, canon, _ = hook("after_dsir_selection", canon)
+        n_sel = dsir_n_docs or _dsir_default_n(docs.count())
+        canon = boundary("after_dsir_selection",
+                         dsir_resample(canon, dsir_target, n_sel)
+                         .drop("logw", "key"))
 
     if max_docs_per_source is not None:
         # RefinedWeb-style per-source quota AFTER dedup/selection so
         # the cap counts surviving docs, not raw crawl volume.
-        canon = cap_per_group(canon, ["source"], max_docs_per_source)
-        _, canon, _ = hook("after_source_cap", canon)
+        canon = boundary("after_source_cap",
+                         cap_per_group(canon, ["source"],
+                                       max_docs_per_source))
 
     # `source` rides the chunk explode instead of a join-back against
     # canon — the join re-evaluated the whole surviving chain once
     # more just to attach one metadata column (guide §2.4); the
     # carried column produces the identical rows.
-    chunks = chunk_sequences(canon, seq_len, carry_cols=("source",))
-    _, chunks, _ = hook("chunks", chunks)
+    chunks = boundary("chunks", chunk_sequences(canon, seq_len,
+                                                carry_cols=("source",)))
 
     return pack_by_budget(chunks, shard_budget, "n_tokens",
                           ["source"], id_col="doc_id")
@@ -243,17 +483,24 @@ def curate_and_export(docs: DataFrame, out_dir: str,
 
     ``lazy_stats=False`` (default) counts after every stage — the
     audit record a curation run must emit anyway, at the cost of one
-    extra job per stage. ``lazy_stats=True`` skips every count so
-    only the fan-out boundary pins and the export action run — the
-    100 TB mode when the audit comes from the written manifest
-    instead."""
+    extra job per stage; the input count doubles as the DSIR default
+    size. ``lazy_stats=True`` skips every count so only the fan-out
+    boundary pins, the export action and (with ``dsir_target`` but
+    no ``dsir_n_docs``) the one input count for the DSIR default run
+    — the 100 TB mode when the audit comes from the written manifest
+    instead. Both modes select the same documents."""
     stats: dict = {}
+    if not lazy_stats:
+        stats["input"] = docs.count()
+        if kwargs.get("dsir_target") is not None \
+                and not kwargs.get("dsir_n_docs"):
+            kwargs["dsir_n_docs"] = _dsir_default_n(stats["input"])
 
     def tally(key: str, frame: DataFrame):
-        if not lazy_stats:
+        # curation_flags holds every input row: not a stage count
+        if not lazy_stats and key not in stats \
+                and key != "curation_flags":
             stats[key] = frame.count()
-            return stats[key]
-        return None
 
     packed = curation_frame(docs, stage_hook=tally, **kwargs)
     write_jsonl(packed.repartition("source", "shard")
@@ -276,162 +523,48 @@ def curation_audit(docs: DataFrame, min_words: int = 50,
     slice of a 100 TB corpus vanishes: WHICH documents, and WHY.
 
     Built from the same lazy chain as :func:`curation_frame` (every
-    keyword forwards): each doc-grain stage boundary is captured via
-    the existing ``stage_hook``, drops are id-only anti-joins between
-    consecutive boundaries, and reasons are enriched where the stage
-    has per-document structure to expose —
+    keyword forwards) and explained by :func:`drop_lineage`, the
+    attribution the streaming loop uses too: gate drops come from the
+    flag projection (the Gopher gate names its FIRST FAILING RULE),
+    later drops from id-only anti joins between consecutive
+    boundaries, exact dedup names the kept twin, the line scrub owns
+    the docs it empties, and every other stage tags its cause label
+    (wrong_language, ngram_repetition, quality_model,
+    near_duplicate, verbatim_overlap, benchmark_contaminated,
+    not_selected_dsir, source_quota).
 
-    * the Gopher gate names the FIRST FAILING RULE (`gopher.flags`,
-      evaluated only over the dropped subset);
-    * exact dedup names the kept twin (``detail`` = the min-id
-      SURVIVOR sharing the raw fingerprint; NULL when the collision
-      was created by an upstream rewrite, so detail never names a
-      doc absent from the corpus);
-    * the line scrub never drops rows — it EMPTIES fully-boilerplate
-      docs, whose husks would die later at exact dedup — so emptied
-      docs are attributed here (``emptied_by_line_scrub``), where
-      the cause is, not where the husk happens to fall;
-    * every other stage tags its cause label (near_duplicate,
-      verbatim_overlap, benchmark_contaminated, not_selected_dsir,
-      source_quota, quality_model).
-
-    Cost: ONE pipeline evaluation (verdict r10 #3 — previously one
-    PREFIX evaluation per stage, ~stages× the pipeline). The capture
-    hook PINS each doc-grain boundary (`session.pin` — the boundary
-    frame it hands back into the chain), so stage i+1 computes from
-    stage i's materialization instead of re-running the prefix, and
-    every audit branch reads pinned data. The price is stage-count ×
-    corpus bytes of pin storage held until the audit result is
-    consumed (pass ``pin_handles=[]`` to receive the pinned frames
-    and ``unpersist()`` them after — only meaningful under durable
-    pins; localCheckpoint blocks free on GC). Every join here
-    carries ids only — document text is touched just twice (the
-    gopher re-flag and the fingerprint join, both restricted to
-    dropped/duplicated docs). At full corpus scale the pin storage,
-    not CPU, is now the budget: sample (``docs.sample(...)``) when
-    stage-count × corpus exceeds scratch disk."""
-    from ..dedup.exact import fingerprint_docs
-    from ..functions.gopher import flags as gopher_flags_fn
-    from ..session import pin
-
-    reasons = {
-        "after_lang_filter": "wrong_language",
-        "after_quality": "gopher",           # enriched below
-        "after_repetition": "ngram_repetition",
-        "after_model_quality": "quality_model",
-        "after_line_dedup": "emptied_by_line_scrub",
-        "after_exact_dedup": "exact_duplicate",
-        "after_near_dedup": "near_duplicate",
-        "after_overlap_dedup": "verbatim_overlap",
-        "after_decontamination": "benchmark_contaminated",
-        "after_dsir_selection": "not_selected_dsir",
-        "after_source_cap": "source_quota",
-    }
-    captured: list[tuple[str, DataFrame]] = []
-    # reason-enrichment must see the text the STAGES saw: under
-    # html_input the gopher rules (and the dedup fingerprint key)
-    # run on post-extraction text, so a tag-soup page with many raw
-    # "words" that extracts to '' must be re-flagged against the
-    # extracted text, not the markup (review r15)
-    text_source = [docs]
+    Cost: ONE pipeline evaluation. The capture hook PINS the flag
+    projection and each later doc-grain boundary (`session.pin` —
+    the frame it hands back into the chain), so stage i+1 computes
+    from stage i's materialization instead of re-running the prefix,
+    and every audit branch reads pinned data. The price is
+    boundary-count × corpus bytes of pin storage held until the
+    audit result is consumed (pass ``pin_handles=[]`` to receive the
+    pinned frames and ``unpersist()`` them after — only meaningful
+    under durable pins; localCheckpoint blocks free on GC). Every
+    join here carries ids only — document text is touched just
+    twice (the gopher re-flag and the fingerprint join, both
+    restricted to dropped/duplicated docs). At full corpus scale the
+    pin storage, not CPU, is now the budget: sample
+    (``docs.sample(...)``) when boundary-count × corpus exceeds
+    scratch disk."""
+    boundaries: dict = {}
 
     def capture(key, frame):
-        if key == "after_html_extract":
-            pinned = pin(frame)
-            if pin_handles is not None:
-                pin_handles.append(pinned)
-            text_source[0] = pinned
-            return pinned
-        if key not in reasons:
-            return None              # input / chunk-grain stages
+        # gate views filter the pinned flags; input/chunk grain skip
+        if key != "curation_flags" and key not in _STAGE_REASONS:
+            return None
         pinned = pin(frame)
         if pin_handles is not None:
             pin_handles.append(pinned)
-        captured.append((key, pinned))
-        return pinned                # replaces the boundary in-chain
+        boundaries[key] = pinned
+        return pinned
 
     curation_frame(docs, stage_hook=capture, min_words=min_words,
                    **kwargs)
-    text_docs = text_source[0]
-
-    prev = docs.select("doc_id", "source")
-    parts: list[DataFrame] = []
-    for key, frame in captured:
-        if key not in reasons:
-            continue                     # input / chunk-grain stages
-        if key == "after_line_dedup":
-            # the scrub never DROPS a doc — it empties the ones whose
-            # every line was boilerplate, and the husks die later at
-            # exact dedup (all empty texts share one fingerprint).
-            # Attribute them HERE, where the cause is (review r10
-            # finding: the anti-join at this boundary is always empty
-            # and the husks were mislabeled exact_duplicate).
-            # "empty" must mean what the FINGERPRINT means by it: a
-            # husk reduced to whitespace/newlines only (trim strips
-            # spaces, not \n — review r10) normalizes to zero tokens
-            emptied = (frame.filter(
-                F.size(Tx.norm_tokens(F.col("text"))) == 0)
-                .select("doc_id"))
-            parts.append(prev.join(emptied, "doc_id", "semi")
-                         .withColumn("stage", F.lit(key))
-                         .withColumn("reason",
-                                     F.lit(reasons[key]))
-                         .withColumn("detail",
-                                     F.lit(None).cast("string")))
-            prev = prev.join(emptied, "doc_id", "left_anti")
-            continue
-        cur = frame.select("doc_id")
-        dropped = (prev.join(cur, "doc_id", "left_anti")
-                   .withColumn("stage", F.lit(key))
-                   .withColumn("reason", F.lit(reasons[key]))
-                   .withColumn("detail",
-                               F.lit(None).cast("string")))
-        if key == "after_quality":
-            # name the first failing rule: re-flag ONLY the dropped
-            # docs (map-side over a drop-sized join back to text)
-            txt = dropped.join(text_docs.select("doc_id", "text"),
-                               "doc_id")
-            rule_flags = gopher_flags_fn(F.col("text"),
-                                         min_words=min_words)
-            first_fail = F.coalesce(
-                *[F.when(~passes, F.lit(name))
-                  for name, passes in rule_flags.items()],
-                F.lit("null_text"))
-            dropped = txt.select(
-                "doc_id", "source", "stage",
-                first_fail.alias("reason"),
-                F.lit(None).cast("string").alias("detail"))
-        elif key == "after_exact_dedup":
-            # name the kept twin: the dropped doc's RAW fingerprint
-            # joined to the min-id doc sharing it AMONG THE STAGE'S
-            # SURVIVORS — so detail can only ever name a doc that is
-            # actually in the corpus (review r10: an unrestricted
-            # min-per-raw-fingerprint could name a fellow DROPPED doc
-            # when the pipeline deduped on rewritten text). A
-            # collision CREATED by an upstream rewrite (redaction,
-            # line scrub) has no surviving raw twin — detail stays
-            # NULL there; stage and reason are exact regardless.
-            fp = fingerprint_docs(text_docs).select("doc_id",
-                                                    "fingerprint")
-            canon = (fp.join(cur, "doc_id", "semi")
-                     .groupBy("fingerprint")
-                     .agg(F.min("doc_id").alias("__kept")))
-            dropped = (dropped.drop("detail")
-                       .join(fp, "doc_id")
-                       .join(canon, "fingerprint", "left")
-                       .select("doc_id", "source", "stage", "reason",
-                               F.col("__kept").cast("string")
-                               .alias("detail")))
-        parts.append(dropped)
-        prev = prev.join(cur, "doc_id", "semi")
-
-    kept = (prev.withColumn("stage", F.lit("kept"))
-            .withColumn("reason", F.lit("kept"))
-            .withColumn("detail", F.lit(None).cast("string")))
-    out = kept
-    for p in parts:
-        out = out.unionByName(p)
-    return out.select("doc_id", "source", "stage", "reason", "detail")
+    gates = curation_gates(min_words, **{k: v for k, v in kwargs.items()
+                                         if k in _GATE_ARGS})
+    return drop_lineage(docs, gates, boundaries)
 
 
 def curation_report(docs: DataFrame) -> DataFrame:

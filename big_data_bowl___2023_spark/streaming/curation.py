@@ -27,6 +27,13 @@ Stream-safe stages (map-side or bounded keyed state):
   carries only true duplicates + ~fpr of the novel rows — at 100 TB
   the index probe stops being per-batch full-index work.
 
+The row-local stages are the batch chain's gate table
+(``pipelines.curation.curation_gates``, plus the map-side
+decontamination flag), run in the same shape — one flag projection,
+then cumulative filter views — under the same hook protocol, and the
+ingest loop's per-batch lineage is the same attribution
+(``pipelines.curation.drop_lineage``).
+
 Corpus-GLOBAL stages cannot stream and are not faked here: repeated-
 line removal, near-dup cluster resolution (MinHash/winnowing), DSIR
 selection, per-source quotas, and shard packing all need the whole
@@ -51,8 +58,13 @@ from ..dedup.bloom import (
 )
 from ..dedup.decontaminate import DEFAULT_NGRAM
 from ..dedup.ngram import shingle_docs
-from ..functions.quality_model import model_quality_filter
 from ..functions.redact import redact_documents
+from ..pipelines.curation import (
+    _gated,
+    _hook,
+    curation_gates,
+    drop_lineage,
+)
 from ..session import pin
 from .dedup_stream import (
     incremental_dedup,
@@ -107,8 +119,7 @@ def benchmark_shingle_set(benchmark: DataFrame, n: int = DEFAULT_NGRAM,
             .select("shingle").distinct().collect()]
 
 
-def stream_decontaminate(docs: DataFrame,
-                         bench_shingles: "list[str] | Column",
+def stream_decontaminate(docs: DataFrame, bench_shingles: list[str],
                          n: int = DEFAULT_NGRAM, min_overlap: int = 1,
                          text_col: str = "text") -> DataFrame:
     """Drop documents sharing ≥ ``min_overlap`` distinct word n-grams
@@ -135,32 +146,22 @@ def stream_decontaminate(docs: DataFrame,
     still accumulate), which is the conservative direction for an
     on-arrival bronze gate; run the batch operator in the silver
     pass when per-item thresholds matter."""
-    from pyspark.sql import Column
-
-    if isinstance(bench_shingles, Column):
-        # a pre-built literal array (see bench_shingle_array): Column
-        # expressions are plan-independent, so a long-lived caller
-        # constructs the (large) literal once and reuses it — per-
-        # element `lit` calls cost one py4j round trip each, measured
-        # ~1.2 s of pure driver time per micro-batch at a 2.1k-
-        # shingle benchmark when rebuilt per plan
-        bench_arr = bench_shingles
-    else:
-        if not bench_shingles:
-            return docs
-        bench_arr = F.array(*[F.lit(s) for s in bench_shingles])
-    return docs.filter(
-        stream_decon_condition(bench_arr, n, min_overlap, text_col))
+    if not bench_shingles:
+        return docs
+    return docs.filter(stream_decon_condition(
+        F.array(*[F.lit(s) for s in bench_shingles]), n, min_overlap,
+        text_col))
 
 
 def stream_decon_condition(bench_arr: "Column", n: int = DEFAULT_NGRAM,
                            min_overlap: int = 1,
                            text_col: str = "text") -> "Column":
     """The decontamination KEEP predicate as a reusable Column —
-    plan-independent like the benchmark literal, so a long-lived
-    caller (the ingest loop) builds it once per loop instead of per
-    micro-batch (the shingle_array lambda conversion alone costs
-    ~0.1 s of driver py4j per build)."""
+    plan-independent, so the ingest loop builds it (inside its gate
+    table) once per loop instead of per micro-batch: per-element
+    ``lit`` calls cost one py4j round trip each (~1.2 s of driver
+    time at a 2.1k-shingle benchmark), and the shingle_array lambda
+    conversion ~0.1 s."""
     from ..dedup.ngram import shingle_array
 
     sh = shingle_array(F.col(text_col), n)
@@ -175,179 +176,6 @@ def stream_decon_condition(bench_arr: "Column", n: int = DEFAULT_NGRAM,
         return F.coalesce(~F.arrays_overlap(sh, bench_arr), F.lit(True))
     n_shared = F.size(F.array_intersect(sh, bench_arr))
     return F.coalesce(n_shared < min_overlap, F.lit(True))
-
-
-def _stream_batch_audit(batch_df: DataFrame,
-                        captured: list[tuple[str, DataFrame]],
-                        min_words: int) -> DataFrame:
-    """(doc_id, source, stage, reason, detail) for ONE micro-batch:
-    each input doc's FIRST dropping stage, or ``stage="kept"`` — the
-    streaming face of :func:`pipelines.curation.curation_audit`
-    (verdict r11 #8: at 100 TB curation runs AS the streaming loop,
-    and "why did doc X vanish" must be answerable there too). Same
-    audit mechanics over the ``curate_document_stream`` boundaries:
-    drops are id-only anti-joins between consecutive pinned
-    boundaries, the Gopher gate names its first failing rule
-    (re-flagged over the drop-sized subset only), the within-batch
-    exact dedup names the kept twin sharing the post-redaction
-    fingerprint, and against-history drops are
-    ``history_duplicate``.
-
-    Under the FUSED chain (r17 — a ``curation_flags`` boundary is
-    present) the map-side stages need no joins at all: the pinned
-    flags carry one boolean per gate, so each doc's first failing
-    map gate is a ``when`` chain over ONE read of the flags pin
-    (:func:`_map_stage_attribution`) — row-identical to the
-    anti-joins because the boundaries ARE cumulative flag filters
-    (a NULL flag drops in the filter and attributes here via
-    ``coalesce(flag, False)``). The dedup/history stages keep the
-    join mechanics (their survivor sets come from real shuffles)."""
-    from ..functions import text as Tx
-    from ..functions.gopher import flags as gopher_flags_fn
-
-    reasons = {
-        "after_lang_filter": "wrong_language",
-        "after_gopher": "gopher",            # enriched below
-        "after_model_quality": "quality_model",
-        "after_decontamination": "benchmark_contaminated",
-        "after_stream_dedup": "exact_duplicate",
-        "after_history_dedup": "history_duplicate",
-    }
-    flags = next((f for k, f in captured if k == "curation_flags"),
-                 None)
-    skip: set = set()
-    if flags is not None:
-        prev, parts = _map_stage_attribution(flags, captured,
-                                             batch_df, min_words)
-        skip = {"after_lang_filter", "after_gopher",
-                "after_decontamination"}
-    else:
-        prev = batch_df.select("doc_id", "source")
-        parts = []
-    for key, frame in captured:
-        if key not in reasons or key in skip:
-            continue                 # stream_input / fused map stages
-        cur = frame.select("doc_id")
-        dropped = (prev.join(cur, "doc_id", "left_anti")
-                   .withColumn("stage", F.lit(key))
-                   .withColumn("reason", F.lit(reasons[key]))
-                   .withColumn("detail",
-                               F.lit(None).cast("string")))
-        if key == "after_gopher":
-            # re-flag against the text the gate SAW: the extraction
-            # boundary when html_input ran, else the raw batch
-            # (review r15 — raw tag-soup word counts name the wrong
-            # rule for pages that extract to empty)
-            pre_gopher = next(
-                (f for k, f in captured
-                 if k == "after_html_extract"), batch_df)
-            txt = dropped.join(pre_gopher.select("doc_id", "text"),
-                               "doc_id")
-            rule_flags = gopher_flags_fn(F.col("text"),
-                                         min_words=min_words)
-            first_fail = F.coalesce(
-                *[F.when(~passes, F.lit(name))
-                  for name, passes in rule_flags.items()],
-                F.lit("null_text"))
-            dropped = txt.select(
-                "doc_id", "source", "stage",
-                first_fail.alias("reason"),
-                F.lit(None).cast("string").alias("detail"))
-        elif key == "after_stream_dedup":
-            # name the kept twin: survivors carry the fingerprint the
-            # dedup keyed on (post-redaction text); recompute it for
-            # the drop-sized subset only. history drops at the NEXT
-            # boundary share this fingerprint space, so the twin here
-            # is always a doc the batch actually kept at this stage.
-            twins = (frame.select(
-                F.col("fingerprint"),
-                F.col("doc_id").cast("string").alias("detail")))
-            dropped_fp = (dropped.drop("detail")
-                          .join(captured_text(captured, batch_df),
-                                "doc_id")
-                          .withColumn("fingerprint",
-                                      Tx.fingerprint(F.col("text"))))
-            dropped = (dropped_fp
-                       .join(twins, "fingerprint", "left")
-                       .select("doc_id", "source", "stage",
-                               "reason", "detail"))
-        parts.append(dropped)
-        prev = prev.join(cur, "doc_id", "semi")
-    kept = (prev.withColumn("stage", F.lit("kept"))
-            .withColumn("reason", F.lit("kept"))
-            .withColumn("detail", F.lit(None).cast("string")))
-    out = kept
-    for p in parts:
-        out = out.unionByName(p)
-    return out.select("doc_id", "source", "stage", "reason",
-                      "detail")
-
-
-def _map_stage_attribution(flags: DataFrame, captured, batch_df,
-                           min_words: int):
-    """(map-stage survivors, [drop parts]) from the pinned
-    ``curation_flags`` frame alone (r17): each doc's first failing
-    map gate is a ``when`` chain in stage order — lang, gopher,
-    decon — with ``coalesce(flag, False)`` matching the filters'
-    NULL-drops. Replaces three anti-join + semi-join pairs (six
-    broadcast joins re-reading the flags pin) with one projection;
-    the gopher reason enrichment keeps its drop-sized text join
-    against the text the gate saw."""
-    from ..functions.gopher import flags as gopher_flags_fn
-
-    cols = set(flags.columns)
-
-    def ok(c):
-        return F.coalesce(F.col(c), F.lit(False)) if c in cols \
-            else F.lit(True)
-
-    stage = (F.when(~ok("__lang"), F.lit("after_lang_filter"))
-             .when(~ok("__gopher"), F.lit("after_gopher"))
-             .when(~ok("__decon"), F.lit("after_decontamination")))
-    attrib = flags.select("doc_id", "source", stage.alias("stage"))
-    dropped = attrib.filter(F.col("stage").isNotNull())
-    non_gopher = (dropped.filter(F.col("stage") != "after_gopher")
-                  .select("doc_id", "source", "stage",
-                          F.when(F.col("stage") == "after_lang_filter",
-                                 F.lit("wrong_language"))
-                          .otherwise(F.lit("benchmark_contaminated"))
-                          .alias("reason"),
-                          F.lit(None).cast("string").alias("detail")))
-    # re-flag gopher drops against the text the gate SAW: the
-    # extraction boundary when html_input ran, else the raw batch
-    # (review r15 — raw tag-soup word counts name the wrong rule for
-    # pages that extract to empty). Drop-sized join, like before.
-    pre_gopher = next((f for k, f in captured
-                       if k == "after_html_extract"), batch_df)
-    txt = (dropped.filter(F.col("stage") == "after_gopher")
-           .join(pre_gopher.select("doc_id", "text"), "doc_id"))
-    rule_flags = gopher_flags_fn(F.col("text"), min_words=min_words)
-    first_fail = F.coalesce(
-        *[F.when(~passes, F.lit(name))
-          for name, passes in rule_flags.items()],
-        F.lit("null_text"))
-    gopher_part = txt.select(
-        "doc_id", "source", "stage", first_fail.alias("reason"),
-        F.lit(None).cast("string").alias("detail"))
-    survivors = (attrib.filter(F.col("stage").isNull())
-                 .select("doc_id", "source"))
-    return survivors, [non_gopher, gopher_part]
-
-
-def captured_text(captured: list[tuple[str, DataFrame]],
-                  batch_df: DataFrame) -> DataFrame:
-    """(doc_id, text) as the within-batch dedup SAW it: the latest
-    captured boundary before the dedup stage (``after_redaction`` or
-    ``after_decontamination``) carries the post-redaction text the
-    fingerprint keyed on; raw ``batch_df`` text would mis-fingerprint
-    any doc the redaction rewrote."""
-    best = None
-    for key, frame in captured:
-        if key == "after_stream_dedup":
-            break
-        best = frame
-    src = best if best is not None else batch_df
-    return src.select("doc_id", "text")
 
 
 def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
@@ -396,7 +224,7 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
 
     ``audit_dir`` (optional, verdict r11 #8) makes every micro-batch
     also emit its per-doc first-dropping-stage lineage — the
-    :func:`_stream_batch_audit` frame — under
+    :func:`~..pipelines.curation.drop_lineage` frame — under
     ``audit_dir/batch=N`` (a partition-style layout: reading the
     root yields the whole history with ``batch`` as a column). Each
     batch OVERWRITES its own subdir, so a foreachBatch replay never
@@ -407,38 +235,25 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
     ``history_duplicate`` — true at read time (their content is
     already served; the corpus append drops them the same way), so
     the audit never claims a doc was kept twice. The audit rides
-    the single-pass
-    ``stage_hook`` protocol (each boundary pinned once; the chain
-    still evaluates once), so the per-batch overhead is the pins +
+    the single-pass ``stage_hook`` protocol (the flag projection
+    and the stream-dedup survivors pinned once; the chain still
+    evaluates once), so the per-batch overhead is the pins +
     drop-sized enrichment joins, not extra pipeline evaluations."""
-    # The benchmark frame is fixed for the lifetime of the loop, so
-    # its distinct-shingle collection — a full shingle job — runs
-    # ONCE at the first batch and rides the closure afterwards. A
-    # stream processes thousands of batches; re-collecting an
-    # identical literal set per batch was one whole Spark job of
-    # pure overhead each time (guide §4.5's once-per-task rule,
-    # applied at the loop grain). The literal array COLUMN is cached
-    # too: Column expressions are plan-independent, and rebuilding a
-    # 2k-element literal costs ~1.2 s of driver py4j time per batch.
-    # ``None`` = not yet computed; ``[]`` = computed and empty.
-    bench_shingle_cache: list = [None]
-    # per-loop Column cache (curate_document_stream's ``expr_cache``):
-    # the gate expressions depend only on this factory's constant
-    # arguments, so batches after the first reuse the built Columns
-    # instead of re-paying the py4j construction per micro-batch
-    expr_cache: dict = {}
+    # The gate table is built ONCE per loop, at the first batch: its
+    # Columns are plan-independent and depend only on this factory's
+    # arguments, while building them costs a Spark job (the
+    # benchmark's distinct shingles) plus driver py4j time (~1.2 s
+    # for a 2k-shingle literal) — per micro-batch that would be pure
+    # overhead (guide §4.5's once-per-task rule, at the loop grain).
+    gate_table: list = []
 
-    def _bench_shingles():
-        if benchmark is None:
-            return None
-        if bench_shingle_cache[0] is None:
-            shingles = benchmark_shingle_set(
-                benchmark, decontaminate_n, bench_text_col,
-                bench_id_col)
-            bench_shingle_cache[0] = \
-                F.array(*[F.lit(s) for s in shingles]) \
-                if shingles else []
-        return bench_shingle_cache[0]
+    def _gates():
+        if not gate_table:
+            gate_table.extend(stream_gates(
+                benchmark, quality_model, quality_model_threshold,
+                min_words, decontaminate_n, min_overlap,
+                bench_text_col, bench_id_col, html_input, lang_keep))
+        return gate_table
 
     def _read_bloom_dir(spark):
         """(artifact df | None, dir params | None). Params come from
@@ -518,63 +333,36 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
             if history is None:
                 history_bloom = None    # nothing to gate against
         probe_bcs: list = []
-        captured: list[tuple[str, DataFrame]] = []
-        # the LAST boundary is what _process_locked pins as `curated`
-        # anyway — capture records it lazily and the pinned frame is
-        # patched back in below, so the final boundary is
-        # materialized once, not twice (r17)
-        last_key = ("after_history_dedup" if history is not None
-                    else "after_stream_dedup")
+        boundaries: dict = {}
 
         def capture(key: str, frame: DataFrame) -> DataFrame:
-            # pin each MATERIALIZATION boundary so the audit's
-            # anti-joins read a materialization instead of re-running
-            # the chain prefix (the curation_audit single-pass
-            # protocol). Blocks free when the batch function's
-            # references drop — same GC-release rationale as the
-            # marker snapshot cache. Three key classes are NOT
-            # pinned:
-            # * stream_input — the audit reads input ids from
-            #   batch_df directly (review r12);
-            # * the fused map-side boundaries (r17) — cumulative
-            #   FILTERS over the pinned ``curation_flags`` frame;
-            #   pinning a filter-of-a-checkpoint re-materializes the
-            #   same bytes for nothing;
-            # * the final boundary — _process_locked pins the chain
-            #   result as ``curated`` and patches it back in.
-            if key == "stream_input":
-                return frame
-            if key == last_key or (quality_model is None and key in (
-                    "after_lang_filter", "after_gopher",
-                    "after_redaction", "after_decontamination")):
-                captured.append((key, frame))
-                return frame
-            pinned = pin(frame)
-            captured.append((key, pinned))
-            return pinned
+            # pin each MATERIALIZATION boundary so the lineage reads a
+            # materialization instead of re-running the chain prefix
+            # (the curation_audit single-pass protocol): the flag
+            # projection every gate view filters, and the stream-dedup
+            # survivors when the history anti join consumes them too.
+            # The last boundary is pinned below as ``curated``. Blocks
+            # free when the batch function's references drop — same
+            # GC-release rationale as the marker snapshot cache.
+            if key == "curation_flags" or (
+                    key == "after_stream_dedup" and history is not None):
+                frame = pin(frame)
+            boundaries[key] = frame
+            return frame
 
         try:
-            curated = curate_document_stream(
-                batch_df, history=history, benchmark=benchmark,
-                bench_shingles=_bench_shingles(),
-                quality_model=quality_model,
-                quality_model_threshold=quality_model_threshold,
-                min_words=min_words, decontaminate_n=decontaminate_n,
-                min_overlap=min_overlap,
-                bench_text_col=bench_text_col,
-                bench_id_col=bench_id_col,
+            gates = _gates()
+            curated = pin(_stream_chain(
+                batch_df, gates, history=history,
                 history_bloom=history_bloom,
                 broadcast_handle=probe_bcs,
-                html_input=html_input, lang_keep=lang_keep,
-                stage_hook=capture if audit_dir is not None else None,
-                expr_cache=expr_cache)
-            curated = pin(curated, truncate=True)
-            if captured and captured[-1][0] == last_key:
-                # the final boundary was recorded lazily (capture
-                # skips it); the pin above IS its materialization —
-                # hand that to the audit so its joins never re-run
-                # the dedup/anti-join suffix
-                captured[-1] = (last_key, curated)
+                stage_hook=capture if audit_dir is not None else None),
+                truncate=True)
+            # the pin above IS the last boundary's materialization —
+            # hand it to the lineage so its joins never re-run the
+            # dedup/anti-join suffix
+            boundaries["after_history_dedup" if history is not None
+                       else "after_stream_dedup"] = curated
             # renew-or-abort immediately before the batch's first
             # durable write (verdict r11 #1): a batch stalled past
             # the TTL must not append beside a new writer
@@ -609,7 +397,7 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
                 # per-batch OVERWRITE into batch=N: a replayed batch
                 # rewrites identical lineage (idempotent); distinct
                 # batches never touch each other's subdirs
-                _stream_batch_audit(batch_df, captured, min_words) \
+                drop_lineage(batch_df, gates, boundaries) \
                     .write.mode("overwrite") \
                     .parquet(f"{audit_dir}/batch={batch_id}")
         finally:
@@ -620,6 +408,41 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
                 bc.unpersist(blocking=False)
 
     return process
+
+
+def stream_gates(benchmark: DataFrame | None = None,
+                 quality_model=None,
+                 quality_model_threshold: float = 0.5,
+                 min_words: int = 50,
+                 decontaminate_n: int = DEFAULT_NGRAM,
+                 min_overlap: int = 1,
+                 bench_text_col: str = "text",
+                 bench_id_col: str = "bench_id",
+                 html_input: bool = False,
+                 lang_keep: list | None = None,
+                 bench_shingles: list[str] | None = None) -> tuple:
+    """The streaming chain's gate table: the batch gates
+    (``pipelines.curation.curation_gates``, Gopher boundary
+    ``after_gopher``) plus, with a ``benchmark``, the map-side
+    decontamination flag over the redacted text. The benchmark's
+    distinct shingles are collected here (one small job) unless
+    ``bench_shingles`` passes them in; an empty set keeps the
+    ``after_decontamination`` boundary with nothing to drop. Pass the
+    table to :func:`drop_lineage` to explain a hooked chain's drops."""
+    decon = None
+    if benchmark is not None:
+        if bench_shingles is None:
+            bench_shingles = benchmark_shingle_set(
+                benchmark, decontaminate_n, bench_text_col,
+                bench_id_col)
+        decon = stream_decon_condition(
+            F.array(*[F.lit(s) for s in bench_shingles]),
+            decontaminate_n, min_overlap) if bench_shingles \
+            else F.lit(True)
+    return curation_gates(min_words, html_input, lang_keep,
+                          quality_model=quality_model,
+                          quality_model_threshold=quality_model_threshold,
+                          decon=decon, gopher_key="after_gopher")
 
 
 def curate_document_stream(stream_docs: DataFrame,
@@ -639,15 +462,18 @@ def curate_document_stream(stream_docs: DataFrame,
                            html_input: bool = False,
                            lang_keep: list | None = None,
                            stage_hook=None,
-                           bench_shingles: list[str] | None = None,
-                           expr_cache: dict | None = None
+                           bench_shingles: list[str] | None = None
                            ) -> DataFrame:
     """The stream-safe curation stages composed over a document
     stream (or a batch frame — every stage is trigger-agnostic):
 
-        Gopher gate → [learned quality filter] → PII redaction →
-        [map-side decontamination] → within-stream exact dedup →
+        [html extraction] → [language gate] → Gopher gate →
+        [learned quality filter] → PII redaction → [map-side
+        decontamination] → within-stream exact dedup →
         [against-history anti join]
+
+    The gates are :func:`stream_gates`, run like the batch chain's:
+    one flag projection, then a cumulative filter view per gate.
 
     The output carries a ``fingerprint`` column (the dedup key) so
     the sink can feed the historical index directly. With ``ts_col``
@@ -666,201 +492,37 @@ def curate_document_stream(stream_docs: DataFrame,
     to the Bloom-gated exact form: identical answer, join shuffle
     bounded by the "maybe" rows.
 
-    ``stage_hook(key, frame)`` — the same DataFrame-return protocol
-    as :func:`pipelines.curation.curation_frame` (verdict r11 #8):
-    called at every doc-grain stage boundary; a returned DataFrame
-    REPLACES the boundary in-chain (so an audit capture can pin each
-    boundary and the chain evaluates once). Hooks that pin are for
-    BATCH frames (foreachBatch / backfills) — a hook on a genuine
-    readStream frame must stay lazy.
+    ``stage_hook(key, frame)`` — the hook protocol of
+    :func:`pipelines.curation.curation_frame` (verdict r11 #8):
+    called at ``stream_input``, ``curation_flags``, every gate view
+    (the Gopher one is ``after_gopher``), ``after_stream_dedup`` and
+    ``after_history_dedup``; a returned DataFrame REPLACES the
+    boundary in-chain (so an audit capture can pin each boundary and
+    the chain evaluates once), any other return is ignored. Hooks
+    that pin are for BATCH frames (foreachBatch / backfills) — a hook
+    on a genuine readStream frame must stay lazy.
 
-    ``expr_cache`` — an optional caller-owned dict the gate Columns
-    are memoized into (r16): the predicates/projections built here
-    are plan-independent and loop-constant, so a foreachBatch caller
-    passes one dict per loop and pays their py4j construction once
-    instead of per micro-batch. Must be dropped if any constructor
-    argument changes; ``make_curation_ingest_batch_fn`` scopes one
-    per loop."""
-    def hook(key: str, frame: DataFrame) -> DataFrame:
-        if stage_hook is None:
-            return frame
-        r = stage_hook(key, frame)
-        return r if r is not None else frame
+    ``bench_shingles`` lets a caller that already collected the
+    benchmark's shingle set (:func:`benchmark_shingle_set`) skip the
+    collection job."""
+    gates = stream_gates(benchmark, quality_model,
+                         quality_model_threshold, min_words,
+                         decontaminate_n, min_overlap, bench_text_col,
+                         bench_id_col, html_input, lang_keep,
+                         bench_shingles)
+    return _stream_chain(stream_docs, gates, history, ts_col,
+                         dedup_delay, history_bloom, broadcast_handle,
+                         stage_hook)
 
-    if expr_cache is not None:
-        # config fingerprint (ADVICE r16): the cached Columns are only
-        # valid for the constructor arguments they were built from —
-        # a dict shared across differing configs would silently filter
-        # with stale predicates. The fingerprint is stored on first
-        # use and mismatched reuse fails loudly. Column-typed
-        # bench_shingles participate by object identity: the literal
-        # array is built once per loop and reused (the id is stable
-        # exactly as long as the cache should be).
-        _fp = (min_words, tuple(lang_keep) if lang_keep is not None
-               else None, decontaminate_n, min_overlap,
-               bool(html_input),
-               id(bench_shingles)
-               if not isinstance(bench_shingles, (list, type(None)))
-               else None)
-        seen = expr_cache.setdefault("__config", _fp)
-        if seen != _fp:
-            raise ValueError(
-                "curate_document_stream: expr_cache was built for a "
-                f"different configuration ({seen} != {_fp}) — pass "
-                "one dict per loop configuration")
 
-    def expr(key, build):
-        # ``expr_cache`` (r16): gate predicates/projections are plan-
-        # independent Column expressions whose only inputs are the
-        # loop-constant arguments, but BUILDING them costs driver
-        # py4j round trips per F.* call (~0.23 s/chain; the
-        # shingle-lambda conversion alone ~0.1 s). A long-lived
-        # caller passes one dict per loop and every micro-batch after
-        # the first reuses the built Columns — the same once-per-loop
-        # hoist as the benchmark-shingle literal. One-shot callers
-        # pass nothing and build fresh, same expressions either way.
-        if expr_cache is None:
-            return build()
-        col = expr_cache.get(key)
-        if col is None:
-            col = expr_cache[key] = build()
-        return col
-
-    out = hook("stream_input", stream_docs)
-    if html_input:
-        # web-crawl front door, stream-safe by construction: a pure
-        # projection (functions/html.py), no state, no shuffle —
-        # the same opt-in stage the batch chain runs, so an ingest
-        # loop pointed at raw crawl pages curates prose, not tag soup
-        from ..functions.html import extract_html_text
-        out = hook("after_html_extract",
-                   out.withColumn("text", expr(
-                       "html_extract",
-                       lambda: extract_html_text(F.col("text")))))
-    from ..functions.gopher import all_pass as gopher_all_pass
-    from ..functions.redact import redact_text
-
-    # resolve the benchmark shingles once — both chain shapes below
-    # need them. ``bench_shingles`` lets a long-lived caller (the
-    # ingest loop) collect the benchmark's shingle set once and reuse
-    # it across batches instead of re-running the collection job at
-    # every plan build; passing the frame alone keeps the one-shot
-    # call sites unchanged.
-    shingles = None
-    if benchmark is not None:
-        shingles = bench_shingles if bench_shingles is not None \
-            else benchmark_shingle_set(
-                benchmark, decontaminate_n, bench_text_col,
-                bench_id_col)
-    from pyspark.sql import Column
-
-    def decon_cond():
-        if isinstance(shingles, Column):
-            return expr("decon_keep",
-                        lambda: stream_decon_condition(
-                            shingles, decontaminate_n, min_overlap))
-        return stream_decon_condition(
-            F.array(*[F.lit(s) for s in shingles]),
-            decontaminate_n, min_overlap)
-
-    # FUSED map-side prefix under a stage_hook (r17, guide §2.4/§1.2):
-    # with an audit hook attached, every map-side boundary used to be
-    # pinned separately — lang survivors, gopher survivors, the
-    # redacted frame, decon survivors — i.e. up to four full
-    # materializations of overlapping row sets per micro-batch
-    # (builder-measured: the 6 audit pins cost ~0.85 s/batch, the
-    # dominant audit overhead). All of those gates are pure row-local
-    # expressions over one scan, so the hooked chain now computes ONE
-    # flag projection — (…, __lang, __gopher, redacted text,
-    # __decon) — hands it to the hook as the ``curation_flags``
-    # boundary (the audit pins exactly this one frame), and every
-    # boundary after it is a cumulative FILTER over those
-    # materialized flag columns: the boundaries and the chain read
-    # the same pinned flags, so lineage content cannot diverge from
-    # the chain definition (the audit's row sets are bit-identical to
-    # the sequential gates — flags are independent per-row
-    # predicates; parity pinned by the audit suite). Trade, stated:
-    # flags evaluate on EVERY input row (the sequential chain skips
-    # e.g. the decon shingle build for gopher-dropped rows), which
-    # buys back ~3 materialization jobs per batch — the right side of
-    # the trade whenever most rows pass, and only the hooked (audit)
-    # path pays it; the un-hooked chain below is untouched. The
-    # redacted text is projected FIRST and ``__decon`` computed over
-    # the projected attribute in a SECOND select: CollapseProject
-    # refuses to inline the non-cheap redaction regex chain into two
-    # consumers, so redaction still evaluates once per row.
-    # quality_model breaks the map-side run (a model scorer between
-    # gopher and redaction), so that configuration keeps the
-    # sequential per-boundary shape.
-    if stage_hook is not None and quality_model is None:
-        flag_cols = []
-        if lang_keep is not None:
-            from ..functions.text import detect_lang
-            flag_cols.append(expr(
-                "lang_keep",
-                lambda: detect_lang(F.col("text"))
-                .isin(list(lang_keep))).alias("__lang"))
-        flag_cols.append(expr(
-            "gopher_pass",
-            lambda: gopher_all_pass(F.col("text"),
-                                    min_words=min_words))
-            .alias("__gopher"))
-        red = expr("redact", lambda: redact_text(F.col("text")))
-        flagged = out.select(
-            *[red.alias("text") if c == "text" else F.col(c)
-              for c in out.columns], *flag_cols)
-        has_decon = benchmark is not None and (
-            isinstance(shingles, Column) or bool(shingles))
-        if has_decon:
-            flagged = flagged.withColumn("__decon", decon_cond())
-        out = hook("curation_flags", flagged)
-        if lang_keep is not None:
-            out = hook("after_lang_filter", out.filter(F.col("__lang")))
-        out = hook("after_gopher", out.filter(F.col("__gopher")))
-        out = hook("after_redaction", out)
-        if benchmark is not None:
-            out = hook("after_decontamination",
-                       out.filter(F.col("__decon")) if has_decon
-                       else out)
-        out = out.drop("__lang", "__gopher", "__decon")
-    else:
-        if lang_keep is not None:
-            # language gate before quality (CCNet order) — a pure
-            # codegen predicate, stream-safe like every other gate
-            from ..functions.text import detect_lang
-            out = hook("after_lang_filter",
-                       out.filter(expr(
-                           "lang_keep",
-                           lambda: detect_lang(F.col("text"))
-                           .isin(list(lang_keep)))))
-        # filter(all_pass) is row- and column-identical to
-        # gopher_filter (whose flag projections exist only to be
-        # pruned again); the direct predicate makes the gate a
-        # cacheable Column
-        out = hook("after_gopher",
-                   out.filter(expr(
-                       "gopher_pass",
-                       lambda: gopher_all_pass(F.col("text"),
-                                               min_words=min_words))))
-        if quality_model is not None:
-            out = hook("after_model_quality", model_quality_filter(
-                out, quality_model,
-                threshold=quality_model_threshold)
-                .drop("quality_prob"))
-        # rewrites text, never drops — the boundary exists so an
-        # audit hook can capture the POST-redaction text the dedup
-        # fingerprint keys on (no reason label; it can never be a
-        # dropping stage)
-        out = hook("after_redaction",
-                   out.withColumn("text", expr(
-                       "redact",
-                       lambda: redact_text(F.col("text")))))
-        if benchmark is not None:
-            if isinstance(shingles, Column) or shingles:
-                out = hook("after_decontamination",
-                           out.filter(decon_cond()))
-            else:
-                out = hook("after_decontamination", out)
+def _stream_chain(docs: DataFrame, gates, history=None, ts_col=None,
+                  dedup_delay=None, history_bloom=None,
+                  broadcast_handle=None, stage_hook=None) -> DataFrame:
+    """The chain behind :func:`curate_document_stream` over a built
+    gate table — the ingest loop calls it with the table it built
+    once."""
+    hook = _hook(stage_hook)
+    out = _gated(hook("stream_input", docs), gates, hook)
     if ts_col is not None and dedup_delay is not None:
         out = hook("after_stream_dedup",
                    incremental_dedup_watermarked(out, ts_col,
