@@ -109,17 +109,7 @@ def _extra_ops():
         import pyarrow.parquet as pq
         n = pq.ParquetFile(
             f"{sf_dir}/embeddings.parquet").metadata.num_rows
-        # r16: bench the documented corpus-scale kernels (GEMM Lloyd
-        # assignment + einsum verify, semantic.py) instead of the
-        # interpreted bit-pinned SQL folds the hash-checked REGISTRY
-        # queries keep. Output is identical on this corpus — the
-        # sf0.1 pair sets match exactly (sym-diff 0, cosines
-        # included; kernel-agreement also pytest-pinned) — and the
-        # sql path measured 6.1 s vs 3.8 s here, a constant-factor
-        # interpreted-fold tax that only grows with k at scale.
-        return semantic_dup_pairs(emb, 0.4, dim=64, n=n,
-                                  assign_kernel="arrow",
-                                  verify_kernel="arrow")
+        return semantic_dup_pairs(emb, 0.4, dim=64, n=n)
 
     def dsir(spark, sf_dir):
         docs = load_table(spark, sf_dir, "documents")

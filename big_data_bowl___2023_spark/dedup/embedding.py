@@ -5,11 +5,11 @@ Three tiers (same output contract: ``(vec_a, vec_b, cosine)`` with
 
 * ``cosine_near_dup_pairs`` — EXACT pairs, executed as a block-GEMM
   *prefilter* (numpy matrix products over Arrow-batched vector
-  blocks, threshold − 1e-9 margin) followed by an exact fold-dot
-  re-verification of the few surviving candidates. The final values
-  use the same left-fold arithmetic the DuckDB oracle uses, so the
-  result is bit-identical to a naive all-pairs fold — at vectorized-C
-  speed instead of one interpreted expression fold per pair.
+  blocks, threshold − 1e-9 margin) followed by an exact einsum
+  re-verification of the few surviving candidates, rounded once in
+  Spark — the same pairs and 6-dp cosines as a naive all-pairs fold
+  (up to the last ulp), at vectorized-C speed instead of one
+  interpreted expression fold per pair.
 * ``cosine_near_dup_pairs_lsh`` — the sub-quadratic scale path:
   deterministic ±1 hyperplane signatures (T tables × P bits),
   candidates = pairs colliding in ≥ 1 table, then the same exact
@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import vectors as V
-from ..session import pin, resolve_kernel
+from ..session import pin
 
 # GEMM-prefilter margin: numpy dot and the oracle's sequential fold
 # differ by O(1e-15); candidates are kept at threshold − margin and the
@@ -70,7 +70,7 @@ def _normalized(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     Degenerate vectors (zero norm / NaN components) normalize to
     NULL and are DROPPED here: cosine is undefined for them, so they
     can never satisfy a similarity threshold, and every downstream
-    kernel (einsum prefilter, GEMM blocks, fold verify) would
+    kernel (einsum prefilter, GEMM blocks, einsum verify) would
     otherwise have to NaN-guard or crash on a None row. One
     documented behavior for all pair paths (round-7 ADVICE: the LSH/
     GEMM paths already excluded them; the exact path surfaced them
@@ -87,31 +87,17 @@ def _normalized(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
 def _verify_exact(v: DataFrame, cand: DataFrame,
                   threshold: float,
                   broadcast_candidates: bool | str = "auto",
-                  broadcast_limit: int = 2_000_000,
-                  kernel: str | None = None) -> DataFrame:
-    """Exact dot over candidate id pairs only.
-
-    ``kernel`` picks the per-pair scoring implementation (the join
-    shape — candidate ids against the unit-vector table — is shared):
-
-    * ``"sql"`` (default) — the left-fold zip product. Its arithmetic
-      (normalize once, fold left-to-right) mirrors the DuckDB oracle
-      exactly, so surviving pairs carry oracle-identical, hash-pinned
-      cosine values. zip_with/aggregate are CodegenFallback: Spark
-      evaluates the fold INTERPRETED, one lambda step per element per
-      pair — fine for near-output-sized survivor sets, a constant-
-      factor tax when verification is the hot leg of a corpus run.
-    * ``"arrow"`` — one numpy einsum per Arrow batch over the joined
-      pairs (same shape as ``_np_prefilter`` / ann ``_score_pairs``).
-      The corpus-scale setting: per-pair cost is a few fused flops.
-      einsum's pairwise summation can differ from the sequential fold
-      in the last ulp, and np.round is half-even where Spark's round
-      is BigDecimal half-up — so a cosine landing EXACTLY on the
-      threshold or on a 6-dp .5 boundary can flip (see
-      tests/test_kernel_rounding_boundary.py for the constructed
-      case). Real-valued embeddings agree bit-for-bit on the pinned
-      test corpora (pytest-asserted); registry defaults stay "sql" so
-      every driver hash is byte-stable.
+                  broadcast_limit: int = 2_000_000) -> DataFrame:
+    """Exact dot over candidate id pairs only: candidate ids join the
+    unit-vector table, then one numpy einsum per Arrow batch scores
+    the joined pairs (same shape as ``_np_prefilter`` / ann
+    ``_score_pairs``) and keeps ``dot >= threshold``; Spark rounds the
+    kept cosines once to 6 dp (half-up, the DuckDB oracle's
+    ``ROUND``). einsum's pairwise summation can differ from a
+    sequential fold in the last ulp, so only a cosine landing within
+    an ulp of the threshold or of a 6-dp .5 boundary could differ
+    from the oracle's fold (tests/test_kernel_rounding_boundary.py
+    pins the exact-boundary case).
 
     ``broadcast_candidates`` picks the join strategy for the (narrow)
     candidate side against the (wide) vector table:
@@ -139,7 +125,8 @@ def _verify_exact(v: DataFrame, cand: DataFrame,
 
     ``broadcast_limit`` defaults to 2M id pairs ≈ 32 MB of packed
     rows — half the session's 64 MB autoBroadcastJoinThreshold."""
-    kernel = resolve_kernel(kernel, "verify")
+    import numpy as np
+
     ua = v.select(F.col("id").alias("vec_a"), F.col("u").alias("ua"))
     ub = v.select(F.col("id").alias("vec_b"), F.col("u").alias("ub"))
     if broadcast_candidates == "auto":
@@ -147,14 +134,6 @@ def _verify_exact(v: DataFrame, cand: DataFrame,
         broadcast_candidates = cand.count() <= broadcast_limit
     c = F.broadcast(cand) if broadcast_candidates else cand
     joined = ua.join(c, "vec_a").join(ub, "vec_b")
-    if kernel == "sql":
-        cos = V.dot(F.col("ua"), F.col("ub"))
-        return (joined
-                .withColumn("cosine", cos)
-                .filter(F.col("cosine") >= F.lit(threshold))
-                .select("vec_a", "vec_b",
-                        F.round("cosine", 6).alias("cosine")))
-    import numpy as np
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -165,10 +144,11 @@ def _verify_exact(v: DataFrame, cand: DataFrame,
             dots = np.einsum("ij,ij->i", A, B)
             keep = dots >= threshold
             out = pdf.loc[keep, ["vec_a", "vec_b"]].copy()
-            out["cosine"] = np.round(dots[keep], 6)
+            out["cosine"] = dots[keep]
             yield out
 
-    return joined.mapInPandas(verify, _OUT_SCHEMA)
+    return (joined.mapInPandas(verify, _OUT_SCHEMA)
+            .withColumn("cosine", F.round("cosine", 6)))
 
 
 def _gather_eligible(v: DataFrame, n_vectors: int | None,
@@ -366,20 +346,16 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
                           vec_col: str = "embedding",
                           id_col: str = "vec_id",
                           n_blocks: int | None = None,
-                          target_block: int = 2000,
-                          verify_kernel: str | None = None) -> DataFrame:
+                          target_block: int = 2000) -> DataFrame:
     """EXACT (vec_a, vec_b, cosine) pairs ≥ threshold, a < b.
 
-    Plan: block-GEMM prefilter → exact fold verification of survivors.
-    Output is identical to a naive all-pairs fold (same final
-    arithmetic), but the O(n²) work runs as numpy matrix products —
+    Plan: block-GEMM prefilter → exact einsum verification of
+    survivors (``_verify_exact``). Output matches a naive all-pairs
+    fold, but the O(n²) work runs as numpy matrix products —
     the round-1 nested-loop + per-pair interpreted fold (181 s at
     sf0.1) becomes block-pair GEMMs. ``n_blocks`` auto-scales with
     corpus count (``scaled_n_blocks``) so block rows stay ~target_block
-    vectors regardless of n; pass it explicitly only to pin a plan.
-    ``verify_kernel="arrow"`` swaps the per-survivor interpreted fold
-    for the einsum batch kernel (see ``_verify_exact``) — the
-    corpus-scale setting; the default stays the oracle-pinned fold."""
+    vectors regardless of n; pass it explicitly only to pin a plan."""
     v = pin(_normalized(df, vec_col, id_col))
     if n_blocks is None:
         n_blocks = scaled_n_blocks(v.count(), target_block)
@@ -391,8 +367,7 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
     # corpus (survivors ~O(n²) = output-sized) a forced broadcast
     # would OOM where the AQE shuffle join degrades gracefully.
     return _verify_exact(v, cand, threshold,
-                         broadcast_candidates=False,
-                         kernel=verify_kernel)
+                         broadcast_candidates=False)
 
 
 # ------------------------------------------------------------------ LSH
@@ -524,19 +499,16 @@ def cosine_near_dup_pairs_lsh(df: DataFrame, threshold: float,
                               n_planes: int | None = None,
                               target_bucket: int = 32,
                               max_bucket: int | None = None,
-                              verify_kernel: str | None = None,
                               prefilter_broadcast: bool | str = "auto",
                               center: bool = False) -> DataFrame:
     """Sub-quadratic near-dup pairs: hyperplane-LSH candidates →
-    exact fold verification. Precision 1.0 (every emitted pair is
+    exact verification. Precision 1.0 (every emitted pair is
     exactly ≥ threshold); recall follows 1 − (1 − p^P)^T with
     p = 1 − θ/π — raise n_tables for more recall, target_bucket for
     cheaper joins. The result is DETERMINISTIC (literal ±1 planes), so
     the driver oracle reproduces candidates and verification exactly.
     ``max_bucket`` arms the hot-bucket star guard for corpora with
     mass-duplicate vectors (see ``lsh_candidate_pairs``).
-    ``verify_kernel="arrow"`` swaps the per-survivor interpreted fold
-    for the einsum batch kernel (see ``_verify_exact``).
     ``prefilter_broadcast`` picks the candidate screen's vector
     access — ``"auto"`` (default) gathers the unit vectors into one
     broadcast matrix whenever a corpus count proves it fits worker
@@ -591,8 +563,7 @@ def cosine_near_dup_pairs_lsh(df: DataFrame, threshold: float,
     # (survivors ~output-sized) the AQE shuffle join degrades
     # gracefully where a forced broadcast would OOM.
     return _verify_exact(v, survivors, threshold,
-                         broadcast_candidates=False,
-                         kernel=verify_kernel)
+                         broadcast_candidates=False)
 
 
 def cosine_pairs_allpairs_fold(df: DataFrame, threshold: float,

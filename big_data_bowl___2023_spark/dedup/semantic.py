@@ -11,13 +11,12 @@ the accepted recall cost — the point is that per-cluster work is
 Composition over existing engine pieces (nothing new to verify at
 the kernel level):
 
-* centroids: ``similarity.pq.train_pq`` with m=1 — the distributed
-  Lloyd trainer degenerates to full-vector k-means (deterministic
-  md5-seeded init, one aggregation job per iteration, O(k·dim)
-  driver state);
-* assignment: one scan — the pq argmin expressions by default
-  (bit-pinned fold arithmetic), or ``assign_kernel="arrow"`` for a
-  GEMM-per-Arrow-batch argmin, the corpus-scale setting;
+* centroids: ``similarity.pq.train_pq`` with m=1 and
+  ``lloyd="driver"`` — full-vector k-means over the capped
+  md5-ordered sample (deterministic md5-seeded init, one bounded
+  collect, numpy Lloyd rounds);
+* assignment: one scan — a GEMM-per-Arrow-batch argmin against the
+  broadcast centroids (``assign_with_centroids``);
 * within-cluster candidates: ``minhash.band_candidates`` on the
   cluster id, so the mass-duplicate pathology is bounded by the same
   hot-bucket star guard as the LSH paths (``max_bucket``);
@@ -25,11 +24,9 @@ the kernel level):
   (one einsum per Arrow batch over the raw within-cluster pairs, AQE
   joins) — the raw candidate volume is ~target_cluster/2 rows PER
   corpus vector, linear in n, so it must never be broadcast;
-* verification: the exact kernel (``embedding._verify_exact``) over
-  the near-output-sized prefilter survivors — precision 1.0; the
-  default fold arithmetic is identical to the exact near-dup paths,
-  ``verify_kernel="arrow"`` is the einsum batch variant for corpus
-  runs;
+* verification: the exact einsum kernel (``embedding._verify_exact``)
+  over the near-output-sized prefilter survivors — precision 1.0,
+  the same arithmetic as the exact near-dup paths;
 * keeper choice: ``clusters.connected_components`` + min-id
   canonicalization, identical to the MinHash dedup flow.
 
@@ -46,7 +43,7 @@ from .clusters import connected_components
 from .embedding import _normalized, _np_prefilter, _verify_exact
 from .minhash import band_candidates
 from ..functions import vectors as V
-from ..session import pin, resolve_kernel
+from ..session import pin
 
 
 def scaled_k(n: int, target_cluster: int = 250) -> int:
@@ -61,108 +58,36 @@ def scaled_k(n: int, target_cluster: int = 250) -> int:
 def kmeans_assign(df: DataFrame, k: int = 16, n_iters: int = 4,
                   vec_col: str = "embedding",
                   id_col: str = "vec_id",
-                  dim: int | None = None,
-                  codegen_max_k: int = 64,
-                  n: int | None = None,
-                  assign_kernel: str | None = None) -> DataFrame:
+                  dim: int | None = None) -> DataFrame:
     """(id, u, cluster): full-vector k-means assignment.
 
-    Training is ``train_pq(m=1)`` (deterministic seeds, Lloyd rounds
-    as single aggregation jobs over a capped training sample, exact-
-    fixpoint early stop). ``n`` is the optional corpus-rowcount hint
-    that lets training skip the sample stage when the corpus already
-    fits the cap (see train_pq). ``assign_kernel="arrow"`` selects
-    the GEMM kernels for BOTH the Lloyd rounds and the final
-    assignment scan — at SemDeDup-sized k the interpreted fold
-    trainer dominates the whole operator, so the corpus-scale
-    setting must cover it.
-    Assignment picks its physical shape by ``k``:
-
-    * k ≤ ``codegen_max_k``: the literal-centroid argmin expression
-      the PQ encoder uses — pure whole-stage codegen, zero joins;
-    * k > ``codegen_max_k``: broadcast-replicate against a k-row
-      centroid table + map-side ``min_by`` fold. A thousand-literal
-      argmin would blow past the JVM codegen method-size limits that
-      `scaled_k` reaches on large corpora; the replicate path keeps
-      the per-row k·dim distance work but streams it, and the
-      groupBy(id) collapses map-side (replication preserves row
-      locality) so the exchange carries one row per vector."""
+    Training is ``train_pq(m=1, lloyd="driver")``: one bounded
+    collect of the capped md5-ordered sample, then numpy Lloyd rounds
+    with an exact-fixpoint early stop; assignment is
+    ``assign_with_centroids``."""
     from ..similarity.pq import train_pq
 
     v = _normalized(df, vec_col, id_col)
     if dim is None:   # one probe job; pass dim to skip it
         dim = len(v.select("u").first().u)
-    # assign_kernel covers the Lloyd rounds too: SemDeDup-sized k
-    # (n/target_cluster) makes the fold trainer the bottleneck long
-    # before the assignment scan — see train_pq's kernel note
     cents = train_pq(df, vec_col=vec_col, id_col=id_col, dim=dim,
-                     m=1, k=k, n_iters=n_iters, n=n,
-                     assign_kernel=assign_kernel,
-                     lloyd=_lloyd_tier(assign_kernel))[0]
-    return assign_with_centroids(v, cents, codegen_max_k,
-                                 kernel=assign_kernel)
+                     m=1, k=k, n_iters=n_iters, lloyd="driver")[0]
+    return assign_with_centroids(v, cents)
 
 
-def _lloyd_tier(assign_kernel: str | None) -> str:
-    """The semantic family's Lloyd-tier rule (r17): callers that
-    chose the arrow kernels already accepted last-ulp reassociation
-    (every GEMM/einsum kernel's documented contract), so their
-    capped-sample training runs as the driver numpy loop — removing
-    seeds-collect + sample-pin + one Spark job per Lloyd round of
-    pure fixed latency. The "sql" kernel keeps the distributed
-    aggregation whose arithmetic the bit-pinned oracle paths fold."""
-    return "driver" if resolve_kernel(assign_kernel,
-                                      "assignment") == "arrow" \
-        else "spark"
-
-
-def assign_with_centroids(v: DataFrame, cents: list,
-                          codegen_max_k: int = 64,
-                          kernel: str | None = None) -> DataFrame:
+def assign_with_centroids(v: DataFrame, cents: list) -> DataFrame:
     """(id, u, cluster) for PRE-TRAINED centroids — the assignment
     half of kmeans_assign, reusable when the codebook is an artifact
     (incremental ingest assigns new batches against the corpus's
     frozen centroids so cluster boundaries never move between runs).
 
-    ``kernel`` picks the per-row argmin implementation:
-
-    * ``"sql"`` (default) — the literal-argmin / broadcast-join
-      expressions. Exact, bit-pinned arithmetic (the fold order every
-      oracle in the suite pins), but zip_with/aggregate are
-      CodegenFallback: Spark evaluates them INTERPRETED, one lambda
-      step per element per centroid — fine for bounded corpora, a
-      100-1000x constant-factor tax on a full-corpus scan.
-    * ``"arrow"`` — one numpy GEMM per Arrow batch
-      (``argmin(|c|^2 - 2 u.c)``; ``|u|^2`` is row-constant and
-      dropped). The corpus-scale assignment path: the per-row cost is
-      a few fused flops instead of interpreted lambda dispatch, and
-      the broadcast is the k x dim centroid matrix (measured: 100k
-      vectors x k=200 x dim=64 assign in 0.9 s vs 16.8 s through the
-      SQL fold on local[16] — ~19x, growing with k). Ties still break
-      to the lowest code (numpy argmin returns the first minimum).
-      Distances round differently in the last ulp than the
-      sequential SQL fold, so a vector EXACTLY equidistant to two
-      centroids in one arithmetic but not the other could flip — for
-      real-valued embeddings the paths agree exactly (pytest pins
-      agreement on the test corpora); defaults stay "sql" so every
-      hash-pinned output is byte-stable."""
-    kernel = resolve_kernel(kernel, "assignment")
-    if kernel == "arrow":
-        return _assign_arrow(v, cents)
-    if kernel != "sql":
-        raise ValueError(f"unknown assignment kernel {kernel!r}")
-    from ..similarity.pq import _argmin_code
-
-    if len(cents) <= codegen_max_k:
-        return v.withColumn("cluster", _argmin_code(F.col("u"), cents))
-    return _assign_by_join(v, cents)
-
-
-def _assign_arrow(v: DataFrame, cents: list) -> DataFrame:
-    """Vectorized nearest-centroid assignment: per Arrow batch, one
-    (batch x dim) @ (dim x k) matrix product + row argmin. Same
-    shape as the GEMM dedup prefilters — numpy does the O(n*k*dim)
-    flops, Spark does the distribution."""
+    Per Arrow batch, one (batch x dim) @ (dim x k) matrix product +
+    row argmin of ``|c|^2/2 - u.c`` (``|u|^2`` is row-constant and
+    dropped) against the broadcast k x dim centroid matrix — numpy
+    does the O(n*k*dim) flops, Spark does the distribution (measured:
+    100k vectors x k=200 x dim=64 assign in 0.9 s vs 16.8 s through
+    the interpreted SQL fold it replaced on local[16]). Ties break to
+    the lowest code (numpy argmin returns the first minimum)."""
     from pyspark.sql import types as T
     import numpy as np
     import pandas as pd
@@ -188,29 +113,6 @@ def _assign_arrow(v: DataFrame, cents: list) -> DataFrame:
     return v.mapInPandas(assign, out_schema)
 
 
-def _assign_by_join(v: DataFrame, cents: list) -> DataFrame:
-    """(id, u, cluster) via a broadcast centroid table: deterministic
-    (ties break to the lowest code, matching _argmin_code's
-    array_position-of-min semantics). The crossJoin is the deliberate
-    broadcast-replicate idiom (same as the salt replication in
-    operators/joins.py) — an inner NLJ whose build side is the k-row
-    table, NOT a corpus×corpus blowup."""
-    from ..similarity.pq import _sq_dist
-
-    spark = v.sparkSession
-    cdf = spark.createDataFrame(
-        [(j, [float(x) for x in c]) for j, c in enumerate(cents)],
-        "code int, cent array<double>")
-    joined = v.crossJoin(F.broadcast(cdf))
-    d = _sq_dist(F.col("u"), F.col("cent"))
-    return (joined
-            .select("id", "u", F.col("code"), d.alias("__d"))
-            .groupBy("id")
-            .agg(F.first("u").alias("u"),
-                 F.min_by("code", F.struct("__d", "code"))
-                  .alias("cluster")))
-
-
 def semantic_dup_pairs(df: DataFrame, threshold: float,
                        k: int | None = None,
                        n_iters: int = 4, vec_col: str = "embedding",
@@ -219,8 +121,6 @@ def semantic_dup_pairs(df: DataFrame, threshold: float,
                        target_cluster: int = 250,
                        dim: int | None = None,
                        n: int | None = None,
-                       assign_kernel: str | None = None,
-                       verify_kernel: str | None = None,
                        prefilter_broadcast: bool | str = "auto"
                        ) -> DataFrame:
     """(vec_a, vec_b, cosine) with cosine ≥ threshold, both members
@@ -234,13 +134,7 @@ def semantic_dup_pairs(df: DataFrame, threshold: float,
     total pair work stays linear in n. ``n``/``dim`` hints skip the
     two driver-side probe jobs (a count and a first) when the caller
     already knows them — the bench and pipeline paths always do.
-    ``assign_kernel="arrow"`` swaps the per-vector argmin scan for
-    the GEMM-per-Arrow-batch kernel (see ``assign_with_centroids``)
-    and ``verify_kernel="arrow"`` swaps the per-survivor interpreted
-    verify fold for the einsum batch kernel
-    (``embedding._verify_exact``) — together the corpus-scale
-    setting; both default to the bit-pinned SQL folds so the driver
-    hashes stay byte-stable. ``prefilter_broadcast="auto"``
+    ``prefilter_broadcast="auto"``
     (default) picks the candidate screen's scale-safe mode by a
     counted corpus size (``embedding._np_prefilter``) — the mode
     choice never changes the emitted pairs."""
@@ -253,23 +147,12 @@ def semantic_dup_pairs(df: DataFrame, threshold: float,
     if dim is None:   # one probe job; pass dim to skip it
         dim = len(_normalized(df, vec_col, id_col)
                   .select("u").first().u)
-    # NOTE: the corpus-count hint is deliberately NOT forwarded to
-    # train_pq here: skipping the cap's TakeOrdered+repartition makes
-    # centroid float sums depend on the input's physical partitioning,
-    # and this operator pins partitioning-invariant output (the same
-    # property its sibling ops test). Callers that accept layout-
-    # dependent (still deterministic-per-layout) centroids can call
-    # kmeans_assign(..., n=...) themselves. The arrow-kernel driver
-    # Lloyd tier (_lloyd_tier) is partitioning-invariant by
-    # construction (md5-sorted sample, deterministic numpy sums).
+    # the driver Lloyd tier is partitioning-invariant by construction
+    # (md5-sorted sample, deterministic numpy sums)
     cents = train_pq(df, vec_col=vec_col, id_col=id_col, dim=dim,
-                     m=1, k=k, n_iters=n_iters,
-                     assign_kernel=assign_kernel,
-                     lloyd=_lloyd_tier(assign_kernel))[0]
+                     m=1, k=k, n_iters=n_iters, lloyd="driver")[0]
     return pairs_with_centroids(df, cents, threshold, vec_col, id_col,
                                 max_bucket=max_bucket,
-                                assign_kernel=assign_kernel,
-                                verify_kernel=verify_kernel,
                                 prefilter_broadcast=prefilter_broadcast,
                                 n=n)
 
@@ -278,8 +161,6 @@ def pairs_with_centroids(df: DataFrame, cents: list, threshold: float,
                          vec_col: str = "embedding",
                          id_col: str = "vec_id",
                          max_bucket: int | None = None,
-                         assign_kernel: str | None = None,
-                         verify_kernel: str | None = None,
                          prefilter_broadcast: bool | str = "auto",
                          broadcast_handle: list | None = None,
                          n: int | None = None) -> DataFrame:
@@ -304,9 +185,8 @@ def pairs_with_centroids(df: DataFrame, cents: list, threshold: float,
     corpus-count hint that skips the deciding count (cheap here
     anyway — the assigned table is pinned). ``broadcast_handle``
     forwards to the gather so loops can free its broadcast eagerly."""
-    v = pin(assign_with_centroids(
-        _normalized(df, vec_col, id_col), cents,
-        kernel=assign_kernel))
+    v = pin(assign_with_centroids(_normalized(df, vec_col, id_col),
+                                  cents))
     cand = band_candidates(
         v.select("id", "cluster"), max_bucket,
         band_cols=("cluster",), id_col="id",
@@ -322,8 +202,7 @@ def pairs_with_centroids(df: DataFrame, cents: list, threshold: float,
     # same broadcast decision from runtime stats and degrades to a
     # shuffle join on a mass-dup corpus instead of OOMing.
     return _verify_exact(u, survivors, threshold,
-                         broadcast_candidates=False,
-                         kernel=verify_kernel)
+                         broadcast_candidates=False)
 
 
 def keep_min_per_component(df: DataFrame, pairs: DataFrame,
@@ -349,8 +228,6 @@ def incremental_semantic_pairs(new_emb: DataFrame, corpus: DataFrame,
                                n_corpus: int | None = None,
                                cents: list | None = None,
                                max_cluster: int | None = None,
-                               assign_kernel: str | None = None,
-                               verify_kernel: str | None = None,
                                prefilter_broadcast: bool | str = "auto",
                                broadcast_handle: list | None = None
                                ) -> DataFrame:
@@ -367,7 +244,7 @@ def incremental_semantic_pairs(new_emb: DataFrame, corpus: DataFrame,
     bootstrap path. Both sides assign map-side against the broadcast
     centroids; candidates are ONE new×corpus equi-join on the cluster
     id (join strategy left to AQE — the candidate volume is data-
-    dependent, so it is NOT force-broadcast); exact fold verification
+    dependent, so it is NOT force-broadcast); exact verification
     touches candidates only. Corpus×corpus pair work is zero by
     construction; new×new dups within the batch are
     ``semantic_dup_pairs`` over the (small) batch, mirroring the
@@ -386,9 +263,6 @@ def incremental_semantic_pairs(new_emb: DataFrame, corpus: DataFrame,
     ids are monotone in practice); a shared id would be dropped by
     the inequality guard rather than verified.
 
-    ``assign_kernel``/``verify_kernel`` = "arrow" select the GEMM/
-    einsum batch kernels for the two per-row/per-pair vector stages
-    (see ``assign_with_centroids`` / ``embedding._verify_exact``).
     ``prefilter_broadcast`` routes the raw cluster-join candidates
     through the einsum screen FIRST (``_np_prefilter``:
     near-output-sized survivors reach the verify joins): ``"auto"``
@@ -413,11 +287,10 @@ def incremental_semantic_pairs(new_emb: DataFrame, corpus: DataFrame,
             dim = len(vc.select("u").first().u)
         cents = train_pq(corpus, vec_col=vec_col, id_col=id_col,
                          dim=dim, m=1, k=k, n_iters=n_iters,
-                         assign_kernel=assign_kernel,
-                         lloyd=_lloyd_tier(assign_kernel))[0]
-    ac = assign_with_centroids(vc, cents, kernel=assign_kernel)
+                         lloyd="driver")[0]
+    ac = assign_with_centroids(vc, cents)
     an = assign_with_centroids(_normalized(new_emb, vec_col, id_col),
-                               cents, kernel=assign_kernel)
+                               cents)
     corpus_side = ac.select(F.col("id").alias("vec_b"), "cluster")
     if max_cluster is not None:
         from pyspark.sql import Window
@@ -451,8 +324,7 @@ def incremental_semantic_pairs(new_emb: DataFrame, corpus: DataFrame,
                              broadcast_handle=broadcast_handle,
                              n_vectors=n_hint)
     return (_verify_exact(v_all, cand, threshold,
-                          broadcast_candidates=False,
-                          kernel=verify_kernel)
+                          broadcast_candidates=False)
             .select(F.col("vec_a").alias("vec_new"),
                     F.col("vec_b").alias("vec_corpus"), "cosine"))
 
@@ -464,23 +336,16 @@ def semantic_dedup(df: DataFrame, threshold: float,
                    max_bucket: int | None = None,
                    dim: int | None = None,
                    n: int | None = None,
-                   assign_kernel: str | None = None,
-                   verify_kernel: str | None = None,
                    prefilter_broadcast: bool | str = "auto"
                    ) -> DataFrame:
     """The rows of ``df`` that survive semantic dedup: for every
     connected group of within-cluster near-duplicates, the min-id
     member is kept; all other rows pass through untouched.
-    ``assign_kernel``/``verify_kernel`` = "arrow" are the
-    corpus-scale kernel settings (forwarded to
-    ``semantic_dup_pairs``); value defaults stay the bit-pinned SQL
-    folds. ``prefilter_broadcast="auto"`` (default) picks the
+    ``prefilter_broadcast="auto"`` (default) picks the
     scale-safe candidate screen by a counted corpus size — see
     ``embedding._np_prefilter``; mode never changes the kept rows."""
     pairs = semantic_dup_pairs(df, threshold, k, n_iters,
                                vec_col, id_col, max_bucket,
                                dim=dim, n=n,
-                               assign_kernel=assign_kernel,
-                               verify_kernel=verify_kernel,
                                prefilter_broadcast=prefilter_broadcast)
     return keep_min_per_component(df, pairs, id_col)

@@ -29,10 +29,6 @@ MIN_ALPHA_WORD_FRAC = 0.8      # words with ≥ 1 alphabetic char
 MAX_DUP_LINE_FRAC = 0.3        # duplicate lines / lines
 
 
-def _words(text: Column) -> Column:
-    return F.filter(Tx.tokenize(text), lambda t: t != "")
-
-
 def flags(text: Column,
           min_words: int = MIN_WORDS,
           max_words: int = MAX_WORDS,

@@ -25,17 +25,3 @@ def ifelse(cond: Column, yes, no) -> Column:
     """F7: vectorized conditional — R ``ifelse`` (MBE:45, 81-82, 91).
     Nest by passing another ``ifelse`` as ``no``."""
     return F.when(cond, yes).otherwise(no)
-
-
-def seconds_from_frames(frames: Column, hz: float = 10.0) -> Column:
-    """F2: frame→seconds arithmetic — the hard-coded 10 Hz clock
-    (MBE:99 ``*0.1``; WIP.R:76)."""
-    return frames / F.lit(hz)
-
-
-def initial_surname(name: Column) -> Column:
-    """F8: ``paste(str_sub(first,1,1), last, sep='.')`` — the
-    initial+surname construction (WIP.R:25-26)."""
-    first = F.split(name, " ").getItem(0)
-    last = F.split(name, " ").getItem(1)
-    return F.concat_ws(".", F.substring(first, 1, 1), last)

@@ -135,11 +135,6 @@ def quality_score(text: Column) -> Column:
             + F.lit(0.2) * (avg_token_len(text) / F.lit(10.0)))
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    return {lang: marker_count(text, markers)
-            for lang, markers in LANG_MARKERS.items()}
-
-
 # Unicode-script character classes for the space-free-script langid
 # signal (verdict r15 #3): marker stopwords over a single-space split
 # cannot see Chinese/Japanese/Korean/Thai at all — C4 §2.1 and CCNet

@@ -446,7 +446,7 @@ def load_drift_artifacts(spark, path: str) -> tuple[dict, dict]:
 def embedding_psi_report(reference: DataFrame, current: DataFrame,
                          vec_col: str = "embedding", dim: int = 64,
                          n_proj: int = 8, seed: int = 7,
-                         n_buckets: int = 10, kernel: str | None = None,
+                         n_buckets: int = 10,
                          exact_edges: bool | None = None
                          ) -> DataFrame:
     """(projection, psi, n_buckets_used): PSI per seeded JL
@@ -466,15 +466,14 @@ def embedding_psi_report(reference: DataFrame, current: DataFrame,
     ``n_proj`` sampled marginals passes it (raise ``n_proj`` or vary
     ``seed`` across runs to shrink that escape hatch). NULL vectors
     land in PSI's NULL bucket (nullability drift IS drift); a
-    wrong-length vector errors (the projection kernels' shared
-    guard)."""
+    wrong-length vector errors (the projection's guard)."""
     from ..similarity.projection import project_embeddings
 
     names = [f"proj_{j}" for j in range(n_proj)]
 
     def marginals(df: DataFrame) -> DataFrame:
         p = project_embeddings(df.select(vec_col), n_proj, seed,
-                               vec_col, "__p", dim, kernel)
+                               vec_col, "__p", dim)
         return p.select(*[F.col("__p")[j].alias(n)
                           for j, n in enumerate(names)])
 
@@ -494,14 +493,14 @@ def embedding_drift(reference: DataFrame, current: DataFrame,
                     vec_col: str = "embedding", dim: int = 64,
                     n_proj: int = 8, seed: int = 7,
                     threshold: float = 0.25,
-                    n_buckets: int = 10, kernel: str | None = None,
+                    n_buckets: int = 10,
                     exact_edges: bool | None = None) -> dict:
     """Scalar verdict over :func:`embedding_psi_report`:
     {"max_psi", "mean_psi", "n_projections", "drifted":
     [projections ≥ threshold]} — the alert-feed face (the report has
     ``n_proj`` rows, so the collect is bounded by construction)."""
     rows = embedding_psi_report(reference, current, vec_col, dim,
-                                n_proj, seed, n_buckets, kernel,
+                                n_proj, seed, n_buckets,
                                 exact_edges).collect()
     psis = [r["psi"] for r in rows]
     return {"max_psi": round(max(psis), 6),

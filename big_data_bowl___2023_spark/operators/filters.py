@@ -10,24 +10,13 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def project(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """P1/P2: column projection (reference MBE:65-66, 115-117)."""
     return df.select(*cols)
-
-
-def rename_all(df: DataFrame, names: Sequence[str]) -> DataFrame:
-    """P3: positional bulk rename, the R ``names(df) <- c(...)`` idiom
-    (MBE:26, 30, 58, 95, 126, 132; EPA:8)."""
-    return df.toDF(*names)
-
-
-def with_computed(df: DataFrame, **exprs: Column) -> DataFrame:
-    """P4: computed columns (MBE:99-104; MC:35)."""
-    return df.withColumns(dict(exprs))
 
 
 def filter_not_in(df: DataFrame, col: str, values: Sequence[str],
@@ -41,24 +30,10 @@ def filter_not_in(df: DataFrame, col: str, values: Sequence[str],
     return df.filter(cond)
 
 
-def filter_in(df: DataFrame, col: str, values: Sequence[str]) -> DataFrame:
-    """P9: IN-list membership (MBE:22, 63-64, 113-114)."""
-    return df.filter(F.col(col).isin(list(values)))
-
-
 def filter_null(df: DataFrame, col: str, keep_null: bool = True) -> DataFrame:
     """P11: NULL predicates (DLC:50; MBE:93, 125, 131)."""
     c = F.col(col)
     return df.filter(c.isNull() if keep_null else c.isNotNull())
-
-
-def clip_frame_window(df: DataFrame, frame_col: str,
-                      lo_col: str, hi_col: str) -> DataFrame:
-    """P12: range clip to [lo, hi] — the reference's snap..throw frame
-    window (MBE:74-75). Join-then-range-filter; Catalyst folds both
-    predicates into the post-join filter."""
-    return df.filter((F.col(frame_col) >= F.col(lo_col))
-                     & (F.col(frame_col) <= F.col(hi_col)))
 
 
 def exclude_play(df: DataFrame, **key_values) -> DataFrame:
@@ -69,15 +44,3 @@ def exclude_play(df: DataFrame, **key_values) -> DataFrame:
     for k, v in key_values.items():
         cond = cond & (F.col(k) == F.lit(v))
     return df.filter(~cond)
-
-
-def fill_zero(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """P15: NA→0 imputation (MBE:136-137, 145) — the left-join + fill
-    flag pattern."""
-    return df.na.fill(0, subset=list(cols))
-
-
-def chebyshev(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    """P6: L-infinity distance ``pmax(abs(dx), abs(dy))`` — distance to
-    the QB set point (MBE:77)."""
-    return F.greatest(F.abs(x1 - x2), F.abs(y1 - y2))

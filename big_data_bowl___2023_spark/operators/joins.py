@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -22,28 +22,12 @@ def equi_join(left: DataFrame, right: DataFrame, keys: Sequence[str],
     return left.join(right, list(keys), how)
 
 
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame,
-                       keys: Sequence[str], how: str = "inner") -> DataFrame:
-    """J3: dimension attach (players at DLC:27, MC:36). ``broadcast``
-    pins the plan: the fact side streams map-side, zero shuffle — the
-    scale-critical choice for a 100 TB fact table vs a ~KB dimension."""
-    return fact.join(F.broadcast(dim), list(keys), how)
-
-
 def left_join_fill(left: DataFrame, right: DataFrame, keys: Sequence[str],
                    fill: dict | None = None) -> DataFrame:
     """J5: left outer + NA fill — the reference's flag-attach pattern
     (MBE:89, 134-135, 144 then NA→0 at MBE:136-137, 145)."""
     out = left.join(right, list(keys), "left")
     return out.na.fill(fill) if fill else out
-
-
-def role_key_join(left: DataFrame, right: DataFrame,
-                  on: Column, how: str = "inner") -> DataFrame:
-    """J6: join with renamed keys (``by.x``/``by.y``) — the rusher ⋈
-    blocker role-playing FK ``nflId = pff_nflIdBlockedPlayer``
-    (MBE:140-141, 148-149; MC:39-40)."""
-    return left.join(right, on, how)
 
 
 def anti_join(left: DataFrame, right: DataFrame,

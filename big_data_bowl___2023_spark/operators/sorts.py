@@ -12,12 +12,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def sort_by(df: DataFrame, *cols: str | Column) -> DataFrame:
-    """O1/O2/O3: multi-key sort (DLC:37; MO:19-34)."""
-    return df.orderBy(*cols)
 
 
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
@@ -42,8 +36,3 @@ def ranking(df: DataFrame, keys: Sequence[str], aggs: dict[str, Column],
     if having is not None:
         out = out.filter(having)
     return out.orderBy(*order)
-
-
-def round_cols(df: DataFrame, cols: Sequence[str], scale: int = 3) -> DataFrame:
-    """P7/F3: round output metric columns (MO:20-21, 29-30)."""
-    return df.withColumns({c: F.round(F.col(c), scale) for c in cols})

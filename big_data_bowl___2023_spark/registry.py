@@ -51,26 +51,9 @@ _QUERY_MODULES = [
 
 def query(name: str, oracle: str | None = None):
     """Register a query; ``oracle=None`` → driver does rows-only check
-    (reserved for genuinely non-SQL-expressible ops).
-
-    Every registered query plans under ``kernel_scope("sql")``: the
-    hash-checked surface must not float with ``SPARK_GRAFT_KERNEL``
-    (the sql/arrow kernels agree on the pinned corpora but can differ
-    at an exact 6-dp rounding boundary — see similarity/ann.py). The
-    scope wraps plan CONSTRUCTION, which is where every kernel kwarg
-    resolves; the returned DataFrame's lazy execution carries the
-    already-chosen kernels."""
+    (reserved for genuinely non-SQL-expressible ops)."""
     def deco(fn: QueryFn) -> QueryFn:
-        import functools
-
-        from .session import kernel_scope
-
-        @functools.wraps(fn)
-        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-            with kernel_scope("sql"):
-                return fn(spark, sf_dir)
-
-        QUERIES[name] = pinned
+        QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

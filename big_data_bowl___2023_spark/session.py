@@ -40,68 +40,6 @@ def durable_pins_default() -> bool:
     return _DURABLE_PINS.get()
 
 
-# Ambient default for every score/screen/assign/verify kernel kwarg
-# (verdict r11 #4). The hybrid stress leg's first cut accidentally
-# measured the interpreted SQL fold because per-call kwargs don't
-# compose across pipelines — SPARK_GRAFT_KERNEL=arrow flips every
-# default in one place. The 50-query registry paths are pinned to
-# "sql" regardless (registry.py wraps each query in
-# kernel_scope("sql")): the kernels agree on the pinned corpora but
-# CAN differ at an exact 6-dp rounding boundary (Spark BigDecimal
-# half-up vs numpy half-even — similarity/ann.py), so the
-# hash-checked surface never floats with the environment. Same
-# ContextVar idiom as _DURABLE_PINS for the same reason: concurrent
-# pipeline threads scope their own default.
-def _kernel_from_env() -> str:
-    """Seed the ambient kernel from SPARK_GRAFT_KERNEL. A typo'd
-    value raises at import instead of silently running the
-    interpreted SQL fold — the exact regression the env var exists
-    to prevent (the repo's loud-typo rule for kernel knobs)."""
-    raw = os.environ.get("SPARK_GRAFT_KERNEL", "").strip().lower()
-    if raw in ("", "sql"):
-        return "sql"
-    if raw == "arrow":
-        return "arrow"
-    raise ValueError(
-        f"SPARK_GRAFT_KERNEL={os.environ['SPARK_GRAFT_KERNEL']!r} is "
-        f"not a kernel — expected 'sql' or 'arrow'")
-
-
-_KERNEL: contextvars.ContextVar[str] = contextvars.ContextVar(
-    "spark_graft_kernel", default=_kernel_from_env())
-
-
-def kernel_default() -> str:
-    """The ambient kernel ("sql" or "arrow") for the current context."""
-    return _KERNEL.get()
-
-
-def resolve_kernel(kernel: str | None, what: str = "") -> str:
-    """Resolve a kernel kwarg: explicit value wins, ``None`` takes the
-    ambient default. Validates so a typo fails at the call site, not
-    deep inside a mapInPandas closure; ``what`` names the kwarg
-    family in the error ("score"/"verify"/"assignment"/...)."""
-    k = kernel if kernel is not None else _KERNEL.get()
-    if k not in ("sql", "arrow"):
-        label = f"{what} kernel" if what else "kernel"
-        raise ValueError(f"unknown {label} {k!r} (expected 'sql' or "
-                         f"'arrow')")
-    return k
-
-
-@contextlib.contextmanager
-def kernel_scope(kernel: str):
-    """Scope the ambient kernel default underneath (current
-    thread/context only)."""
-    if kernel not in ("sql", "arrow"):
-        raise ValueError(f"unknown kernel {kernel!r}")
-    token = _KERNEL.set(kernel)
-    try:
-        yield
-    finally:
-        _KERNEL.reset(token)
-
-
 @contextlib.contextmanager
 def durable_pins(enabled: bool | None = True):
     """Scope the default persistence mode of every pin() underneath

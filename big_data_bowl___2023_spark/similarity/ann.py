@@ -13,61 +13,53 @@ Three tiers, trading recall for scan cost:
   (Euclidean buckets), the library scale path (seeded; rows-only for
   the driver check).
 
-All kernels share functions.vectors (double arithmetic, no UDF).
+The exact and IVF tiers score pairs with one numpy kernel
+(``_score_pairs``), rounded once in Spark; cell keys are
+functions.vectors folds.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import vectors as V
-from ..session import pin, resolve_kernel
+from ..session import pin
 
 
 def _prep(df: DataFrame, vec_col: str, id_col: str, out_id: str):
     # No degenerate-row filter here: an interpreted norm-fold filter
     # on the corpus side measured +23% on sim_topk (interleaved A/B
-    # at sf0.1) — the NaN hazard is closed at the SCORING expression
-    # instead (nanvl / isfinite → 0.0, zero extra folds; see
-    # _score_pairs).
+    # at sf0.1) — the NaN hazard is closed in the scoring kernel
+    # instead (non-finite → 0.0; see _np_cosine).
     return df.select(F.col(id_col).alias(out_id),
                      V.as_double(F.col(vec_col)).alias(f"{out_id}_v"))
 
 
-def _score_pairs(joined: DataFrame,
-                 kernel: str | None) -> DataFrame:
+def _np_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two (n, dim) matrices under the family's
+    degenerate policy: a zero norm or an Inf/NaN component scores 0.0
+    (NaN sorts greatest in Spark and would top every ranking)."""
+    denom = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
+    dots = np.einsum("ij,ij->i", A, B)
+    with np.errstate(invalid="ignore", over="ignore"):
+        cos = np.divide(dots, denom, out=np.zeros_like(dots),
+                        where=denom > 0)
+    cos[~np.isfinite(cos)] = 0.0
+    return cos
+
+
+def _score_pairs(joined: DataFrame) -> DataFrame:
     """(query_id, neighbor_id, cosine): score every joined candidate
-    pair. ``kernel="sql"`` is the bit-pinned expression fold
-    (V.cosine — three interpreted zip_with/aggregate folds per pair:
-    dot + two norms); ``kernel="arrow"`` computes the whole Arrow
-    batch with numpy einsum + vector norms — the corpus-scale probe
-    path, same shape as the GEMM dedup prefilters (measured ~2x at
-    60k corpus x 16 queries warm on local[16]; the ratio is
-    transfer-bound here — both 64-dim vectors ride the Arrow batch
-    per pair — and grows with per-pair fold work, cf. the 19x
-    k-means assignment kernel). Both kernels apply _guarded_cosine's
-    degenerate-input policy (NaN -> 0.0, clamp to [-1, 1]; see its
-    docstring for the convention and its cost rationale). The
-    kernels agree on the pinned test corpora (pytest-asserted); AT
-    an exact 6-dp rounding boundary they can differ — Spark rounds
-    the exact binary double half-up via BigDecimal, np.round
-    scales-and-rints half-even — so defaults stay "sql" for the
-    hash-pinned registry queries."""
-    kernel = resolve_kernel(kernel, "score")
-    if kernel == "sql":
-        cos = V.cosine(F.col("query_id_v"), F.col("neighbor_id_v"))
-        return (joined.withColumn(
-                    "cosine", F.round(F.nanvl(cos, F.lit(0.0)), 6))
-                      .select("query_id", "neighbor_id", "cosine"))
-    if kernel != "arrow":
-        raise ValueError(f"unknown score kernel {kernel!r}")
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    pair with numpy — ``_np_cosine`` per Arrow batch, the same shape
+    as the GEMM dedup prefilters. The kernel emits raw doubles; Spark
+    rounds them once to 6 dp (``F.round``, half-up like the DuckDB
+    oracle's ``ROUND``)."""
     schema = T.StructType([joined.schema["query_id"],
                            joined.schema["neighbor_id"],
                            T.StructField("cosine", T.DoubleType())])
@@ -76,27 +68,18 @@ def _score_pairs(joined: DataFrame,
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = V.stack_batch(pdf["query_id_v"])
-            B = V.stack_batch(pdf["neighbor_id_v"])
-            denom = (np.linalg.norm(A, axis=1)
-                     * np.linalg.norm(B, axis=1))
-            dots = np.einsum("ij,ij->i", A, B)
-            with np.errstate(invalid="ignore", over="ignore"):
-                cos = np.divide(dots, denom,
-                                out=np.zeros_like(dots),
-                                where=denom > 0)
-            cos[~np.isfinite(cos)] = 0.0   # Inf/NaN components -> 0.0
             out = pdf[["query_id", "neighbor_id"]].copy()
-            out["cosine"] = np.round(cos, 6)
+            out["cosine"] = _np_cosine(V.stack_batch(pdf["query_id_v"]),
+                                       V.stack_batch(pdf["neighbor_id_v"]))
             yield out
 
-    return joined.mapInPandas(score, schema)
+    return (joined.mapInPandas(score, schema)
+            .withColumn("cosine", F.round("cosine", 6)))
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int,
                      vec_col: str = "embedding",
                      id_col: str = "vec_id",
-                     score_kernel: str | None = None,
                      exclude_self: bool = True) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, cosine, rank).
     The query side is broadcast (queries ≪ corpus); ranking is a
@@ -105,15 +88,14 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int,
     search-within-one-table convention; pass False when queries and
     corpus are SEPARATE id namespaces (e.g. the hybrid-retrieval
     dense leg), where an accidental numeric collision must not
-    silently drop a neighbor. ``score_kernel="arrow"`` swaps the
-    per-pair expression folds for numpy batch scoring (see
-    ``_score_pairs``) — the full-corpus-scan setting."""
+    silently drop a neighbor. Pairs are scored by the numpy kernel
+    ``_score_pairs``."""
     c = _prep(corpus, vec_col, id_col, "neighbor_id")
     q = _prep(queries, vec_col, id_col, "query_id")
     joined = (c.join(F.broadcast(q),
                      F.col("query_id") != F.col("neighbor_id"))
               if exclude_self else c.crossJoin(F.broadcast(q)))
-    scored = _score_pairs(joined, score_kernel)
+    scored = _score_pairs(joined)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -167,7 +149,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int,
              vec_col: str = "embedding", id_col: str = "vec_id",
              dim: int = 64, n_planes: int = 3,
              probe_adjacent: bool = True,
-             score_kernel: str | None = None,
              exclude_self: bool = True) -> DataFrame:
     """IVF/LSH-bucketed approximate top-k: corpus partitioned into
     2^n_planes sign cells; each query probes its own cell plus — when
@@ -194,7 +175,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int,
     if exclude_self:
         probed = probed.filter(
             F.col("query_id") != F.col("neighbor_id"))
-    scored = _score_pairs(probed, score_kernel)
+    scored = _score_pairs(probed)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -274,10 +255,9 @@ def mine_hard_negatives_ann(corpus: DataFrame, k: int,
     broadcast vector matrix (the E101 pattern: candidate shuffle
     carries only id pairs instead of two unit vectors per pair —
     ~30× fewer shuffle bytes at dim 64) — the corpus-scale setting
-    whenever the vector table fits worker memory; cosines round
-    half-even (np.round) where the default fold rounds half-up, so
-    a 6-dp boundary pair could differ in the last digit (the pinned
-    kernel contract; real corpora agree exactly)."""
+    whenever the vector table fits worker memory. Both modes round
+    in Spark (half-up), so they differ only where the einsum and the
+    fold dot differ in the last ulp."""
     from ..dedup.embedding import (
         _normalized,
         lsh_candidate_pairs,
@@ -337,12 +317,6 @@ def _score_id_pairs_gather(v: DataFrame, pairs: DataFrame,
     cannot drift from the prefilter's. Pairs with ids missing from
     ``v`` are dropped, matching what the join-mode scoring does
     implicitly."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     bc = v.sparkSession.sparkContext.broadcast(
         V.gather_unit_matrix(v))
     if broadcast_handle is not None:
@@ -365,11 +339,11 @@ def _score_id_pairs_gather(v: DataFrame, pairs: DataFrame,
                 pdf = pdf.loc[known]
                 ra, rb = ra[known], rb[known]
             out = pdf[[a_col, b_col]].copy()
-            out["cosine"] = np.round(
-                np.einsum("ij,ij->i", mat[ra], mat[rb]), 6)
+            out["cosine"] = np.einsum("ij,ij->i", mat[ra], mat[rb])
             yield out
 
-    return pairs.mapInPandas(score, schema)
+    return (pairs.mapInPandas(score, schema)
+            .withColumn("cosine", F.round("cosine", 6)))
 
 
 def brp_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int,
@@ -409,9 +383,7 @@ def build_contrastive_pairs(corpus: DataFrame, pos_threshold: float,
                             k_neg: int,
                             vec_col: str = "embedding",
                             id_col: str = "vec_id",
-                            neg_margin: int = 4,
-                            verify_kernel: str | None = None,
-                            score_kernel: str | None = None) -> DataFrame:
+                            neg_margin: int = 4) -> DataFrame:
     """Self-supervised contrastive training data from an UNLABELED
     embedding corpus: (anchor_id, positive_id, pos_cosine, negatives)
     — one row per near-duplicate pair (cosine ≥ ``pos_threshold``,
@@ -438,17 +410,11 @@ def build_contrastive_pairs(corpus: DataFrame, pos_threshold: float,
     has m−1 positives that outrank every true negative, so a FIXED
     margin would starve exactly the densest anchors of negatives —
     the degree-scaled fetch guarantees ≥ k_neg survivors per anchor
-    (when the corpus has that many non-positives at all).
-
-    ``verify_kernel``/``score_kernel`` = "arrow" select the einsum
-    batch kernels for the positive-verify and negative-scoring legs
-    (see ``embedding._verify_exact`` / ``_score_pairs``) — the
-    corpus-scale settings; defaults stay the bit-pinned SQL folds."""
+    (when the corpus has that many non-positives at all)."""
     from ..dedup.embedding import cosine_near_dup_pairs
 
     pos = cosine_near_dup_pairs(corpus, pos_threshold,
-                                vec_col=vec_col, id_col=id_col,
-                                verify_kernel=verify_kernel)
+                                vec_col=vec_col, id_col=id_col)
     pos = pin(pos)                # reused three times below
     # vec_a < vec_b by construction of the pair kernel → anchor=vec_a
     anchors = (pos.select(F.col("vec_a").alias(id_col)).distinct()
@@ -460,8 +426,7 @@ def build_contrastive_pairs(corpus: DataFrame, pos_threshold: float,
     max_degree = int(deg_row.m or 0)
     cand = brute_force_topk(corpus, anchors,
                             k_neg + max_degree + neg_margin,
-                            vec_col, id_col,
-                            score_kernel=score_kernel)
+                            vec_col, id_col)
     # drop candidates that are positives of this anchor (either
     # direction) — what remains is below the positive band
     pos_edges = (pos.select(F.col("vec_a").alias("query_id"),

@@ -23,7 +23,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import resolve_kernel
 from .ann import brute_force_topk, ivf_topk
 from .retrieval import bm25_topk
 
@@ -69,7 +68,7 @@ def rrf_fuse(rankings: Sequence[DataFrame], k: int = 10, c: float = 60.0,
 def hybrid_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
                 *, fetch_k: int | None = None, c: float = 60.0,
                 weights: Sequence[float] = (1.0, 1.0),
-                dense: str = "brute", score_kernel: str | None = None,
+                dense: str = "brute",
                 text_col: str = "text", vec_col: str = "embedding",
                 id_col: str = "doc_id", query_id_col: str = "query_id",
                 query_text_col: str = "query_text",
@@ -83,8 +82,7 @@ def hybrid_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     near-missing one list can still win the fusion), then RRF
     combines them. ``dense="ivf"`` swaps the exact dense leg for the
     bucketed ANN probe (the corpus-scale path; extra kwargs pass
-    through), ``score_kernel="arrow"`` selects the numpy scoring
-    kernel inside the dense leg.
+    through).
 
     ``dense="index"`` is the SERVING shape (E105 composed with
     E111/E115): the dense leg runs against a persistent cell-
@@ -100,7 +98,6 @@ def hybrid_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     tests/test_degenerate_contract.py). The embeddings stored in the
     index must be the same rows ``docs`` carries — the index IS the
     dense corpus; ``docs`` feeds only the BM25 leg."""
-    score_kernel = resolve_kernel(score_kernel)
     fk = fetch_k if fetch_k is not None else 2 * k
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_text_col).alias("query_text"),
@@ -121,12 +118,10 @@ def hybrid_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
                 f"{sorted(dense_kwargs)}")
         dense_hits = brute_force_topk(corpus_v, queries_v, fk,
                                       vec_col=vec_col, id_col=id_col,
-                                      score_kernel=score_kernel,
                                       exclude_self=False)
     elif dense == "ivf":
         dense_hits = ivf_topk(corpus_v, queries_v, fk,
                               vec_col=vec_col, id_col=id_col,
-                              score_kernel=score_kernel,
                               exclude_self=False,
                               **dense_kwargs)
     elif dense in ("index", "index_quantized"):
@@ -137,29 +132,11 @@ def hybrid_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
             raise ValueError(
                 f"dense={dense!r} needs index_dir= (a persistent "
                 f"index built over the docs' embeddings)")
-        spark = docs.sparkSession
-        if dense == "index":
-            dense_hits = ann_index_search(
-                spark, index_dir, queries_v, fk,
-                vec_col=vec_col, id_col=id_col,
-                score_kernel=score_kernel,
-                exclude_self=False, **dense_kwargs)
-        else:
-            # score_kernel forwards as the int8 screen's kernel —
-            # dropping it silently would betray the documented knob
-            # (at a 6-dp rounding boundary the arrow screen's
-            # shortlist membership can differ from the sql fold's).
-            # An explicit screen_kernel kwarg still wins; otherwise
-            # the screen follows the resolved score_kernel (the
-            # ambient session default unless passed), so every hybrid
-            # leg runs the same kernel family — flip them all with
-            # SPARK_GRAFT_KERNEL=arrow at corpus scale.
-            screen = dense_kwargs.pop("screen_kernel", score_kernel)
-            dense_hits = ann_index_search_quantized(
-                spark, index_dir, queries_v, fk,
-                vec_col=vec_col, id_col=id_col,
-                screen_kernel=screen,
-                exclude_self=False, **dense_kwargs)
+        search = (ann_index_search if dense == "index"
+                  else ann_index_search_quantized)
+        dense_hits = search(docs.sparkSession, index_dir, queries_v, fk,
+                            vec_col=vec_col, id_col=id_col,
+                            exclude_self=False, **dense_kwargs)
     else:
         raise ValueError(f"unknown dense retriever {dense!r}")
     return rrf_fuse(

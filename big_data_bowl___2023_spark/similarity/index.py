@@ -19,7 +19,7 @@ the exact deterministic planes (`ann._make_planes` — no RNG state to
 persist) and new batches land in the same cell directories via
 append-mode partitioned writes. Search is BIT-IDENTICAL to
 `ivf_topk` over the same rows (same `_prep` normalization, same
-`_probe_cells` expansion, same `_score_pairs` kernels, same ranking
+`_probe_cells` expansion, same `_score_pairs` kernel, same ranking
 — pytest-pinned), so the index inherits the ANN family's recall
 story and degenerate-vector policy unchanged.
 
@@ -105,7 +105,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
-from .ann import _cell_key, _make_planes, _prep, _probe_cells, _score_pairs
+from .ann import (
+    _cell_key,
+    _make_planes,
+    _np_cosine,
+    _prep,
+    _probe_cells,
+    _score_pairs,
+)
 
 _META = "_index_meta"
 _CELLS = "cells"
@@ -1097,7 +1104,6 @@ def ann_index_search(spark: SparkSession, index_dir: str,
                      vec_col: str = "embedding",
                      id_col: str = "vec_id",
                      probe_adjacent: bool = True,
-                     score_kernel: str | None = None,
                      exclude_self: bool = True,
                      version: int | None = None,
                      where=None) -> DataFrame:
@@ -1131,7 +1137,7 @@ def ann_index_search(spark: SparkSession, index_dir: str,
     pairs = corpus.join(F.broadcast(q), "cell")
     if exclude_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = _score_pairs(pairs, score_kernel)
+    scored = _score_pairs(pairs)
     # dedupe BEFORE ranking: an at-least-once streaming append can
     # leave bit-identical duplicate index rows, and row_number would
     # hand one neighbor two ranks — evicting a distinct neighbor
@@ -1152,7 +1158,6 @@ def _quantized_shortlist(spark: SparkSession, index_dir: str,
                          cells: str,
                          q: DataFrame, probed: list, ranges: list,
                          shortlist: int, exclude_self: bool,
-                         kernel: str = "arrow",
                          where=None) -> DataFrame:
     """(query_id, neighbor_id): the int8 screen — a pruned scan of
     ONLY (neighbor_id, codes), dequantized cosine vs the broadcast
@@ -1160,13 +1165,19 @@ def _quantized_shortlist(spark: SparkSession, index_dir: str,
     Unpinned — the search pins it; tests assert the codes-without-vec
     ReadSchema here.
 
-    ``kernel="arrow"`` (default — the per-PAIR fold is the hot loop)
-    dequantizes and scores whole Arrow batches with numpy; the
-    ``"sql"`` fold (`V.cosine` over `dequantize`) is interpreted
-    CodegenFallback per pair and measured 2.5x SUPERLINEAR on the
-    64x index stress leg. Kernel choice only reorders the shortlist
-    at 6-dp rounding margins; the exact rerank re-scores survivors
-    either way (pytest pins top-k identity under both)."""
+    Scoring dequantizes and scores whole Arrow batches with numpy (the
+    per-PAIR work is the hot loop; the interpreted SQL fold it
+    replaced measured 2.5x SUPERLINEAR on the 64x index stress leg);
+    Spark rounds the screen score once to 6 dp. The exact rerank
+    re-scores the survivors."""
+    from collections.abc import Iterator
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from .quantize import _spans
+
     scan = (spark.read.parquet(cells)
             .filter(F.col("cell").isin(probed)))
     if where is not None:
@@ -1177,68 +1188,38 @@ def _quantized_shortlist(spark: SparkSession, index_dir: str,
     pairs = screen.join(F.broadcast(q), "cell")
     if exclude_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-    if kernel == "sql":
-        from .quantize import dequantize
+    los_l, spans_l = _spans(ranges)   # shared degenerate-dim rule
+    los = np.array(los_l, dtype=np.float64)
+    spans = np.array(spans_l, dtype=np.float64)
+    schema = T.StructType([pairs.schema["query_id"],
+                           pairs.schema["neighbor_id"],
+                           T.StructField("approx", T.DoubleType())])
 
-        approx = F.nanvl(
-            V.cosine(F.col("query_id_v"),
-                     dequantize(F.col("codes"), ranges)), F.lit(0.0))
-        scored = (pairs.withColumn("approx", approx)
-                  .select("query_id", "neighbor_id", "approx"))
-    elif kernel == "arrow":
-        from collections.abc import Iterator
+    def stack_codes(series: pd.Series) -> np.ndarray:
+        # fast path: the shared stack_batch (plain asarray rows). It
+        # raises on NULL code elements (corrupt encodes) — only THOSE
+        # batches pay the pandas None→NaN conversion, whose
+        # list-of-lists constructor measured 83 s vs ~6 s at 4M pairs
+        # when used unconditionally. NaN falls through the finite
+        # guard to 0.0 (``_np_cosine``).
+        try:
+            return V.stack_batch(series)
+        except (TypeError, ValueError):
+            return pd.DataFrame(series.tolist()) \
+                .to_numpy(dtype=np.float64)
 
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            C = stack_codes(pdf["codes"])
+            out = pdf[["query_id", "neighbor_id"]].copy()
+            out["approx"] = _np_cosine(V.stack_batch(pdf["query_id_v"]),
+                                       (C + 127.0) / 254.0 * spans + los)
+            yield out
 
-        from .quantize import _spans
-
-        los_l, spans_l = _spans(ranges)   # shared degenerate-dim rule
-        los = np.array(los_l, dtype=np.float64)
-        spans = np.array(spans_l, dtype=np.float64)
-        schema = T.StructType([pairs.schema["query_id"],
-                               pairs.schema["neighbor_id"],
-                               T.StructField("approx",
-                                             T.DoubleType())])
-
-        def stack_codes(series: pd.Series) -> np.ndarray:
-            # fast path: the shared stack_batch (plain asarray rows).
-            # It raises on NULL code elements (corrupt encodes) —
-            # only THOSE batches pay the pandas None→NaN conversion,
-            # whose list-of-lists constructor measured 83 s vs ~6 s
-            # at 4M pairs when used unconditionally. NaN falls
-            # through the finite guard to 0.0 — the family's
-            # degenerate policy, same as _score_pairs.
-            try:
-                return V.stack_batch(series)
-            except (TypeError, ValueError):
-                return pd.DataFrame(series.tolist()) \
-                    .to_numpy(dtype=np.float64)
-
-        def score(batches: Iterator[pd.DataFrame]
-                  ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                C = stack_codes(pdf["codes"])
-                Fm = (C + 127.0) / 254.0 * spans + los
-                Q = V.stack_batch(pdf["query_id_v"])
-                denom = (np.linalg.norm(Q, axis=1)
-                         * np.linalg.norm(Fm, axis=1))
-                dots = np.einsum("ij,ij->i", Q, Fm)
-                with np.errstate(invalid="ignore", over="ignore"):
-                    cos = np.divide(dots, denom,
-                                    out=np.zeros_like(dots),
-                                    where=denom > 0)
-                cos[~np.isfinite(cos)] = 0.0
-                out = pdf[["query_id", "neighbor_id"]].copy()
-                out["approx"] = np.round(cos, 6)
-                yield out
-
-        scored = pairs.mapInPandas(score, schema)
-    else:
-        raise ValueError(f"unknown screen kernel {kernel!r}")
+    scored = (pairs.mapInPandas(score, schema)
+              .withColumn("approx", F.round("approx", 6)))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("approx"), F.asc("neighbor_id"))
     return (scored
@@ -1255,7 +1236,6 @@ def ann_index_search_quantized(spark: SparkSession, index_dir: str,
                                id_col: str = "vec_id",
                                probe_adjacent: bool = True,
                                exclude_self: bool = True,
-                               screen_kernel: str = "arrow",
                                version: int | None = None,
                                where=None) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank): two partition-pruned
@@ -1310,7 +1290,7 @@ def ann_index_search_quantized(spark: SparkSession, index_dir: str,
     # transitively filtered without re-stating the predicate
     cand = _quantized_shortlist(spark, index_dir, cells, q, probed,
                                 ranges, shortlist, exclude_self,
-                                screen_kernel, where)
+                                where)
     # the shortlist feeds TWO consumers (the semi-join below and
     # exact_rerank's broadcast): pin it so the whole screen scan +
     # window runs once (the engine's fan-out discipline). The pin

@@ -9,13 +9,13 @@ Search uses asymmetric distance computation (ADC): per query, one
 m×k lookup table of query-subvector↔centroid distances; a corpus row
 is scored with m table lookups + adds, never a d-dim product.
 
-Spark mapping — every hot path stays in codegen (zero UDF):
+Spark mapping:
 
 * training: Lloyd iterations where EACH iteration is ONE aggregation
   job over the (id, subspace, subvector) exploded view — assignment is
-  an argmin expression against broadcast literal centroids, the update
-  is a grouped per-dimension mean; the driver holds only the m×k×(d/m)
-  centroid array (≤ a few KB);
+  a numpy GEMM argmin per Arrow batch against the broadcast
+  centroids, the update is a grouped per-dimension mean; the driver
+  holds only the m×k×(d/m) centroid array (≤ a few KB);
 * encoding: per-subspace argmin expressions → ``codes array<int>``;
 * ADC: the per-query LUT is a flat m·k literal-free array expression
   computed once per query row; scoring is a broadcast join of the
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
-from ..session import pin, resolve_kernel
+from ..session import pin
 
 DEFAULT_M = 8
 DEFAULT_K = 16
@@ -76,11 +76,8 @@ def _lloyd_codes_arrow(sub_tbl: DataFrame, cents: list) -> DataFrame:
     per (Arrow batch, subspace) — ``argmin(|c|²/2 − sv·c)`` against
     the broadcast m×k×sub centroid array instead of m·k interpreted
     distance folds per row. Ties break to the lowest code (np.argmin
-    first minimum == array_position-of-min), matching the SQL
-    expression; distances round differently in the last ulp, so an
-    EXACTLY equidistant row could assign differently — real-valued
-    embeddings agree (pytest pins codebook identity), same contract
-    as every Arrow kernel in the family."""
+    first minimum == array_position-of-min, as in ``encode_pq``'s
+    ``_argmin_code``)."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -134,9 +131,7 @@ def _train_lloyd_driver(v: DataFrame, dim: int, m: int, k: int,
     aggregation, whose float sums follow shuffle merge order), but it
     reassociates the distributed path's sums, so codebooks agree to
     float-summation order (~1e-9), not bitwise — the documented
-    tolerance class of the arrow kernels and the sampled-training
-    identity test. Callers that need the bit-pinned distributed
-    aggregation (every "sql"-kernel registry path) never route here."""
+    tolerance class of the sampled-training identity test."""
     import numpy as np
 
     pdf = (v.orderBy(F.md5(F.col("id").cast("string")))
@@ -174,18 +169,19 @@ def train_pq(corpus: DataFrame, vec_col: str = "embedding",
              n_iters: int = 8,
              train_rows: int | None = 100_000,
              n: int | None = None,
-             assign_kernel: str | None = None,
              lloyd: str | None = None) -> list:
     """m×k×(dim/m) codebooks as a nested Python list.
 
     Deterministic init (subvectors of the k corpus rows with smallest
     md5(id) — no RNG state), then up to ``n_iters`` Lloyd rounds. Each
     round is one Spark aggregation: explode to (id, subspace,
-    subvector), argmin-assign against the current broadcast centroids,
-    grouped per-dimension mean. Empty clusters keep their previous
-    centroid. Rounds stop early at an EXACT fixpoint (no centroid
-    moved at all) — further rounds would recompute the identical
-    codebooks, so the early exit is bit-identical, just cheaper.
+    subvector), argmin-assign against the current broadcast centroids
+    (:func:`_lloyd_codes_arrow`, one GEMM per Arrow batch per
+    subspace), grouped per-dimension mean. Empty clusters keep their
+    previous centroid. Rounds stop early at an EXACT fixpoint (no
+    centroid moved at all) — further rounds would recompute the
+    identical codebooks, so the early exit is bit-identical, just
+    cheaper.
 
     ``train_rows`` caps the Lloyd training set at the ``train_rows``
     corpus rows with smallest md5(id) — the same deterministic order
@@ -204,18 +200,6 @@ def train_pq(corpus: DataFrame, vec_col: str = "embedding",
     paths whose oracles pin exact centroid arithmetic simply don't
     pass the hint.
 
-    ``assign_kernel="arrow"`` runs each round's assignment through
-    :func:`_lloyd_codes_arrow` (one GEMM per Arrow batch per
-    subspace) instead of the m·k-literal interpreted distance folds.
-    The per-row SQL cost is k·dim interpreted lambda steps, so the
-    fold trainer is only viable for PQ-sized k (≤ a few hundred);
-    SemDeDup-sized codebooks (k = n/target_cluster, thousands at
-    corpus scale) need the GEMM rounds. The centroid UPDATE is the
-    same Spark aggregation either way — when assignments agree (real
-    embeddings; pytest pins codebook equality), the codebooks are
-    bit-identical. Default "sql" keeps every driver-hashed path on
-    the fold.
-
     ``lloyd="driver"`` (r17) runs the whole capped-sample Lloyd loop
     on the driver in numpy (:func:`_train_lloyd_driver`): one bounded
     TakeOrdered collect replaces the seeds collect, the sample pin
@@ -223,15 +207,8 @@ def train_pq(corpus: DataFrame, vec_col: str = "embedding",
     round O(1) in corpus size, so those jobs were pure fixed latency.
     Codebooks agree with the distributed trainer to float-summation
     order (~1e-9, the sampled-training tolerance class), NOT bitwise;
-    the semantic entry points select this tier exactly when the
-    caller chose the arrow kernels (whose contract already accepts
-    last-ulp reassociation), and every "sql"-kernel / driver-hashed
-    path stays on the distributed aggregation. Default/"spark" is the
-    distributed loop."""
-    # resolve_kernel validates and raises on typos BEFORE the sample
-    # sort / seed collect / pin jobs — a bad kernel fails instantly,
-    # not after minutes of cluster work
-    assign_kernel = resolve_kernel(assign_kernel, "assignment")
+    the semantic k-means entry points (``dedup.semantic``) train on
+    this tier. Default/"spark" is the distributed loop."""
     if lloyd not in (None, "spark", "driver"):
         raise ValueError(f"unknown lloyd tier {lloyd!r} (expected "
                          f"'spark' or 'driver')")
@@ -265,20 +242,7 @@ def train_pq(corpus: DataFrame, vec_col: str = "embedding",
     sub_tbl = pin(sub_tbl)
 
     for _ in range(n_iters):
-        if assign_kernel == "arrow":
-            coded = _lloyd_codes_arrow(sub_tbl, cents)
-        else:
-            # per-subspace argmin against the current centroids: pick
-            # the subspace's distance array with element_at on a
-            # nested literal
-            darr_by_m = F.array(*[
-                F.array(*[_sq_dist(F.col("sv"), _lit_vec(c))
-                          for c in cents[mi]])
-                for mi in range(m)])
-            darr = F.element_at(darr_by_m, F.col("mi") + 1)
-            code = (F.array_position(darr, F.array_min(darr)) - 1) \
-                .cast("int")
-            coded = sub_tbl.withColumn("code", code)
+        coded = _lloyd_codes_arrow(sub_tbl, cents)
         stats = (coded
                  .groupBy("mi", "code")
                  .agg(F.array(*[F.avg(F.col("sv")[d]).alias(f"a{d}")

@@ -13,7 +13,7 @@ to version (the matrix regenerates from (dim, out_dim, seed)).
 Scale shape: the projection matrix is derived, not stored — any
 executor rebuilds it from the seed, so nothing ships but three
 ints. Projection itself is map-side (one Arrow-batched GEMM per
-batch, or the bit-pinned SQL fold), and the search composition
+batch), and the search composition
 (`projected_topk_rerank`) reads the corpus-wide pass over projected
 vectors only, then re-scores a per-query shortlist through the
 shared ``pq.exact_rerank`` contract — identical tie-break/rounding
@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import resolve_kernel
 from .ann import brute_force_topk
 from .pq import exact_rerank
 
@@ -47,37 +46,11 @@ def projection_matrix(dim: int, out_dim: int, seed: int = 7) -> np.ndarray:
 def project_embeddings(df: DataFrame, out_dim: int, seed: int = 7,
                        vec_col: str = "embedding",
                        out_col: str = "projected",
-                       dim: int = 64,
-                       kernel: str | None = None) -> DataFrame:
-    """Add ``out_col``: the JL projection of ``vec_col``. Map-side
-    only in both kernels — ``"sql"`` is out_dim zip_with/aggregate
-    folds (bit-pinned, interpreted), ``"arrow"`` is one numpy GEMM
-    per Arrow batch (the corpus-scale setting, same convention as
-    the other kernel pairs). NULL vectors stay NULL."""
-    kernel = resolve_kernel(kernel)
+                       dim: int = 64) -> DataFrame:
+    """Add ``out_col``: the JL projection of ``vec_col``, one numpy
+    GEMM per Arrow batch (map-side only). NULL vectors stay NULL; a
+    wrong-length vector errors."""
     R = projection_matrix(dim, out_dim, seed)
-    if kernel == "sql":
-        cols = []
-        for j in range(out_dim):
-            col_j = F.array(*[F.lit(float(R[i, j])) for i in range(dim)])
-            cols.append(F.aggregate(
-                F.zip_with(F.col(vec_col).cast("array<double>"), col_j,
-                           lambda a, b: a * b),
-                F.lit(0.0), lambda acc, x: acc + x))
-        # a wrong-length vector must ERROR (matching the arrow
-        # kernel), not fold against zip_with's NULL padding into an
-        # all-NULL projection that poisons downstream cosines
-        return df.withColumn(
-            out_col,
-            F.when(F.col(vec_col).isNull(),
-                   F.lit(None).cast("array<double>"))
-             .when(F.size(F.col(vec_col)) != F.lit(dim),
-                   F.raise_error(F.concat(
-                       F.lit(f"projection expects dim={dim}, got "),
-                       F.size(F.col(vec_col)).cast("string"))))
-             .otherwise(F.array(*cols)))
-    if kernel != "arrow":
-        raise ValueError(f"unknown projection kernel {kernel!r}")
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def proj(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -106,8 +79,8 @@ def projected_topk_rerank(corpus: DataFrame, queries: DataFrame,
                           k: int, out_dim: int = 16, seed: int = 7,
                           shortlist: int | None = None,
                           vec_col: str = "embedding",
-                          id_col: str = "vec_id", dim: int = 64,
-                          kernel: str | None = None) -> DataFrame:
+                          id_col: str = "vec_id", dim: int = 64
+                          ) -> DataFrame:
     """JL shortlist → exact cosine re-rank:
     (query_id, neighbor_id, cosine, rank).
 
@@ -116,22 +89,16 @@ def projected_topk_rerank(corpus: DataFrame, queries: DataFrame,
     ``shortlist`` (default 5k) only, through the shared
     ``exact_rerank`` stage — the same screen→rerank contract as
     ``pq_topk_rerank`` and ``quantized_topk_rerank``, with the
-    screen's recall controlled by (out_dim, shortlist).
-    ``kernel="arrow"`` selects the numpy path for BOTH the
-    projection GEMM and the screen's pair scoring — the corpus-scale
-    setting; the exact rerank always stays on the shared fold
-    contract."""
-    kernel = resolve_kernel(kernel)
+    screen's recall controlled by (out_dim, shortlist)."""
     if shortlist is None:
         shortlist = 5 * k
     pc = project_embeddings(corpus, out_dim, seed, vec_col,
-                            "projected", dim, kernel)
+                            "projected", dim)
     pq_ = project_embeddings(queries, out_dim, seed, vec_col,
-                             "projected", dim, kernel)
+                             "projected", dim)
     cand = brute_force_topk(
         pc.select(F.col(id_col), F.col("projected")),
         pq_.select(F.col(id_col), F.col("projected")),
         shortlist, vec_col="projected", id_col=id_col,
-        score_kernel=kernel,
     ).select("query_id", "neighbor_id")
     return exact_rerank(cand, corpus, queries, k, vec_col, id_col)

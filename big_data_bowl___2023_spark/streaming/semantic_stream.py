@@ -70,8 +70,6 @@ def compact_semantic_corpus(spark, out_dir: str, codebook_path: str,
                             dim: int = 64, n_iters: int = 4,
                             target_cluster: int = 250,
                             max_bucket: int | None = None,
-                            assign_kernel: str | None = None,
-                            verify_kernel: str | None = None,
                             prefilter_broadcast: bool | str = "auto") -> dict:
     """The periodic bronze→silver pass the ingest loop's recall trade
     defers to: re-run FULL batch semantic dedup over the accumulated
@@ -89,8 +87,8 @@ def compact_semantic_corpus(spark, out_dir: str, codebook_path: str,
     dir is simply re-created next attempt).
 
     Returns ``{"before": n, "after": n, "dropped": n}`` — the audit
-    record. Kernel kwargs are the corpus-scale settings, exactly as
-    on the loop. Serialized by the writer lease (round 12 — "run
+    record. ``prefilter_broadcast`` forwards exactly as on the loop.
+    Serialized by the writer lease (round 12 — "run
     with the stream stopped" is deployment policy; the lease is the
     mechanism that makes an overlap loud instead of corrupting)."""
     from ..sources.lease import writer_lease
@@ -99,13 +97,12 @@ def compact_semantic_corpus(spark, out_dir: str, codebook_path: str,
         return _compact_semantic_unlocked(
             spark, out_dir, codebook_path, threshold, vec_col,
             id_col, dim, n_iters, target_cluster, max_bucket,
-            assign_kernel, verify_kernel, prefilter_broadcast)
+            prefilter_broadcast)
 
 
 def _compact_semantic_unlocked(spark, out_dir, codebook_path,
                                threshold, vec_col, id_col, dim,
                                n_iters, target_cluster, max_bucket,
-                               assign_kernel, verify_kernel,
                                prefilter_broadcast):
     from ..similarity.pq import save_codebooks, train_pq
 
@@ -114,21 +111,17 @@ def _compact_semantic_unlocked(spark, out_dir, codebook_path,
         return {"before": 0, "after": 0, "dropped": 0}
     corpus = pin(corpus)
     n = corpus.count()
-    # n is NOT passed as train_pq's rowcount hint on purpose: the
-    # hint skips the cap's TakeOrdered+repartition and makes centroid
-    # sums layout-dependent — this pass must train exactly like batch
-    # semantic_dedup (partitioning-invariant), the equivalence the
+    # this pass must train exactly like batch semantic_dedup (the
+    # partitioning-invariant driver Lloyd tier) — the equivalence the
     # compaction test pins
     cents = train_pq(corpus, vec_col=vec_col, id_col=id_col, dim=dim,
                      m=1, k=scaled_k(n, target_cluster),
-                     n_iters=n_iters,
-                     assign_kernel=assign_kernel)[0]
+                     n_iters=n_iters, lloyd="driver")[0]
     bcs: list = []
     try:
         pairs = pairs_with_centroids(
             corpus, cents, threshold, vec_col, id_col,
-            max_bucket=max_bucket, assign_kernel=assign_kernel,
-            verify_kernel=verify_kernel,
+            max_bucket=max_bucket,
             prefilter_broadcast=prefilter_broadcast,
             broadcast_handle=bcs)
         kept = pin(keep_min_per_component(corpus, pairs, id_col))
@@ -208,8 +201,6 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
                                   target_cluster: int = 250,
                                   max_bucket: int | None = None,
                                   max_cluster: int | None = None,
-                                  assign_kernel: str | None = None,
-                                  verify_kernel: str | None = None,
                                   prefilter_broadcast: bool | str = "auto"):
     """The continuous-ingestion LOOP for an embedding corpus: a
     ``foreachBatch`` function that semantically dedups each
@@ -236,11 +227,9 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
     never survivors without their dropped witnesses, which would
     re-adjudicate the remainder against a witness-less corpus).
 
-    Kernel kwargs (``assign_kernel``/``verify_kernel``/
-    ``prefilter_broadcast``) forward to every pairing stage — the
-    corpus-scale settings; under ``prefilter_broadcast`` the
-    per-batch gather broadcasts are freed eagerly after the writes
-    (a stream processes thousands of batches). ``max_cluster`` is
+    ``prefilter_broadcast`` forwards to every pairing stage; under it
+    the per-batch gather broadcasts are freed eagerly after the
+    writes (a stream processes thousands of batches). ``max_cluster`` is
     the mass-duplicate guard on the corpus side of the cross join
     (see ``incremental_semantic_pairs``)."""
     from ..similarity.pq import load_codebooks, save_codebooks, train_pq
@@ -285,11 +274,11 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
                     # codebook (every later real batch would assign
                     # against zero centroids forever)
                     return
+                # trained like batch semantic_dedup (driver tier)
                 cents = train_pq(batch_df, vec_col=vec_col,
                                  id_col=id_col, dim=dim, m=1,
                                  k=scaled_k(n, target_cluster),
-                                 n_iters=n_iters,
-                                 assign_kernel=assign_kernel)[0]
+                                 n_iters=n_iters, lloyd="driver")[0]
                 # gate the codebook freeze too (verdict r11 #1): a
                 # dethroned bootstrap must not clobber the codebook
                 # a new writer just trained
@@ -321,8 +310,6 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
                 fresh, corpus, threshold, vec_col=vec_col,
                 id_col=id_col, dim=dim, cents=cents,
                 max_cluster=max_cluster,
-                assign_kernel=assign_kernel,
-                verify_kernel=verify_kernel,
                 prefilter_broadcast=prefilter_broadcast,
                 broadcast_handle=bcs)
             rejected = cross.select(
@@ -346,8 +333,7 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
         dedup/semantic.py."""
         pairs = pairs_with_centroids(
             df, cents, threshold, vec_col, id_col,
-            max_bucket=max_bucket, assign_kernel=assign_kernel,
-            verify_kernel=verify_kernel,
+            max_bucket=max_bucket,
             prefilter_broadcast=prefilter_broadcast,
             broadcast_handle=bcs)
         return keep_min_per_component(df, pairs, id_col)

@@ -1,18 +1,20 @@
-"""The Arrow scoring kernel for ANN top-k (round 8): numpy batch
-cosine instead of three interpreted expression folds per candidate
-pair. Fast tier — pins kernel agreement and plan shape; defaults
-stay on the bit-pinned SQL fold for the hash-pinned registry
-queries."""
+"""The numpy scoring kernel for ANN top-k (``ann._score_pairs``): one
+einsum + vector norms per Arrow batch, rounded once in Spark. Fast
+tier — pins the kernel against a numpy brute-force reference
+(tests/vector_reference.py) and its plan shape."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from big_data_bowl___2023_spark.similarity import (
     brute_force_topk,
     ivf_topk,
 )
+from big_data_bowl___2023_spark.similarity.ann import _make_planes
 from big_data_bowl___2023_spark.sources.io import load_table
+from vector_reference import topk, vectors
 
 
 def _rows(df):
@@ -25,49 +27,56 @@ def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
-def test_arrow_scoring_matches_sql_brute_force(spark, emb):
+def test_arrow_scoring_matches_numpy_brute_force(spark, emb):
     queries = emb.limit(8)
-    sql = _rows(brute_force_topk(emb, queries, 5))
-    arrow = _rows(brute_force_topk(emb, queries, 5,
-                                   score_kernel="arrow"))
-    assert sql == arrow and len(sql) == 8 * 5
+    got = _rows(brute_force_topk(emb, queries, 5))
+    assert got == topk(vectors(emb), vectors(queries), 5)
+    assert len(got) == 8 * 5
 
 
-def test_arrow_scoring_matches_sql_ivf(spark, emb):
+def test_arrow_scoring_matches_numpy_ivf(spark, emb):
+    """ivf_topk == the numpy top-k over each query's probed cells (its
+    own sign cell plus every one-bit flip)."""
     queries = emb.limit(8)
-    sql = _rows(ivf_topk(emb, queries, 5, dim=64))
-    arrow = _rows(ivf_topk(emb, queries, 5, dim=64,
-                           score_kernel="arrow"))
-    assert sql == arrow and sql
+    got = _rows(ivf_topk(emb, queries, 5, dim=64))
+    planes = [np.asarray(p) for p in _make_planes(64, 3)]
+
+    def cell(v):
+        return "".join("1" if v @ p >= 0 else "0" for p in planes)
+
+    corpus = vectors(emb)
+    cells = {i: cell(v) for i, v in corpus.items()}
+    want = []
+    for q, qv in vectors(queries).items():
+        c = cell(qv)
+        probed = {c} | {c[:j] + ("0" if c[j] == "1" else "1") + c[j + 1:]
+                        for j in range(3)}
+        want += topk({i: v for i, v in corpus.items()
+                      if cells[i] in probed}, {q: qv}, 5)
+    assert got == sorted(want) and got
 
 
-def test_degenerate_vectors_score_zero_in_both_kernels(spark):
-    """Zero-norm AND corrupt (NaN/Inf-component) vectors score 0.0
-    under BOTH kernels — without the nanvl/isfinite guards the SQL
-    fold surfaced corrupt rows as NaN, which Spark sorts GREATEST,
-    ranking them FIRST for every query (the round-7 bug class)."""
+def test_degenerate_vectors_score_zero(spark):
+    """Zero-norm AND corrupt (NaN/Inf-component) vectors score 0.0 —
+    a NaN score would sort GREATEST in Spark and rank the corrupt row
+    FIRST for every query (the round-7 bug class)."""
     rows = [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.6, 0.8]),
             (4, [float("nan"), 1.0]), (5, [float("inf"), 0.0])]
     emb = spark.createDataFrame(rows,
                                 "vec_id long, embedding array<double>")
     q = emb.filter("vec_id = 1")
-    for kernel in ("sql", "arrow"):
-        got = {r["neighbor_id"]: (r["cosine"], r["rank"]) for r in
-               brute_force_topk(emb, q, 4,
-                                score_kernel=kernel).collect()}
-        assert got[3][0] == 0.6 and got[3][1] == 1, kernel
-        assert got[2][0] == 0.0, kernel   # zero-norm
-        assert got[4][0] == 0.0, kernel   # NaN component
-        assert got[5][0] == 0.0, kernel   # Inf component
+    got = {r["neighbor_id"]: (r["cosine"], r["rank"]) for r in
+           brute_force_topk(emb, q, 4).collect()}
+    assert got[3][0] == 0.6 and got[3][1] == 1
+    assert got[2][0] == 0.0   # zero-norm
+    assert got[4][0] == 0.0   # NaN component
+    assert got[5][0] == 0.0   # Inf component
 
 
 def test_arrow_scoring_stage_is_pythonic_map(spark, emb):
-    plan = brute_force_topk(emb, emb.limit(2), 3,
-                            score_kernel="arrow") \
+    plan = brute_force_topk(emb, emb.limit(2), 3) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
-    with pytest.raises(ValueError, match="unknown score kernel"):
-        brute_force_topk(emb, emb.limit(1), 1, score_kernel="np")
 
 
 def test_hard_negative_miner_guards_corrupt_vectors(spark):

@@ -42,10 +42,6 @@ def test_index_search_bit_identical_to_ivf(spark, sf_dir, tmp_path):
     got = ann_index_search(spark, idx, queries, 5)
     ref = ivf_topk(emb, queries, 5)
     assert _topk_rows(got) == _topk_rows(ref)
-    # kernel parity holds against the stored layout too
-    got_a = ann_index_search(spark, idx, queries, 5,
-                             score_kernel="arrow")
-    assert _topk_rows(got_a) == _topk_rows(ref)
 
 
 def test_append_equals_rebuild(spark, sf_dir, tmp_path):
@@ -128,10 +124,6 @@ def test_quantized_search_matches_exact_and_prunes_columns(
     got = ann_index_search_quantized(spark, idx, queries, 5)
     ref = ann_index_search(spark, idx, queries, 5)
     assert _topk_rows(got) == _topk_rows(ref)
-    # both screen kernels shortlist into the same exact top-k
-    got_sql = ann_index_search_quantized(spark, idx, queries, 5,
-                                         screen_kernel="sql")
-    assert _topk_rows(got_sql) == _topk_rows(ref)
     assert_partition_pruned(got, "cell#")
     # the rerank side of the final plan reads vec without codes (the
     # screen is pinned out of it — assert its plan separately below)

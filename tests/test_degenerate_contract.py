@@ -88,10 +88,6 @@ _ENTRY_POINTS = {
     "brute_force_topk": (
         lambda spark, w, q: brute_force_topk(w["corpus"], q, K),
         "ranks_zero"),
-    "brute_force_topk[arrow]": (
-        lambda spark, w, q: brute_force_topk(w["corpus"], q, K,
-                                             score_kernel="arrow"),
-        "ranks_zero"),
     "ivf_topk": (
         lambda spark, w, q: ivf_topk(w["corpus"], q, K),
         "ranks_zero"),

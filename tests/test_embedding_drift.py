@@ -6,7 +6,6 @@ Contracts under test:
   numpy-computed projection marginals (same matrix, same bins);
 * same-distribution stability (split halves → psi ~ 0) and injected
   mean shift detection (max psi over threshold, drifted non-empty);
-* sql/arrow projection kernels agree on the report;
 * NULL vectors ride the NULL bucket instead of erroring.
 """
 
@@ -72,8 +71,7 @@ def test_stability_and_injected_shift(spark, sf_dir):
     assert verdict["n_projections"] == N_PROJ
 
 
-def test_kernels_agree_and_null_vectors_ride_null_bucket(spark,
-                                                         sf_dir):
+def test_null_vectors_ride_null_bucket(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").limit(400)
     ref = emb.filter(F.col("vec_id") % 2 == 0)
     cur = emb.filter(F.col("vec_id") % 2 == 1).withColumn(
@@ -81,13 +79,7 @@ def test_kernels_agree_and_null_vectors_ride_null_bucket(spark,
         F.when(F.col("vec_id") % 7 == 0,
                F.lit(None).cast("array<float>"))
          .otherwise(F.col("embedding")))
-    a = _rows(embedding_psi_report(ref, cur, n_proj=N_PROJ,
-                                   kernel="sql"))
-    b = _rows(embedding_psi_report(ref, cur, n_proj=N_PROJ,
-                                   kernel="arrow"))
-    # both kernels produce doubles from the same matrix; PSI shares
-    # are count-based so the reports agree exactly
-    assert a == b
+    a = _rows(embedding_psi_report(ref, cur, n_proj=N_PROJ))
     # NULL vectors appeared only in `cur`: nullability drift shows
     # up as nonzero psi, not an error
     assert all(psi > 0 for _, psi, _ in a)

@@ -3,17 +3,21 @@ the capped-sample k-means on the driver in numpy — one bounded
 collect instead of seeds-collect + sample-pin + one Spark job per
 round. Parity contract: codebooks agree with the distributed trainer
 to float-summation order (the sampled-training tolerance class,
-~1e-9), the tier is deterministic and partitioning-invariant, and
-the semantic pair sets it feeds are identical across tiers."""
+~1e-9), the tier is deterministic and partitioning-invariant, the
+semantic pair sets it feeds are identical across tiers, and the
+semantic k-means entry points train on it."""
 
 from __future__ import annotations
 
 import pytest
 
+from big_data_bowl___2023_spark.dedup import semantic
 from big_data_bowl___2023_spark.dedup.semantic import (
-    _lloyd_tier,
+    pairs_with_centroids,
+    scaled_k,
     semantic_dup_pairs,
 )
+from big_data_bowl___2023_spark.similarity import pq
 from big_data_bowl___2023_spark.similarity.pq import train_pq
 from big_data_bowl___2023_spark.sources.io import load_table
 
@@ -32,16 +36,12 @@ def _close(a: list, b: list, tol: float = 1e-9) -> bool:
 def test_driver_lloyd_matches_distributed_to_summation_order(
         spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    dist = train_pq(emb, dim=64, m=1, k=8, n_iters=4,
-                    assign_kernel="arrow")
-    drv = train_pq(emb, dim=64, m=1, k=8, n_iters=4,
-                   assign_kernel="arrow", lloyd="driver")
+    dist = train_pq(emb, dim=64, m=1, k=8, n_iters=4)
+    drv = train_pq(emb, dim=64, m=1, k=8, n_iters=4, lloyd="driver")
     assert _close(dist, drv)
     # PQ shape (m subspaces) routes each row to ITS subspace table
-    dist_m = train_pq(emb, dim=64, m=4, k=4, n_iters=3,
-                      assign_kernel="arrow")
-    drv_m = train_pq(emb, dim=64, m=4, k=4, n_iters=3,
-                     assign_kernel="arrow", lloyd="driver")
+    dist_m = train_pq(emb, dim=64, m=4, k=4, n_iters=3)
+    drv_m = train_pq(emb, dim=64, m=4, k=4, n_iters=3, lloyd="driver")
     assert _close(dist_m, drv_m)
 
 
@@ -75,20 +75,41 @@ def test_driver_lloyd_small_and_empty_inputs(spark):
 
 
 def test_semantic_pairs_identical_across_lloyd_tiers(spark, sf_dir):
-    """The end-to-end pin: the arrow-kernel entry point (which now
-    trains on the driver tier) emits the same verified pair set as
-    the sql-kernel entry point (distributed training) — the tier is
-    a physical choice, not a semantics choice, on real embeddings."""
+    """The end-to-end pin: semantic_dup_pairs (driver-tier training)
+    emits the same verified pair set as the same chain over a
+    distributed-tier codebook — the tier is a physical choice, not a
+    semantics choice, on real embeddings."""
     emb = load_table(spark, sf_dir, "embeddings")
-    sql_pairs = {(r.vec_a, r.vec_b, r.cosine) for r in
+    drv_pairs = {(r.vec_a, r.vec_b, r.cosine) for r in
                  semantic_dup_pairs(emb, 0.4, dim=64).collect()}
-    arrow_pairs = {(r.vec_a, r.vec_b, r.cosine) for r in
-                   semantic_dup_pairs(emb, 0.4, dim=64,
-                                      assign_kernel="arrow",
-                                      verify_kernel="arrow").collect()}
-    assert sql_pairs == arrow_pairs and sql_pairs
+    cents = train_pq(emb, dim=64, m=1, k=scaled_k(emb.count()),
+                     n_iters=4)[0]
+    dist_pairs = {(r.vec_a, r.vec_b, r.cosine) for r in
+                  pairs_with_centroids(emb, cents, 0.4).collect()}
+    assert drv_pairs == dist_pairs and drv_pairs
 
 
-def test_lloyd_tier_rule():
-    assert _lloyd_tier("arrow") == "driver"
-    assert _lloyd_tier("sql") == "spark"
+class _Trained(Exception):
+    pass
+
+
+def test_lloyd_tier_rule(spark, monkeypatch):
+    """The batch semantic k-means entry points train on the driver
+    tier (the spy stops each call at its train_pq)."""
+    tiers = []
+
+    def spy(*args, lloyd=None, **kwargs):
+        tiers.append(lloyd)
+        raise _Trained
+
+    monkeypatch.setattr(pq, "train_pq", spy)
+    df = spark.createDataFrame([(1, [1.0, 0.0])],
+                               "vec_id long, embedding array<double>")
+    calls = (lambda: semantic.kmeans_assign(df, k=2, dim=2),
+             lambda: semantic.semantic_dup_pairs(df, 0.5, k=2, dim=2),
+             lambda: semantic.incremental_semantic_pairs(
+                 df, df, 0.5, k=2, dim=2))
+    for call in calls:
+        with pytest.raises(_Trained):
+            call()
+    assert tiers == ["driver"] * 3

@@ -1,42 +1,37 @@
-"""The Arrow/GEMM Lloyd-round assignment kernel in train_pq (round
-9): at SemDeDup-sized k (= n/target_cluster, thousands at corpus
-scale) the interpreted per-row distance folds dominate the whole
-semantic-dedup operator, so the corpus-scale ``assign_kernel`` must
-cover training, not just the final assignment scan. Fast tier: pins
-codebook identity across kernels (the update aggregation is shared,
-so equal assignments ⇒ bit-equal codebooks) and the rejection
-contract."""
+"""The Arrow/GEMM Lloyd-round assignment kernel in train_pq (round 9;
+``_lloyd_codes_arrow``): at SemDeDup-sized k (= n/target_cluster,
+thousands at corpus scale) interpreted per-row distance folds would
+dominate the whole semantic-dedup operator, so every distributed
+round assigns with one GEMM per Arrow batch. Fast tier: pins the
+distributed trainer's codebooks against a numpy restatement of the
+same Lloyd loop (tests/vector_reference.py) — identical up to the
+float-summation order of the Spark mean (~1e-9)."""
 
 from __future__ import annotations
 
-import pytest
-
 from big_data_bowl___2023_spark.similarity.pq import train_pq
 from big_data_bowl___2023_spark.sources.io import load_table
+from vector_reference import lloyd, unit, vectors
+
+
+def _close(a: list, b: list, tol: float = 1e-9) -> bool:
+    return len(a) == len(b) and all(
+        len(ca) == len(cb) and all(
+            abs(x - y) < tol for u, w in zip(ca, cb) for x, y in zip(u, w))
+        for ca, cb in zip(a, b))
 
 
 def test_arrow_trainer_codebooks_identical_m1(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    sql = train_pq(emb, dim=64, m=1, k=8, n_iters=4)
-    arrow = train_pq(emb, dim=64, m=1, k=8, n_iters=4,
-                     assign_kernel="arrow")
-    assert sql == arrow
-    assert len(sql[0]) == 8 and len(sql[0][0]) == 64
+    got = train_pq(emb, dim=64, m=1, k=8, n_iters=4)
+    assert _close(got, lloyd(unit(vectors(emb)), 64, 1, 8, 4))
+    assert len(got[0]) == 8 and len(got[0][0]) == 64
 
 
 def test_arrow_trainer_codebooks_identical_pq_shape(spark, sf_dir):
     """The PQ shape proper (m subspaces): the kernel must route each
     row to ITS subspace's centroid table."""
     emb = load_table(spark, sf_dir, "embeddings")
-    sql = train_pq(emb, dim=64, m=8, k=16, n_iters=3)
-    arrow = train_pq(emb, dim=64, m=8, k=16, n_iters=3,
-                     assign_kernel="arrow")
-    assert sql == arrow
-    assert len(sql) == 8 and len(sql[0]) == 16
-
-
-def test_unknown_trainer_kernel_rejected(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="unknown assignment kernel"):
-        train_pq(emb, dim=64, m=1, k=4, n_iters=1,
-                 assign_kernel="numpy")
+    got = train_pq(emb, dim=64, m=8, k=16, n_iters=3)
+    assert _close(got, lloyd(unit(vectors(emb)), 64, 8, 16, 3))
+    assert len(got) == 8 and len(got[0]) == 16

@@ -1,6 +1,7 @@
 """JL random-projection screen (similarity/projection.py): matrix
-determinism, kernel identity, distance preservation on real
-embeddings, screen→rerank recall and exact-limit equivalence."""
+determinism, the projection GEMM against numpy, distance
+preservation on real embeddings, screen→rerank recall and
+exact-limit equivalence."""
 
 from __future__ import annotations
 
@@ -37,45 +38,37 @@ def test_matrix_deterministic_and_seed_sensitive():
     assert a.shape == (64, 16)
 
 
-def test_sql_and_arrow_kernels_agree(spark, vecs):
-    s = {r["vec_id"]: r["proj"] for r in
-         project_embeddings(vecs, 16, out_col="proj", kernel="sql")
-         .collect()}
-    a = {r["vec_id"]: r["proj"] for r in
-         project_embeddings(vecs, 16, out_col="proj", kernel="arrow")
-         .collect()}
-    assert set(s) == set(a)
-    for k in s:
-        np.testing.assert_allclose(s[k], a[k], rtol=0, atol=1e-9)
-    with pytest.raises(ValueError):
-        project_embeddings(vecs, 16, kernel="nope")
+def test_projection_matches_numpy_gemm(spark, vecs):
+    rows = project_embeddings(vecs, 16, out_col="proj").collect()
+    X = np.stack([np.asarray(r["embedding"], dtype=np.float64)
+                  for r in rows])
+    got = np.stack([np.asarray(r["proj"]) for r in rows])
+    np.testing.assert_allclose(got, X @ projection_matrix(64, 16),
+                               rtol=0, atol=1e-12)
 
 
 def test_null_vector_projects_to_null(spark):
     df = spark.createDataFrame(
         [(1, [1.0] * 64), (2, None)],
         "vec_id long, embedding array<double>")
-    for kernel in ("sql", "arrow"):
-        got = {r["vec_id"]: r["projected"] for r in
-               project_embeddings(df, 8, kernel=kernel).collect()}
-        assert got[2] is None
-        assert got[1] is not None and len(got[1]) == 8
+    got = {r["vec_id"]: r["projected"] for r in
+           project_embeddings(df, 8).collect()}
+    assert got[2] is None
+    assert got[1] is not None and len(got[1]) == 8
 
 
-def test_wrong_length_vector_errors_in_both_kernels(spark):
+def test_wrong_length_vector_errors(spark):
     df = spark.createDataFrame(
         [(1, [1.0] * 32)], "vec_id long, embedding array<double>")
-    for kernel in ("sql", "arrow"):
-        with pytest.raises(Exception, match="dim=64|USER_RAISED"):
-            project_embeddings(df, 8, kernel=kernel).collect()
+    with pytest.raises(Exception, match="dim=64"):
+        project_embeddings(df, 8).collect()
 
 
 def test_jl_distance_preservation(spark, vecs):
     """Pairwise L2 distances survive a 64→32 projection within a
     modest distortion on real embeddings (JL with ε ~ sqrt(ln n / d'))
     — deterministic: fixed data, fixed seed."""
-    rows = project_embeddings(vecs, 32, out_col="p", kernel="arrow") \
-        .collect()
+    rows = project_embeddings(vecs, 32, out_col="p").collect()
     X = np.stack([np.asarray(r["embedding"], dtype=np.float64)
                   for r in rows])
     P = np.stack([np.asarray(r["p"], dtype=np.float64)
@@ -91,9 +84,8 @@ def test_jl_distance_preservation(spark, vecs):
 
 
 def test_projection_is_map_side(spark, vecs):
-    for kernel in ("sql", "arrow"):
-        rep = plan_report(project_embeddings(vecs, 16, kernel=kernel))
-        assert rep["n_exchanges"] == 0, kernel
+    rep = plan_report(project_embeddings(vecs, 16))
+    assert rep["n_exchanges"] == 0
 
 
 def test_full_shortlist_equals_exact_topk(spark, vecs):
@@ -118,7 +110,7 @@ def test_screen_recall_on_real_embeddings(spark, vecs):
         "vec_id", F.col("vec_id") + 10_000_000)
     exact = ann.brute_force_topk(vecs, queries, 10)
     got = projected_topk_rerank(vecs, queries, 10, out_dim=32,
-                                shortlist=80, kernel="arrow")
+                                shortlist=80)
     def pairs(df):
         return {(r["query_id"], r["neighbor_id"])
                 for r in df.collect()}

@@ -1,57 +1,51 @@
-"""The Arrow/GEMM nearest-centroid assignment kernel (round 8): the
-corpus-scale alternative to the interpreted SQL argmin fold. Fast
-tier — these pin kernel agreement and plan shape, not recall."""
+"""The Arrow/GEMM nearest-centroid assignment kernel (round 8;
+``assign_with_centroids``). Fast tier — these pin the kernel against
+numpy brute-force assignment (tests/vector_reference.py) and its plan
+shape, not recall."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from big_data_bowl___2023_spark.dedup.semantic import (
     assign_with_centroids,
-    kmeans_assign,
+    scaled_k,
     semantic_dup_pairs,
 )
 from big_data_bowl___2023_spark.dedup.embedding import _normalized
+from big_data_bowl___2023_spark.similarity.pq import train_pq
 from big_data_bowl___2023_spark.sources.io import load_table
+from vector_reference import assign, near_dup_pairs, unit, vectors
 
 
 def _clusters(df):
     return {r["id"]: r["cluster"] for r in df.collect()}
 
 
-def test_arrow_assignment_matches_sql_on_real_embeddings(spark, sf_dir):
+def test_arrow_assignment_matches_numpy_on_real_embeddings(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     v = _normalized(emb, "embedding", "vec_id")
     cents = [[(1.0 if d == j else 0.0) for d in range(64)]
              for j in range(5)]
-    sql = _clusters(assign_with_centroids(v, cents, kernel="sql"))
-    arrow = _clusters(assign_with_centroids(v, cents, kernel="arrow"))
-    assert sql == arrow and len(sql) > 0
-    # and against the >codegen_max_k broadcast-join path
-    joined = _clusters(assign_with_centroids(v, cents,
-                                             codegen_max_k=2))
-    assert joined == arrow
+    got = _clusters(assign_with_centroids(v, cents))
+    assert got == assign(vectors(v, "id", "u"), cents) and got
 
 
 def test_arrow_assignment_geometry_and_ties(spark):
     cents = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0]]
     rows = [(1, [0.9, 0.1]), (2, [0.1, 0.9]), (3, [-0.8, -0.1]),
-            # EXACTLY equidistant to cents[0] and cents[1]:
-            # both kernels break ties to the LOWEST code
+            # EXACTLY equidistant to cents[0] and cents[1]: ties
+            # break to the LOWEST code
             (4, [0.5, 0.5])]
     v = spark.createDataFrame(rows, "id long, u array<double>")
-    got = _clusters(assign_with_centroids(v, cents, kernel="arrow"))
+    got = _clusters(assign_with_centroids(v, cents))
     assert got == {1: 0, 2: 1, 3: 2, 4: 0}
-    assert got == _clusters(assign_with_centroids(v, cents,
-                                                  kernel="sql"))
+    assert got == assign(vectors(v, "id", "u"), cents)
 
 
 def test_arrow_assignment_plan_is_map_side(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     v = _normalized(emb, "embedding", "vec_id")
     cents = [[0.0] * 64, [1.0] * 64]
-    plan = assign_with_centroids(v, cents, kernel="arrow") \
+    plan = assign_with_centroids(v, cents) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "Exchange" not in plan       # pure map-side scan
@@ -59,27 +53,15 @@ def test_arrow_assignment_plan_is_map_side(spark, sf_dir):
 
 
 def test_semantic_pairs_identical_under_arrow_kernel(spark, sf_dir):
-    """The end-to-end contract: the kernel is a physical-plan choice,
-    not a semantics choice — same centroids, same clusters, same
-    verified pair set on the test corpus."""
+    """The configuration the bench extra ships (the corpus-count hint
+    ``n``) emits exactly the numpy within-cluster pairs under the
+    same driver-tier codebook."""
     emb = load_table(spark, sf_dir, "embeddings")
-    a = {(r.vec_a, r.vec_b, r.cosine) for r in
-         semantic_dup_pairs(emb, 0.4, dim=64).collect()}
-    b = {(r.vec_a, r.vec_b, r.cosine) for r in
-         semantic_dup_pairs(emb, 0.4, dim=64,
-                            assign_kernel="arrow").collect()}
-    assert a == b and a
-    # r16: the bench extra now runs BOTH corpus-scale kernels —
-    # pin the exact configuration it ships (assign + verify arrow)
-    c = {(r.vec_a, r.vec_b, r.cosine) for r in
-         semantic_dup_pairs(emb, 0.4, dim=64,
-                            assign_kernel="arrow",
-                            verify_kernel="arrow").collect()}
-    assert a == c
-
-
-def test_unknown_kernel_rejected(spark):
-    v = spark.createDataFrame([(1, [1.0, 0.0])],
-                              "id long, u array<double>")
-    with pytest.raises(ValueError, match="unknown assignment kernel"):
-        assign_with_centroids(v, [[1.0, 0.0]], kernel="numpy")
+    n = emb.count()
+    got = {(r.vec_a, r.vec_b, r.cosine) for r in
+           semantic_dup_pairs(emb, 0.4, dim=64, n=n).collect()}
+    cents = train_pq(emb, dim=64, m=1, k=scaled_k(n), n_iters=4,
+                     lloyd="driver")[0]
+    units = unit(vectors(emb))
+    assert got == near_dup_pairs(units, 0.4, assign(units, cents))
+    assert got

@@ -93,20 +93,6 @@ def test_degenerate_corpus_star_guard(spark):
     assert [r.vec_id for r in kept.collect()] == [0]
 
 
-def test_join_assignment_matches_codegen(spark, sf_dir):
-    """The large-k broadcast-replicate assignment path must agree
-    with the literal-codegen argmin exactly (including low-code
-    tie-breaks), and its one join must build the tiny centroid side
-    (broadcast-replicate, never a corpus-side build)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = kmeans_assign(emb, k=8, n_iters=2, dim=64)
-    b = kmeans_assign(emb, k=8, n_iters=2, dim=64, codegen_max_k=0)
-    assert {(r.id, r.cluster) for r in a.collect()} == \
-           {(r.id, r.cluster) for r in b.collect()}
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "BuildRight" in plan and "BroadcastExchange" in plan
-
-
 def test_pq_sampled_training_identity_below_cap(spark, sf_dir):
     """train_rows larger than the corpus must reproduce the uncapped
     codebooks up to float-summation reassociation (the repartition
@@ -134,12 +120,14 @@ def test_pq_sampled_training_subsample_still_clusters(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     a = kmeans_assign(emb, k=8, n_iters=2, dim=64)
     from big_data_bowl___2023_spark.similarity.pq import train_pq
-    from big_data_bowl___2023_spark.dedup.semantic import _assign_by_join
+    from big_data_bowl___2023_spark.dedup.semantic import (
+        assign_with_centroids,
+    )
     from big_data_bowl___2023_spark.dedup.embedding import _normalized
     cents = train_pq(emb, dim=64, m=1, k=8, n_iters=2,
                      train_rows=500)[0]
-    sub = _assign_by_join(_normalized(emb, "embedding", "vec_id"),
-                          cents)
+    sub = assign_with_centroids(_normalized(emb, "embedding", "vec_id"),
+                                cents)
     sizes = [r["count"] for r in sub.groupBy("cluster").count().collect()]
     assert sum(sizes) == a.count()
     assert len(sizes) >= 2 and max(sizes) < sum(sizes)

@@ -41,7 +41,8 @@ def test_pairs_with_centroids_matches_semantic_dup_pairs(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    cents = train_pq(emb, dim=64, m=1, k=scaled_k(n), n_iters=4)[0]
+    cents = train_pq(emb, dim=64, m=1, k=scaled_k(n), n_iters=4,
+                     lloyd="driver")[0]
     a = {(r.vec_a, r.vec_b, r.cosine) for r in
          semantic_dup_pairs(emb, THRESH, dim=64).collect()}
     b = {(r.vec_a, r.vec_b, r.cosine) for r in
@@ -117,13 +118,11 @@ def test_semantic_ingest_bootstrap_matches_batch_dedup(spark, sf_dir,
 
 
 def test_semantic_ingest_kernels_agree(spark, sf_dir, tmp_path):
-    """The corpus-scale kernel settings produce the identical corpus
-    (arrow assign/verify + gathered prefilter vs the SQL defaults)."""
+    """The two candidate-screen kernels (the gathered-matrix screen
+    and the id-keyed join screen) produce the identical corpus."""
     outs = []
-    for tag, kw in (("sql", {}),
-                    ("arrow", dict(assign_kernel="arrow",
-                                   verify_kernel="arrow",
-                                   prefilter_broadcast=True))):
+    for tag, kw in (("join", dict(prefilter_broadcast=False)),
+                    ("gather", dict(prefilter_broadcast=True))):
         out = str(tmp_path / f"corpus_{tag}")
         cb = str(tmp_path / f"cb_{tag}.json")
         process = make_semantic_ingest_batch_fn(out, cb, THRESH,

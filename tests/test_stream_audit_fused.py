@@ -4,7 +4,8 @@ map-side boundary as a cumulative filter over it. These tests pin the
 row-for-row lineage equality VERDICT r16 #1 required: each fused
 boundary's row set equals the sequential gates restated
 independently, and the hooked chain's final output is bit-identical
-to the un-hooked (sequential) chain."""
+to the un-hooked chain (the gate table's flag projection plus its
+cumulative filter views, with no pin)."""
 
 from __future__ import annotations
 

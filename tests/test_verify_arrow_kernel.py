@@ -1,8 +1,8 @@
-"""The Arrow/einsum exact-verify kernel (round 9): the corpus-scale
-alternative to the interpreted fold-dot in ``_verify_exact`` — the
-last per-pair interpreted fold on a hot default path (the round-8
-verdict's #1 task). Fast tier: these pin kernel identity (pair set
-AND 6-dp cosines) and plan shape, not recall."""
+"""The einsum exact-verify kernel (``_verify_exact``, round 9) and the
+candidate screens around it. Fast tier: these pin the pair set AND
+the 6-dp cosines against a numpy brute-force reference
+(tests/vector_reference.py), the screen modes against each other,
+and plan shape — not recall."""
 
 from __future__ import annotations
 
@@ -20,10 +20,13 @@ from big_data_bowl___2023_spark.dedup.embedding import (
 )
 from big_data_bowl___2023_spark.dedup.semantic import (
     incremental_semantic_pairs,
+    scaled_k,
     semantic_dup_pairs,
 )
 from big_data_bowl___2023_spark.plans.explain import plan_report
+from big_data_bowl___2023_spark.similarity.pq import train_pq
 from big_data_bowl___2023_spark.sources.io import load_table
+from vector_reference import assign, near_dup_pairs, round6, unit, vectors
 
 THRESH = 0.4
 
@@ -43,57 +46,74 @@ def corpus(spark, sf_dir):
     return emb, v, surv
 
 
-def test_arrow_verify_matches_sql_on_real_embeddings(corpus):
+def _semantic_reference(corpus_df):
+    """(unit vectors, codebook, numpy assignment) for the codebook
+    the semantic entry points train on this corpus (driver tier)."""
+    n = corpus_df.count()
+    cents = train_pq(corpus_df, dim=64, m=1, k=scaled_k(n), n_iters=4,
+                     lloyd="driver")[0]
+    units = unit(vectors(corpus_df))
+    return units, cents, assign(units, cents)
+
+
+def test_arrow_verify_matches_numpy_on_real_embeddings(corpus):
     emb, v, surv = corpus
-    sql = _pairs(_verify_exact(v, surv, THRESH, kernel="sql"))
-    arrow = _pairs(_verify_exact(v, surv, THRESH, kernel="arrow"))
-    # identity includes the 6-dp cosine VALUES, not just the pair set:
-    # the einsum dot and the sequential fold agree bit-for-bit on the
-    # real test embeddings (the constructed divergence cases live in
-    # test_kernel_rounding_boundary.py)
-    assert sql == arrow and len(sql) > 0
+    got = _pairs(_verify_exact(v, surv, THRESH))
+    u = vectors(v, "id", "u")
+    want = set()
+    for r in surv.collect():
+        d = float(u[r.vec_a] @ u[r.vec_b])
+        if d >= THRESH:
+            want.add((r.vec_a, r.vec_b, round6(d)))
+    # identity includes the 6-dp cosine VALUES, not just the pair set
+    assert got == want and got
 
 
 def test_arrow_verify_plan_shape(corpus):
-    """The kernel swap is a scoring change, not a plan change: same
-    join tree (no new Exchange / BNL / cartesian), scoring runs in a
+    """Scoring adds no join tree of its own: the same Exchanges as the
+    bare candidate→vector joins, no BNL / cartesian, scoring in a
     MapInPandas stage."""
     emb, v, surv = corpus
-    sql_rep = plan_report(_verify_exact(v, surv, THRESH, kernel="sql"))
-    arrow_df = _verify_exact(v, surv, THRESH, kernel="arrow")
-    arrow_rep = plan_report(arrow_df)
-    assert arrow_rep["n_exchanges"] <= sql_rep["n_exchanges"]
-    assert arrow_rep["n_bnl_joins"] <= sql_rep["n_bnl_joins"]
-    assert not arrow_rep["has_cartesian"]
-    plan = arrow_df._jdf.queryExecution().executedPlan().toString()
+    ua = v.select(F.col("id").alias("vec_a"), F.col("u").alias("ua"))
+    ub = v.select(F.col("id").alias("vec_b"), F.col("u").alias("ub"))
+    bare = plan_report(ua.join(F.broadcast(surv), "vec_a")
+                       .join(ub, "vec_b"))
+    df = _verify_exact(v, surv, THRESH, broadcast_candidates=True)
+    rep = plan_report(df)
+    assert rep["n_exchanges"] <= bare["n_exchanges"]
+    assert rep["n_bnl_joins"] == 0
+    assert not rep["has_cartesian"]
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
 
 
 def test_lsh_near_dup_identical_under_arrow_verify(spark, sf_dir):
+    """Precision 1.0: the LSH output is exactly the numpy-verified
+    subset of its own candidate pairs."""
     emb = load_table(spark, sf_dir, "embeddings")
-    a = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH))
-    b = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH,
-                                         verify_kernel="arrow"))
-    assert a == b and a
+    got = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH))
+    want = near_dup_pairs(unit(vectors(emb)), THRESH)
+    assert got and got <= want
+    v = _normalized(emb, "embedding", "vec_id")
+    cand = {(r.vec_a, r.vec_b) for r in lsh_candidate_pairs(
+        v, 64, 16, scaled_n_planes(v.count(), 32)).collect()}
+    assert got == {p for p in want if p[:2] in cand}
 
 
 def test_exact_near_dup_identical_under_arrow_verify(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    a = _pairs(cosine_near_dup_pairs(emb, THRESH))
-    b = _pairs(cosine_near_dup_pairs(emb, THRESH,
-                                     verify_kernel="arrow"))
-    assert a == b and a
+    got = _pairs(cosine_near_dup_pairs(emb, THRESH))
+    assert got == near_dup_pairs(unit(vectors(emb)), THRESH) and got
 
 
 def test_semantic_pairs_identical_under_full_arrow(spark, sf_dir):
-    """The product corpus-scale setting: BOTH kernels arrow — same
-    centroids, same clusters, same verified pair set and cosines."""
+    """The end-to-end semantic chain (driver Lloyd tier, GEMM
+    assignment, einsum screen + verify) == numpy assignment and
+    brute-force within-cluster pairs under the same codebook."""
     emb = load_table(spark, sf_dir, "embeddings")
-    a = _pairs(semantic_dup_pairs(emb, THRESH, dim=64))
-    b = _pairs(semantic_dup_pairs(emb, THRESH, dim=64,
-                                  assign_kernel="arrow",
-                                  verify_kernel="arrow"))
-    assert a == b and a
+    units, _, cluster = _semantic_reference(emb)
+    got = _pairs(semantic_dup_pairs(emb, THRESH, dim=64))
+    assert got == near_dup_pairs(units, THRESH, cluster) and got
 
 
 def test_incremental_semantic_identical_under_full_arrow(spark, sf_dir):
@@ -108,10 +128,19 @@ def test_incremental_semantic_identical_under_full_arrow(spark, sf_dir):
                                            dim=64, **kw).collect()}
 
     a = run()
-    b = run(assign_kernel="arrow", verify_kernel="arrow")
-    c = run(assign_kernel="arrow", verify_kernel="arrow",
-            prefilter_broadcast=True)
+    b = run(prefilter_broadcast=True)
+    c = run(prefilter_broadcast=False)
     assert a == b == c and a
+    units, cents, c_old = _semantic_reference(old)
+    u_new = unit(vectors(new))
+    c_new = assign(u_new, cents)
+    want = set()
+    for i, ui in u_new.items():
+        for j, uj in units.items():
+            d = float(ui @ uj)
+            if c_new[i] == c_old[j] and d >= THRESH:
+                want.add((i, j, round6(d)))
+    assert a == want
 
 
 def test_prefilter_broadcast_matches_join_mode(corpus):
@@ -145,8 +174,7 @@ def test_lsh_identical_under_prefilter_broadcast(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     a = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH))
     b = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH,
-                                         prefilter_broadcast=True,
-                                         verify_kernel="arrow"))
+                                         prefilter_broadcast=True))
     assert a == b and a
 
 
@@ -154,8 +182,6 @@ def test_semantic_identical_under_prefilter_broadcast(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     a = _pairs(semantic_dup_pairs(emb, THRESH, dim=64))
     b = _pairs(semantic_dup_pairs(emb, THRESH, dim=64,
-                                  assign_kernel="arrow",
-                                  verify_kernel="arrow",
                                   prefilter_broadcast=True))
     assert a == b and a
 
@@ -174,14 +200,6 @@ def test_prefilter_broadcast_plan_has_no_vector_join(corpus):
         ._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "Join" not in plan and "Exchange" not in plan
-
-
-def test_unknown_verify_kernel_rejected(spark):
-    v = spark.createDataFrame([(1, [1.0, 0.0])],
-                              "id long, u array<double>")
-    cand = spark.createDataFrame([(1, 1)], "vec_a long, vec_b long")
-    with pytest.raises(ValueError, match="unknown verify kernel"):
-        _verify_exact(v, cand, 0.5, kernel="numpy")
 
 
 def test_gather_rejects_non_integer_ids(spark):

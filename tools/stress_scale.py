@@ -33,8 +33,7 @@ the vector corpus measures the replica generator, not the engine.
 
 ``--vector S1 S2 ...`` (e.g. ``--vector 16 64 256``) runs ONLY the
 embedding-family legs — semantic dedup pairs, LSH-verified near-dup,
-IVF top-k — with the Arrow kernels on (the corpus-scale setting those
-kwargs exist for). The replica generator objection above is handled
+IVF top-k — on the numpy vector kernels. The replica generator objection above is handled
 the same way the product legs handle it: the replicated corpus is
 localCheckpoint-materialized BEFORE any timed leg, so generation cost
 is excluded and each leg reads a flat materialized table. Claims
@@ -252,8 +251,8 @@ def run_document_legs(docs_ml) -> dict:
 
 
 def vector_legs(emb0, scales) -> None:
-    """Embedding-family legs at the requested scales, Arrow kernels
-    on. Each scale point prints one JSON line: corpus size, LSH
+    """Embedding-family legs at the requested scales (numpy vector
+    kernels). Each scale point prints one JSON line: corpus size, LSH
     candidate volume (the flat-per-vector claim), verified near-dup
     pairs + wall, semantic pairs + wall (incl. the GEMM Lloyd
     trainer), and IVF top-k wall for a fixed 64-query batch."""
@@ -284,19 +283,17 @@ def vector_legs(emb0, scales) -> None:
         t0 = time.time()
         n_lsh = dd.cosine_near_dup_pairs_lsh(
             emb, 0.8, n_tables=16, max_bucket=100_000,
-            verify_kernel="arrow", prefilter_broadcast=True).count()
+            prefilter_broadcast=True).count()
         t_lsh = time.time() - t0
 
         t0 = time.time()
         n_sem = semantic_dup_pairs(
             emb, 0.8, dim=64, n=n, max_bucket=100_000,
-            assign_kernel="arrow", verify_kernel="arrow",
             prefilter_broadcast=True).count()
         t_sem = time.time() - t0
 
         t0 = time.time()
-        n_ivf = ivf_topk(emb, queries, 10, n_planes=6,
-                         score_kernel="arrow").count()
+        n_ivf = ivf_topk(emb, queries, 10, n_planes=6).count()
         t_ivf = time.time() - t0
 
         print(json.dumps({
@@ -338,16 +335,15 @@ def index_legs(spark, emb0, scales) -> None:
         work = tempfile.mkdtemp(prefix="annidx_")
         try:
             t0 = time.time()
-            n_fly = ivf_topk(emb, queries, 10,
-                             score_kernel="arrow").count()
+            n_fly = ivf_topk(emb, queries, 10).count()
             t_fly = time.time() - t0
 
             t0 = time.time()
             build_ann_index(emb, f"{work}/f")
             t_build = time.time() - t0
             t0 = time.time()
-            n_idx = ann_index_search(spark, f"{work}/f", queries, 10,
-                                     score_kernel="arrow").count()
+            n_idx = ann_index_search(spark, f"{work}/f", queries,
+                                     10).count()
             t_idx = time.time() - t0
 
             t0 = time.time()
@@ -747,8 +743,7 @@ def marker_legs(spark, emb0, scales) -> None:
 
     def timed_search(work):
         t0 = time.time()
-        n = ann_index_search(spark, f"{work}/f", queries, 10,
-                             score_kernel="arrow").count()
+        n = ann_index_search(spark, f"{work}/f", queries, 10).count()
         return time.time() - t0, n
 
     for scale in scales:
@@ -810,8 +805,8 @@ def quant_crossover_legs(spark, dims) -> None:
     the cell layout) at n ∈ {32768, 131072} × the given dims
     (default 64/256/512), a persistent float and quantized index per
     point, then cold + warm-median-of-3 of `ann_index_search`
-    (arrow kernel) vs `ann_index_search_quantized` (int8 screen,
-    arrow) over the same 16 queries. One JSON line per point with
+    vs `ann_index_search_quantized` (int8 screen) over the same 16
+    queries. One JSON line per point with
     the probed-corpus bytes and the quant/float warm ratio; the
     crossover is the first point where the ratio drops below 1.
     The measured threshold is written into index.py's
@@ -854,11 +849,9 @@ def quant_crossover_legs(spark, dims) -> None:
                     def search():
                         if tier == "float":
                             return ann_index_search(
-                                spark, f"{work}/f", queries, 10,
-                                score_kernel="arrow")
+                                spark, f"{work}/f", queries, 10)
                         return ann_index_search_quantized(
-                            spark, f"{work}/q", queries, 10,
-                            screen_kernel="arrow")
+                            spark, f"{work}/q", queries, 10)
                     t0 = time.time()
                     search().count()
                     rec[f"{tier}_cold_sec"] = round(
@@ -939,11 +932,6 @@ def hybrid_legs(spark, docs0, emb0, scales) -> None:
             build_ann_index(corpus, f"{work}/f", id_col="doc_id")
             build_ann_index(corpus, f"{work}/q", id_col="doc_id",
                             quantize=True)
-            # every arm on the Arrow kernels — the corpus-scale
-            # setting the kwargs exist for (the first cut of this leg
-            # left hybrid's screen on its sql default and measured
-            # the interpreted fold, not the tier: hybrid_quant read
-            # 15.3 s at 64× of which ~5 s was the sql screen)
             for tier, dense, idx in (("float", "index", "f"),
                                      ("quant", "index_quantized",
                                       "q")):
@@ -951,14 +939,12 @@ def hybrid_legs(spark, docs0, emb0, scales) -> None:
                     def search(q):
                         return ann_index_search(
                             spark, f"{work}/f", q, 10,
-                            id_col="query_id",
-                            score_kernel="arrow")
+                            id_col="query_id")
                 else:
                     def search(q):
                         return ann_index_search_quantized(
                             spark, f"{work}/q", q, 10,
-                            id_col="query_id",
-                            screen_kernel="arrow")
+                            id_col="query_id")
                 t0 = time.time()
                 search(queries).count()
                 rec[f"dense_{tier}_cold_sec"] = round(
@@ -974,8 +960,7 @@ def hybrid_legs(spark, docs0, emb0, scales) -> None:
                 def hyb():
                     return hybrid_topk(
                         corpus, queries, k=10, dense=dense,
-                        index_dir=f"{work}/{idx}",
-                        score_kernel="arrow").count()
+                        index_dir=f"{work}/{idx}").count()
 
                 t0 = time.time()
                 hyb()
