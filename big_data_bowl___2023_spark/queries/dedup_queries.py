@@ -200,10 +200,11 @@ def dedup_simhash_hamming(spark, sf_dir):
 def dedup_embedding_cosine(spark, sf_dir):
     """EXACT embedding-cosine near-dup pairs ≥ threshold
     (dedup.embedding.cosine_near_dup_pairs): block-GEMM prefilter →
-    exact fold re-verification of survivors. The final values use the
-    same normalize-once + left-fold-dot arithmetic the oracle mirrors,
-    so the output is bit-identical to the naive all-pairs fold — but
-    the O(n²) work runs as numpy matrix products (round-1's
+    exact numpy einsum re-verification of survivors, rounded once in
+    Spark (half-up, as the oracle's ``ROUND``). The values use the
+    same normalize-once dot the oracle mirrors, equal to the naive
+    all-pairs fold up to the last ulp — but the O(n²) work runs as
+    numpy matrix products (round-1's
     BroadcastNestedLoopJoin + per-pair interpreted fold was 181 s of
     the 203 s bench; this plan retires it)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -267,7 +268,7 @@ def dedup_embedding_lsh_verified(spark, sf_dir):
     (dedup.embedding.cosine_near_dup_pairs_lsh): deterministic
     hyperplane signatures (16 tables, bits auto-scaled to hold bucket
     width ~32), one signature-keyed self-join for candidates, exact
-    fold verification. Precision 1.0 by construction; recall vs the
+    numpy einsum verification. Precision 1.0 by construction; recall vs the
     exact kernel is asserted in pytest. Candidate volume scales
     ~n·bucket, not n². Runs the shipped ``center=True`` default —
     the r14 mean-centering that fixes positive-orthant recall — so

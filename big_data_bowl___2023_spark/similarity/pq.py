@@ -109,6 +109,11 @@ def _lloyd_codes_arrow(sub_tbl: DataFrame, cents: list) -> DataFrame:
     return sub_tbl.mapInPandas(codes, out_schema)
 
 
+# rows scored per GEMM in the driver Lloyd loop (bounds its k-wide
+# score matrix independently of the sample size)
+_ARGMIN_BLOCK = 2048
+
+
 def _train_lloyd_driver(v: DataFrame, dim: int, m: int, k: int,
                         n_iters: int, train_rows: int) -> list:
     """The bounded-sample Lloyd loop run ONCE on the driver in numpy
@@ -122,7 +127,11 @@ def _train_lloyd_driver(v: DataFrame, dim: int, m: int, k: int,
     tier replaces seeds-collect + sample-pin + n_iters round jobs
     with one bounded collect (≤ train_rows × dim doubles — ~50 MB at
     the 100k × 64 default, same measured-size-buys-the-collect
-    pattern as clusters.DRIVER_EDGE_BOUND).
+    pattern as clusters.DRIVER_EDGE_BOUND). Assignment scores
+    ``_ARGMIN_BLOCK`` rows at a time, so on top of the sample it holds
+    two ``_ARGMIN_BLOCK × k`` double temporaries (~130 MB at k = 4000,
+    the ``scaled_k`` of a 1M-row corpus), never a train_rows × k
+    matrix (6.4 GB for the same k at the 100k default).
 
     Arithmetic contract: assignment is the same argmin(|c|²/2 − u·c)
     with first-minimum ties as ``_lloyd_codes_arrow``; the update
@@ -150,7 +159,11 @@ def _train_lloyd_driver(v: DataFrame, dim: int, m: int, k: int,
         for mi in range(m):
             C = np.asarray(cents[mi], dtype=np.float64)  # (k, sub)
             half_c2 = 0.5 * (C * C).sum(axis=1)
-            codes = np.argmin(half_c2[None, :] - SV[mi] @ C.T, axis=1)
+            codes = np.empty(len(SV[mi]), dtype=np.int64)
+            for s in range(0, len(codes), _ARGMIN_BLOCK):
+                blk = SV[mi][s:s + _ARGMIN_BLOCK]
+                codes[s:s + _ARGMIN_BLOCK] = np.argmin(
+                    half_c2[None, :] - blk @ C.T, axis=1)
             cb = [list(c) for c in cents[mi]]
             for j in range(len(cb)):       # empty clusters keep prev
                 mask = codes == j
@@ -168,7 +181,6 @@ def train_pq(corpus: DataFrame, vec_col: str = "embedding",
              m: int = DEFAULT_M, k: int = DEFAULT_K,
              n_iters: int = 8,
              train_rows: int | None = 100_000,
-             n: int | None = None,
              lloyd: str | None = None) -> list:
     """m×k×(dim/m) codebooks as a nested Python list.
 
@@ -192,14 +204,6 @@ def train_pq(corpus: DataFrame, vec_col: str = "embedding",
     trains on everything (the pre-round-4 behavior; identical output
     whenever the corpus is smaller than the cap).
 
-    ``n`` is an optional corpus-rowcount hint: when the caller knows
-    ``n <= train_rows`` the cap's TakeOrdered sort + repartition are
-    skipped outright (they would select every row anyway). Opt-in
-    because skipping the repartition reassociates the Lloyd averages
-    — values agree to float-summation order (~1e-9), not bitwise, so
-    paths whose oracles pin exact centroid arithmetic simply don't
-    pass the hint.
-
     ``lloyd="driver"`` (r17) runs the whole capped-sample Lloyd loop
     on the driver in numpy (:func:`_train_lloyd_driver`): one bounded
     TakeOrdered collect replaces the seeds collect, the sample pin
@@ -222,7 +226,7 @@ def train_pq(corpus: DataFrame, vec_col: str = "embedding",
             raise ValueError("lloyd='driver' needs train_rows (the "
                              "bounded sample is what buys the collect)")
         return _train_lloyd_driver(v, dim, m, k, n_iters, train_rows)
-    if train_rows is not None and (n is None or n > train_rows):
+    if train_rows is not None:
         # TakeOrdered computes per-partition top-n map-side; the
         # repartition fans the (small) training set back out so the
         # Lloyd rounds keep their parallelism. For corpora where even

@@ -80,10 +80,11 @@ def test_arrow_scoring_stage_is_pythonic_map(spark, emb):
 
 
 def test_hard_negative_miner_guards_corrupt_vectors(spark):
-    """mine_hard_negatives shares _guarded_cosine: a corrupt NaN
-    embedding in a labeled corpus scores 0.0 and never tops an
-    anchor's negatives (unguarded it scored NaN, which Spark sorts
-    greatest — rank 1 for every anchor)."""
+    """mine_hard_negatives applies the scoring kernel's degenerate
+    policy (``_np_cosine``: non-finite -> 0.0) through ``nanvl`` over
+    ``V.cosine``: a corrupt NaN embedding in a labeled corpus scores
+    0.0 and never tops an anchor's negatives (unguarded it scored NaN,
+    which Spark sorts greatest — rank 1 for every anchor)."""
     from big_data_bowl___2023_spark.similarity.ann import (
         mine_hard_negatives,
     )

@@ -20,6 +20,7 @@ from big_data_bowl___2023_spark.dedup.semantic import (
 from big_data_bowl___2023_spark.similarity import pq
 from big_data_bowl___2023_spark.similarity.pq import train_pq
 from big_data_bowl___2023_spark.sources.io import load_table
+from vector_reference import lloyd, unit, vectors
 
 
 def _close(a: list, b: list, tol: float = 1e-9) -> bool:
@@ -51,6 +52,19 @@ def test_driver_lloyd_deterministic_and_layout_invariant(spark, sf_dir):
     b = train_pq(emb.repartition(7), dim=64, m=1, k=8, n_iters=4,
                  lloyd="driver")
     assert a == b                     # bitwise across layouts
+
+
+def test_driver_lloyd_scores_in_row_blocks(spark, sf_dir, monkeypatch):
+    """The driver argmin runs ``_ARGMIN_BLOCK`` rows at a time so its
+    score matrix never grows with the sample: a block far smaller
+    than the sample trains the same codebook as one block, and both
+    match the numpy Lloyd restatement."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    one = train_pq(emb, dim=64, m=1, k=8, n_iters=4, lloyd="driver")
+    monkeypatch.setattr(pq, "_ARGMIN_BLOCK", 7)
+    blocked = train_pq(emb, dim=64, m=1, k=8, n_iters=4, lloyd="driver")
+    assert _close(blocked, one, tol=1e-12)
+    assert _close(blocked, lloyd(unit(vectors(emb)), 64, 1, 8, 4))
 
 
 def test_driver_lloyd_requires_sample_cap(spark, sf_dir):

@@ -168,7 +168,7 @@ def test_incremental_semantic_pairs_cross_only_and_exact(spark, sf_dir):
     from big_data_bowl___2023_spark.dedup.semantic import scaled_k
     k = scaled_k(n_corpus)
     cents = train_pq(corpus, dim=64, m=1, k=k, n_iters=4,
-                     n=n_corpus)[0]
+                     lloyd="driver")[0]
     a_new = {r.id: (r.cluster, np.array(r.u)) for r in
              assign_with_centroids(
                  _normalized(new, "embedding", "vec_id"),
