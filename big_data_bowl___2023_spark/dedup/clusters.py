@@ -42,8 +42,8 @@ MAX_ROUNDS = 20
 # round, ~0.05 s as a collect + union-find), while the collect is
 # provably bounded: the gate is bought with the edge COUNT the loop
 # already computes for its fixpoint checksum, never assumed — the
-# same measured-size pattern as embedding._verify_exact's
-# broadcast_limit. 100k edges ≈ a few MB on the driver; above the
+# same measured-size pattern as embedding.GATHER_CEILING_ROWS.
+# 100k edges ≈ a few MB on the driver; above the
 # bound (any real corpus) the scale-safe star loop runs unchanged.
 DRIVER_EDGE_BOUND = 100_000
 

@@ -46,9 +46,10 @@ from ..session import pin
 # exact fold makes the final ≥-threshold decision.
 _PREFILTER_MARGIN = 1e-9
 
-# The gather screen's size cutover: below this many corpus vectors the
-# candidate prefilter broadcasts the gathered (n × dim) unit matrix
-# and shuffles 16 B id pairs; above it, the id-keyed join path. 10M
+# The gather rule's size cutover (``_gather_broadcast``, read at call
+# time): at or below this many vectors with integer ids, the pair
+# paths broadcast the gathered (n × dim) unit matrix and shuffle 16 B
+# id pairs; above it, they take the id-keyed join path. 10M
 # rows × dim 64 × 8 B ≈ 5 GB per Python worker — the documented
 # worker-memory bound from the round-9 256× stress leg (BASELINE.md).
 GATHER_CEILING_ROWS = 10_000_000
@@ -58,11 +59,14 @@ _PAIR_SCHEMA = T.StructType([
     T.StructField("vec_b", T.LongType()),
 ])
 
-_OUT_SCHEMA = T.StructType([
-    T.StructField("vec_a", T.LongType()),
-    T.StructField("vec_b", T.LongType()),
-    T.StructField("cosine", T.DoubleType()),
-])
+
+def _pair_schema(cand: DataFrame, *extra: T.StructField) -> T.StructType:
+    """Output schema of a kernel over candidate pairs: the candidates'
+    own id types (the join paths accept any id type), then
+    ``extra``."""
+    return T.StructType(
+        [T.StructField(c, cand.schema[c].dataType)
+         for c in ("vec_a", "vec_b")] + list(extra))
 
 
 def _normalized(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
@@ -85,9 +89,7 @@ def _normalized(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
 
 
 def _verify_exact(v: DataFrame, cand: DataFrame,
-                  threshold: float,
-                  broadcast_candidates: bool | str = "auto",
-                  broadcast_limit: int = 2_000_000) -> DataFrame:
+                  threshold: float) -> DataFrame:
     """Exact dot over candidate id pairs only: candidate ids join the
     unit-vector table, then one numpy einsum per Arrow batch scores
     the joined pairs (same shape as ``_np_prefilter`` / ann
@@ -99,41 +101,17 @@ def _verify_exact(v: DataFrame, cand: DataFrame,
     from the oracle's fold (tests/test_kernel_rounding_boundary.py
     pins the exact-boundary case).
 
-    ``broadcast_candidates`` picks the join strategy for the (narrow)
-    candidate side against the (wide) vector table:
-
-    * ``"auto"`` (default) — size-aware: the candidate plan is
-      materialized once via ``session.pin`` (it feeds the deciding
-      ``count()`` and then one join chain; without the pin the
-      count's work would be thrown away and recomputed by the join)
-      and counted; the broadcast is pinned only when the count is
-      ≤ ``broadcast_limit`` rows, else the strategy is left to AQE's
-      runtime statistics. Prefiltered survivor sets are *usually*
-      near-output-sized, but carry no construction-time bound — the
-      round-6 verdict's scale review — so the broadcast must be
-      bought with an actual count, not assumed. In the over-limit
-      case the pinned set is by definition large; under the default
-      pin mode its blocks are non-recomputable (executor-loss
-      hazard), which is exactly what ``durable_pins()`` /
-      ``SPARK_GRAFT_DURABLE_PINS`` exists to flip to a recomputable
-      ``persist(DISK_ONLY)`` on preemptible clusters.
-    * ``True`` — unconditional pin: ONLY for generators whose
-      candidate volume is bounded by construction.
-    * ``False`` — plain join, AQE decides (candidate volume is
-      data-dependent and possibly large, e.g. a raw cluster-keyed
-      equi-join).
-
-    ``broadcast_limit`` defaults to 2M id pairs ≈ 32 MB of packed
-    rows — half the session's 64 MB autoBroadcastJoinThreshold."""
+    The join strategy is AQE's: every caller feeds it prefilter
+    survivors that reach exactly ONE join chain, so a pin + count to
+    buy a broadcast would only add jobs (round 7 measured +18% on the
+    bench query), and on a mass-dup corpus (survivors ~output-sized)
+    the AQE shuffle join degrades gracefully where a forced broadcast
+    would run out of memory."""
     import numpy as np
 
     ua = v.select(F.col("id").alias("vec_a"), F.col("u").alias("ua"))
     ub = v.select(F.col("id").alias("vec_b"), F.col("u").alias("ub"))
-    if broadcast_candidates == "auto":
-        cand = pin(cand)
-        broadcast_candidates = cand.count() <= broadcast_limit
-    c = F.broadcast(cand) if broadcast_candidates else cand
-    joined = ua.join(c, "vec_a").join(ub, "vec_b")
+    joined = ua.join(cand, "vec_a").join(ub, "vec_b")
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -147,107 +125,80 @@ def _verify_exact(v: DataFrame, cand: DataFrame,
             out["cosine"] = dots[keep]
             yield out
 
-    return (joined.mapInPandas(verify, _OUT_SCHEMA)
+    schema = _pair_schema(cand, T.StructField("cosine", T.DoubleType()))
+    return (joined.mapInPandas(verify, schema)
             .withColumn("cosine", F.round("cosine", 6)))
 
 
-def _gather_eligible(v: DataFrame, n_vectors: int | None,
-                     gather_ceiling: int = GATHER_CEILING_ROWS) -> bool:
-    """The prefilter's "auto" gather decision, exposed so an entry
-    point that wants the gathered matrix for MORE than the screen
-    (r17: the LSH path derives its centering mean from it) can make
-    the same call once and share the broadcast."""
+def _gather_broadcast(v: DataFrame, n_vectors: int | None = None,
+                      broadcast_handle: list | None = None):
+    """The one gather-vs-join rule of the pair paths — the candidate
+    screens of the LSH and semantic entry points and the hard-negative
+    miner's scoring all ask here, so the choice is made in one place,
+    from the data alone. Gather only integer ids (the gather kernels
+    resolve ids through int64 searchsorted) in a table of at most
+    ``GATHER_CEILING_ROWS`` vectors (read at call time): then return
+    the broadcast ``gather_unit_matrix`` triple of the (id, u) table,
+    else None (the caller takes its id-keyed join path).
+    ``n_vectors`` skips the deciding count when the caller already
+    knows it.
+
+    ``broadcast_handle``: a caller-owned list the broadcast is
+    appended to, so loops (the streaming ingest) can unpersist it
+    eagerly after the batch's actions instead of leaving O(corpus)
+    broadcast blocks to GC — the streaming/curation.py convention."""
     if not isinstance(v.schema["id"].dataType,
                       (T.LongType, T.IntegerType, T.ShortType,
                        T.ByteType)):
-        return False
+        return None
     if n_vectors is None:
         n_vectors = v.count()
-    return n_vectors <= gather_ceiling
+    if n_vectors > GATHER_CEILING_ROWS:
+        return None
+    bc = v.sparkSession.sparkContext.broadcast(V.gather_unit_matrix(v))
+    if broadcast_handle is not None:
+        broadcast_handle.append(bc)
+    return bc
 
 
-def _np_prefilter(v: DataFrame, cand: DataFrame,
-                  threshold: float,
-                  broadcast_vectors: bool | str = False,
-                  broadcast_handle: list | None = None,
-                  n_vectors: int | None = None,
-                  gather_ceiling: int = GATHER_CEILING_ROWS,
-                  gathered=None) -> DataFrame:
+def _np_prefilter(v: DataFrame, cand: DataFrame, threshold: float,
+                  gathered) -> DataFrame:
     """Vectorized candidate screening: evaluate every candidate
-    pair's dot per Arrow batch with one einsum — keeps the
-    interpreted fold off the (possibly large) candidate set; only
-    survivors reach the exact verify.
+    pair's dot per Arrow batch with one einsum — only survivors
+    (dot ≥ threshold − margin) reach the exact verify.
 
-    ``broadcast_vectors`` picks how each pair finds its two vectors:
+    ``gathered`` is ``_gather_broadcast``'s result and picks how each
+    pair finds its two vectors:
 
-    * ``False`` — join the id pairs to the vector table
-      (strategy left to AQE: at small candidate volume it
-      broadcasts, at scale it shuffles on the id keys). The join
-      OUTPUT carries both unit vectors per pair (~550 B at dim 64),
-      so with ~300 candidates per vector the shuffle streams ~150×
-      the corpus bytes — measured to overrun local spill space at
-      512k vectors × 150M candidates (the round-9 256× stress leg).
-    * ``True`` — gather the whole (id → unit vector) table into one
-      numpy matrix and broadcast it; the candidate stream then
-      carries ONLY id pairs (16 B each) and every task indexes its
-      pairs against the shared matrix. Cuts shuffle bytes ~30× at
-      dim 64. The caller buys the broadcast with a size bound: the
-      matrix is n×dim float64 (260 MB at 512k×64) and every Python
-      worker holds one copy — right whenever the vector table fits
-      worker memory (corpora to ~10M×64). Past that, stay on the
-      shuffle path (at 100 TB the candidates are cluster-keyed, so
-      AQE shuffles co-partitioned slices, not the full table).
-    * ``"auto"`` (the entry-point default since round 10) — buy the
-      gather with an actual row count, the way ``_verify_exact``'s
-      ``broadcast_candidates="auto"`` buys its broadcast: gather when
-      the vector table is ≤ ``gather_ceiling`` rows (the documented
-      ~10M×64 worker-memory bound; size it down for wider vectors),
-      else fall back to the id-keyed join. Ids outside int64 (the
-      gather kernel's resolve contract) also fall back to the join,
-      which treats id type as the caller's problem. ``n_vectors``
-      skips the deciding count when the caller already knows it —
-      otherwise one count job runs here (cheap for the pinned tables
-      every batch entry point passes). Mode choice never changes the
-      survivor set (same einsum, same margin — pytest-pinned); it
-      only picks which 256×-stress-survivor plan executes, so the
-      known-fatal vector-pair shuffle is unreachable by default below
-      the ceiling.
+    * a broadcast — every task indexes its id pairs against the
+      shared (n × dim) unit matrix, so the candidate stream carries
+      ONLY id pairs (16 B each): ~30× fewer shuffle bytes at dim 64.
+      Every Python worker holds one copy of the matrix (260 MB at
+      512k × 64), which is why the rule caps it at
+      ``GATHER_CEILING_ROWS``.
+    * None (non-integer ids, or a table past the ceiling) — join the
+      id pairs to the vector table, strategy left to AQE (at 100 TB
+      the candidates are cluster-keyed, so AQE shuffles co-partitioned
+      slices, not the full table). The join OUTPUT carries both unit
+      vectors per pair (~550 B at dim 64), so with ~300 candidates per
+      vector the shuffle streams ~150× the corpus bytes — measured to
+      overrun local spill space at 512k vectors × 150M candidates
+      (the round-9 256× stress leg); below the ceiling the rule never
+      takes this path.
 
-    Survivor pairs whose ids are not in ``v`` (impossible for
-    candidates generated FROM v; defensive for external candidate
-    sets) are dropped in both modes — the join does it implicitly,
-    the gather masks them out.
-
-    ``broadcast_handle``: a caller-owned list the gather broadcast is
-    appended to, so loops (the streaming ingest) can unpersist it
-    eagerly after the batch's actions instead of leaving O(corpus)
-    broadcast blocks to GC — the streaming/curation.py convention.
-
-    ``gathered``: a CALLER-BUILT broadcast of the
-    ``gather_unit_matrix`` triple (r17) — forces gather mode and
-    skips the collect here, so an entry point that already gathered
-    the table (e.g. for the centering mean) never gathers twice. The
-    caller owns that broadcast's lifetime."""
+    Both paths run the same einsum against the same margin, so they
+    return the same survivor set (pytest-pinned). Pairs whose ids are
+    not in ``v`` (impossible for candidates generated FROM v;
+    defensive for external candidate sets) are dropped on both — the
+    join does it implicitly, the gather masks them out."""
     import numpy as np
 
     cut = threshold - _PREFILTER_MARGIN
 
     if gathered is not None:
-        broadcast_vectors = True
-    elif broadcast_vectors == "auto":
-        broadcast_vectors = _gather_eligible(v, n_vectors,
-                                             gather_ceiling)
-
-    if broadcast_vectors:
-        bc = gathered if gathered is not None else \
-            v.sparkSession.sparkContext.broadcast(
-                V.gather_unit_matrix(v))
-        if broadcast_handle is not None and gathered is None:
-            broadcast_handle.append(bc)
-
         def dots_gather(batches: Iterator[pd.DataFrame]
                         ) -> Iterator[pd.DataFrame]:
-            sids, perm, mat = bc.value
+            sids, perm, mat = gathered.value
             if len(sids) == 0:   # empty corpus: no pair can resolve
                 return
             for pdf in batches:
@@ -264,7 +215,7 @@ def _np_prefilter(v: DataFrame, cand: DataFrame,
                 sims = np.einsum("ij,ij->i", mat[ra], mat[rb])
                 yield pdf.loc[sims >= cut, ["vec_a", "vec_b"]]
 
-        return cand.mapInPandas(dots_gather, _PAIR_SCHEMA)
+        return cand.mapInPandas(dots_gather, _pair_schema(cand))
 
     ua = v.select(F.col("id").alias("vec_a"), F.col("u").alias("ua"))
     ub = v.select(F.col("id").alias("vec_b"), F.col("u").alias("ub"))
@@ -279,7 +230,7 @@ def _np_prefilter(v: DataFrame, cand: DataFrame,
             sims = np.einsum("ij,ij->i", A, B)
             yield pdf.loc[sims >= cut, ["vec_a", "vec_b"]]
 
-    return rows.mapInPandas(dots, _PAIR_SCHEMA)
+    return rows.mapInPandas(dots, _pair_schema(cand))
 
 
 def _gemm_candidates(v: DataFrame, threshold: float,
@@ -360,14 +311,7 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
     if n_blocks is None:
         n_blocks = scaled_n_blocks(v.count(), target_block)
     cand = _gemm_candidates(v, threshold, n_blocks)
-    # broadcast_candidates=False: the GEMM survivors feed exactly ONE
-    # join chain, so "auto"'s pin+count job (round-7: +18% on the
-    # bench query) buys nothing here — AQE's runtime stats make the
-    # same small-side broadcast decision for free, and on a mass-dup
-    # corpus (survivors ~O(n²) = output-sized) a forced broadcast
-    # would OOM where the AQE shuffle join degrades gracefully.
-    return _verify_exact(v, cand, threshold,
-                         broadcast_candidates=False)
+    return _verify_exact(v, cand, threshold)
 
 
 # ------------------------------------------------------------------ LSH
@@ -499,7 +443,6 @@ def cosine_near_dup_pairs_lsh(df: DataFrame, threshold: float,
                               n_planes: int | None = None,
                               target_bucket: int = 32,
                               max_bucket: int | None = None,
-                              prefilter_broadcast: bool | str = "auto",
                               center: bool = False) -> DataFrame:
     """Sub-quadratic near-dup pairs: hyperplane-LSH candidates →
     exact verification. Precision 1.0 (every emitted pair is
@@ -508,15 +451,13 @@ def cosine_near_dup_pairs_lsh(df: DataFrame, threshold: float,
     cheaper joins. The result is DETERMINISTIC (literal ±1 planes), so
     the driver oracle reproduces candidates and verification exactly.
     ``max_bucket`` arms the hot-bucket star guard for corpora with
-    mass-duplicate vectors (see ``lsh_candidate_pairs``).
-    ``prefilter_broadcast`` picks the candidate screen's vector
-    access — ``"auto"`` (default) gathers the unit vectors into one
-    broadcast matrix whenever a corpus count proves it fits worker
-    memory, so the screen shuffles only 16 B id pairs; past the
-    ceiling (or for non-integer ids) it falls back to the id-keyed
-    join (see ``_np_prefilter`` — mode choice never changes the
-    survivor set). ``True``/``False`` force a mode. ``center=True``
-    mean-centers the signature projections (see
+    mass-duplicate vectors (see ``lsh_candidate_pairs``). The
+    candidate screen gathers the unit vectors into one broadcast
+    matrix whenever ``_gather_broadcast`` allows (integer ids, a
+    counted corpus within ``GATHER_CEILING_ROWS``), so it shuffles
+    only 16 B id pairs; otherwise it takes the id-keyed join (see
+    ``_np_prefilter`` — the path never changes the survivor set).
+    ``center=True`` mean-centers the signature projections (see
     ``lsh_candidate_pairs``) — REQUIRED for positive-orthant vectors
     such as media statistic features; precision stays 1.0 either way
     (verification is exact on the original space), only candidate
@@ -524,46 +465,27 @@ def cosine_near_dup_pairs_lsh(df: DataFrame, threshold: float,
     import numpy as np
 
     v = pin(_normalized(df, vec_col, id_col))
-    n = None
+    n = v.count()
     if n_planes is None:
-        n = v.count()
         n_planes = scaled_n_planes(n, target_bucket)
-    # gather ONCE for everything below (r17, guide §1.2): when the
-    # screen's "auto" decision would gather the unit matrix anyway,
-    # build that broadcast up front and reuse it — the centering mean
-    # falls out of the matrix for free (np mean over id-sorted rows:
-    # deterministic; agrees with the Spark/DuckDB aggregate to float-
-    # summation order, the same far-from-boundary premise every
-    # cross-engine mean in this family already rests on), removing
-    # the per-call 64-expression aggregate job. Past the ceiling (or
-    # for non-integer ids / forced modes) the Spark aggregate and the
-    # screen's own mode logic run exactly as before.
-    gathered = None
+    # gather ONCE for everything below (r17): the screen's
+    # broadcast is built up front so the centering mean falls out of
+    # the matrix for free (np mean over id-sorted rows: deterministic;
+    # agrees with the Spark/DuckDB aggregate to float-summation order,
+    # the same far-from-boundary premise every cross-engine mean in
+    # this family already rests on), removing the per-call
+    # 64-expression aggregate job. On the join path the Spark
+    # aggregate runs instead.
+    gathered = _gather_broadcast(v, n)
     mu = None
-    if prefilter_broadcast == "auto":
-        if n is None:
-            n = v.count()
-    if prefilter_broadcast == "auto" and _gather_eligible(v, n):
-        gathered = v.sparkSession.sparkContext.broadcast(
-            V.gather_unit_matrix(v))
-        if center:
-            sids, perm, mat = gathered.value
-            mu = ([float(x) for x in np.mean(mat[perm], axis=0)]
-                  if len(sids) else [0.0] * dim)
+    if gathered is not None and center:
+        sids, perm, mat = gathered.value
+        mu = ([float(x) for x in np.mean(mat[perm], axis=0)]
+              if len(sids) else [0.0] * dim)
     cand = lsh_candidate_pairs(v, dim, n_tables, n_planes, max_bucket,
                                center=center, mu=mu)
-    survivors = _np_prefilter(v, cand, threshold,
-                              broadcast_vectors=prefilter_broadcast,
-                              n_vectors=n, gathered=gathered)
-    # broadcast_candidates=False (r17): the prefilter survivors feed
-    # exactly ONE join chain, so "auto"'s pin + count jobs buy nothing
-    # here (the same round-7 evidence as cosine_near_dup_pairs — +18%
-    # on that bench query); AQE's runtime stats make the small-side
-    # broadcast decision for free, and on a mass-dup corpus
-    # (survivors ~output-sized) the AQE shuffle join degrades
-    # gracefully where a forced broadcast would OOM.
-    return _verify_exact(v, survivors, threshold,
-                         broadcast_candidates=False)
+    survivors = _np_prefilter(v, cand, threshold, gathered)
+    return _verify_exact(v, survivors, threshold)
 
 
 def cosine_pairs_allpairs_fold(df: DataFrame, threshold: float,

@@ -11,19 +11,22 @@ the accepted recall cost — the point is that per-cluster work is
 Composition over existing engine pieces (nothing new to verify at
 the kernel level):
 
-* centroids: ``similarity.pq.train_pq`` with m=1 and
-  ``lloyd="driver"`` — full-vector k-means over the capped
-  md5-ordered sample (deterministic md5-seeded init, one bounded
-  collect, numpy Lloyd rounds);
+* centroids: ``similarity.pq.train_pq`` with m=1 — full-vector
+  k-means over the capped md5-ordered sample (deterministic
+  md5-seeded init, one bounded collect, numpy Lloyd rounds on the
+  driver);
 * assignment: one scan — a GEMM-per-Arrow-batch argmin against the
   broadcast centroids (``assign_with_centroids``);
 * within-cluster candidates: ``minhash.band_candidates`` on the
   cluster id, so the mass-duplicate pathology is bounded by the same
   hot-bucket star guard as the LSH paths (``max_bucket``);
 * candidate screening: the vectorized ``embedding._np_prefilter``
-  (one einsum per Arrow batch over the raw within-cluster pairs, AQE
-  joins) — the raw candidate volume is ~target_cluster/2 rows PER
-  corpus vector, linear in n, so it must never be broadcast;
+  (one einsum per Arrow batch over the raw within-cluster pairs) —
+  the raw candidate volume is ~target_cluster/2 rows PER corpus
+  vector, linear in n, so it is never broadcast; the screen reads
+  its vectors from the gathered broadcast unit matrix or through an
+  id-keyed AQE join, chosen by id type and corpus size
+  (``embedding._gather_broadcast``);
 * verification: the exact einsum kernel (``embedding._verify_exact``)
   over the near-output-sized prefilter survivors — precision 1.0,
   the same arithmetic as the exact near-dup paths;
@@ -40,7 +43,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .clusters import connected_components
-from .embedding import _normalized, _np_prefilter, _verify_exact
+from .embedding import (
+    _gather_broadcast,
+    _normalized,
+    _np_prefilter,
+    _verify_exact,
+)
 from .minhash import band_candidates
 from ..functions import vectors as V
 from ..session import pin
@@ -61,9 +69,9 @@ def kmeans_assign(df: DataFrame, k: int = 16, n_iters: int = 4,
                   dim: int | None = None) -> DataFrame:
     """(id, u, cluster): full-vector k-means assignment.
 
-    Training is ``train_pq(m=1, lloyd="driver")``: one bounded
-    collect of the capped md5-ordered sample, then numpy Lloyd rounds
-    with an exact-fixpoint early stop; assignment is
+    Training is ``train_pq(m=1)``: one bounded collect of the capped
+    md5-ordered sample, then numpy Lloyd rounds with an
+    exact-fixpoint early stop; assignment is
     ``assign_with_centroids``."""
     from ..similarity.pq import train_pq
 
@@ -71,7 +79,7 @@ def kmeans_assign(df: DataFrame, k: int = 16, n_iters: int = 4,
     if dim is None:   # one probe job; pass dim to skip it
         dim = len(v.select("u").first().u)
     cents = train_pq(df, vec_col=vec_col, id_col=id_col, dim=dim,
-                     m=1, k=k, n_iters=n_iters, lloyd="driver")[0]
+                     m=1, k=k, n_iters=n_iters)[0]
     return assign_with_centroids(v, cents)
 
 
@@ -120,9 +128,7 @@ def semantic_dup_pairs(df: DataFrame, threshold: float,
                        max_bucket: int | None = None,
                        target_cluster: int = 250,
                        dim: int | None = None,
-                       n: int | None = None,
-                       prefilter_broadcast: bool | str = "auto"
-                       ) -> DataFrame:
+                       n: int | None = None) -> DataFrame:
     """(vec_a, vec_b, cosine) with cosine ≥ threshold, both members
     of the same k-means cluster. Precision 1.0 (every pair exactly
     verified); recall < 1 only through cluster-boundary splits — the
@@ -133,11 +139,7 @@ def semantic_dup_pairs(df: DataFrame, threshold: float,
     corpus count, holding mean cluster population ~target_cluster so
     total pair work stays linear in n. ``n``/``dim`` hints skip the
     two driver-side probe jobs (a count and a first) when the caller
-    already knows them — the bench and pipeline paths always do.
-    ``prefilter_broadcast="auto"``
-    (default) picks the candidate screen's scale-safe mode by a
-    counted corpus size (``embedding._np_prefilter``) — the mode
-    choice never changes the emitted pairs."""
+    already knows them — the bench and pipeline paths always do."""
     from ..similarity.pq import train_pq
 
     if k is None:
@@ -147,21 +149,18 @@ def semantic_dup_pairs(df: DataFrame, threshold: float,
     if dim is None:   # one probe job; pass dim to skip it
         dim = len(_normalized(df, vec_col, id_col)
                   .select("u").first().u)
-    # the driver Lloyd tier is partitioning-invariant by construction
+    # the Lloyd trainer is partitioning-invariant by construction
     # (md5-sorted sample, deterministic numpy sums)
     cents = train_pq(df, vec_col=vec_col, id_col=id_col, dim=dim,
-                     m=1, k=k, n_iters=n_iters, lloyd="driver")[0]
+                     m=1, k=k, n_iters=n_iters)[0]
     return pairs_with_centroids(df, cents, threshold, vec_col, id_col,
-                                max_bucket=max_bucket,
-                                prefilter_broadcast=prefilter_broadcast,
-                                n=n)
+                                max_bucket=max_bucket, n=n)
 
 
 def pairs_with_centroids(df: DataFrame, cents: list, threshold: float,
                          vec_col: str = "embedding",
                          id_col: str = "vec_id",
                          max_bucket: int | None = None,
-                         prefilter_broadcast: bool | str = "auto",
                          broadcast_handle: list | None = None,
                          n: int | None = None) -> DataFrame:
     """(vec_a, vec_b, cosine ≥ threshold), both in the same cluster
@@ -174,17 +173,14 @@ def pairs_with_centroids(df: DataFrame, cents: list, threshold: float,
 
     The raw within-cluster pair set is ~cluster/2 rows per corpus
     vector — LINEAR in n, so it flows through the vectorized
-    prefilter first (AQE joins, einsum screening; hot-bucket star
-    guard via ``max_bucket``); only the near-output-sized survivors
-    reach the exact verify, whose "auto" mode buys its broadcast
-    with an actual row count. ``prefilter_broadcast`` picks the
-    screen's vector access — ``"auto"`` (default) gathers the unit
-    matrix when a corpus count proves it worker-memory-sized
-    (id-pairs-only shuffle; see ``_np_prefilter``), else the AQE
-    join; ``True``/``False`` force a mode. ``n`` is the optional
+    prefilter first (einsum screening; hot-bucket star guard via
+    ``max_bucket``); only the near-output-sized survivors reach the
+    exact verify's AQE join. The screen gathers the unit matrix
+    (id-pairs-only shuffle) whenever ``_gather_broadcast`` allows,
+    else it joins (see ``_np_prefilter``). ``n`` is the optional
     corpus-count hint that skips the deciding count (cheap here
     anyway — the assigned table is pinned). ``broadcast_handle``
-    forwards to the gather so loops can free its broadcast eagerly."""
+    collects the gather broadcast so loops can free it eagerly."""
     v = pin(assign_with_centroids(_normalized(df, vec_col, id_col),
                                   cents))
     cand = band_candidates(
@@ -192,17 +188,9 @@ def pairs_with_centroids(df: DataFrame, cents: list, threshold: float,
         band_cols=("cluster",), id_col="id",
         out_cols=("vec_a", "vec_b"))
     u = v.select("id", "u")
-    survivors = _np_prefilter(u, cand, threshold,
-                              broadcast_vectors=prefilter_broadcast,
-                              broadcast_handle=broadcast_handle,
-                              n_vectors=n)
-    # broadcast_candidates=False (r17): the screen's survivors feed
-    # exactly ONE join chain — "auto"'s pin + count jobs buy nothing
-    # (round-7 evidence, see cosine_near_dup_pairs); AQE makes the
-    # same broadcast decision from runtime stats and degrades to a
-    # shuffle join on a mass-dup corpus instead of OOMing.
-    return _verify_exact(u, survivors, threshold,
-                         broadcast_candidates=False)
+    survivors = _np_prefilter(
+        u, cand, threshold, _gather_broadcast(u, n, broadcast_handle))
+    return _verify_exact(u, survivors, threshold)
 
 
 def keep_min_per_component(df: DataFrame, pairs: DataFrame,
@@ -228,7 +216,6 @@ def incremental_semantic_pairs(new_emb: DataFrame, corpus: DataFrame,
                                n_corpus: int | None = None,
                                cents: list | None = None,
                                max_cluster: int | None = None,
-                               prefilter_broadcast: bool | str = "auto",
                                broadcast_handle: list | None = None
                                ) -> DataFrame:
     """(vec_new, vec_corpus, cosine ≥ threshold): semantic near-dups
@@ -263,18 +250,15 @@ def incremental_semantic_pairs(new_emb: DataFrame, corpus: DataFrame,
     ids are monotone in practice); a shared id would be dropped by
     the inequality guard rather than verified.
 
-    ``prefilter_broadcast`` routes the raw cluster-join candidates
-    through the einsum screen FIRST (``_np_prefilter``:
-    near-output-sized survivors reach the verify joins): ``"auto"``
-    (default) screens via the gathered matrix when a counted corpus
-    size proves it worker-memory-sized (id-pairs-only shuffle) and
-    via the AQE join past the ceiling — the deciding count is the
-    raw corpus parquet count (footer metadata, no scan) plus one
-    batch count unless ``n_corpus`` already carries it; ``True``
-    forces the gather; ``False`` skips the screen entirely (the
-    single-join-chain plan the oracles pinned through round 9).
-    Screen and mode never change the emitted pairs — the margin
-    screen only removes pairs the verify would reject."""
+    The raw cluster-join candidates go through the einsum screen
+    FIRST (``_np_prefilter``: near-output-sized survivors reach the
+    verify joins). The screen gathers the unit matrix (id-pairs-only
+    shuffle) whenever ``_gather_broadcast`` allows and joins otherwise;
+    the deciding count is the raw corpus parquet count (footer
+    metadata, no scan) plus one batch count, unless ``n_corpus``
+    already carries the corpus side. The screen never changes the
+    emitted pairs — its margin only removes pairs the verify would
+    reject. ``broadcast_handle`` collects the gather broadcast."""
     from ..similarity.pq import train_pq
 
     vc = _normalized(corpus, vec_col, id_col)
@@ -286,8 +270,7 @@ def incremental_semantic_pairs(new_emb: DataFrame, corpus: DataFrame,
         if dim is None:
             dim = len(vc.select("u").first().u)
         cents = train_pq(corpus, vec_col=vec_col, id_col=id_col,
-                         dim=dim, m=1, k=k, n_iters=n_iters,
-                         lloyd="driver")[0]
+                         dim=dim, m=1, k=k, n_iters=n_iters)[0]
     ac = assign_with_centroids(vc, cents)
     an = assign_with_centroids(_normalized(new_emb, vec_col, id_col),
                                cents)
@@ -308,23 +291,17 @@ def incremental_semantic_pairs(new_emb: DataFrame, corpus: DataFrame,
     # ids are disjoint by contract — plain union, no dedup shuffle of
     # the (wide) vector payload.
     v_all = an.select("id", "u").unionByName(ac.select("id", "u"))
-    if prefilter_broadcast:          # "auto" or True; False = no screen
-        # screen the (linear-in-batch but vector-heavy if joined)
-        # candidate volume before any verify join — the batch path's
-        # prefilter. "auto" buys its gather with counts that avoid
-        # re-running the assignment lineage: the RAW corpus count
-        # (parquet footer metadata in the streaming loop) plus one
-        # count of the (pinned there) batch side.
-        n_hint = None
-        if prefilter_broadcast == "auto":
-            nc = n_corpus if n_corpus is not None else corpus.count()
-            n_hint = nc + new_emb.count()
-        cand = _np_prefilter(v_all, cand, threshold,
-                             broadcast_vectors=prefilter_broadcast,
-                             broadcast_handle=broadcast_handle,
-                             n_vectors=n_hint)
-    return (_verify_exact(v_all, cand, threshold,
-                          broadcast_candidates=False)
+    # screen the (linear-in-batch but vector-heavy if joined)
+    # candidate volume before any verify join — the batch path's
+    # prefilter. The gather rule's count avoids re-running the
+    # assignment lineage: the RAW corpus count (parquet footer
+    # metadata in the streaming loop) plus one count of the (pinned
+    # there) batch side.
+    nc = n_corpus if n_corpus is not None else corpus.count()
+    cand = _np_prefilter(
+        v_all, cand, threshold,
+        _gather_broadcast(v_all, nc + new_emb.count(), broadcast_handle))
+    return (_verify_exact(v_all, cand, threshold)
             .select(F.col("vec_a").alias("vec_new"),
                     F.col("vec_b").alias("vec_corpus"), "cosine"))
 
@@ -335,17 +312,11 @@ def semantic_dedup(df: DataFrame, threshold: float,
                    id_col: str = "vec_id",
                    max_bucket: int | None = None,
                    dim: int | None = None,
-                   n: int | None = None,
-                   prefilter_broadcast: bool | str = "auto"
-                   ) -> DataFrame:
+                   n: int | None = None) -> DataFrame:
     """The rows of ``df`` that survive semantic dedup: for every
     connected group of within-cluster near-duplicates, the min-id
-    member is kept; all other rows pass through untouched.
-    ``prefilter_broadcast="auto"`` (default) picks the
-    scale-safe candidate screen by a counted corpus size — see
-    ``embedding._np_prefilter``; mode never changes the kept rows."""
+    member is kept; all other rows pass through untouched."""
     pairs = semantic_dup_pairs(df, threshold, k, n_iters,
                                vec_col, id_col, max_bucket,
-                               dim=dim, n=n,
-                               prefilter_broadcast=prefilter_broadcast)
+                               dim=dim, n=n)
     return keep_min_per_component(df, pairs, id_col)

@@ -132,16 +132,20 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
     single spaces). Missing/short docs (fewer than n tokens) read
     0.0 — nothing repeats in an n-gram space that doesn't exist.
 
-    Definitions (documented divergence from the paper's prose, which
-    never pins tie-breaks): *top* = max over distinct n-grams of
-    occurrences × gram length — the most character-massive n-gram,
-    which equals "the most frequent n-gram's characters" except on
-    count ties, where it deterministically takes the longest —
-    capped at 1.0 like *dup* (overlapping occurrences can otherwise
-    push the mass past the character count); *dup*
-    = Σ over n-grams occurring ≥ 2× of occurrences × gram length.
-    Overlapping occurrences each count, as in the reference
-    implementations.
+    Definitions: *top* = max over n-grams occurring ≥ 2× of
+    occurrences × gram length, 0.0 when no n-gram repeats — Rae et
+    al. list the rule under *repetition* removal, so a once-only
+    n-gram is never "the top n-gram" (counting it would drop short
+    non-repeating prose: one 4-gram of a 25-word sentence already
+    spans ~19 % of its characters, over the 0.16 ceiling). Among
+    repeated n-grams it takes the most character-massive, which
+    equals "the most frequent n-gram's characters" except on count
+    ties, where it deterministically takes the longest (the paper's
+    prose never pins tie-breaks); capped at 1.0 like *dup*
+    (overlapping occurrences can otherwise push the mass past the
+    character count). *dup* = Σ over n-grams occurring ≥ 2× of
+    occurrences × gram length. Overlapping occurrences each count,
+    as in the reference implementations.
 
     The 100 TB shape: grams for EVERY n are built in one codegen
     projection (per-n transform over the token array), exploded
@@ -181,11 +185,11 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
     per_gram = (ex.groupBy("__id", "__total", "__n", "__gh")
                 .agg(F.count(F.lit(1)).alias("__c"),
                      F.max("__gl").alias("__gl")))
-    mass = F.col("__c") * F.col("__gl")
+    repeated_mass = F.when(F.col("__c") >= 2,
+                           F.col("__c") * F.col("__gl"))
     per_n = (per_gram.groupBy("__id", "__total", "__n")
-             .agg(F.max(mass).alias("__top_chars"),
-                  F.sum(F.when(F.col("__c") >= 2, mass)
-                        .otherwise(F.lit(0))).alias("__dup_chars")))
+             .agg(F.max(repeated_mass).alias("__top_chars"),
+                  F.sum(repeated_mass).alias("__dup_chars")))
     safe_total = F.when(F.col("__total") > 0, F.col("__total"))
     stats = per_n.select(
         "__id", "__n",

@@ -115,8 +115,9 @@ def gather_unit_matrix(v, id_col: str = "id", vec_col: str = "u"):
     if pdf[id_col].dtype.kind not in "iu":
         raise TypeError(
             f"gather-based kernels need integer ids; {id_col!r} has "
-            f"dtype {pdf[id_col].dtype} — cast ids to long or use the "
-            f"join-mode path (prefilter_broadcast=False)")
+            f"dtype {pdf[id_col].dtype} — cast ids to long (the pair "
+            f"entry points route non-integer ids through the id-keyed "
+            f"join instead)")
     ids = pdf[id_col].to_numpy(dtype="int64")
     order = np.argsort(ids, kind="stable")
     return ids[order], order, M

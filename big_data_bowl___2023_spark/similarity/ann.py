@@ -226,8 +226,7 @@ def mine_hard_negatives_ann(corpus: DataFrame, k: int,
                             label_col: str = "label",
                             dim: int = 64, n_tables: int = 8,
                             n_planes: int | None = None,
-                            target_bucket: int = 32,
-                            score_gather: bool = False) -> DataFrame:
+                            target_bucket: int = 32) -> DataFrame:
     """Corpus-scale hard-negative mining (VERDICT r2 #4): same output
     contract as ``mine_hard_negatives`` but candidates come from the
     deterministic hyperplane-LSH tables (dedup/embedding.py::
@@ -241,9 +240,9 @@ def mine_hard_negatives_ann(corpus: DataFrame, k: int,
     2. the label-mismatch predicate is applied ON THE CANDIDATE SET
        (two id-keyed label joins) before any scoring, so same-label
        pairs never reach the exact kernel;
-    3. survivors are exactly re-scored (fold-dot over unit vectors)
-       and ranked per anchor — identical arithmetic to the brute
-       miner, which pytest keeps as the recall oracle.
+    3. survivors are exactly re-scored over unit vectors and ranked
+       per anchor — the brute miner's cosines (pytest keeps it as the
+       recall oracle).
 
     Recall follows the standard hyperplane-LSH curve: a true top-k
     negative is missed only if it collides in NO table; raise
@@ -251,22 +250,27 @@ def mine_hard_negatives_ann(corpus: DataFrame, k: int,
     than k rows at low collision rates — acceptable for mining, where
     volume matters more than per-anchor exactness.
 
-    ``score_gather=True`` scores candidates against the gathered
-    broadcast vector matrix (the E101 pattern: candidate shuffle
-    carries only id pairs instead of two unit vectors per pair —
-    ~30× fewer shuffle bytes at dim 64) — the corpus-scale setting
-    whenever the vector table fits worker memory. Both modes round
-    in Spark (half-up), so they differ only where the einsum and the
+    Scoring follows the family's one gather rule
+    (``dedup.embedding._gather_broadcast``): integer ids in a table
+    within ``GATHER_CEILING_ROWS`` score against the gathered
+    broadcast vector matrix (the E101 pattern: the candidate shuffle
+    carries only id pairs instead of two unit vectors per pair — ~30×
+    fewer shuffle bytes at dim 64); otherwise the pairs join the
+    vector table and score with the fold dot. Both paths round in
+    Spark (half-up), so they differ only where the einsum and the
     fold dot differ in the last ulp."""
     from ..dedup.embedding import (
+        _gather_broadcast,
         _normalized,
         lsh_candidate_pairs,
         scaled_n_planes,
     )
 
     v = pin(_normalized(corpus, vec_col, id_col))
+    n = None
     if n_planes is None:
-        n_planes = scaled_n_planes(v.count(), target_bucket)
+        n = v.count()
+        n_planes = scaled_n_planes(n, target_bucket)
     cand = lsh_candidate_pairs(v, dim, n_tables, n_planes)
 
     labels = corpus.select(F.col(id_col).alias("id"),
@@ -284,8 +288,9 @@ def mine_hard_negatives_ann(corpus: DataFrame, k: int,
         cand.select(F.col("vec_b").alias("anchor_id"),
                     F.col("vec_a").alias("negative_id")))
 
-    if score_gather:
-        scored = _score_id_pairs_gather(v, pairs,
+    gathered = _gather_broadcast(v, n)
+    if gathered is not None:
+        scored = _score_id_pairs_gather(gathered, pairs,
                                         "anchor_id", "negative_id")
     else:
         ua = v.select(F.col("id").alias("anchor_id"),
@@ -304,24 +309,17 @@ def mine_hard_negatives_ann(corpus: DataFrame, k: int,
             .select("anchor_id", "negative_id", "cosine", "rank"))
 
 
-def _score_id_pairs_gather(v: DataFrame, pairs: DataFrame,
-                           a_col: str, b_col: str,
-                           broadcast_handle: list | None = None
-                           ) -> DataFrame:
+def _score_id_pairs_gather(bc, pairs: DataFrame,
+                           a_col: str, b_col: str) -> DataFrame:
     """(a, b, cosine) for id pairs over PRE-NORMALIZED unit vectors,
-    scored against the gathered broadcast matrix — one einsum per
-    Arrow batch, the pair stream carries ids only (E101's shuffle
-    contract, applied to scoring instead of threshold screening).
-    Gather/resolve machinery is the shared functions.vectors pair
-    (``gather_unit_matrix``/``resolve_gathered_ids``) so the kernels
-    cannot drift from the prefilter's. Pairs with ids missing from
-    ``v`` are dropped, matching what the join-mode scoring does
-    implicitly."""
-    bc = v.sparkSession.sparkContext.broadcast(
-        V.gather_unit_matrix(v))
-    if broadcast_handle is not None:
-        broadcast_handle.append(bc)
-
+    scored against ``bc``, the gathered broadcast matrix
+    (``dedup.embedding._gather_broadcast``) — one einsum per Arrow
+    batch, the pair stream carries ids only (E101's shuffle contract,
+    applied to scoring instead of threshold screening). The resolve
+    is the shared ``functions.vectors.resolve_gathered_ids`` so the
+    kernel cannot drift from the prefilter's. Pairs with ids missing
+    from the gathered table are dropped, matching what the join-path
+    scoring does implicitly."""
     schema = T.StructType([pairs.schema[a_col], pairs.schema[b_col],
                            T.StructField("cosine", T.DoubleType())])
 

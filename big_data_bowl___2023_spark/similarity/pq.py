@@ -11,11 +11,11 @@ is scored with m table lookups + adds, never a d-dim product.
 
 Spark mapping:
 
-* training: Lloyd iterations where EACH iteration is ONE aggregation
-  job over the (id, subspace, subvector) exploded view — assignment is
-  a numpy GEMM argmin per Arrow batch against the broadcast
-  centroids, the update is a grouped per-dimension mean; the driver
-  holds only the m×k×(d/m) centroid array (≤ a few KB);
+* training: ONE bounded collect of the capped md5-ordered sample,
+  then every Lloyd round runs on the driver in numpy (a blocked GEMM
+  argmin per subspace + per-cluster means) — zero Spark jobs per
+  round, because on a capped sample each round's cost would be fixed
+  job latency;
 * encoding: per-subspace argmin expressions → ``codes array<int>``;
 * ADC: the per-query LUT is a flat m·k literal-free array expression
   computed once per query row; scoring is a broadcast join of the
@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
-from ..session import pin
 
 DEFAULT_M = 8
 DEFAULT_K = 16
@@ -71,44 +70,6 @@ def _normalized(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
                       V.l2_normalize(v).alias("u")))
 
 
-def _lloyd_codes_arrow(sub_tbl: DataFrame, cents: list) -> DataFrame:
-    """(id, mi, sv, code): one Lloyd assignment round as a numpy GEMM
-    per (Arrow batch, subspace) — ``argmin(|c|²/2 − sv·c)`` against
-    the broadcast m×k×sub centroid array instead of m·k interpreted
-    distance folds per row. Ties break to the lowest code (np.argmin
-    first minimum == array_position-of-min, as in ``encode_pq``'s
-    ``_argmin_code``)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    C = np.asarray([[list(map(float, c)) for c in cb] for cb in cents],
-                   dtype=np.float64)             # (m, k, sub)
-    half_c2 = 0.5 * (C * C).sum(axis=2)          # (m, k)
-    out_schema = T.StructType(
-        list(sub_tbl.schema) + [T.StructField("code", T.IntegerType())])
-
-    def codes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            SV = V.stack_batch(pdf["sv"])        # (n, sub)
-            mi = pdf["mi"].to_numpy()
-            out_code = np.empty(len(pdf), dtype="int32")
-            for m_i in np.unique(mi):
-                mask = mi == m_i
-                scores = (half_c2[m_i][None, :]
-                          - SV[mask] @ C[m_i].T)  # (n_mi, k)
-                out_code[mask] = np.argmin(scores, axis=1)
-            out = pdf.copy()
-            out["code"] = out_code
-            yield out
-
-    return sub_tbl.mapInPandas(codes, out_schema)
-
-
 # rows scored per GEMM in the driver Lloyd loop (bounds its k-wide
 # score matrix independently of the sample size)
 _ARGMIN_BLOCK = 2048
@@ -118,29 +79,25 @@ def _train_lloyd_driver(v: DataFrame, dim: int, m: int, k: int,
                         n_iters: int, train_rows: int) -> list:
     """The bounded-sample Lloyd loop run ONCE on the driver in numpy
     (r17): one TakeOrdered collect of the ``train_rows`` smallest-md5
-    rows (the identical deterministic sample + seed selection as the
-    distributed path), then every round is a GEMM argmin + per-
-    cluster mean over the in-memory matrix — zero Spark jobs per
-    round. The distributed trainer's per-round cost on a CAPPED
-    sample is almost entirely fixed job latency (the sample makes
-    each round O(1) in corpus size by design), so at any scale this
-    tier replaces seeds-collect + sample-pin + n_iters round jobs
-    with one bounded collect (≤ train_rows × dim doubles — ~50 MB at
-    the 100k × 64 default, same measured-size-buys-the-collect
-    pattern as clusters.DRIVER_EDGE_BOUND). Assignment scores
+    rows (the first k of them seed the centroids), then every round
+    is a GEMM argmin + per-cluster mean over the in-memory matrix —
+    zero Spark jobs per round. On a CAPPED sample a distributed
+    round's cost is almost entirely fixed job latency (the sample
+    makes each round O(1) in corpus size by design), so one bounded
+    collect (≤ train_rows × dim doubles — ~50 MB at the 100k × 64
+    default, same measured-size-buys-the-collect pattern as
+    clusters.DRIVER_EDGE_BOUND) replaces a seeds collect, a sample
+    pin and n_iters round jobs at any scale. Assignment scores
     ``_ARGMIN_BLOCK`` rows at a time, so on top of the sample it holds
     two ``_ARGMIN_BLOCK × k`` double temporaries (~130 MB at k = 4000,
     the ``scaled_k`` of a 1M-row corpus), never a train_rows × k
     matrix (6.4 GB for the same k at the 100k default).
 
-    Arithmetic contract: assignment is the same argmin(|c|²/2 − u·c)
-    with first-minimum ties as ``_lloyd_codes_arrow``; the update
-    mean is numpy over md5-sorted rows — DETERMINISTIC and
-    partitioning-invariant (strictly stronger than the distributed
-    aggregation, whose float sums follow shuffle merge order), but it
-    reassociates the distributed path's sums, so codebooks agree to
-    float-summation order (~1e-9), not bitwise — the documented
-    tolerance class of the sampled-training identity test."""
+    Arithmetic contract: assignment is argmin(|c|²/2 − u·c) with
+    first-minimum ties (as ``assign_with_centroids`` and
+    ``encode_pq``'s ``_argmin_code``); the update mean is numpy over
+    md5-sorted rows — DETERMINISTIC and partitioning-invariant
+    (bitwise equal across input layouts)."""
     import numpy as np
 
     pdf = (v.orderBy(F.md5(F.col("id").cast("string")))
@@ -180,85 +137,33 @@ def train_pq(corpus: DataFrame, vec_col: str = "embedding",
              id_col: str = "vec_id", dim: int = 64,
              m: int = DEFAULT_M, k: int = DEFAULT_K,
              n_iters: int = 8,
-             train_rows: int | None = 100_000,
-             lloyd: str | None = None) -> list:
+             train_rows: int = 100_000) -> list:
     """m×k×(dim/m) codebooks as a nested Python list.
 
     Deterministic init (subvectors of the k corpus rows with smallest
-    md5(id) — no RNG state), then up to ``n_iters`` Lloyd rounds. Each
-    round is one Spark aggregation: explode to (id, subspace,
-    subvector), argmin-assign against the current broadcast centroids
-    (:func:`_lloyd_codes_arrow`, one GEMM per Arrow batch per
-    subspace), grouped per-dimension mean. Empty clusters keep their
-    previous centroid. Rounds stop early at an EXACT fixpoint (no
-    centroid moved at all) — further rounds would recompute the
-    identical codebooks, so the early exit is bit-identical, just
-    cheaper.
+    md5(id) — no RNG state), then up to ``n_iters`` Lloyd rounds on
+    the driver (:func:`_train_lloyd_driver`): argmin-assign every
+    sample row to its subspace's nearest centroid, then per-cluster
+    means. Empty clusters keep their previous centroid. Rounds stop
+    early at an EXACT fixpoint (no centroid moved at all) — further
+    rounds would recompute the identical codebooks, so the early exit
+    is bit-identical, just cheaper.
 
     ``train_rows`` caps the Lloyd training set at the ``train_rows``
     corpus rows with smallest md5(id) — the same deterministic order
     the seeds use. Codebooks need ~10⁵ training vectors regardless of
-    corpus size (Jégou et al. train on a sample), so without the cap
-    every Lloyd round would be a FULL-corpus pass — the difference
-    between 8 scans of 100 TB and 8 scans of a few GB. ``None``
-    trains on everything (the pre-round-4 behavior; identical output
-    whenever the corpus is smaller than the cap).
-
-    ``lloyd="driver"`` (r17) runs the whole capped-sample Lloyd loop
-    on the driver in numpy (:func:`_train_lloyd_driver`): one bounded
-    TakeOrdered collect replaces the seeds collect, the sample pin
-    and every per-round Spark job — the sample cap already makes each
-    round O(1) in corpus size, so those jobs were pure fixed latency.
-    Codebooks agree with the distributed trainer to float-summation
-    order (~1e-9, the sampled-training tolerance class), NOT bitwise;
-    the semantic k-means entry points (``dedup.semantic``) train on
-    this tier. Default/"spark" is the distributed loop."""
-    if lloyd not in (None, "spark", "driver"):
-        raise ValueError(f"unknown lloyd tier {lloyd!r} (expected "
-                         f"'spark' or 'driver')")
-    sub = dim // m
-    v = _normalized(corpus, vec_col, id_col)
-    if lloyd == "driver":
-        # the bounded-collect tier (r17): requires the sample cap —
+    corpus size (Jégou et al. train on a sample), and the cap is what
+    bounds the driver collect, so it is required: ``None`` raises
+    ValueError (pre-sample with ``operators.sampling.hash_sample`` to
+    train on a different subset). A cap at or above the corpus size
+    trains on every row."""
+    if train_rows is None:
         # an uncapped driver collect would be the unbounded-driver
         # hazard the star loop exists to avoid
-        if train_rows is None:
-            raise ValueError("lloyd='driver' needs train_rows (the "
-                             "bounded sample is what buys the collect)")
-        return _train_lloyd_driver(v, dim, m, k, n_iters, train_rows)
-    if train_rows is not None:
-        # TakeOrdered computes per-partition top-n map-side; the
-        # repartition fans the (small) training set back out so the
-        # Lloyd rounds keep their parallelism. For corpora where even
-        # per-partition top-n merge is too hot, pre-sample with
-        # operators.sampling.hash_sample and pass train_rows=None.
-        v = (v.orderBy(F.md5(F.col("id").cast("string")))
-             .limit(train_rows).repartition("id"))
-    seeds = (v.orderBy(F.md5(F.col("id").cast("string")))
-             .limit(k).collect())
-    # cents[mi][j] = list of sub floats
-    cents = [[list(r.u[mi * sub:(mi + 1) * sub]) for r in seeds]
-             for mi in range(m)]
-
-    sub_tbl = v.select(
-        "id", F.posexplode(F.array(*_slices(F.col("u"), dim, m)))
-        .alias("mi", "sv"))
-    sub_tbl = pin(sub_tbl)
-
-    for _ in range(n_iters):
-        coded = _lloyd_codes_arrow(sub_tbl, cents)
-        stats = (coded
-                 .groupBy("mi", "code")
-                 .agg(F.array(*[F.avg(F.col("sv")[d]).alias(f"a{d}")
-                                for d in range(sub)]).alias("mean"),
-                      F.count(F.lit(1)).alias("n"))
-                 .collect())
-        prev = [[list(c) for c in cb] for cb in cents]
-        for r in stats:
-            cents[r.mi][r.code] = [float(x) for x in r.mean]
-        if cents == prev:       # exact fixpoint: done, bit-identical
-            break
-    return cents
+        raise ValueError("train_pq needs train_rows (the bounded "
+                         "sample is what buys the driver collect)")
+    v = _normalized(corpus, vec_col, id_col)
+    return _train_lloyd_driver(v, dim, m, k, n_iters, train_rows)
 
 
 def save_codebooks(spark, cents: list, path: str) -> None:

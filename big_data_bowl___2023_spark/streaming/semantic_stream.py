@@ -69,8 +69,7 @@ def compact_semantic_corpus(spark, out_dir: str, codebook_path: str,
                             id_col: str = "vec_id",
                             dim: int = 64, n_iters: int = 4,
                             target_cluster: int = 250,
-                            max_bucket: int | None = None,
-                            prefilter_broadcast: bool | str = "auto") -> dict:
+                            max_bucket: int | None = None) -> dict:
     """The periodic bronze→silver pass the ingest loop's recall trade
     defers to: re-run FULL batch semantic dedup over the accumulated
     corpus (fresh ``scaled_k`` codebook, so boundary-straddling
@@ -87,8 +86,7 @@ def compact_semantic_corpus(spark, out_dir: str, codebook_path: str,
     dir is simply re-created next attempt).
 
     Returns ``{"before": n, "after": n, "dropped": n}`` — the audit
-    record. ``prefilter_broadcast`` forwards exactly as on the loop.
-    Serialized by the writer lease (round 12 — "run
+    record. Serialized by the writer lease (round 12 — "run
     with the stream stopped" is deployment policy; the lease is the
     mechanism that makes an overlap loud instead of corrupting)."""
     from ..sources.lease import writer_lease
@@ -96,14 +94,12 @@ def compact_semantic_corpus(spark, out_dir: str, codebook_path: str,
     with writer_lease(spark, out_dir, "compact_semantic_corpus"):
         return _compact_semantic_unlocked(
             spark, out_dir, codebook_path, threshold, vec_col,
-            id_col, dim, n_iters, target_cluster, max_bucket,
-            prefilter_broadcast)
+            id_col, dim, n_iters, target_cluster, max_bucket)
 
 
 def _compact_semantic_unlocked(spark, out_dir, codebook_path,
                                threshold, vec_col, id_col, dim,
-                               n_iters, target_cluster, max_bucket,
-                               prefilter_broadcast):
+                               n_iters, target_cluster, max_bucket):
     from ..similarity.pq import save_codebooks, train_pq
 
     corpus = _read_parquet_if_present(spark, out_dir)
@@ -111,19 +107,16 @@ def _compact_semantic_unlocked(spark, out_dir, codebook_path,
         return {"before": 0, "after": 0, "dropped": 0}
     corpus = pin(corpus)
     n = corpus.count()
-    # this pass must train exactly like batch semantic_dedup (the
-    # partitioning-invariant driver Lloyd tier) — the equivalence the
-    # compaction test pins
+    # this pass must train exactly like batch semantic_dedup — the
+    # equivalence the compaction test pins
     cents = train_pq(corpus, vec_col=vec_col, id_col=id_col, dim=dim,
                      m=1, k=scaled_k(n, target_cluster),
-                     n_iters=n_iters, lloyd="driver")[0]
+                     n_iters=n_iters)[0]
     bcs: list = []
     try:
         pairs = pairs_with_centroids(
             corpus, cents, threshold, vec_col, id_col,
-            max_bucket=max_bucket,
-            prefilter_broadcast=prefilter_broadcast,
-            broadcast_handle=bcs)
+            max_bucket=max_bucket, broadcast_handle=bcs)
         kept = pin(keep_min_per_component(corpus, pairs, id_col))
         n_kept = kept.count()
 
@@ -200,8 +193,7 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
                                   n_iters: int = 4,
                                   target_cluster: int = 250,
                                   max_bucket: int | None = None,
-                                  max_cluster: int | None = None,
-                                  prefilter_broadcast: bool | str = "auto"):
+                                  max_cluster: int | None = None):
     """The continuous-ingestion LOOP for an embedding corpus: a
     ``foreachBatch`` function that semantically dedups each
     micro-batch — within itself AND against the accumulated corpus —
@@ -227,11 +219,11 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
     never survivors without their dropped witnesses, which would
     re-adjudicate the remainder against a witness-less corpus).
 
-    ``prefilter_broadcast`` forwards to every pairing stage; under it
-    the per-batch gather broadcasts are freed eagerly after the
-    writes (a stream processes thousands of batches). ``max_cluster`` is
-    the mass-duplicate guard on the corpus side of the cross join
-    (see ``incremental_semantic_pairs``)."""
+    The per-batch gather broadcasts of every pairing stage are freed
+    eagerly after the writes (a stream processes thousands of
+    batches). ``max_cluster`` is the mass-duplicate guard on the
+    corpus side of the cross join (see
+    ``incremental_semantic_pairs``)."""
     from ..similarity.pq import load_codebooks, save_codebooks, train_pq
 
     if dropped_dir is None:
@@ -274,11 +266,11 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
                     # codebook (every later real batch would assign
                     # against zero centroids forever)
                     return
-                # trained like batch semantic_dedup (driver tier)
+                # trained like batch semantic_dedup
                 cents = train_pq(batch_df, vec_col=vec_col,
                                  id_col=id_col, dim=dim, m=1,
                                  k=scaled_k(n, target_cluster),
-                                 n_iters=n_iters, lloyd="driver")[0]
+                                 n_iters=n_iters)[0]
                 # gate the codebook freeze too (verdict r11 #1): a
                 # dethroned bootstrap must not clobber the codebook
                 # a new writer just trained
@@ -309,9 +301,7 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
             cross = incremental_semantic_pairs(
                 fresh, corpus, threshold, vec_col=vec_col,
                 id_col=id_col, dim=dim, cents=cents,
-                max_cluster=max_cluster,
-                prefilter_broadcast=prefilter_broadcast,
-                broadcast_handle=bcs)
+                max_cluster=max_cluster, broadcast_handle=bcs)
             rejected = cross.select(
                 F.col("vec_new").alias(id_col)).distinct()
             novel = fresh.join(rejected, id_col, "left_anti")
@@ -333,9 +323,7 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
         dedup/semantic.py."""
         pairs = pairs_with_centroids(
             df, cents, threshold, vec_col, id_col,
-            max_bucket=max_bucket,
-            prefilter_broadcast=prefilter_broadcast,
-            broadcast_handle=bcs)
+            max_bucket=max_bucket, broadcast_handle=bcs)
         return keep_min_per_component(df, pairs, id_col)
 
     return process

@@ -183,8 +183,7 @@ def test_ingest_loop_lineage_labels_model_drops(spark, model, tmp_path):
 
 def _batch_docs(spark):
     # docs 1 and 6 share words (the model scores them alike) but no
-    # shingles (no near-dup cluster); every kept doc is long enough
-    # for the n-gram ceilings, which short docs fail
+    # shingles (no near-dup cluster)
     prose = (CLEAN + " and the new estimator converges in fewer "
              "iterations on every dataset we measured including the "
              "noisy survey panels")

@@ -1,5 +1,5 @@
 """Gopher A1 repetition signals (functions/gopher.py r15):
-hand-computed fractions, DuckDB oracle parity of the single-shuffle
+hand-computed fractions, the repeated-only top-n-gram rule, DuckDB oracle parity of the single-shuffle
 explode→count chain, the published-threshold filter, and the
 one-Exchange plan claim.
 """
@@ -35,9 +35,9 @@ def test_hand_computed_fractions(spark):
     # → 12/15; 5-grams each appear twice, mass 4×9=36 → capped 1.0
     assert out[1]["top_2gram_char_frac"] == 0.8
     assert out[1]["dup_5gram_char_frac"] == 1.0
-    # doc 2: no repeats — top is the longest single 2-gram
-    # ("distinct words", 14 chars of 27), dup exactly 0
-    assert out[2]["top_2gram_char_frac"] == round(14 / 27, 6)
+    # doc 2: no repeats — no n-gram occurs twice, so top and dup
+    # are both exactly 0
+    assert out[2]["top_2gram_char_frac"] == 0.0
     assert out[2]["dup_5gram_char_frac"] == 0.0
     # doc 3: "x y z " ×4 → 2-gram "x y" ×4? total 23 chars;
     # top 2-gram mass: "x y"×4=12, "y z"×4=12, "z x"×3=9 → 12/23
@@ -75,7 +75,8 @@ def test_duckdb_parity(spark):
         cnt AS (SELECT doc_id, total, gram, COUNT(*) AS c
                 FROM grams GROUP BY 1, 2, 3)
         SELECT doc_id,
-               ROUND(LEAST(1.0, MAX(c * len(gram)) / total), 6) AS topf,
+               ROUND(LEAST(1.0, COALESCE(MAX(CASE WHEN c >= 2
+                     THEN c * len(gram) END), 0) / total), 6) AS topf,
                ROUND(LEAST(1.0, COALESCE(SUM(CASE WHEN c >= 2
                      THEN c * len(gram) END), 0) / total), 6) AS dupf
         FROM cnt GROUP BY doc_id, total"""
@@ -113,6 +114,34 @@ def test_repetition_filter_thresholds(spark):
     ids = {r["doc_id"] for r in kept.collect()}
     assert ids == {2}
     assert kept.columns == ["doc_id", "text"]
+
+
+# 25 distinct words: nothing repeats, yet its single longest 4-gram
+# spans ~19 % of its characters — over the 0.16 top-4-gram ceiling
+SHORT_PROSE = ("careful engineers measured river flow across seven "
+               "valleys during spring while farmers planted barley "
+               "wheat and oats beside quiet stone bridges near old "
+               "mills today")
+
+
+def test_short_prose_without_repeats_is_kept(spark):
+    """The top-n-gram rule counts only n-grams that repeat: a short
+    non-repeating document reads 0.0 and survives both the filter
+    and the curation chain's repetition gate."""
+    from big_data_bowl___2023_spark.pipelines.curation import (
+        curation_frame,
+    )
+
+    assert len(SHORT_PROSE.split()) == 25
+    docs = spark.createDataFrame([(1, "a", SHORT_PROSE)],
+                                 "doc_id long, source string, text string")
+    row = repetition_signals(docs).collect()[0]
+    for n in (2, 3, 4):
+        assert row[f"top_{n}gram_char_frac"] == 0.0
+    assert [r["doc_id"] for r in repetition_filter(docs).collect()] == [1]
+    kept = curation_frame(docs, min_words=20, seq_len=32,
+                          shard_budget=64, repetition_rules=True)
+    assert [r["doc_id"] for r in kept.collect()] == [1]
 
 
 def test_single_shuffle_plan(spark):

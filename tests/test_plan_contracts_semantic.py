@@ -1,7 +1,11 @@
 """FAST-tier plan-shape contracts for the embedding/SemDeDup verify
 stage (moved out of the slow-marked recall suites in round 8 so the
 default ``pytest -q`` run guards the broadcast strategy — the round-7
-fix these pin was merged with only slow-tier coverage).
+fix these pin was merged with only slow-tier coverage). The verify
+has one strategy: a plain candidate→vector join whose strategy AQE
+picks, so no broadcast hint may appear over its candidates; the
+screen in front of it reads vectors from a gathered broadcast matrix
+or through an id-keyed join, chosen by id type and corpus size.
 
 The broadcast-subtree assertion walks the analyzed-plan TREE (by
 indent depth), not string line-adjacency: Spark is free to interpose
@@ -12,8 +16,6 @@ the round-7 ADVICE flagged the adjacency form as version-fragile.
 from __future__ import annotations
 
 import re
-
-import pytest
 
 from big_data_bowl___2023_spark.dedup.semantic import (
     kmeans_assign,
@@ -66,47 +68,44 @@ def test_semantic_verify_never_pins_raw_candidates(spark, sf_dir):
         assert "Join" not in joined, (
             "broadcast hint sits over a live candidate-join subtree:"
             f"\n{ln}\n{joined}")
-    # and the screening stage itself: raw candidates reach the einsum
-    # prefilter through plain AQE joins — MapInPandas present, zero
-    # broadcast hints anywhere in that plan
+    # and the screening stage itself on its join path (the one the
+    # gather rule takes past the ceiling): raw candidates reach the
+    # einsum prefilter through plain AQE joins — MapInPandas present,
+    # zero broadcast hints anywhere in that plan
     assigned = kmeans_assign(emb, k=8, dim=64)
     cand = band_candidates(assigned.select("id", "cluster"), None,
                            band_cols=("cluster",), id_col="id",
                            out_cols=("vec_a", "vec_b"))
-    pre = _np_prefilter(assigned.select("id", "u"), cand, THRESH)
+    pre = _np_prefilter(assigned.select("id", "u"), cand, THRESH, None)
     pre_plan = pre._jdf.queryExecution().analyzed().toString()
     assert "MapInPandas" in pre_plan
     assert "ResolvedHint" not in pre_plan
 
 
-@pytest.mark.parametrize("mode,limit,expect_pin", [
-    (True, None, True),        # unconditional pin (bounded generators)
-    (False, None, False),      # AQE decides
-    ("auto", 2_000_000, True),   # counted small -> pinned
-    ("auto", 0, False),          # counted over limit -> AQE decides
-])
-def test_verify_exact_strategy_invariant(spark, sf_dir, mode, limit,
-                                         expect_pin):
-    """All broadcast strategies of _verify_exact produce identical
-    pairs, and the broadcast HINT is present exactly when the strategy
-    says so (the size-aware 'auto' mode buys the pin with a count)."""
+def test_verify_exact_strategy_invariant(spark, sf_dir):
+    """_verify_exact's one strategy: no broadcast hint over the
+    candidates (AQE picks the join at run time), and the verified
+    pairs and 6-dp cosines equal the numpy reference over the same
+    candidates."""
     from big_data_bowl___2023_spark.dedup.embedding import (
         _gemm_candidates,
         _normalized,
         _verify_exact,
     )
     from big_data_bowl___2023_spark.session import pin
+    from vector_reference import round6, vectors
 
     emb = load_table(spark, sf_dir, "embeddings").limit(300)
     v = pin(_normalized(emb, "embedding", "vec_id"))
     cand = _gemm_candidates(v, THRESH, 4)
-    kwargs = {} if limit is None else {"broadcast_limit": limit}
-    out = _verify_exact(v, cand, THRESH,
-                        broadcast_candidates=mode, **kwargs)
+    out = _verify_exact(v, cand, THRESH)
     got = {(r.vec_a, r.vec_b, r.cosine) for r in out.collect()}
-    ref = {(r.vec_a, r.vec_b, r.cosine)
-           for r in _verify_exact(v, cand, THRESH,
-                                  broadcast_candidates=True).collect()}
-    assert got == ref and got
+    u = vectors(v, "id", "u")
+    want = set()
+    for r in cand.collect():
+        d = float(u[r.vec_a] @ u[r.vec_b])
+        if d >= THRESH:
+            want.add((r.vec_a, r.vec_b, round6(d)))
+    assert got == want and got
     analyzed = out._jdf.queryExecution().analyzed().toString()
-    assert ("ResolvedHint" in analyzed) == expect_pin
+    assert "ResolvedHint" not in analyzed

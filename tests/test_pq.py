@@ -110,8 +110,7 @@ def test_codebook_artifact_round_trip(spark, sf_dir, tmp_path):
            .withColumn("vec_id", F.col("vec_id") + F.lit(10_000_000)))
     n_corpus = corpus.count()
     k = scaled_k(n_corpus)
-    cents = train_pq(corpus, dim=64, m=1, k=k, n_iters=2,
-                     lloyd="driver")
+    cents = train_pq(corpus, dim=64, m=1, k=k, n_iters=2)
 
     path = str(tmp_path / "codebook.json")
     save_codebooks(spark, cents, path)

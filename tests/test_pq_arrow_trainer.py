@@ -1,11 +1,10 @@
-"""The Arrow/GEMM Lloyd-round assignment kernel in train_pq (round 9;
-``_lloyd_codes_arrow``): at SemDeDup-sized k (= n/target_cluster,
-thousands at corpus scale) interpreted per-row distance folds would
-dominate the whole semantic-dedup operator, so every distributed
-round assigns with one GEMM per Arrow batch. Fast tier: pins the
-distributed trainer's codebooks against a numpy restatement of the
-same Lloyd loop (tests/vector_reference.py) — identical up to the
-float-summation order of the Spark mean (~1e-9)."""
+"""train_pq's one Lloyd trainer (the driver loop over the capped
+md5-ordered sample, argmin by blocked GEMM): at SemDeDup-sized k
+(= n/target_cluster, thousands at corpus scale) the assignment would
+dominate the whole semantic-dedup operator, so it must stay a numpy
+GEMM. Fast tier: pins the default trainer's codebooks against a
+numpy restatement of the same Lloyd loop (tests/vector_reference.py)
+— identical up to float-summation order (~1e-9)."""
 
 from __future__ import annotations
 

@@ -55,13 +55,12 @@ def test_arrow_assignment_plan_is_map_side(spark, sf_dir):
 def test_semantic_pairs_identical_under_arrow_kernel(spark, sf_dir):
     """The configuration the bench extra ships (the corpus-count hint
     ``n``) emits exactly the numpy within-cluster pairs under the
-    same driver-tier codebook."""
+    same codebook."""
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     got = {(r.vec_a, r.vec_b, r.cosine) for r in
            semantic_dup_pairs(emb, 0.4, dim=64, n=n).collect()}
-    cents = train_pq(emb, dim=64, m=1, k=scaled_k(n), n_iters=4,
-                     lloyd="driver")[0]
+    cents = train_pq(emb, dim=64, m=1, k=scaled_k(n), n_iters=4)[0]
     units = unit(vectors(emb))
     assert got == near_dup_pairs(units, 0.4, assign(units, cents))
     assert got

@@ -94,19 +94,22 @@ def test_degenerate_corpus_star_guard(spark):
 
 
 def test_pq_sampled_training_identity_below_cap(spark, sf_dir):
-    """train_rows larger than the corpus must reproduce the uncapped
-    codebooks up to float-summation reassociation (the repartition
-    after the cap reorders the Lloyd averages; values agree to 1e-9),
-    and re-running the capped path must be bit-deterministic."""
+    """train_rows at or above the corpus size trains on every row: the
+    codebooks equal the numpy Lloyd restatement over the whole corpus
+    (to float-summation order, 1e-9), and re-running the capped path
+    is bit-deterministic."""
     from big_data_bowl___2023_spark.similarity.pq import train_pq
+    from vector_reference import lloyd, unit, vectors
 
     emb = load_table(spark, sf_dir, "embeddings")
-    full = train_pq(emb, dim=64, m=2, k=4, n_iters=2, train_rows=None)
     capped = train_pq(emb, dim=64, m=2, k=4, n_iters=2,
                       train_rows=10_000_000)
+    want = lloyd(unit(vectors(emb)), 64, 2, 4, 2)
+    assert len(capped) == len(want) == 2
     for mi in range(2):
+        assert len(capped[mi]) == len(want[mi]) == 4
         for j in range(4):
-            for x, y in zip(full[mi][j], capped[mi][j]):
+            for x, y in zip(capped[mi][j], want[mi][j], strict=True):
                 assert abs(x - y) < 1e-9
     again = train_pq(emb, dim=64, m=2, k=4, n_iters=2,
                      train_rows=10_000_000)
@@ -167,8 +170,7 @@ def test_incremental_semantic_pairs_cross_only_and_exact(spark, sf_dir):
     # oracle: same corpus-trained centroids, brute-force cosines
     from big_data_bowl___2023_spark.dedup.semantic import scaled_k
     k = scaled_k(n_corpus)
-    cents = train_pq(corpus, dim=64, m=1, k=k, n_iters=4,
-                     lloyd="driver")[0]
+    cents = train_pq(corpus, dim=64, m=1, k=k, n_iters=4)[0]
     a_new = {r.id: (r.cluster, np.array(r.u)) for r in
              assign_with_centroids(
                  _normalized(new, "embedding", "vec_id"),

@@ -41,8 +41,7 @@ def test_pairs_with_centroids_matches_semantic_dup_pairs(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    cents = train_pq(emb, dim=64, m=1, k=scaled_k(n), n_iters=4,
-                     lloyd="driver")[0]
+    cents = train_pq(emb, dim=64, m=1, k=scaled_k(n), n_iters=4)[0]
     a = {(r.vec_a, r.vec_b, r.cosine) for r in
          semantic_dup_pairs(emb, THRESH, dim=64).collect()}
     b = {(r.vec_a, r.vec_b, r.cosine) for r in
@@ -117,16 +116,21 @@ def test_semantic_ingest_bootstrap_matches_batch_dedup(spark, sf_dir,
     assert got == want and got
 
 
-def test_semantic_ingest_kernels_agree(spark, sf_dir, tmp_path):
-    """The two candidate-screen kernels (the gathered-matrix screen
-    and the id-keyed join screen) produce the identical corpus."""
+def test_semantic_ingest_kernels_agree(spark, sf_dir, tmp_path,
+                                       monkeypatch):
+    """The two candidate-screen kernels (the gathered-matrix screen,
+    the default at this size, and the id-keyed join screen past the
+    gather ceiling) produce the identical corpus."""
+    from big_data_bowl___2023_spark.dedup import embedding
+
     outs = []
-    for tag, kw in (("join", dict(prefilter_broadcast=False)),
-                    ("gather", dict(prefilter_broadcast=True))):
+    for tag in ("gather", "join"):
+        if tag == "join":
+            monkeypatch.setattr(embedding, "GATHER_CEILING_ROWS", 0)
         out = str(tmp_path / f"corpus_{tag}")
         cb = str(tmp_path / f"cb_{tag}.json")
         process = make_semantic_ingest_batch_fn(out, cb, THRESH,
-                                                dim=64, **kw)
+                                                dim=64)
         for i, b in enumerate(_batches(spark, sf_dir)):
             process(b, i)
         outs.append({r.vec_id for r in

@@ -101,28 +101,32 @@ def test_ann_hard_negatives_recall_vs_exact(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_ann_miner_identical_under_score_gather(spark, sf_dir):
-    """score_gather swaps the per-pair vector joins for the gathered
-    broadcast-matrix einsum (id-pairs-only shuffle, the E101
-    contract) — same candidates, same cosines, same ranking. Also
-    asserts the scoring stage adds no vector join of its own."""
+def test_ann_miner_identical_under_score_gather(spark, sf_dir,
+                                                monkeypatch):
+    """The miner scores through the family's gather rule: the
+    gathered broadcast-matrix einsum by default at this size
+    (id-pairs-only shuffle, the E101 contract), the per-pair vector
+    joins past the ceiling — same candidates, same cosines, same
+    ranking. Also asserts the default scoring stage is a MapInPandas
+    map with no nested-loop or cartesian join."""
+    from big_data_bowl___2023_spark.dedup import embedding
+
     emb = load_table(spark, sf_dir, "embeddings").limit(200).cache()
     K = 5
 
-    def rows(**kw):
+    def rows():
         return {(r.anchor_id, r.negative_id, r.cosine, r.rank)
                 for r in mine_hard_negatives_ann(
-                    emb, K, n_tables=16, **kw).collect()}
+                    emb, K, n_tables=16).collect()}
 
     a = rows()
-    b = rows(score_gather=True)
-    assert a == b and a
-    plan = (mine_hard_negatives_ann(emb, K, n_tables=4,
-                                    score_gather=True)
+    plan = (mine_hard_negatives_ann(emb, K, n_tables=4)
             ._jdf.queryExecution().executedPlan().toString())
     assert "MapInPandas" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+    monkeypatch.setattr(embedding, "GATHER_CEILING_ROWS", 0)
+    assert rows() == a and a
 
 
 def test_build_contrastive_pairs(spark):

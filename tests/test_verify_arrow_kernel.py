@@ -1,15 +1,23 @@
 """The einsum exact-verify kernel (``_verify_exact``, round 9) and the
 candidate screens around it. Fast tier: these pin the pair set AND
 the 6-dp cosines against a numpy brute-force reference
-(tests/vector_reference.py), the screen modes against each other,
-and plan shape — not recall."""
+(tests/vector_reference.py), the gather and join screens against each
+other, and plan shape — not recall.
+
+The screen path is chosen from the data alone
+(``embedding._gather_broadcast``): integer ids within
+``GATHER_CEILING_ROWS`` gather, so the test corpora take the gather
+screen by default; the join screen is reached by lowering the ceiling
+below the corpus size (``_join_screen``) or with string ids."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_bowl___2023_spark.dedup import embedding
 from big_data_bowl___2023_spark.dedup.embedding import (
+    _gather_broadcast,
     _normalized,
     _np_prefilter,
     _verify_exact,
@@ -35,23 +43,33 @@ def _pairs(df):
     return {(r.vec_a, r.vec_b, r.cosine) for r in df.collect()}
 
 
+def _ids(df):
+    return {(r.vec_a, r.vec_b) for r in df.collect()}
+
+
+def _join_screen(monkeypatch):
+    """Put every corpus past the gather ceiling: the rule then picks
+    the id-keyed join screen."""
+    monkeypatch.setattr(embedding, "GATHER_CEILING_ROWS", 0)
+
+
 @pytest.fixture(scope="module")
 def corpus(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     v = _normalized(emb, "embedding", "vec_id").localCheckpoint()
     n = v.count()
     cand = lsh_candidate_pairs(v, 64, 16, scaled_n_planes(n, 32))
-    surv = _np_prefilter(v, cand, THRESH).localCheckpoint()
+    surv = _np_prefilter(v, cand, THRESH,
+                         _gather_broadcast(v, n)).localCheckpoint()
     assert surv.count() > 0
     return emb, v, surv
 
 
 def _semantic_reference(corpus_df):
     """(unit vectors, codebook, numpy assignment) for the codebook
-    the semantic entry points train on this corpus (driver tier)."""
+    the semantic entry points train on this corpus."""
     n = corpus_df.count()
-    cents = train_pq(corpus_df, dim=64, m=1, k=scaled_k(n), n_iters=4,
-                     lloyd="driver")[0]
+    cents = train_pq(corpus_df, dim=64, m=1, k=scaled_k(n), n_iters=4)[0]
     units = unit(vectors(corpus_df))
     return units, cents, assign(units, cents)
 
@@ -78,7 +96,7 @@ def test_arrow_verify_plan_shape(corpus):
     ub = v.select(F.col("id").alias("vec_b"), F.col("u").alias("ub"))
     bare = plan_report(ua.join(F.broadcast(surv), "vec_a")
                        .join(ub, "vec_b"))
-    df = _verify_exact(v, surv, THRESH, broadcast_candidates=True)
+    df = _verify_exact(v, surv, THRESH)
     rep = plan_report(df)
     assert rep["n_exchanges"] <= bare["n_exchanges"]
     assert rep["n_bnl_joins"] == 0
@@ -107,7 +125,7 @@ def test_exact_near_dup_identical_under_arrow_verify(spark, sf_dir):
 
 
 def test_semantic_pairs_identical_under_full_arrow(spark, sf_dir):
-    """The end-to-end semantic chain (driver Lloyd tier, GEMM
+    """The end-to-end semantic chain (driver Lloyd trainer, GEMM
     assignment, einsum screen + verify) == numpy assignment and
     brute-force within-cluster pairs under the same codebook."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -116,21 +134,23 @@ def test_semantic_pairs_identical_under_full_arrow(spark, sf_dir):
     assert got == near_dup_pairs(units, THRESH, cluster) and got
 
 
-def test_incremental_semantic_identical_under_full_arrow(spark, sf_dir):
+def test_incremental_semantic_identical_under_full_arrow(spark, sf_dir,
+                                                        monkeypatch):
+    """Both screens (gather by default, join past the ceiling) emit
+    the numpy within-cluster cross pairs."""
     emb = load_table(spark, sf_dir, "embeddings")
     new = emb.filter(F.col("vec_id") % 5 == 0) \
              .withColumn("vec_id", F.col("vec_id") + 10_000_000)
     old = emb.filter(F.col("vec_id") % 5 != 0)
 
-    def run(**kw):
+    def run():
         return {(r.vec_new, r.vec_corpus, r.cosine) for r in
                 incremental_semantic_pairs(new, old, THRESH,
-                                           dim=64, **kw).collect()}
+                                           dim=64).collect()}
 
     a = run()
-    b = run(prefilter_broadcast=True)
-    c = run(prefilter_broadcast=False)
-    assert a == b == c and a
+    _join_screen(monkeypatch)
+    assert run() == a and a
     units, cents, c_old = _semantic_reference(old)
     u_new = unit(vectors(new))
     c_new = assign(u_new, cents)
@@ -143,60 +163,51 @@ def test_incremental_semantic_identical_under_full_arrow(spark, sf_dir):
     assert a == want
 
 
-def test_prefilter_broadcast_matches_join_mode(corpus):
-    """The gathered-matrix candidate screen (id-pairs-only shuffle)
-    returns exactly the join-mode survivor set — the round-9 fix for
-    the per-pair vector payload that overran spill space at the 256×
-    stress scale."""
-    emb, v, _ = corpus
-    n = v.count()
-    cand = lsh_candidate_pairs(v, 64, 16, scaled_n_planes(n, 32))
-    join_mode = {(r.vec_a, r.vec_b) for r in
-                 _np_prefilter(v, cand, THRESH).collect()}
-    gather = {(r.vec_a, r.vec_b) for r in
-              _np_prefilter(v, cand, THRESH,
-                            broadcast_vectors=True).collect()}
-    assert join_mode == gather and join_mode
-
-
-def test_prefilter_broadcast_drops_unknown_ids(spark):
+def test_prefilter_broadcast_drops_unknown_ids(spark, monkeypatch):
+    """Candidate pairs naming an id outside the vector table are
+    dropped on both screens: masked out by the gather, joined away by
+    the join."""
     v = spark.createDataFrame([(1, [1.0, 0.0]), (2, [1.0, 0.0])],
                               "id long, u array<double>")
     cand = spark.createDataFrame([(1, 2), (1, 99)],
                                  "vec_a long, vec_b long")
-    got = {(r.vec_a, r.vec_b) for r in
-           _np_prefilter(v, cand, 0.5,
-                         broadcast_vectors=True).collect()}
-    assert got == {(1, 2)}       # the unknown-id pair is dropped
+    gather = _gather_broadcast(v)
+    assert gather is not None
+    assert _ids(_np_prefilter(v, cand, 0.5, gather)) == {(1, 2)}
+    _join_screen(monkeypatch)
+    assert _gather_broadcast(v) is None
+    assert _ids(_np_prefilter(v, cand, 0.5, None)) == {(1, 2)}
 
 
-def test_lsh_identical_under_prefilter_broadcast(spark, sf_dir):
+def test_lsh_identical_under_prefilter_broadcast(spark, sf_dir,
+                                                 monkeypatch):
+    """The LSH entry point emits the same pairs on the gather screen
+    (its default at this size) and on the join screen."""
     emb = load_table(spark, sf_dir, "embeddings")
     a = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH))
-    b = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH,
-                                         prefilter_broadcast=True))
-    assert a == b and a
+    _join_screen(monkeypatch)
+    assert _pairs(cosine_near_dup_pairs_lsh(emb, THRESH)) == a and a
 
 
-def test_semantic_identical_under_prefilter_broadcast(spark, sf_dir):
+def test_semantic_identical_under_prefilter_broadcast(spark, sf_dir,
+                                                      monkeypatch):
     emb = load_table(spark, sf_dir, "embeddings")
     a = _pairs(semantic_dup_pairs(emb, THRESH, dim=64))
-    b = _pairs(semantic_dup_pairs(emb, THRESH, dim=64,
-                                  prefilter_broadcast=True))
-    assert a == b and a
+    _join_screen(monkeypatch)
+    assert _pairs(semantic_dup_pairs(emb, THRESH, dim=64)) == a and a
 
 
 def test_prefilter_broadcast_plan_has_no_vector_join(corpus):
-    """The gather mode's candidate screen must add a pure map stage
-    over the id pairs — no join of its own (hence no per-pair vector
-    payload in any exchange). Candidates come from a plain table so
-    the assertion sees only the prefilter's contribution (the LSH
-    generator legitimately contains its band self-join)."""
+    """The gather screen adds a pure map stage over the id pairs — no
+    join of its own (hence no per-pair vector payload in any
+    exchange). Candidates come from a plain table so the assertion
+    sees only the prefilter's contribution (the LSH generator
+    legitimately contains its band self-join)."""
     emb, v, _ = corpus
     spark = emb.sparkSession
     cand = spark.createDataFrame([(1, 2), (3, 4)],
                                  "vec_a long, vec_b long")
-    plan = _np_prefilter(v, cand, THRESH, broadcast_vectors=True) \
+    plan = _np_prefilter(v, cand, THRESH, _gather_broadcast(v)) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "Join" not in plan and "Exchange" not in plan
@@ -229,61 +240,46 @@ def test_gather_rejects_non_integer_ids(spark):
     assert list(ids) == [1, 2] and M.shape == (2, 2)
 
 
-def test_prefilter_auto_picks_mode_by_counted_size(corpus):
-    """Round-10 (#1): the candidate screen's "auto" default buys the
-    gather with a counted corpus size — gather (no join of its own)
-    below the ceiling, the id-keyed join past it — and the survivor
-    set is identical either way. Plain candidate tables so the plan
-    assertions see only the prefilter's contribution."""
+def test_prefilter_auto_picks_mode_by_counted_size(corpus, monkeypatch):
+    """The gather rule reads a counted corpus size against
+    ``GATHER_CEILING_ROWS`` at call time: gather (no join of its own)
+    at or below the ceiling, the id-keyed join past it — and the
+    survivor set on real LSH candidates is identical either way."""
     emb, v, _ = corpus
     spark = emb.sparkSession
     n = v.count()
     plain = spark.createDataFrame([(1, 2), (3, 4)],
                                   "vec_a long, vec_b long")
-    below = _np_prefilter(v, plain, THRESH, broadcast_vectors="auto")
-    p_below = below._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in p_below and "Join" not in p_below
-    above = _np_prefilter(v, plain, THRESH, broadcast_vectors="auto",
-                          gather_ceiling=n - 1)
-    p_above = above._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in p_above
-    # survivor-set identity across the auto cutover, on real
-    # LSH candidates
     cand = lsh_candidate_pairs(v, 64, 16, scaled_n_planes(n, 32))
-    want = {(r.vec_a, r.vec_b) for r in
-            _np_prefilter(v, cand, THRESH).collect()}
-    got_g = {(r.vec_a, r.vec_b) for r in
-             _np_prefilter(v, cand, THRESH, broadcast_vectors="auto",
-                           n_vectors=n).collect()}
-    got_j = {(r.vec_a, r.vec_b) for r in
-             _np_prefilter(v, cand, THRESH, broadcast_vectors="auto",
-                           gather_ceiling=n - 1).collect()}
-    assert got_g == want and got_j == want and want
+    monkeypatch.setattr(embedding, "GATHER_CEILING_ROWS", n)
+    below = _gather_broadcast(v)
+    assert below is not None
+    p_below = _np_prefilter(v, plain, THRESH, below) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in p_below and "Join" not in p_below
+    gathered = _ids(_np_prefilter(v, cand, THRESH, below))
+    monkeypatch.setattr(embedding, "GATHER_CEILING_ROWS", n - 1)
+    above = _gather_broadcast(v)
+    assert above is None
+    p_above = _np_prefilter(v, plain, THRESH, above) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "Join" in p_above
+    assert _ids(_np_prefilter(v, cand, THRESH, above)) == gathered
+    assert gathered
 
 
 def test_prefilter_auto_falls_back_for_non_integer_ids(spark):
-    """"auto" must not route non-int64 ids into the gather kernel
-    (whose searchsorted resolve is int64-only): the fallback is the
-    join screen, which keeps id type the caller's contract."""
+    """The rule must not route non-int64 ids into the gather kernel
+    (whose searchsorted resolve is int64-only): string ids take the
+    join screen, which keeps id type the caller's contract, and still
+    screen correctly."""
     v = spark.createDataFrame(
-        [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
+        [("a", [1.0, 0.0]), ("b", [1.0, 0.0]), ("c", [0.0, 1.0])],
         "id string, u array<double>")
-    cand = spark.createDataFrame([("a", "b")],
+    cand = spark.createDataFrame([("a", "b"), ("a", "c")],
                                  "vec_a string, vec_b string")
-    plan = _np_prefilter(v, cand, 0.5, broadcast_vectors="auto") \
-        ._jdf.queryExecution().optimizedPlan().toString()
+    assert _gather_broadcast(v) is None
+    pre = _np_prefilter(v, cand, 0.5, None)
+    plan = pre._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" in plan
-
-
-def test_lsh_auto_default_equals_forced_modes(spark, sf_dir):
-    """The entry-point default is now "auto": its pairs equal both
-    forced modes (and the default plan is the gather screen at this
-    corpus size — the 256×-fatal join screen is unreachable by
-    default below the ceiling)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    auto = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH))
-    join = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH,
-                                            prefilter_broadcast=False))
-    gather = _pairs(cosine_near_dup_pairs_lsh(emb, THRESH,
-                                              prefilter_broadcast=True))
-    assert auto == join == gather and auto
+    assert _ids(pre) == {("a", "b")}

@@ -254,7 +254,7 @@ def vector_legs(emb0, scales) -> None:
     """Embedding-family legs at the requested scales (numpy vector
     kernels). Each scale point prints one JSON line: corpus size, LSH
     candidate volume (the flat-per-vector claim), verified near-dup
-    pairs + wall, semantic pairs + wall (incl. the GEMM Lloyd
+    pairs + wall, semantic pairs + wall (incl. the driver Lloyd
     trainer), and IVF top-k wall for a fixed 64-query batch."""
     from big_data_bowl___2023_spark.dedup.semantic import (
         scaled_k,
@@ -276,20 +276,14 @@ def vector_legs(emb0, scales) -> None:
         # threshold 0.8 = tail regime (see main()): TRUE pair volume
         # of a self-similar corpus at bulk thresholds grows ~n² — an
         # output property, not engine cost.
-        # prefilter_broadcast: the shuffle-join screen streams two
-        # unit vectors per candidate pair (~550 B × ~300 cand/vec) —
-        # it overran local spill space at 512k vectors; the gathered
-        # matrix (260 MB there) keeps the candidate shuffle id-only
         t0 = time.time()
         n_lsh = dd.cosine_near_dup_pairs_lsh(
-            emb, 0.8, n_tables=16, max_bucket=100_000,
-            prefilter_broadcast=True).count()
+            emb, 0.8, n_tables=16, max_bucket=100_000).count()
         t_lsh = time.time() - t0
 
         t0 = time.time()
         n_sem = semantic_dup_pairs(
-            emb, 0.8, dim=64, n=n, max_bucket=100_000,
-            prefilter_broadcast=True).count()
+            emb, 0.8, dim=64, n=n, max_bucket=100_000).count()
         t_sem = time.time() - t0
 
         t0 = time.time()
