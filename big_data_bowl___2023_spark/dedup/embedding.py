@@ -396,7 +396,8 @@ def lsh_candidate_pairs(v: DataFrame, dim: int, n_tables: int,
         off = S @ np.asarray(mu, dtype=np.float64)   # (T*P,)
 
     sig_schema = T.StructType([
-        T.StructField("id", T.LongType()),
+        # the id keeps the caller's type (integer or string ids)
+        T.StructField("id", v.schema["id"].dataType),
         T.StructField("t", T.IntegerType()),
         T.StructField("sig", T.StringType()),
     ])

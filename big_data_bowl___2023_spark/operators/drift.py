@@ -40,6 +40,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import read_json_artifact, write_json_artifact
+
 _EPS = 1e-6     # share smoothing: empty bins contribute finitely
 
 # exact_edges auto-selection: above this reference row count the exact
@@ -410,36 +412,15 @@ def save_drift_artifacts(spark, path: str, edges_by_col: dict,
     restarts must bucket against the SAME reference, so the bins are
     a versioned output of the reference snapshot, not something
     recomputed per run."""
-    import json
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    try:
-        payload = {"edges": edges_by_col,
-                   "bins": bins_by_col or {}}
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
+    write_json_artifact(spark, path, {"edges": edges_by_col,
+                                      "bins": bins_by_col or {}})
 
 
 def load_drift_artifacts(spark, path: str) -> tuple[dict, dict]:
     """(edges_by_col, bins_by_col) back from
     :func:`save_drift_artifacts` — float round trip exact (json
     repr doubles)."""
-    import json
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(jpath)
-    try:
-        util = jvm.org.apache.commons.io.IOUtils
-        data = util.toByteArray(stream)
-    finally:
-        stream.close()
-    payload = json.loads(bytes(data).decode("utf-8"))
+    payload = read_json_artifact(spark, path)
     return payload["edges"], payload["bins"]
 
 

@@ -38,13 +38,13 @@ so concurrent maintenance can never tear a scan:
   directories — a reader that listed before the append misses the
   new rows (ordinary parquet append visibility), it never reads a
   half-deleted directory;
-* a COMPACTION publishes the rewritten layout as ``v=N+1`` (staged
-  under a name the ``v=`` lister ignores, made visible by one
-  rename), so in-flight scans of ``v=N`` keep their files and new
-  searches pick up ``N+1``; superseded versions are reclaimed by
-  ``vacuum_index`` AFTER in-flight readers drain — vacuum, not
-  compaction, is the only operation that deletes data a reader could
-  hold;
+* a COMPACTION publishes the rewritten layout as ``v=N+1`` through
+  `sources.io.publish_version` (staged under a name the ``v=``
+  lister ignores, made visible by one rename), so in-flight scans
+  of ``v=N`` keep their files and new searches pick up ``N+1``;
+  superseded versions are reclaimed by ``vacuum_index`` AFTER
+  in-flight readers drain — vacuum, not compaction, is the only
+  operation that deletes data a reader could hold;
 * appends, compactions, vacuums, deletes and marker GC must still be
   serialized WITH EACH OTHER (an append into ``v=N`` racing a
   compaction's read of it would be missing from ``v=N+1``; a
@@ -66,11 +66,6 @@ deployment path for a live rebuild is the standard one: build into a
 fresh index_dir and flip the serving pointer (versioning WITHIN one
 geometry is what the v=N machinery provides; versioning ACROSS
 geometries is a pointer flip between index_dirs).
-
-Upgrade note: a round-9 (unversioned) layout reads and appends as
-implicit version 0; the first `compact_index` migrates it to
-``v=1`` (healing the old compactor's crash strays first) and
-`vacuum_index` then retires the loose legacy dirs.
 
 Deletes (round 10, E120 — the takedown path a served vector index
 needs): `delete_from_index` appends id markers to an
@@ -129,50 +124,21 @@ def index_versions(spark: SparkSession, index_dir: str) -> list[int]:
     return snapshot_versions(spark, f"{index_dir}/{_CELLS}")
 
 
-def _has_legacy_cells(spark: SparkSession, index_dir: str) -> bool:
-    """True when ``cells/`` holds round-9-layout cell directories
-    directly (no ``v=N`` level) — readable as implicit version 0
-    until a compaction migrates them to ``v=1``."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_CELLS}")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return False
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if (st.isDirectory() and name.startswith("cell=")
-                and "__compact" not in name):
-            return True
-    return False
-
-
 def _cells_path(spark: SparkSession, index_dir: str,
                 version: int | None, what: str) -> str:
     """Resolve (and pin) ONE version's cell directory. Latest when
     ``version`` is None; a named version must exist (vacuumed or
     never-published versions refuse loudly instead of scanning an
-    empty path to zero rows).
-
-    Upgrade path: a round-9 index (cell dirs directly under
-    ``cells/``, no ``v=`` level) reads and appends as implicit
-    VERSION 0 — pinnable as ``version=0`` — until the first
-    `compact_index` migrates it to a published ``v=1``; after that,
-    the loose legacy dirs are retired by `vacuum_index`."""
+    empty path to zero rows)."""
     versions = index_versions(spark, index_dir)
     if not versions:
-        if _has_legacy_cells(spark, index_dir) \
-                and version in (None, 0):
-            return f"{index_dir}/{_CELLS}"
-        if version not in (None, 0):
-            raise ValueError(f"{what}: version {version} not "
-                             f"published under {index_dir}")
         raise ValueError(f"{what}: no published cell versions under "
                          f"{index_dir}")
     v = versions[-1] if version is None else int(version)
     if v not in versions:
         raise ValueError(f"{what}: version {v} not in {versions} "
-                         f"under {index_dir} (vacuumed, migrated "
-                         f"legacy, or never published)")
+                         f"under {index_dir} (vacuumed or never "
+                         f"published)")
     return f"{index_dir}/{_CELLS}/v={v}"
 
 # Cell-occupancy skew guard: hyperplane sign cells assume roughly
@@ -622,12 +588,11 @@ def index_cell_stats(spark: SparkSession, index_dir: str,
               for cell, c in per_cell]
     top_share = shares[0][2] if shares else 0.0
     probe = min(n_planes + 1, len(shares))
-    tail = cells.rsplit("/", 1)[1]
     dels = _read_deletes(spark, index_dir)
     pending = (dels.select("neighbor_id").distinct().count()
                if dels is not None else 0)
     return {
-        "version": int(tail[2:]) if tail.startswith("v=") else 0,
+        "version": int(cells.rsplit("/v=", 1)[1]),
         # stats are PHYSICAL occupancy; pending deletes are hidden
         # from searches but still cost scan bytes until a compaction
         # applies them (distinct ids — re-issued markers don't

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
+from ..sources.io import read_json_artifact, write_json_artifact
 
 DEFAULT_M = 8
 DEFAULT_K = 16
@@ -174,36 +175,14 @@ def save_codebooks(spark, cents: list, path: str) -> None:
     assign new batches against the SAME centroids the corpus was
     sharded with, so the codebook is a versioned artifact of the full
     run, not something retrained per batch."""
-    import json
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(json.dumps(cents).encode("utf-8")))
-    finally:
-        out.close()
+    write_json_artifact(spark, path, cents)
 
 
 def load_codebooks(spark, path: str) -> list:
     """Read a :func:`save_codebooks` artifact back as the nested
     list ``train_pq`` returns — float round trip is exact (json reads
     the same repr doubles back)."""
-    import json
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    stream = fs.open(jpath)
-    try:
-        util = jvm.org.apache.commons.io.IOUtils
-        data = util.toByteArray(stream)
-    finally:
-        stream.close()
-    return json.loads(bytes(data).decode("utf-8"))
+    return read_json_artifact(spark, path)
 
 
 def encode_pq(corpus: DataFrame, cents: list,

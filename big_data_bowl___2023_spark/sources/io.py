@@ -14,6 +14,9 @@ unlike the reference's ``lapply(read_csv) %>% bind_rows``.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -205,6 +208,17 @@ def read_binary_files_stream(spark: SparkSession, pattern: str,
     return r.load(pattern)
 
 
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path constructor) for ``path`` — every
+    listing, rename and delete here goes through the FS API, so the
+    same code runs on local FS, HDFS, or any object store with a
+    Hadoop connector."""
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    fs = P(path).getFileSystem(
+        spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+    return fs, P
+
+
 def _file_digests(df: DataFrame) -> dict:
     """Per-file {rows, xor64} over every data column: one scan,
     bit_xor of row hashes (order-insensitive, overflow-free — a sum
@@ -260,11 +274,8 @@ def verify_parquet_manifest(spark: SparkSession, path: str) -> dict:
     # the EXPLICIT current file set: verification must see the
     # filesystem as it is now, not the session's FileStatusCache view
     # of a directory it read before the tampering.
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    files = [s.getPath().toString() for s in fs.listStatus(jpath)
+    fs, P = _fs(spark, path)
+    files = [s.getPath().toString() for s in fs.listStatus(P(path))
              if s.getPath().getName().endswith(".parquet")]
     spark.catalog.refreshByPath(path)
     found = _file_digests(
@@ -351,17 +362,59 @@ def write_parquet_zordered(df: DataFrame, path: str, zorder_by: list[str],
     w.parquet(path)
 
 
+def write_json_artifact(spark: SparkSession, path: str,
+                        payload) -> None:
+    """Write one small JSON artifact (codebooks, drift bins) through
+    the Hadoop FS API, overwriting any previous copy."""
+    import json
+
+    fs, P = _fs(spark, path)
+    out = fs.create(P(path), True)
+    try:
+        out.write(bytearray(json.dumps(payload).encode("utf-8")))
+    finally:
+        out.close()
+
+
+def read_json_artifact(spark: SparkSession, path: str):
+    """Read a :func:`write_json_artifact` file back — the float round
+    trip is exact (json reads the same repr doubles back)."""
+    import json
+
+    fs, P = _fs(spark, path)
+    stream = fs.open(P(path))
+    try:
+        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(
+            stream)
+    finally:
+        stream.close()
+    return json.loads(bytes(data).decode("utf-8"))
+
+
+# The directory commit protocol. Every rewrite of a live parquet
+# directory and every new ``v=N`` version goes through the two
+# primitives below; no other module renames through the FS API.
+#
+# * REPLACE (`staged_replace` / `replace_state_dir`): the new rows
+#   commit to ``path__new``, the live dir is parked at ``path__bak``,
+#   the staged dir is renamed in, and ``__bak`` is dropped. A crash
+#   leaves at worst the pre-replace state at ``__bak``, which
+#   `read_state_dir` reads and `heal_state_dir` renames back.
+# * PUBLISH (`publish_version`): a new ``v=N`` is written under
+#   ``__publish_tmp_vN`` (invisible to `snapshot_versions`) and made
+#   visible by one rename; a failed write deletes it.
+_STAGED, _PARKED, _PUBLISH_TMP = "__new", "__bak", "__publish_tmp_v"
+
+
 def snapshot_versions(spark: SparkSession, table_dir: str) -> list[int]:
     """Existing version numbers under a snapshot table (``v=N``
     children), via the Hadoop FS API (any scheme)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(table_dir)
-    fs = jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    if not fs.exists(jpath):
+    fs, P = _fs(spark, table_dir)
+    root = P(table_dir)
+    if not fs.exists(root):
         return []
     out = []
-    for st in fs.listStatus(jpath):
+    for st in fs.listStatus(root):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith("v="):
             try:
@@ -369,6 +422,45 @@ def snapshot_versions(spark: SparkSession, table_dir: str) -> list[int]:
             except ValueError:
                 pass
     return sorted(out)
+
+
+def sweep_publish_staging(spark: SparkSession, table_dir: str) -> None:
+    """Delete the staging dirs of publishes that died mid-write. They
+    never match ``v=``, so readers and version listing never saw
+    them — this is disk reclamation, not recovery. A maintenance
+    writer: leased callers run their `commit_gate` first."""
+    fs, P = _fs(spark, table_dir)
+    root = P(table_dir)
+    if not fs.exists(root):
+        return
+    for st in fs.listStatus(root):
+        if st.getPath().getName().startswith(_PUBLISH_TMP):
+            fs.delete(st.getPath(), True)
+
+
+@contextmanager
+def publish_version(spark: SparkSession, table_dir: str,
+                    version: int) -> Iterator[str]:
+    """Publish ``table_dir/v=version``: sweep stale staging dirs,
+    yield a staging path (invisible to `snapshot_versions`) for the
+    body to write the version into, then make it visible with ONE
+    rename. If the body (its write, or a leased caller's
+    `commit_gate`) or the rename fails, the staging dir is deleted:
+    a failed publish leaves the version listing unchanged, so readers
+    never pin a torn or empty version."""
+    fs, P = _fs(spark, table_dir)
+    sweep_publish_staging(spark, table_dir)
+    root = table_dir.rstrip("/")
+    staged = f"{root}/{_PUBLISH_TMP}{version}"
+    tmp, final = P(staged), P(f"{root}/v={version}")
+    try:
+        yield staged
+        if not fs.rename(tmp, final):
+            raise IOError(f"publish rename to {final} failed")
+    except BaseException:
+        fs.delete(tmp, True)
+        raise
+    spark.catalog.refreshByPath(table_dir)
 
 
 def publish_snapshot(df: DataFrame, table_dir: str,
@@ -386,7 +478,9 @@ def publish_snapshot(df: DataFrame, table_dir: str,
     incremental reprocess must touch (only added/modified ids flow
     through dedup/scoring again; removed ids tombstone downstream
     indexes). The diff joins (id, fingerprint) projections only —
-    document text never enters its shuffle.
+    document text never enters its shuffle. The version goes live
+    through :func:`publish_version`, so a failed write publishes
+    nothing and the next call retries the same N.
 
     Returns {"version", "path", "rows", "diff": {added, removed,
     modified} | None}."""
@@ -395,8 +489,9 @@ def publish_snapshot(df: DataFrame, table_dir: str,
     spark = df.sparkSession
     versions = snapshot_versions(spark, table_dir)
     version = (versions[-1] + 1) if versions else 1
+    with publish_version(spark, table_dir, version) as staged:
+        manifest = write_parquet_with_manifest(df, staged)
     path = f"{table_dir.rstrip('/')}/v={version}"
-    manifest = write_parquet_with_manifest(df, path)
     diff = None
     if versions:
         prev = spark.read.parquet(
@@ -429,8 +524,7 @@ def read_snapshot(spark: SparkSession, table_dir: str,
 
 def compact_parquet(spark: SparkSession, path: str,
                     target_file_mb: int = 128,
-                    sort_within_by: list[str] | None = None,
-                    dedupe_by: list[str] | None = None) -> dict:
+                    sort_within_by: list[str] | None = None) -> dict:
     """Rewrite a parquet directory into ~``target_file_mb`` files —
     the small-files maintenance pass every long-running ingest needs
     (each file costs a task, an open, and a footer read; a directory
@@ -441,32 +535,18 @@ def compact_parquet(spark: SparkSession, path: str,
     compression ratio is accounted for. ``sort_within_by`` optionally
     re-sorts rows inside each output file to restore min/max
     statistics locality lost across many small appends.
-    ``dedupe_by`` drops duplicate rows by the given key columns while
-    rewriting — the reclaim pass for at-least-once appenders (e.g.
-    the streaming ANN index ingest, whose crash replays double-append
-    rows that are result-identical but cost scan bytes).
 
-    All listing and renaming goes through the Hadoop FileSystem API,
-    so the same code runs against local FS, HDFS, or any object store
-    with a Hadoop connector — no ``os``/``glob`` path assumptions.
-    The rewrite is staged through a sibling temp dir, then swapped in
-    with two FS renames. The swap is NOT atomic: there is a brief
-    window (old→backup, tmp→final) in which the path does not exist,
-    so treat compaction as stop-the-world per directory — schedule it
-    when no reader is mid-scan of that path. Any failure during or
-    after the swap restores the backup to the original path before
-    re-raising, so the directory is never left missing.
+    A prior crash mid-swap is healed before the read, and the rewrite
+    goes live through :func:`replace_state_dir` (staged, then swapped
+    with rollback), so a failed compaction leaves the directory
+    readable. The swap is two renames, not one atomic step: treat
+    compaction as stop-the-world per directory and schedule it when
+    no reader is mid-scan of that path.
 
     Returns {"files_before", "files_after", "bytes"}.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
-
-    def _jpath(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    root = _jpath(path.rstrip("/"))
-    fs = root.getFileSystem(conf)
+    fs, P = _fs(spark, path)
+    root = P(path.rstrip("/"))
 
     def _list_parquet(p):
         out = []
@@ -477,129 +557,63 @@ def compact_parquet(spark: SparkSession, path: str,
                 out.append(st)
         return out
 
+    heal_state_dir(spark, path)
     before = _list_parquet(root)
     total_bytes = sum(st.getLen() for st in before)
-    out_bytes = total_bytes
-    df = spark.read.parquet(path)
-    pinned = None
-    if dedupe_by:
-        # size the output from the SURVIVOR volume, not the raw
-        # bytes: after a full replay half the rows are duplicates and
-        # pre-dedupe sizing would emit twice the files at half the
-        # target size — recreating the small-files pathology this
-        # pass exists to fix. The pre-dedupe count is parquet-footer
-        # metadata; the deduped frame is PINNED so its shuffle runs
-        # once for the sizing count and the rewrite reuses it.
-        from ..session import pin
-
-        total_rows = df.count()
-        df = pinned = pin(df.dropDuplicates(list(dedupe_by)))
-        if total_rows > 0:
-            out_bytes = int(total_bytes * df.count() / total_rows)
-    n_out = max(1, -(-out_bytes // (target_file_mb * 1024 * 1024)))
-    out = df.repartition(int(n_out))
+    n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
+    out = spark.read.parquet(path).repartition(int(n_out))
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)
-
-    tmp = _jpath(path.rstrip("/") + "__compact_tmp")
-    backup = _jpath(path.rstrip("/") + "__compact_old")
-    fs.delete(tmp, True)
-    # A leftover backup can only be stale: if a prior run died MID-swap
-    # (data only in backup), the dataset path would not exist and the
-    # spark.read above would already have failed — reaching this point
-    # means the live data is at `path`, so any existing backup is a
-    # prior run's undeleted copy. It must go now: Hadoop rename into an
-    # existing directory nests the source INSIDE it, which would
-    # corrupt both the swap and the rollback.
-    fs.delete(backup, True)
-    try:
-        try:
-            out.write.mode("overwrite").parquet(tmp.toString())
-        except Exception:
-            fs.delete(tmp, True)    # no partial staging left behind
-            raise
-
-        swapped_out = False
-        try:
-            if not fs.rename(root, backup):
-                raise IOError(f"rename {root} -> {backup} failed")
-            swapped_out = True
-            if not fs.rename(tmp, root):
-                raise IOError(f"rename {tmp} -> {root} failed")
-        except Exception:
-            # Restore the original directory before surfacing the
-            # error — a failed compaction must leave the dataset
-            # readable.
-            if swapped_out and not fs.exists(root):
-                fs.rename(backup, root)
-            fs.delete(tmp, True)
-            raise
-    finally:
-        # Free the sizing pin once the rewrite no longer needs it:
-        # callers like compact_index invoke this once PER cell
-        # directory, and in durable-pins mode each leaked
-        # persist(DISK_ONLY) frame would otherwise sit on disk until
-        # GC. No-op for the localCheckpoint flavor.
-        if pinned is not None:
-            pinned.unpersist(blocking=False)
-    fs.delete(backup, True)
-    spark.catalog.refreshByPath(path)
-
-    after = len(_list_parquet(root))
-    return {"files_before": len(before), "files_after": after,
+    replace_state_dir(out, path)
+    return {"files_before": len(before),
+            "files_after": len(_list_parquet(root)),
             "bytes": total_bytes}
 
 
-def replace_state_dir(df: DataFrame, path: str) -> None:
-    """Replace a SMALL state-carrying parquet dir (delete markers,
-    tombstone indexes) with ``df``'s rows, crash-safely: the new rows
-    COMMIT to a ``__new`` staging dir first, then two renames swap it
-    live with the old state parked at ``__bak`` until the swap
-    completes. An in-place ``mode("overwrite")`` deletes the old
-    files before the new ones commit — a crash there LOSES the state
-    (review r10: compliance markers vanishing is strictly worse than
-    any staleness). Worst crash window here leaves the PRE-replace
-    state at ``__bak``, which :func:`read_state_dir` falls back to —
-    state can regress one step (conservative: previously-hidden rows
-    stay hidden), never vanish. A prior crash is healed AFTER the
-    staged write, not before: callers build ``df`` from
-    :func:`read_state_dir`, whose post-crash fallback reads ``__bak``
-    — healing first would rename the very files the write is about to
-    recompute from (ADVICE r10: the documented crash-recovery path
-    failed with FileNotFoundException on its first exercise). Safe to
-    call with a ``df`` whose lineage READS ``path`` (live or
-    ``__bak``): the write targets the staging dir, and the renames
-    move files without recomputation."""
+@contextmanager
+def staged_replace(df: DataFrame, path: str) -> Iterator[str]:
+    """Replace the parquet dir at ``path`` with ``df``'s rows,
+    crash-safely, in two steps around the with-body:
+
+    1. the rows COMMIT to ``path__new``, whose path is yielded;
+    2. after the body, the live dir is parked at ``__bak``, the
+       staged dir is renamed in, and ``__bak`` is dropped.
+
+    A leased caller runs its `commit_gate` (and any side write that
+    must precede the swap) in the body: if the body raises, the
+    staged dir is deleted and the live dir is untouched. A failed
+    swap renames ``__bak`` back before re-raising.
+
+    An in-place ``mode("overwrite")`` deletes the old files before the
+    new ones commit, and a failed write leaves the target empty. Here
+    the worst crash window leaves the PRE-replace state at ``__bak``,
+    which :func:`read_state_dir` falls back to and
+    :func:`heal_state_dir` renames back: state can regress one step,
+    never vanish. A prior crash is healed AFTER the staged write, not
+    before: a caller may build ``df`` from :func:`read_state_dir`,
+    whose post-crash fallback reads ``__bak``, and healing first would
+    rename the very files the write recomputes from. So ``df``'s
+    lineage may READ ``path`` (live or ``__bak``): the write targets
+    the staging dir, and the renames move files without
+    recomputation."""
     spark = df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _jp(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    live = _jp(path.rstrip("/"))
-    tmp = _jp(path.rstrip("/") + "__new")
-    bak = _jp(path.rstrip("/") + "__bak")
-    fs = live.getFileSystem(conf)
+    fs, P = _fs(spark, path)
+    staged = path.rstrip("/") + _STAGED
+    live, tmp = P(path.rstrip("/")), P(staged)
+    bak = P(path.rstrip("/") + _PARKED)
     fs.delete(tmp, True)
     try:
-        # Materialize FIRST: if a prior replace crashed mid-swap the
-        # state lives only at __bak and df's lineage points there —
-        # this write is the last moment those files are guaranteed
-        # to exist under that name.
-        df.write.mode("overwrite").parquet(tmp.toString())
-    except Exception:
+        df.write.mode("overwrite").parquet(staged)
+        yield staged
+        # a live dir beside a parked one means __bak is a prior run's
+        # undeleted copy; a parked one alone is a prior mid-swap,
+        # restored before the delete below can touch it
+        heal_state_dir(spark, path)
+    except BaseException:
         fs.delete(tmp, True)
         raise
-    if not fs.exists(live) and fs.exists(bak):
-        # heal a prior mid-swap; the rename result MUST be checked
-        # before the unconditional backup delete below — a failed
-        # heal followed by delete(bak) would destroy the only
-        # surviving copy of the state (review r11)
-        if not fs.rename(bak, live):
-            fs.delete(tmp, True)
-            raise IOError(f"replace_state_dir: heal rename "
-                          f"{bak} -> {live} failed")
+    # a stale __bak must go first: Hadoop rename into an existing
+    # directory nests the source INSIDE it
     fs.delete(bak, True)
     swapped = False
     try:
@@ -618,22 +632,27 @@ def replace_state_dir(df: DataFrame, path: str) -> None:
     spark.catalog.refreshByPath(path)
 
 
+def replace_state_dir(df: DataFrame, path: str) -> None:
+    """:func:`staged_replace` with nothing between the staged write
+    and the swap — the read-modify-write of delete markers, tombstone
+    indexes, replay indexes and compacted corpora."""
+    with staged_replace(df, path):
+        pass
+
+
 def heal_state_dir(spark: SparkSession, path: str) -> bool:
-    """Heal a crash-parked `replace_state_dir` swap: when the live
-    dir is ABSENT and the pre-crash state sits at ``__bak``, rename
-    it back live. MUST be called before any ``mode("append")`` write
-    into a state dir (ADVICE r10: an append after an unhealed crash
-    creates a fresh live dir holding only the new rows, and
+    """Heal a crash-parked replace: when the live dir is ABSENT and
+    the pre-crash state sits at ``__bak``, rename it back live. MUST
+    be called by every WRITER before it reads or appends to a
+    replace-managed dir: an append after an unhealed crash creates a
+    fresh live dir holding only the new rows, and
     :func:`read_state_dir` — which prefers live — then permanently
-    ignores the parked markers, silently resurrecting every
-    pre-crash takedown/tombstone). Reads stay write-free: the heal
-    belongs to WRITERS, which the maintenance lease already
+    ignores the parked state (silently resurrecting every pre-crash
+    takedown, or re-bootstrapping a corpus). Reads stay write-free:
+    the heal belongs to writers, which the maintenance lease already
     serializes. Returns True when a heal happened."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    live = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    bak = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__bak")
-    fs = live.getFileSystem(conf)
+    fs, P = _fs(spark, path)
+    live, bak = P(path.rstrip("/")), P(path.rstrip("/") + _PARKED)
     if not fs.exists(live) and fs.exists(bak):
         if not fs.rename(bak, live):
             raise IOError(f"heal_state_dir: rename {bak} -> {live} "
@@ -653,11 +672,9 @@ def read_hidden_parquet(spark: SparkSession, path: str) -> DataFrame:
     part files (never produced by an engine write, but cheap to
     guard) fall back to the plain read — identical semantics, one
     warn."""
-    jvm = spark._jvm
     glob = path.rstrip("/") + "/part-*"
-    jp = jvm.org.apache.hadoop.fs.Path(glob)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    matches = fs.globStatus(jp)
+    fs, P = _fs(spark, glob)
+    matches = fs.globStatus(P(glob))
     if matches is not None and len(matches) > 0:
         # hand the read the CONCRETE matched files, not the glob
         # string: FileStreamSink.hasMetadata probes a single read
@@ -676,14 +693,11 @@ def read_state_dir(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a `replace_state_dir`-managed dir: the live dir, else the
     ``__bak`` parked by a mid-swap crash (one step stale —
     conservative for hide-lists), else None."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    live = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    fs = live.getFileSystem(conf)
-    if fs.exists(live):
+    fs, P = _fs(spark, path)
+    if fs.exists(P(path.rstrip("/"))):
         return read_hidden_parquet(spark, path)
-    bak = path.rstrip("/") + "__bak"
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(bak)):
+    bak = path.rstrip("/") + _PARKED
+    if fs.exists(P(bak)):
         return read_hidden_parquet(spark, bak)
     return None
 
@@ -692,9 +706,6 @@ def drop_state_dir(spark: SparkSession, path: str) -> None:
     """Delete a `replace_state_dir`-managed dir AND its crash
     leftovers (``__bak`` / ``__new``) — a GC that leaves a stale
     backup behind would resurrect the state at the next read."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    for p in (path.rstrip("/"), path.rstrip("/") + "__bak",
-              path.rstrip("/") + "__new"):
-        jp = jvm.org.apache.hadoop.fs.Path(p)
-        jp.getFileSystem(conf).delete(jp, True)
+    fs, P = _fs(spark, path)
+    for suffix in ("", _PARKED, _STAGED):
+        fs.delete(P(path.rstrip("/") + suffix), True)

@@ -22,17 +22,18 @@ state would be WRONG, not merely redundant). The reclaim pass is
 pathology: thousands of per-batch small files inside each cell
 directory.
 
-Compaction PUBLISHES (round 10): the rewritten layout is staged
-under a name the version lister ignores, then made visible as
-``cells/v=N+1`` by one rename — in-flight searches keep their pinned
-``v=N`` files, new searches pick up N+1, and a crash mid-stage
-leaves only an invisible temp dir (healed at the next compaction).
-Searches therefore need NO scheduling around compaction at all; the
-remaining rule is that appends and compactions serialize with each
-other (one maintenance writer — an append into v=N racing the
-compaction's read of it would be missing from v=N+1). Superseded
-versions are reclaimed by :func:`vacuum_index` once in-flight
-readers have drained.
+Compaction PUBLISHES: the rewritten layout goes live as
+``cells/v=N+1`` through `sources.io.publish_version` — staged under a
+name the version lister ignores, made visible by one rename — so
+in-flight searches keep their pinned ``v=N`` files, new searches pick
+up N+1, and a failed or crashed stage leaves only an invisible temp
+dir (swept by the next compaction or vacuum). Searches therefore
+need NO scheduling around compaction at all; the remaining rule is
+that appends and compactions serialize with each other (one
+maintenance writer — an append into v=N racing the compaction's read
+of it would be missing from v=N+1). Superseded versions are
+reclaimed by :func:`vacuum_index` once in-flight readers have
+drained.
 
 Reference scope note: north-star extension (SURVEY.md §2 extensions,
 inventory E113); the reference has no vector or streaming surface.
@@ -48,7 +49,6 @@ from pyspark.sql import functions as F
 from ..similarity.index import (
     _CELLS,
     _META,
-    _cells_path,
     _minus_deletes,
     _read_meta,
     append_to_index,
@@ -106,40 +106,6 @@ def _list_parquet_stats(fs, root):
     return n, b
 
 
-def _clean_stale_tmps(fs, jvm, cells_root) -> None:
-    """Delete staging leftovers of compactions that died mid-write.
-    Staged dirs never match the ``v=`` pattern, so they were always
-    INVISIBLE to readers and version listing — this is pure disk
-    reclamation, never recovery."""
-    for st in fs.listStatus(cells_root):
-        name = st.getPath().getName()
-        if name.startswith("__publish_tmp"):
-            fs.delete(st.getPath(), True)
-
-
-def _heal_legacy_swaps(jvm, fs, root) -> None:
-    """Round-9 upgrade healer: the old per-cell swap compactor could
-    die between its two renames, leaving ``cell=X`` MISSING with the
-    data stranded at ``cell=X__compact_old``. Before a legacy layout
-    is read for migration, restore any such backup whose live dir is
-    gone, drop backups whose live dir exists (the stale-backup rule),
-    and clear old staging dirs — otherwise the stray partition
-    values would ride the migration read into ``v=1`` as phantom
-    cells."""
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.endswith("__compact_tmp"):
-            fs.delete(st.getPath(), True)
-        elif name.endswith("__compact_old"):
-            live = jvm.org.apache.hadoop.fs.Path(
-                root, name[:-len("__compact_old")])
-            if fs.exists(live):
-                fs.delete(st.getPath(), True)
-            elif not fs.rename(st.getPath(), live):
-                raise IOError(
-                    f"failed to restore stranded cell backup {name}")
-
-
 def compact_index(spark: SparkSession, index_dir: str,
                   target_file_mb: int = 128,
                   dedupe: bool = False) -> dict:
@@ -156,12 +122,6 @@ def compact_index(spark: SparkSession, index_dir: str,
     drain. A compaction that crashed mid-stage leaves only an
     invisible temp dir, deleted on the next run.
 
-    Compacting a ROUND-9 (unversioned) index IS the upgrade path: the
-    legacy cell dirs read as implicit version 0 (after healing any
-    old-compactor crash strays, which would otherwise ride the read
-    into the new version as phantom cells), the rewrite publishes
-    ``v=1``, and `vacuum_index` later retires the loose legacy dirs.
-
     Returns {"cells", "files_before", "files_after", "bytes",
     "version"} — `version` is the newly published N+1. Serialized by
     the writer lease (`sources.lease`)."""
@@ -177,97 +137,72 @@ def compact_index(spark: SparkSession, index_dir: str,
 
 def _compact_index_unlocked(spark, index_dir, target_file_mb,
                             dedupe):
-    from ..similarity.index import _has_legacy_cells
     from ..session import pin
-
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_CELLS}")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root) or not (
-            index_versions(spark, index_dir)
-            or _has_legacy_cells(spark, index_dir)):
-        raise ValueError(f"no index cells at {index_dir}")
-    # gate the early destructive sweep too (round 12): a zombie
-    # compactor's stale-tmp clean would delete the NEW holder's
-    # in-progress staging dir
+    from ..sources.io import publish_version
     from ..sources.lease import commit_gate
 
+    jvm = spark._jvm
+    cells_root = f"{index_dir}/{_CELLS}"
+    fs = jvm.org.apache.hadoop.fs.Path(cells_root).getFileSystem(
+        spark._jsc.hadoopConfiguration())
+    versions = index_versions(spark, index_dir)
+    if not versions:
+        raise ValueError(f"no index cells at {index_dir}")
+    v_new = versions[-1] + 1
+    live = f"{cells_root}/v={versions[-1]}"
+    files_before, total_bytes = _list_parquet_stats(
+        fs, jvm.org.apache.hadoop.fs.Path(live))
+    # gate the stale-staging sweep on entry too (round 12): a zombie
+    # compactor's sweep would delete the NEW holder's staging dir
     commit_gate(spark, index_dir, "compact_index stale-tmp sweep")
-    _clean_stale_tmps(fs, jvm, root)
-    if not index_versions(spark, index_dir):
-        _heal_legacy_swaps(jvm, fs, root)
-    live = _cells_path(spark, index_dir, None, "compact_index")
-    tail = live.rsplit("/", 1)[1]
-    v_new = (int(tail[2:]) + 1) if tail.startswith("v=") else 1
-    live_path = jvm.org.apache.hadoop.fs.Path(live)
-    files_before, total_bytes = _list_parquet_stats(fs, live_path)
-
-    df = spark.read.parquet(live)
-    # Partition-value type inference parses the all-digit cell
-    # bitstrings as INTEGERS, dropping leading zeros — a naive
-    # rewrite would publish cell=0 where _assign writes cell=000,
-    # forking the physical naming inside one version (review r10
-    # finding; searches only survived via implicit string→int
-    # coercion). Bits are 0/1 only, so lpad to the meta's plane
-    # count restores the exact original directory names.
-    _, n_planes = _read_meta(spark, index_dir)
-    df = df.withColumn(
-        "cell", F.lpad(F.col("cell").cast("string"), n_planes, "0"))
-    # apply delete markers PHYSICALLY: the published version simply
-    # lacks the rows. The marker dir stays — older pinned versions
-    # still need it; clear_index_deletes is the explicit GC once
-    # vacuum has retired them (module contract).
-    df = _minus_deletes(spark, index_dir, df)
-    pinned = None
-    try:
-        total_rows = df.count()
-        if dedupe:
-            # a vector's cell is a pure function of the vector, so a
-            # global id-dedupe equals the per-cell one; pin so the
-            # sizing count and the rewrite share one shuffle
-            df = pinned = pin(df.dropDuplicates(["neighbor_id"]))
-            out_rows = df.count()
-        else:
-            out_rows = total_rows
-        per_file = max(
-            1, int(total_rows * target_file_mb * 1024 * 1024
-                   / max(1, total_bytes)))
-        tmp = f"{index_dir}/{_CELLS}/__publish_tmp_v{v_new}"
+    with publish_version(spark, cells_root, v_new) as staged:
+        df = spark.read.parquet(live)
+        # Partition-value type inference parses the all-digit cell
+        # bitstrings as INTEGERS, dropping leading zeros — a naive
+        # rewrite would publish cell=0 where _assign writes cell=000,
+        # forking the physical naming inside one version (searches
+        # only survived via implicit string→int coercion). Bits are
+        # 0/1 only, so lpad to the meta's plane count restores the
+        # exact original directory names.
+        _, n_planes = _read_meta(spark, index_dir)
+        df = df.withColumn(
+            "cell", F.lpad(F.col("cell").cast("string"), n_planes, "0"))
+        # apply delete markers PHYSICALLY: the published version
+        # simply lacks the rows. The marker dir stays — older pinned
+        # versions still need it; clear_index_deletes is the explicit
+        # GC once vacuum has retired them (module contract).
+        df = _minus_deletes(spark, index_dir, df)
+        pinned = None
         try:
+            total_rows = out_rows = df.count()
+            if dedupe:
+                # a vector's cell is a pure function of the vector,
+                # so a global id-dedupe equals the per-cell one; pin
+                # so the sizing count and the rewrite share one
+                # shuffle
+                df = pinned = pin(df.dropDuplicates(["neighbor_id"]))
+                out_rows = df.count()
+            per_file = max(
+                1, int(total_rows * target_file_mb * 1024 * 1024
+                       / max(1, total_bytes)))
             (df.repartition("cell")
                .write.mode("overwrite").partitionBy("cell")
                .option("maxRecordsPerFile", per_file)
-               .parquet(tmp))
-        except Exception:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-            raise
+               .parquet(staged))
+        finally:
+            if pinned is not None:
+                pinned.unpersist(blocking=False)
         # renew-or-abort at the COMMIT point: a compaction over a
         # huge index can outlive the lease TTL mid-rewrite; if the
         # lease was taken over, publishing v_new would race the new
-        # writer (exactly the dual-writer hazard the lease exists
-        # for) — discard the staged dir and fail loudly instead
-        # (review r11; the round-12 `commit_gate` is this pattern
-        # extracted for every leased writer).
-        from ..sources.lease import WriterLeaseConflict, commit_gate
-
-        try:
-            commit_gate(spark, index_dir, "compact_index publish")
-        except WriterLeaseConflict:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-            raise
-        final = jvm.org.apache.hadoop.fs.Path(
-            f"{index_dir}/{_CELLS}/v={v_new}")
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), final):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-            raise IOError(f"publish rename to {final} failed")
-    finally:
-        if pinned is not None:
-            pinned.unpersist(blocking=False)
+        # writer — the staged dir is discarded and the publish fails
+        # loudly instead
+        commit_gate(spark, index_dir, "compact_index publish")
+    final = jvm.org.apache.hadoop.fs.Path(f"{cells_root}/v={v_new}")
     files_after, _ = _list_parquet_stats(fs, final)
     n_cells = sum(1 for st in fs.listStatus(final)
                   if st.isDirectory()
                   and st.getPath().getName().startswith("cell="))
-    spark.catalog.refreshByPath(f"{index_dir}/{_CELLS}")
     return {"cells": n_cells, "files_before": files_before,
             "files_after": files_after, "bytes": total_bytes,
             "rows": out_rows, "version": v_new}
@@ -276,19 +211,16 @@ def _compact_index_unlocked(spark, index_dir, target_file_mb,
 def vacuum_index(spark: SparkSession, index_dir: str,
                  keep: int = 1) -> dict:
     """Delete all but the newest ``keep`` published cell versions
-    (plus stale staging dirs, plus — once at least one version is
-    published — the loose round-9 legacy cell dirs a migration
-    superseded). This is the ONLY operation that removes data a
-    pinned reader could still hold — run it after in-flight searches
-    of superseded versions have drained (the drain window is
-    deployment policy, exactly like any snapshot-isolation vacuum).
-    Vacuum is a MAINTENANCE WRITER like append/compact: serialize it
-    with them (its stale-tmp sweep would delete a concurrently
-    STAGING compaction's temp dir — review r10 finding; the
+    (plus stale staging dirs). This is the ONLY operation that
+    removes data a pinned reader could still hold — run it after
+    in-flight searches of superseded versions have drained (the drain
+    window is deployment policy, exactly like any snapshot-isolation
+    vacuum). Vacuum is a MAINTENANCE WRITER like append/compact:
+    serialize it with them (its stale-tmp sweep would delete a
+    concurrently STAGING compaction's temp dir; the
     one-maintenance-writer rule was always the contract, vacuum is
-    not exempt). Returns {"kept", "deleted"}; legacy dirs are
-    reported as version 0. Serialized by the writer lease
-    (`sources.lease`)."""
+    not exempt). Returns {"kept", "deleted"}. Serialized by the
+    writer lease (`sources.lease`)."""
     from ..sources.lease import writer_lease
 
     with writer_lease(spark, index_dir, "vacuum_index"):
@@ -296,35 +228,26 @@ def vacuum_index(spark: SparkSession, index_dir: str,
 
 
 def _vacuum_index_unlocked(spark, index_dir, keep):
+    from ..sources.io import sweep_publish_staging
+    from ..sources.lease import commit_gate
+
     if keep < 1:
         raise ValueError("vacuum must keep at least the live version")
     jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_CELLS}")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
+    cells_root = f"{index_dir}/{_CELLS}"
+    fs = jvm.org.apache.hadoop.fs.Path(cells_root).getFileSystem(
+        spark._jsc.hadoopConfiguration())
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(cells_root)):
         raise ValueError(f"no index cells at {index_dir}")
     # renew-or-abort before the first delete (verdict r11 #1): the
     # stale-tmp sweep is itself destructive — a dethroned vacuum
     # would delete the NEW writer's staging compaction dir
-    from ..sources.lease import commit_gate
-
     commit_gate(spark, index_dir, "vacuum_index publish")
-    _clean_stale_tmps(fs, jvm, root)
+    sweep_publish_staging(spark, cells_root)
     versions = index_versions(spark, index_dir)
     drop = list(versions[:-keep]) if len(versions) > keep else []
     for v in drop:
         fs.delete(jvm.org.apache.hadoop.fs.Path(
-            f"{index_dir}/{_CELLS}/v={v}"), True)
-    if versions:
-        # migrated legacy dirs (implicit version 0) are superseded by
-        # ANY published version
-        dropped_legacy = False
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if st.isDirectory() and (name.startswith("cell=")):
-                fs.delete(st.getPath(), True)
-                dropped_legacy = True
-        if dropped_legacy:
-            drop = [0] + drop
+            f"{cells_root}/v={v}"), True)
     return {"kept": versions[-keep:] if versions else [],
             "deleted": drop}

@@ -80,10 +80,11 @@ def compact_semantic_corpus(spark, out_dir: str, codebook_path: str,
 
     Run it with the stream STOPPED (or against a snapshot copy): it
     rewrites the same dirs the loop appends to. Write order mirrors
-    the loop's crash story — compacted corpus to a temp dir first,
-    then codebook, dropped index, and the corpus swap last, so an
-    interrupted compaction leaves the old corpus readable (the temp
-    dir is simply re-created next attempt).
+    the loop's crash story: the compacted corpus is staged first
+    (`io.staged_replace`), then the codebook and the dropped index
+    are refreshed, and the corpus swap comes last. An interrupted
+    compaction leaves the old corpus live (or parked at ``__bak``,
+    which the next writer heals); the staged dir is discarded.
 
     Returns ``{"before": n, "after": n, "dropped": n}`` — the audit
     record. Serialized by the writer lease (round 12 — "run
@@ -101,7 +102,16 @@ def _compact_semantic_unlocked(spark, out_dir, codebook_path,
                                threshold, vec_col, id_col, dim,
                                n_iters, target_cluster, max_bucket):
     from ..similarity.pq import save_codebooks, train_pq
+    from ..sources.io import (
+        heal_state_dir,
+        replace_state_dir,
+        staged_replace,
+    )
+    from ..sources.lease import commit_gate
 
+    dropped_dir = out_dir.rstrip("/") + "_dropped"
+    heal_state_dir(spark, out_dir)
+    heal_state_dir(spark, dropped_dir)
     corpus = _read_parquet_if_present(spark, out_dir)
     if corpus is None:
         return {"before": 0, "after": 0, "dropped": 0}
@@ -119,65 +129,32 @@ def _compact_semantic_unlocked(spark, out_dir, codebook_path,
             max_bucket=max_bucket, broadcast_handle=bcs)
         kept = pin(keep_min_per_component(corpus, pairs, id_col))
         n_kept = kept.count()
-
-        tmp = out_dir.rstrip("/") + "_compacting"
-        kept.write.mode("overwrite").parquet(tmp)
-        # renew-or-abort before the first LIVE mutation (verdict r11
-        # #1): everything up to here staged to the temp dir; from the
-        # codebook refresh on, a dethroned compactor would overwrite
-        # the new writer's artifacts. On abort the staged dir is
-        # discarded — leaving it would park a corpus-sized duplicate
-        # AND the next (legitimate) pass would overwrite it anyway.
-        from ..sources.lease import WriterLeaseConflict, commit_gate
-
-        try:
+        with staged_replace(kept, out_dir):
+            # renew-or-abort before the first LIVE mutation: from
+            # the codebook refresh on, a dethroned compactor would
+            # overwrite the new writer's artifacts; on abort the
+            # staged corpus is discarded
             commit_gate(spark, out_dir,
                         "compact_semantic_corpus publish")
-        except WriterLeaseConflict:
-            jvm = spark._jvm
-            jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-            jtmp.getFileSystem(spark._jsc.hadoopConfiguration()) \
-                .delete(jtmp, True)
-            raise
-        save_codebooks(spark, [cents], codebook_path)
-        # the new dropped index is a UNION of the old one with the
-        # compaction's drops — ids dropped during INGEST were never
-        # in the corpus, so (corpus − kept) alone would forget them
-        # and a later redelivery of their batch would re-adjudicate
-        # them against a corpus missing their witnesses (the exact
-        # hole the index closes). An ingest-dropped id can never
-        # legitimately rejoin, so the union is strictly safe. The
-        # old index must be MATERIALIZED before the overwrite of its
-        # own directory — with truncate=True (the read-modify-write
-        # convention of streaming/curation.py and the io.py merge):
-        # in durable-pins mode a plain pin() is a lazy
-        # persist(DISK_ONLY) with lineage intact, so the overwrite
-        # would either refuse ("cannot overwrite a path that is also
-        # being read from") or recompute from files being deleted.
-        dropped_dir = out_dir.rstrip("/") + "_dropped"
-        new_drops = corpus.join(kept.select(id_col), id_col,
-                                "left_anti").select(id_col)
-        old_idx = _read_parquet_if_present(spark, dropped_dir)
-        if old_idx is not None:
-            new_drops = pin(
-                new_drops.unionByName(old_idx.select(id_col))
-                .distinct(), truncate=True)
-        new_drops.write.mode("overwrite").parquet(dropped_dir)
-        # the swap: rewrite the corpus dir from the committed temp
-        # copy (two renames would be atomic-er on HDFS; overwrite
-        # from the durable temp keeps the recovery story simple and
-        # object-store-safe — a crash here re-runs compaction over
-        # whichever corpus state exists, always valid input). NOTE
-        # successive passes are monotone, not a one-step fixpoint:
-        # each retrain can expose pairs the previous boundaries hid
-        # and drop a few more
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(out_dir)
-        # the swap has committed: drop the temp copy so a corpus-
-        # sized duplicate doesn't sit on disk until the next pass
-        jvm = spark._jvm
-        jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        jtmp.getFileSystem(spark._jsc.hadoopConfiguration()) \
-            .delete(jtmp, True)
+            save_codebooks(spark, [cents], codebook_path)
+            # the new dropped index is a UNION of the old one with
+            # the compaction's drops — ids dropped during INGEST were
+            # never in the corpus, so (corpus − kept) alone would
+            # forget them and a later redelivery of their batch would
+            # re-adjudicate them against a corpus missing their
+            # witnesses (the exact hole the index closes). An
+            # ingest-dropped id can never legitimately rejoin, so the
+            # union is strictly safe.
+            new_drops = corpus.join(kept.select(id_col), id_col,
+                                    "left_anti").select(id_col)
+            old_idx = _read_parquet_if_present(spark, dropped_dir)
+            if old_idx is not None:
+                new_drops = new_drops.unionByName(
+                    old_idx.select(id_col)).distinct()
+            replace_state_dir(new_drops, dropped_dir)
+        # NOTE successive passes are monotone, not a one-step
+        # fixpoint: each retrain can expose pairs the previous
+        # boundaries hid and drop a few more
     finally:
         for bc in bcs:
             bc.unpersist(blocking=False)
@@ -255,6 +232,13 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
 
     def _process_locked(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # a compaction that died mid-swap parks the corpus (or the
+        # dropped index) at __bak: restore it before the reads below,
+        # or an absent corpus would re-bootstrap over the codebook
+        from ..sources.io import heal_state_dir
+
+        heal_state_dir(spark, out_dir)
+        heal_state_dir(spark, dropped_dir)
         corpus = _read_parquet_if_present(spark, out_dir)
         bcs: list = []
         try:

@@ -110,9 +110,8 @@ def test_crashed_publish_is_invisible_and_cleaned(spark, sf_dir,
                                                   tmp_path):
     """A compaction killed mid-stage leaves only a ``__publish_tmp``
     dir the ``v=`` lister ignores: searches and version listing are
-    untouched (no recovery needed — the round-9 swap-healing machinery
-    is obsolete by construction), and the next compaction deletes the
-    leftover before publishing."""
+    untouched (no recovery needed), and the next compaction deletes
+    the leftover before publishing."""
     import os
 
     from big_data_bowl___2023_spark.similarity import index_versions
@@ -227,74 +226,6 @@ def test_quantized_search_pins_one_version(spark, sf_dir, tmp_path):
             for r in ann_index_search(spark, idx, queries, 5,
                                       version=v).collect())
         assert got == ref and got
-
-
-def test_legacy_layout_reads_migrates_and_retires(spark, sf_dir,
-                                                  tmp_path):
-    """Round-9 → round-10 upgrade path (review r10 finding: the
-    first cut of versioning left old layouts unreadable): loose
-    cell dirs under cells/ read and append as implicit version 0,
-    the first compaction heals any old-compactor crash stray and
-    publishes v=1, and vacuum retires the loose legacy dirs."""
-    import os
-    import shutil
-
-    from big_data_bowl___2023_spark.similarity import (
-        append_to_index,
-        index_cell_stats,
-        index_versions,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    b1 = emb.filter(F.col("vec_id") % 2 == 0)
-    b2 = emb.filter(F.col("vec_id") % 2 == 1)
-    idx = str(tmp_path / "idx")
-    build_ann_index(emb, idx)
-    want = _topk(spark, idx, queries)
-
-    # flatten to the round-9 layout: cells/cell=X directly
-    cells = f"{idx}/cells"
-    for d in os.listdir(f"{cells}/v=1"):
-        shutil.move(f"{cells}/v=1/{d}", f"{cells}/{d}")
-    shutil.rmtree(f"{cells}/v=1")
-    spark.catalog.refreshByPath(cells)
-    assert index_versions(spark, idx) == []
-
-    # legacy reads as version 0: search, stats, append all work
-    assert _topk(spark, idx, queries) == want
-    assert index_cell_stats(spark, idx)["version"] == 0
-    legacy2 = str(tmp_path / "idx2")
-    build_ann_index(b1, legacy2)
-    for d in os.listdir(f"{legacy2}/cells/v=1"):
-        shutil.move(f"{legacy2}/cells/v=1/{d}", f"{legacy2}/cells/{d}")
-    shutil.rmtree(f"{legacy2}/cells/v=1")
-    spark.catalog.refreshByPath(f"{legacy2}/cells")
-    append_to_index(b2, legacy2)          # appends into the legacy dirs
-    ref2 = str(tmp_path / "ref2")
-    build_ann_index(emb, ref2)
-    assert _topk(spark, legacy2, queries) == _topk(spark, ref2, queries)
-
-    # simulate a round-9 compactor crash stray: live dir renamed away
-    victim = next(d for d in os.listdir(cells) if d.startswith("cell="))
-    os.rename(f"{cells}/{victim}", f"{cells}/{victim}__compact_old")
-    os.makedirs(f"{cells}/{victim}__compact_tmp")
-    # the migration compaction heals the stray, then publishes v=1
-    rep = compact_index(spark, idx)
-    assert rep["version"] == 1 and index_versions(spark, idx) == [1]
-    assert _topk(spark, idx, queries) == want
-    assert not os.path.exists(f"{cells}/{victim}__compact_old")
-    assert not os.path.exists(f"{cells}/{victim}__compact_tmp")
-
-    # vacuum retires the loose legacy dirs (reported as version 0)
-    from big_data_bowl___2023_spark.streaming.ann_index_stream import (
-        vacuum_index,
-    )
-    vac = vacuum_index(spark, idx)
-    assert vac["deleted"] == [0] and vac["kept"] == [1]
-    assert not any(d.startswith("cell=") for d in os.listdir(cells))
-    spark.catalog.refreshByPath(cells)
-    assert _topk(spark, idx, queries) == want
 
 
 def test_compaction_preserves_cell_directory_names(spark, sf_dir,

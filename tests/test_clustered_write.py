@@ -112,9 +112,9 @@ def test_compact_parquet_small_files(spark, sf_dir, tmp_path):
 
 def test_compact_parquet_stale_artifacts_recovered(
         spark, sf_dir, tmp_path):
-    """Leftover __compact_old/__compact_tmp from a crashed prior run
-    are stale by construction (a mid-swap crash leaves no dataset at
-    the path, so this run's read would fail first) — compaction must
+    """A __bak beside a live dir and a __new left by a crashed prior
+    run are stale by construction (a mid-swap crash leaves no dataset
+    at the path, and the heal renames __bak back) — compaction must
     clear them and succeed rather than nesting the dataset inside the
     stale directory on rename."""
     import os
@@ -126,15 +126,15 @@ def test_compact_parquet_stale_artifacts_recovered(
     li.repartition(8).write.parquet(target)
     n = spark.read.parquet(target).count()
 
-    os.makedirs(target + "__compact_old/junk")
-    os.makedirs(target + "__compact_tmp/junk")
+    os.makedirs(target + "__bak/junk")
+    os.makedirs(target + "__new/junk")
     report = compact_parquet(spark, target, target_file_mb=128)
     assert report["files_before"] == 8
 
     spark.catalog.refreshByPath(target)
     assert spark.read.parquet(target).count() == n
-    assert not os.path.exists(target + "__compact_old")
-    assert not os.path.exists(target + "__compact_tmp")
+    assert not os.path.exists(target + "__bak")
+    assert not os.path.exists(target + "__new")
 
 
 def test_compact_parquet_failed_stage_leaves_dataset_intact(
@@ -158,7 +158,7 @@ def test_compact_parquet_failed_stage_leaves_dataset_intact(
 
     spark.catalog.refreshByPath(target)
     assert spark.read.parquet(target).count() == 1000
-    assert not os.path.exists(target + "__compact_tmp")
+    assert not os.path.exists(target + "__new")
 
 
 def test_snapshot_publish_read_diff(spark, sf_dir, tmp_path):
@@ -205,3 +205,37 @@ def test_snapshot_publish_read_diff(spark, sf_dir, tmp_path):
         assert rep["ok"], rep
     with pytest.raises(FileNotFoundError):
         read_snapshot(spark, table, 9)
+
+
+def test_failed_snapshot_publish_leaves_versions_unchanged(
+        spark, sf_dir, tmp_path):
+    """A publish whose write fails in a task must publish nothing: an
+    empty ``v=2`` would be listed, break ``read_snapshot()`` on schema
+    inference, and break every later publish (which diffs against
+    it). The staged dir is gone and the next publish takes v=2."""
+    import os
+
+    import pytest
+
+    from big_data_bowl___2023_spark.sources.io import (
+        publish_snapshot,
+        read_snapshot,
+        snapshot_versions,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").limit(50).cache()
+    table = str(tmp_path / "corpus")
+    publish_snapshot(docs, table)
+    broken = docs.withColumn(
+        "text", F.when(F.col("doc_id") >= 0, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("text")))
+    with pytest.raises(Exception):
+        publish_snapshot(broken, table)
+    assert snapshot_versions(spark, table) == [1]
+    assert sorted(os.listdir(table)) == ["v=1"]
+    assert read_snapshot(spark, table).count() == 50
+
+    r2 = publish_snapshot(docs.filter(F.col("doc_id") % 2 == 0), table)
+    assert r2["version"] == 2 and snapshot_versions(spark, table) == [1, 2]
+    assert r2["diff"]["added"] == 0 and r2["diff"]["modified"] == 0
+    assert r2["diff"]["removed"] == 50 - r2["rows"]

@@ -459,7 +459,7 @@ def test_curation_ingest_and_compact_fenced(spark, tmp_path, sabotage):
         compact_curated(spark, out)
     assert _snapshot(out) == before_out
     assert _snapshot(str(tmp_path / "curated_tombstones")) == tombs
-    assert not os.path.exists(out + "_compacting")  # staged discarded
+    assert not os.path.exists(out + "__new")  # staged discarded
     break_writer_lease(spark, out)
     assert {r.doc_id for r in read_curated(spark, out).collect()} == {2}
 
@@ -522,4 +522,4 @@ def test_semantic_ingest_and_compact_fenced(spark, sf_dir, tmp_path,
         compact_semantic_corpus(spark, out, cb, threshold=0.2)
     for d, snap in before.items():
         assert _snapshot(d) == snap
-    assert not os.path.exists(out + "_compacting")
+    assert not os.path.exists(out + "__new")

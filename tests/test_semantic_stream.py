@@ -236,7 +236,7 @@ def test_compaction_recovers_cross_boundary_dups(spark, sf_dir,
     assert dropped == all_ids - got
     # the temp copy is removed once the swap commits
     import os
-    assert not os.path.exists(out + "_compacting")
+    assert not os.path.exists(out + "__new")
     # fresh codebook invariant: zero leftover within-cluster pairs
     cents = load_codebooks(spark, cb)[0]
     assert pairs_with_centroids(
@@ -279,6 +279,50 @@ def test_redelivery_after_compaction_stays_dropped(spark, tmp_path):
     dropped = {r.vec_id for r in spark.read.parquet(
         out + "_dropped").select("vec_id").collect()}
     assert {11, 12} <= dropped           # ingest drops survived
+
+
+def test_ingest_heals_corpus_parked_by_crashed_compaction(spark,
+                                                         tmp_path):
+    """A compaction that died mid-swap parks the corpus and the
+    dropped index at ``__bak``. The next ingest batch restores both
+    before reading them: it dedups against the pre-crash corpus
+    instead of re-bootstrapping (the codebook file is unchanged), and
+    a redelivered dropped id stays dropped."""
+    import os
+
+    out = str(tmp_path / "corpus")
+    cb = str(tmp_path / "cb.json")
+    t = 0.75
+    b0 = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [-1.0, 0.0])],
+        "vec_id long, embedding array<double>")
+    b1 = spark.createDataFrame(
+        [(10, _angle_vec(44)), (11, _angle_vec(84)),
+         (12, _angle_vec(89))],
+        "vec_id long, embedding array<double>")
+    process = make_semantic_ingest_batch_fn(out, cb, t, dim=2)
+    process(b0, 0)
+    process(b1, 1)
+    with open(cb, "rb") as fh:
+        codebook = fh.read()
+    # the mid-swap crash: both live dirs gone, their state parked
+    os.rename(out, out + "__bak")
+    os.rename(out + "_dropped", out + "_dropped__bak")
+
+    # 11 is a redelivered drop; 20 is a near-dup of corpus row 2
+    process(spark.createDataFrame(
+        [(11, _angle_vec(84)), (20, _angle_vec(181))],
+        "vec_id long, embedding array<double>"), 2)
+    assert not os.path.exists(out + "__bak")
+    assert not os.path.exists(out + "_dropped__bak")
+    with open(cb, "rb") as fh:
+        assert fh.read() == codebook
+    kept = {r.vec_id for r in
+            spark.read.parquet(out).select("vec_id").collect()}
+    assert kept == {1, 2, 10}
+    dropped = {r.vec_id for r in spark.read.parquet(
+        out + "_dropped").select("vec_id").collect()}
+    assert dropped == {11, 12, 20}
 
 
 def test_compaction_on_absent_corpus_is_noop(spark, tmp_path):

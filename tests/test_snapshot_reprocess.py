@@ -90,7 +90,7 @@ def test_diff_reconciles_state(world, spark):
     assert final == got
     import os
     assert not os.path.exists(out + "_tombstones")
-    assert not os.path.exists(out + "_compacting")
+    assert not os.path.exists(out + "__new")
     # compaction with no tombstones is a no-op
     rep2 = compact_curated(spark, out)
     assert rep2 == {"rows_before": len(got), "rows_after": len(got),

@@ -20,7 +20,9 @@ Contracts under test:
   unbounded driver collect);
 * review-r11 regressions: ingest batches heal a crashed curated
   compaction swap before appending, and marker reads retry once
-  across a concurrent swap window.
+  across a concurrent swap window;
+* one directory commit protocol: no package module but
+  ``sources/io.py`` renames through the Hadoop FS API.
 """
 
 from __future__ import annotations
@@ -214,10 +216,10 @@ def test_marker_cap_switches_mode_identically(spark, sf_dir,
 def test_ingest_append_heals_crashed_compaction_swap(spark,
                                                      tmp_path):
     """Review r11: a compact_curated that died between its two
-    renames parks the corpus at _compact_old; the next ingest batch
-    must restore it before appending — a blind append would recreate
-    a fresh out_dir and the NEXT compaction would delete the backup
-    as post-swap residue, losing the pre-crash corpus."""
+    renames parks the corpus at __bak; the next ingest batch must
+    restore it before appending — a blind append would recreate a
+    fresh out_dir and the NEXT compaction would delete the backup as
+    post-swap residue, losing the pre-crash corpus."""
     from big_data_bowl___2023_spark.streaming import (
         compact_curated,
         make_curation_ingest_batch_fn,
@@ -236,12 +238,12 @@ def test_ingest_append_heals_crashed_compaction_swap(spark,
                              "doc_id long, source string, "
                              "text string"), 0)
     # simulate the mid-swap crash: live gone, corpus parked
-    os.rename(out, out + "_compact_old")
+    os.rename(out, out + "__bak")
 
     fn(spark.createDataFrame([_doc(3)],
                              "doc_id long, source string, "
                              "text string"), 1)
-    assert not os.path.exists(out + "_compact_old")
+    assert not os.path.exists(out + "__bak")
     assert {r.doc_id for r in read_curated(spark, out).collect()} \
         == {1, 2, 3}
     # and the next compaction is safe (nothing left to misread)
@@ -359,3 +361,27 @@ def test_overcap_marker_snapshot_cached_per_state(spark, sf_dir,
     for v in victims:
         assert v not in got
     index_mod._MARKER_SNAP_CACHE.pop(key, None)
+
+
+def test_no_fs_rename_outside_sources_io():
+    """Every live-directory replace and version publish goes through
+    `sources.io` (`staged_replace`, `publish_version`, the heal): a
+    Hadoop FileSystem ``rename(`` anywhere else is a second commit
+    protocol with its own staging names and crash healer."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "big_data_bowl___2023_spark")
+    allowed = os.path.join(pkg, "sources", "io.py")
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for fname in files:
+            path = os.path.join(root, fname)
+            if not fname.endswith(".py") or path == allowed:
+                continue
+            with open(path) as fh:
+                for ln, line in enumerate(fh, 1):
+                    if ".rename(" in line \
+                            and not line.lstrip().startswith("#"):
+                        offenders.append(f"{path}:{ln}")
+    assert not offenders, (
+        "FileSystem rename outside sources/io.py: "
+        + ", ".join(offenders))

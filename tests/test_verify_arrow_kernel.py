@@ -283,3 +283,24 @@ def test_prefilter_auto_falls_back_for_non_integer_ids(spark):
     plan = pre._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" in plan
     assert _ids(pre) == {("a", "b")}
+
+
+def test_lsh_pairs_take_string_ids(spark):
+    """The LSH signature rows keep the caller's id type: string ids
+    reach the join screen (they cannot gather) and return the same
+    pairs and cosines as the integer-id run of the same vectors."""
+    vecs = [[1.0, 0.0, 0.0, 0.0], [0.99, 0.1, 0.0, 0.0],
+            [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.98, 0.2]]
+
+    def run(ids, id_type):
+        df = spark.createDataFrame(
+            list(zip(ids, vecs)),
+            f"vec_id {id_type}, embedding array<double>")
+        return _pairs(cosine_near_dup_pairs_lsh(
+            df, 0.9, dim=4, n_tables=4, n_planes=2))
+
+    by_str = run(["a", "b", "c", "d"], "string")
+    by_int = run([1, 2, 3, 4], "long")
+    assert {(a, b) for a, b, _ in by_str} == {("a", "b"), ("c", "d")}
+    name = {1: "a", 2: "b", 3: "c", 4: "d"}
+    assert by_str == {(name[a], name[b], c) for a, b, c in by_int}
