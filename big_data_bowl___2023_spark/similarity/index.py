@@ -70,12 +70,15 @@ geometries is a pointer flip between index_dirs).
 Deletes (round 10, E120 — the takedown path a served vector index
 needs): `delete_from_index` appends id markers to an
 ``_index_deletes`` parquet beside the cells; EVERY search anti-joins
-the markers (takedown lists are small by nature — a broadcast
-anti-join, zero cost when no markers exist), so a delete is
-effective immediately, in every pinned version, without touching a
-single cell file. `append_to_index` UN-deletes the ids it carries
-(re-adding an id is the intent to serve it again — the restore rule
-the curated-corpus tombstones also follow); `compact_index` applies
+one lineage-truncated snapshot of the markers, pinned once per
+marker-dir state and cached with the meta and ranges (zero cost when
+no markers exist), so a delete is effective immediately, in every
+pinned version, without touching a single cell file; a marker
+rewrite cannot tear an in-flight search, whose plan holds the
+snapshot's blocks, not the marker files. `append_to_index`
+UN-deletes the ids it carries (re-adding an id is the intent to
+serve it again — the restore rule the curated-corpus tombstones also
+follow); `compact_index` applies
 markers physically (the published version simply lacks the rows) but
 leaves the marker dir as compliance memory, since older pinned
 versions still need it; `clear_index_deletes` is the explicit GC,
@@ -94,7 +97,6 @@ from __future__ import annotations
 
 import os
 import threading
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -166,17 +168,6 @@ CELL_SKEW_WARN_RATIO = 8.0
 # for which dimensions moved. 1% of values ≈ the point where int8
 # screen ordering starts losing true neighbors at the margins.
 SATURATION_REBUILD_THRESHOLD = 0.01
-
-# Growth bound for the takedown path (verdict r10): below this many
-# DISTINCT pending delete markers a search plans them as a collected
-# VALUES list (tear-proof, zero marker-file references); past it the
-# collect would be the repo's one unbounded-by-construction driver
-# hazard, so `_minus_deletes` switches to an eager-localCheckpoint
-# broadcast anti-join (same snapshot isolation, rows never transit
-# the driver), `delete_from_index` warns, and `index_cell_stats`
-# flags `compact_recommended`. 64k ids × ~16 B ≈ 1 MB of plan
-# literals — the most a search plan should ever carry.
-DELETE_MARKER_VALUES_CAP = 65536
 
 
 def _assign(df: DataFrame, vec_col: str, id_col: str,
@@ -274,16 +265,14 @@ def _build_ann_index_unlocked(corpus, index_dir, dim, n_planes,
     # commit gate at the FIRST destructive step (verdict r11 #1): a
     # rebuild deletes the predecessor's whole version history, so a
     # dethroned provisioner must abort here, before anything burns
+    from ..sources.io import drop_state_dir
     from ..sources.lease import commit_gate
 
     commit_gate(spark, index_dir, "build_ann_index publish")
     # a rebuild resets the version history: delete the whole cells
     # root (overwrite mode would only clear v=1, leaving stale later
     # versions as "latest"), then publish the fresh layout as v=1
-    jvm = spark._jvm
-    jcells = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_CELLS}")
-    jcells.getFileSystem(spark._jsc.hadoopConfiguration()) \
-        .delete(jcells, True)
+    drop_state_dir(spark, f"{index_dir}/{_CELLS}")
     (assigned.write.mode("overwrite").partitionBy("cell")
      .parquet(f"{index_dir}/{_CELLS}/v=1"))
     # re-gate AFTER the cells write — the longest phase in the
@@ -306,22 +295,13 @@ def _build_ann_index_unlocked(corpus, index_dir, dim, n_planes,
             "i int, lo double, hi double")
          .write.mode("overwrite").parquet(f"{index_dir}/{_RANGES}"))
     else:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(
-            f"{index_dir}/{_RANGES}")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+        drop_state_dir(spark, f"{index_dir}/{_RANGES}")
     # a rebuild re-learns ranges, so the predecessor's saturation
     # history (measurements AGAINST the old ranges) must not survive
     # to be trended alongside the new ones — and its delete markers
     # describe rows the fresh corpus may legitimately re-include
     # (the corpus passed to a rebuild IS the serving intent)
-    from ..sources.io import drop_state_dir
-
-    jvm = spark._jvm
-    jsat = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_SATURATION}")
-    jsat.getFileSystem(spark._jsc.hadoopConfiguration()) \
-        .delete(jsat, True)
+    drop_state_dir(spark, f"{index_dir}/{_SATURATION}")
     drop_state_dir(spark, f"{index_dir}/{_DELETES}")
     (spark.createDataFrame([(int(dim), int(n_planes))],
                            "dim int, n_planes int")
@@ -342,47 +322,44 @@ def _build_ann_index_unlocked(corpus, index_dir, dim, n_planes,
                 stacklevel=2)
 
 
-# (dim, n_planes) / ranges artifact snapshots per (application,
-# index_dir), gated on a filesystem signature of the artifact dir
-# (r17, same invalidation discipline as _MARKER_SNAP_CACHE): the
-# serving path re-read + collected these one-row/dim-row parquets on
-# EVERY search — one full read-plan + job each — although they change
-# only when a REBUILD rewrites them (appends/compactions never touch
-# meta; ranges are frozen at build). The signature (mtime + file
-# count + byte length — one listing RPC) re-reads after any rewrite;
-# a missing dir is never cached.
+# The index's serving state — the meta (dim, n_planes), the frozen
+# quantization ranges and the delete-marker snapshot — cached per
+# (application, artifact dir) and gated on `io.state_dir_signature`
+# (resolved path, mtime, file count, byte length: one listing RPC).
+# A search then runs no job for any of them until a maintenance write
+# rewrites the dir and moves its signature; an absent dir is never
+# cached. Keyed by application id because a pinned marker snapshot's
+# blocks die with their SparkContext. A superseded snapshot is not
+# unpersisted: an earlier search's still-lazy plan may reference its
+# blocks, so dropping the reference lets the ContextCleaner free them
+# once the last such plan is collected — bounded by live plans, not
+# by search count.
 _ARTIFACT_CACHE: dict[tuple, tuple[tuple, object]] = {}
 _ARTIFACT_LOCK = threading.Lock()
 
 
-def _artifact_sig(spark: SparkSession, path: str) -> tuple | None:
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp):
-        return None
-    summ = fs.getContentSummary(jp)
-    return (fs.getFileStatus(jp).getModificationTime(),
-            summ.getFileCount(), summ.getLength())
-
-
 def _cached_artifact(spark: SparkSession, index_dir: str, name: str,
                      read):
-    """``read()`` once per (app, dir, signature); thereafter serve
-    the driver-local value until the artifact dir's signature moves."""
+    """``read()`` once per (application, ``index_dir/name``,
+    signature), or None when the dir (and its ``__bak``) is absent.
+    The signature is taken BEFORE the read: a rewrite landing between
+    the two maps the old signature to the new data, so the next call
+    misses and re-reads — never a new signature pinned to old data."""
+    from ..sources.io import state_dir_signature
+
     path = f"{index_dir}/{name}"
-    sig = _artifact_sig(spark, path)
+    sig = state_dir_signature(spark, path)
+    if sig is None:
+        return None
     key = (spark.sparkContext.applicationId,
-           os.path.abspath(index_dir.rstrip("/")), name)
-    if sig is not None:
-        with _ARTIFACT_LOCK:
-            cached = _ARTIFACT_CACHE.get(key)
-        if cached is not None and cached[0] == sig:
-            return cached[1]
+           os.path.abspath(path.rstrip("/")))
+    with _ARTIFACT_LOCK:
+        cached = _ARTIFACT_CACHE.get(key)
+    if cached is not None and cached[0] == sig:
+        return cached[1]
     value = read()
-    if sig is not None:
-        with _ARTIFACT_LOCK:
-            _ARTIFACT_CACHE[key] = (sig, value)
+    with _ARTIFACT_LOCK:
+        _ARTIFACT_CACHE[key] = (sig, value)
     return value
 
 
@@ -397,18 +374,15 @@ def _read_meta(spark: SparkSession, index_dir: str) -> tuple[int, int]:
                              f"{len(row)} rows, expected 1")
         return int(row[0]["dim"]), int(row[0]["n_planes"])
 
-    return _cached_artifact(spark, index_dir, _META, read)
+    meta = _cached_artifact(spark, index_dir, _META, read)
+    if meta is None:
+        raise ValueError(f"no ANN index meta at {index_dir}")
+    return meta
 
 
 def _read_ranges(spark: SparkSession, index_dir: str) -> list | None:
     """The frozen quantization ranges, or None for a float-only
-    index. Hadoop-FS existence check so object stores work the same
-    as local FS."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_RANGES}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
+    index."""
     from ..sources.io import read_hidden_parquet
 
     def read():
@@ -538,14 +512,9 @@ def saturation_history(spark: SparkSession, index_dir: str
     per monitored append, schema per `append_to_index`), or None when
     no appends have been monitored yet — the operational surface an
     operator trends to schedule a rebuild before recall erodes."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_SATURATION}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    from ..sources.io import read_hidden_parquet
+    from ..sources.io import read_state_dir
 
-    return read_hidden_parquet(spark, f"{index_dir}/{_SATURATION}")
+    return read_state_dir(spark, f"{index_dir}/{_SATURATION}")
 
 
 def index_cell_stats(spark: SparkSession, index_dir: str,
@@ -572,7 +541,9 @@ def index_cell_stats(spark: SparkSession, index_dir: str,
       n_planes+1 cell shares (a probe set is the query's cell plus
       its n_planes one-bit neighbors; this bounds ANY probe set from
       above). Compare with the isotropic ideal
-      (n_planes+1)/2^n_planes.
+      (n_planes+1)/2^n_planes;
+    * ``pending_deletes`` — distinct delete markers: hidden from
+      every search, still scanned until `compact_index` applies them.
 
     ``version`` pins a published layout (latest by default); the
     returned dict carries it as ``version``."""
@@ -598,10 +569,6 @@ def index_cell_stats(spark: SparkSession, index_dir: str,
         # applies them (distinct ids — re-issued markers don't
         # inflate the number)
         "pending_deletes": pending,
-        # the operator nudge (verdict r10): past the cap every
-        # search pays the checkpoint-broadcast marker path —
-        # compact_index applies the markers physically and resets it
-        "compact_recommended": pending > DELETE_MARKER_VALUES_CAP,
         "n_rows": n_rows,
         "n_cells": len(shares),
         "expected_cells": expected,
@@ -679,220 +646,54 @@ def _is_transient_missing_path(exc: Exception) -> bool:
     return False
 
 
-# One marker snapshot per (index_dir, marker-dir state) — ADVICE r11:
-# the over-cap path pinned a fresh localCheckpoint on EVERY search and
-# the blocks were freed only at driver GC, so a high-QPS serving loop
-# steadily accumulated executor storage. The cache keys on a cheap
-# filesystem signature of the resolved marker dir (path + mtime +
-# file count + byte length — one listing RPC per search) and reuses
-# the snapshot until a maintenance write changes it. Superseded
-# snapshots are NOT explicitly unpersisted: an earlier search's
-# still-lazy plan may reference the truncated-lineage blocks (an
-# unpersist would make that plan unrecomputable); dropping our cache
-# reference lets the ContextCleaner free the blocks as soon as the
-# last referencing plan is GC'd — bounded by live plans instead of by
-# search count.
-# Invalidation under marker churn (verdict r14 #8): every hit is
-# gated on the filesystem signature (_marker_state_sig — path, mtime,
-# file count, byte length of the marker dir), and every writer that
-# changes the exclusion set rewrites that dir — delete_from_index
-# appends, append_to_index's restore-on-append drops matched markers
-# via _undelete_unlocked — so an append BETWEEN searches changes the
-# sig and the next search snapshots fresh markers instead of serving
-# the stale exclusion (pinned by
-# test_marker_snapshot_cache_invalidates_on_append).
-_MARKER_SNAP_CACHE: dict[tuple, tuple[tuple, DataFrame]] = {}
-_MARKER_SNAP_LOCK = threading.Lock()
-
-# Below this many probed-cell FLOAT vector bytes the int8 screen's
-# second scan costs more than its ¾-byte saving and the float tier is
-# the faster serve. MEASURED (r15 `--quant-crossover` leg, synthetic
-# full-rank corpora, warm median-of-3, local[32], BASELINE.md
-# round-15 table): the screen does NOT cross over at ANY locally
-# measurable point — quant/float warm ratio 1.75× at 32k×64 d
-# (16 MiB), 2.7× at 128k×64 d, 3.9× at 32k–128k×256 d (64–256 MiB),
-# 4.5–4.6× at 32k–128k×512 d (128–512 MiB) — and the ratio GROWS
-# with dims, because on page-cached local storage the scan is
-# compute-bound, so the screen's own O(n·d) int8 arithmetic +
-# re-rank second scan scale faster than the ¾-byte I/O saving it
-# buys. Conclusion written into the constant: the payoff condition
-# is not a corpus/dim size but a STORAGE-BANDWIDTH one — the tier
-# pays only where the float scan is genuinely byte-bound (cold
-# object store / network-attached parquet, where cutting bytes 4×
-# cuts wall ~4×), which no warm-local measurement can reproduce.
-# The constant stays at the 2 GiB regime bound (≈ 1M × 256 d × 8 B,
-# past any page cache) so the advisory warning never fires in the
-# measured no-payoff band yet still flags layouts whose probed bytes
-# are small enough that even a byte-bound scan wouldn't pay.
-QUANTIZED_PAYOFF_BYTES = 2 * 1024 ** 3
-
-# cells path -> {cell: rows} from a footer-only count (zero columns
-# in ReadSchema), computed once per published layout per process —
-# the path embeds v=N so a compaction naturally re-keys; same-version
-# appends can stale it, which only skews an advisory warning.
-_CELL_ROWS_CACHE: dict[str, dict[str, int]] = {}
-_CELL_ROWS_LOCK = threading.Lock()
-
-
-def _probed_float_bytes(spark: SparkSession, cells: str,
-                        probed: list, dim: int) -> int:
-    """Estimated float vector bytes a search will scan: probed-cell
-    rows × dim × 8. Advisory only (feeds the payoff warning below)."""
-    with _CELL_ROWS_LOCK:
-        per_cell = _CELL_ROWS_CACHE.get(cells)
-    if per_cell is None:
-        # partition-type inference reads the fixed-width bit-string
-        # cell keys ("010") back as base-10 ints (10); normalize both
-        # sides through int so the lookup matches either reading —
-        # fixed width makes the base-10 image injective
-        per_cell = {str(int(str(r["cell"]))): int(r["count"]) for r in
-                    spark.read.parquet(cells)
-                    .groupBy("cell").count().collect()}
-        with _CELL_ROWS_LOCK:
-            _CELL_ROWS_CACHE[cells] = per_cell
-    return sum(per_cell.get(str(int(str(c))), 0)
-               for c in probed) * dim * 8
-
-
-def _warn_below_quantized_payoff(spark: SparkSession, cells: str,
-                                 probed: list, dim: int) -> None:
-    """Verdict r11 #7: nothing in the API steered a caller away from
-    paying the int8 screen below its payoff regime. Advisory only —
-    never raises, never blocks (an estimate must not take down
-    serving)."""
-    try:
-        est = _probed_float_bytes(spark, cells, probed, dim)
-    except Exception:
-        return
-    if est >= QUANTIZED_PAYOFF_BYTES:
-        return
-    warnings.warn(
-        f"ann_index_search_quantized: this search probes ≈"
-        f"{est / 2**20:.1f} MiB of float vectors — below the "
-        f"quantized tier's measured payoff regime "
-        f"(QUANTIZED_PAYOFF_BYTES = {QUANTIZED_PAYOFF_BYTES / 2**30:.0f}"
-        f" GiB; at 128k×64d the int8 screen's second scan cost more "
-        f"than its byte saving, BASELINE.md hybrid legs). "
-        f"ann_index_search (float tier) is likely faster here; the "
-        f"quantized tier pays off on byte-bound scans "
-        f"(≳1M vectors × ≳256 dims, or object-store bandwidth).")
-
-
-def _marker_state_sig(spark: SparkSession,
-                      index_dir: str) -> tuple | None:
-    """Filesystem signature of the marker state `read_state_dir`
-    would resolve (live dir, else the crash-parked ``__bak``), or
-    None when absent."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = f"{index_dir}/{_DELETES}"
-    for p in (base, base + "__bak"):
-        jp = jvm.org.apache.hadoop.fs.Path(p)
-        fs = jp.getFileSystem(conf)
-        if fs.exists(jp):
-            summ = fs.getContentSummary(jp)
-            return (p, fs.getFileStatus(jp).getModificationTime(),
-                    summ.getFileCount(), summ.getLength())
-    return None
-
-
 def _minus_deletes(spark: SparkSession, index_dir: str,
                    corpus: DataFrame) -> DataFrame:
-    """Anti-join the delete markers out of an index scan. Below
-    `DELETE_MARKER_VALUES_CAP` distinct ids the markers are COLLECTED
-    at plan time into a driver-local relation (parallelized rows), so
-    the search plan carries literal values, never references to the
-    marker files: a concurrent
-    restore-on-append rewriting or deleting the marker dir cannot
-    fail an in-flight search (review r10 — a file-backed anti-join
-    broke the 'searches need no coordination' contract), and every
-    search sees one consistent marker snapshot. PAST the cap (a
-    compliance sweep that out-ran compaction) the collect would make
-    every search plan a multi-MB literal list and a driver hazard
-    (verdict r10 — the repo's only unbounded-by-construction
-    collect), so the ids switch to an EAGER `localCheckpoint` that
-    materializes one marker snapshot into executor block storage at
-    plan time, anti-joined with a pinned ``shuffle_hash`` (NOT
-    broadcast — a broadcast build side is collected to the driver,
-    which would quietly reintroduce the O(markers) driver cost the
-    cap exists to remove; review r11). Either mode's plan carries
-    zero marker-file references, and survivors are identical (same
-    distinct-id left_anti; mode choice + identity pytest-pinned).
-    The marker READS themselves (the deciding collect / the
-    checkpoint job) retry once: a concurrent restore-on-append swap
-    renaming the dir between our existence check and the read is a
-    tiny but real window (review r11), and one re-resolve lands on
-    the post-swap state. No-op when no markers exist."""
-    global _last_marker_mode
+    """Anti-join the delete markers out of an index scan (no-op when
+    no markers exist). The distinct marker ids are pinned once per
+    marker-dir state as an eager, lineage-truncated snapshot
+    (`session.pin(truncate=True)`) and cached with the other serving
+    state (`_cached_artifact`), so:
+
+    * the search plan references the snapshot's blocks, never the
+      marker files — a concurrent `delete_from_index` or restore
+      rewriting the marker dir cannot tear an in-flight search, which
+      collects with the exclusion it was planned with;
+    * a search over unchanged markers runs no marker job and pins
+      nothing new; the next search after a marker write re-pins;
+    * the marker rows never transit the driver as plan literals; the
+      planner picks the anti-join strategy from the snapshot's size.
+
+    The signature-and-pin step retries once: a concurrent swap
+    renaming the dir between the existence check and the read is a
+    tiny but real window, and one re-resolve lands on the post-swap
+    state."""
+    from ..session import pin
+
+    def snapshot():
+        dels = _read_deletes(spark, index_dir)
+        if dels is None:
+            return None
+        # truncate=True so both durability modes materialize an
+        # eager, lineage-truncated snapshot — a durable
+        # persist(DISK_ONLY) would keep marker-FILE lineage that an
+        # executor loss recomputes from files a rewrite may have
+        # swapped away
+        return pin(dels.select("neighbor_id").distinct(), truncate=True)
+
     for attempt in (0, 1):
         try:
-            # signature FIRST, data after: a swap landing between the
-            # two maps the OLD signature to post-swap data — the next
-            # search then misses the cache and refreshes, which is
-            # the safe direction (never a fresh signature pinning
-            # pre-swap markers)
-            sig = _marker_state_sig(spark, index_dir)
-            dels = _read_deletes(spark, index_dir)
-            if dels is None:
-                _last_marker_mode = "none"
-                return corpus
-            ids = dels.select("neighbor_id").distinct()
-            # one job in the common path: fetch cap+1 — a full
-            # result means "over"
-            rows = ids.limit(DELETE_MARKER_VALUES_CAP + 1).collect()
-            if not rows:
-                _last_marker_mode = "none"
-                return corpus
-            if len(rows) <= DELETE_MARKER_VALUES_CAP:
-                _last_marker_mode = "values"
-                local = spark.createDataFrame(rows, ids.schema)
-                return corpus.join(F.broadcast(local),
-                                   "neighbor_id", "left_anti")
-            _last_marker_mode = "checkpoint"
-            # keyed by application id as well as path: a pinned
-            # snapshot's blocks die with their SparkContext, so a
-            # cache hit from a PREVIOUS session would join against a
-            # stopped context and fail every over-cap search until
-            # process restart (review r12 — crash recovery and test
-            # harnesses restart sessions in-process routinely)
-            key = (spark.sparkContext.applicationId,
-                   os.path.abspath(index_dir.rstrip("/")))
-            with _MARKER_SNAP_LOCK:
-                cached = _MARKER_SNAP_CACHE.get(key)
-            if cached is not None and cached[0] == sig:
-                snap = cached[1]
-            else:
-                # session.pin, not a direct localCheckpoint (the
-                # source-hygiene rule): truncate=True so BOTH
-                # durability modes materialize an eager, lineage-
-                # truncated snapshot — a durable persist(DISK_ONLY)
-                # would keep marker-FILE lineage that an executor
-                # loss recomputes from files a concurrent rewrite
-                # may have swapped away
-                from ..session import pin
-
-                snap = pin(ids, truncate=True)
-                with _MARKER_SNAP_LOCK:
-                    _MARKER_SNAP_CACHE[key] = (sig, snap)
-            return corpus.join(snap.hint("shuffle_hash"),
-                               "neighbor_id", "left_anti")
+            snap = _cached_artifact(spark, index_dir, _DELETES, snapshot)
+            break
         except Exception as exc:
-            # retry ONLY what the swap window actually produces —
-            # vanished files/paths between the existence check and
-            # the read job, classified by exception class
-            # (`_is_transient_missing_path`; ADVICE r11 — substring
-            # matching was brittle). A deterministic fault (corrupt
-            # footer, schema error) must surface first-error, once,
-            # not run the doomed jobs twice with the cause swallowed
-            # (review r11).
+            # retry ONLY what the swap window produces — vanished
+            # files/paths, classified by exception class; a
+            # deterministic fault (corrupt footer, schema error)
+            # surfaces first-error, once
             if attempt or not _is_transient_missing_path(exc):
                 raise
-
-
-# observability breadcrumb: which marker path the LAST _minus_deletes
-# call took ("none" / "values" / "checkpoint") — read by the mode-
-# choice pytest; never consulted by engine code
-_last_marker_mode = "none"
+    if snap is None:
+        return corpus
+    return corpus.join(snap, "neighbor_id", "left_anti")
 
 
 def delete_from_index(spark: SparkSession, index_dir: str,
@@ -913,10 +714,10 @@ def delete_from_index(spark: SparkSession, index_dir: str,
     CANNOT be cast to that type raises (ADVICE r10: the cast turned
     it into a NULL marker that no anti-join ever matches — a takedown
     that silently did not take down, while still being counted); NULL
-    input ids are dropped and not counted. When the pending-marker
-    set crosses `DELETE_MARKER_VALUES_CAP` this warns to run
-    `compact_index` (which applies markers physically). Serialized
-    by the writer lease (`sources.lease`)."""
+    input ids are dropped and not counted. The next search re-pins
+    its marker snapshot (`_minus_deletes`); a search planned before
+    this call keeps the exclusion it was planned with. Serialized by
+    the writer lease (`sources.lease`)."""
     if not isinstance(ids, DataFrame) and not ids:
         return {"deleted": 0}
     from ..sources.lease import writer_lease
@@ -962,19 +763,6 @@ def _delete_from_index_unlocked(spark, index_dir, ids):
         # silently resurrecting every pre-crash marker
         heal_state_dir(spark, f"{index_dir}/{_DELETES}")
         dels.write.mode("append").parquet(f"{index_dir}/{_DELETES}")
-        pending = (_read_deletes(spark, index_dir)
-                   .select("neighbor_id").distinct().count())
-        if pending > DELETE_MARKER_VALUES_CAP:
-            import warnings
-
-            warnings.warn(
-                f"ANN index {index_dir}: {pending} pending delete "
-                f"markers exceed DELETE_MARKER_VALUES_CAP="
-                f"{DELETE_MARKER_VALUES_CAP} — searches have "
-                f"switched to the checkpoint-broadcast marker path; "
-                f"run compact_index to apply the markers physically "
-                f"(then vacuum_index + clear_index_deletes per the "
-                f"GC ordering rules)", stacklevel=2)
     return {"deleted": n}
 
 
@@ -1232,7 +1020,12 @@ def ann_index_search_quantized(spark: SparkSession, index_dir: str,
     Both scans (screen and rerank) PIN the same published cell-layout
     version, resolved ONCE here — a compaction publishing between the
     two scans can no longer hand them different generations of the
-    corpus."""
+    corpus.
+
+    On page-cached local storage this tier never beat the float tier
+    (BASELINE.md round 15: quantized ÷ float warm time 1.75–4.6× from
+    32k×64 d to 128k×512 d, growing with dims), so it pays only where
+    the float scan is byte-bound, as on cold object storage."""
     from .pq import exact_rerank
 
     ranges = _read_ranges(spark, index_dir)
@@ -1247,9 +1040,6 @@ def ann_index_search_quantized(spark: SparkSession, index_dir: str,
     q, probed = _probed_queries(spark, index_dir, queries, vec_col,
                                 id_col, probe_adjacent,
                                 "ann_index_search_quantized")
-    # one quantization range per dimension, so len(ranges) == dim —
-    # no extra meta read on the serving path
-    _warn_below_quantized_payoff(spark, cells, probed, len(ranges))
     # `where` filters the SCREEN only; the rerank corpus derives from
     # the screened shortlist via the semi-join below, so it is
     # transitively filtered without re-stating the predicate

@@ -245,31 +245,28 @@ def write_parquet_with_manifest(df: DataFrame, path: str,
     can cheaply answer "is this dataset exactly what the job wrote?".
     ``verify_parquet_manifest`` recomputes and reports missing,
     extra, and modified files."""
-    import json
-    import os
-
+    spark = df.sparkSession
     df.write.mode(mode).parquet(path)
-    written = df.sparkSession.read.parquet(path)
+    written = spark.read.parquet(path)
     manifest = {
         "columns": written.columns,
         "files": _file_digests(written),
     }
     manifest["total_rows"] = sum(
         f["rows"] for f in manifest["files"].values())
-    with open(os.path.join(path, "_MANIFEST.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
+    write_json_artifact(spark, _manifest_path(path), manifest)
     return manifest
+
+
+def _manifest_path(path: str) -> str:
+    return f"{path.rstrip('/')}/_MANIFEST.json"
 
 
 def verify_parquet_manifest(spark: SparkSession, path: str) -> dict:
     """Recompute digests and diff against the manifest. Returns
     {"ok", "missing", "extra", "modified", "rows_expected",
     "rows_found"} — one scan, same cost as any full read."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_MANIFEST.json")) as fh:
-        manifest = json.load(fh)
+    manifest = read_json_artifact(spark, _manifest_path(path))
     # List through the Hadoop FS API (works on any scheme) and read
     # the EXPLICIT current file set: verification must see the
     # filesystem as it is now, not the session's FileStatusCache view
@@ -545,29 +542,30 @@ def compact_parquet(spark: SparkSession, path: str,
 
     Returns {"files_before", "files_after", "bytes"}.
     """
-    fs, P = _fs(spark, path)
-    root = P(path.rstrip("/"))
-
-    def _list_parquet(p):
-        out = []
-        it = fs.listFiles(p, True)  # recursive
-        while it.hasNext():
-            st = it.next()
-            if st.getPath().getName().endswith(".parquet"):
-                out.append(st)
-        return out
-
     heal_state_dir(spark, path)
-    before = _list_parquet(root)
-    total_bytes = sum(st.getLen() for st in before)
+    files_before, total_bytes = parquet_stats(spark, path)
     n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
     out = spark.read.parquet(path).repartition(int(n_out))
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)
     replace_state_dir(out, path)
-    return {"files_before": len(before),
-            "files_after": len(_list_parquet(root)),
+    return {"files_before": files_before,
+            "files_after": parquet_stats(spark, path)[0],
             "bytes": total_bytes}
+
+
+def parquet_stats(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(file count, byte length) of every ``.parquet`` file under
+    ``path``, recursively — one listing through the Hadoop FS API."""
+    fs, P = _fs(spark, path)
+    n = size = 0
+    it = fs.listFiles(P(path.rstrip("/")), True)
+    while it.hasNext():
+        st = it.next()
+        if st.getPath().getName().endswith(".parquet"):
+            n += 1
+            size += st.getLen()
+    return n, size
 
 
 @contextmanager
@@ -699,6 +697,23 @@ def read_state_dir(spark: SparkSession, path: str) -> DataFrame | None:
     bak = path.rstrip("/") + _PARKED
     if fs.exists(P(bak)):
         return read_hidden_parquet(spark, bak)
+    return None
+
+
+def state_dir_signature(spark: SparkSession,
+                        path: str) -> tuple | None:
+    """(resolved path, mtime, file count, byte length) of the dir
+    :func:`read_state_dir` would read — the live dir, else its
+    ``__bak`` — or None when neither exists. Any write through the
+    commit protocol or an append into the dir moves it, so a caller
+    can cache what it read from the dir under this key."""
+    fs, P = _fs(spark, path)
+    for p in (path.rstrip("/"), path.rstrip("/") + _PARKED):
+        jp = P(p)
+        if fs.exists(jp):
+            summ = fs.getContentSummary(jp)
+            return (p, fs.getFileStatus(jp).getModificationTime(),
+                    summ.getFileCount(), summ.getLength())
     return None
 
 

@@ -77,6 +77,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from .io import _fs
+
 LEASE_SUFFIX = "__lease"
 EPOCH_SUFFIX = "__epoch"
 DEFAULT_TTL_S = 3600.0
@@ -118,9 +120,8 @@ def _held_key(root: str) -> tuple[int, str]:
 
 
 def _fs_path(spark: SparkSession, p: str):
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(p)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
+    fs, P = _fs(spark, p)
+    return fs, P(p)
 
 
 def _read_json(spark: SparkSession, fs, jp) -> dict:

@@ -91,10 +91,10 @@ def _read_parquet_if_present(spark, path: str) -> DataFrame | None:
     read would use — object-store-safe, no local-path assumption."""
     from pyspark.errors import AnalysisException
 
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    from ..sources.io import _fs
+
+    fs, P = _fs(spark, path)
+    if not fs.exists(P(path.rstrip("/"))):
         return None
     try:
         spark.catalog.refreshByPath(path)

@@ -319,59 +319,19 @@ def test_append_validates_kept_metadata(spark, sf_dir, tmp_path):
         == _topk_rows(ann_index_search(spark, ref, queries, 5))
 
 
-def test_quantized_payoff_warning(spark, sf_dir, tmp_path,
-                                  monkeypatch):
-    """Verdict r11 #7: at toy scale (probed float bytes far below
-    QUANTIZED_PAYOFF_BYTES) the quantized entry warns that the float
-    tier is likely faster, citing the measured crossover record; with
-    the threshold lowered beneath the probed bytes the warning stays
-    quiet. Advisory only: results are unaffected either way."""
-    import warnings as w
-
-    from big_data_bowl___2023_spark.similarity import (
-        ann_index_search_quantized,
-        index as index_mod,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 4)
-    idx = str(tmp_path / "qidx_warn")
-    build_ann_index(emb, idx, quantize=True)
-
-    with w.catch_warnings(record=True) as rec:
-        w.simplefilter("always")
-        got = ann_index_search_quantized(spark, idx, queries, 3)
-        n = got.count()
-    msgs = [str(r.message) for r in rec
-            if "payoff" in str(r.message)]
-    assert msgs, "expected the below-payoff advisory at toy scale"
-    assert "ann_index_search (float tier)" in msgs[0]
-    assert "BASELINE.md" in msgs[0]
-    assert n > 0                       # advisory never blocks serving
-
-    # past the threshold: no advisory (same search, threshold lowered
-    # beneath the probed bytes — the cheap way to cross the regime
-    # boundary in a test)
-    monkeypatch.setattr(index_mod, "QUANTIZED_PAYOFF_BYTES", 1)
-    with w.catch_warnings(record=True) as rec:
-        w.simplefilter("always")
-        ann_index_search_quantized(spark, idx, queries, 3).count()
-    assert not [r for r in rec if "payoff" in str(r.message)]
-
-
 def test_marker_snapshot_cache_invalidates_on_append(
-        spark, sf_dir, tmp_path, monkeypatch):
-    """VERDICT r14 #8: the over-cap marker-snapshot cache
-    (_MARKER_SNAP_CACHE, keyed by filesystem signature) must refresh
-    when append_to_index un-deletes an id between searches — the r12
-    cache was only ever measured on a static marker dir. Cap forced
-    to 4 so a handful of markers exercises the checkpoint mode."""
+        spark, sf_dir, tmp_path):
+    """VERDICT r14 #8: the cached marker snapshot (one entry of the
+    index's serving-state cache, keyed by filesystem signature) must
+    refresh when append_to_index un-deletes an id between searches —
+    a stale snapshot would keep excluding the re-added id."""
+    import os
+
     from big_data_bowl___2023_spark.similarity import (
         delete_from_index,
     )
     from big_data_bowl___2023_spark.similarity import index as ix
 
-    monkeypatch.setattr(ix, "DELETE_MARKER_VALUES_CAP", 4)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     idx = str(tmp_path / "idx")
@@ -382,20 +342,17 @@ def test_marker_snapshot_cache_invalidates_on_append(
 
     delete_from_index(spark, idx, victims)
     got = _topk_rows(ann_index_search(spark, idx, queries, 5))
-    assert ix._last_marker_mode == "checkpoint"   # over the cap of 4
     assert all(nid not in victims for _, nid, _, _ in got)
     key = (spark.sparkContext.applicationId,
-           __import__("os").path.abspath(idx))
-    sig_before = ix._MARKER_SNAP_CACHE[key][0]
+           os.path.abspath(f"{idx}/_index_deletes"))
+    sig_before = ix._ARTIFACT_CACHE[key][0]
 
-    # un-delete ONE victim; five markers remain (still over-cap), so
-    # the next search takes the checkpoint path again — a stale
-    # cached snapshot would keep excluding the re-added id
+    # un-delete ONE victim; five markers remain, so the marker dir is
+    # rewritten and the next search must re-pin
     back = victims[0]
     append_to_index(emb.filter(F.col("vec_id") == back), idx)
     got2 = _topk_rows(ann_index_search(spark, idx, queries, 5))
-    assert ix._last_marker_mode == "checkpoint"
-    assert ix._MARKER_SNAP_CACHE[key][0] != sig_before
+    assert ix._ARTIFACT_CACHE[key][0] != sig_before
     assert any(nid == back for _, nid, _, _ in got2)
     assert all(nid not in victims[1:] for _, nid, _, _ in got2)
     # and the round trip equals a rebuild without the still-deleted

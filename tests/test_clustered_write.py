@@ -239,3 +239,28 @@ def test_failed_snapshot_publish_leaves_versions_unchanged(
     assert r2["version"] == 2 and snapshot_versions(spark, table) == [1, 2]
     assert r2["diff"]["added"] == 0 and r2["diff"]["modified"] == 0
     assert r2["diff"]["removed"] == 50 - r2["rows"]
+
+
+def test_snapshot_publish_on_uri_table_dir(spark, sf_dir, tmp_path):
+    """The manifest is read and written through the Hadoop FS API
+    like every other publish step, so a URI table dir (``file://``
+    here; ``hdfs://`` or ``s3a://`` on a cluster) publishes twice,
+    reads back and verifies. The local FS writes a
+    ``._MANIFEST.json.crc`` sidecar beside the manifest: Spark hides
+    it and the verifier lists only ``.parquet`` files."""
+    from big_data_bowl___2023_spark.sources.io import (
+        publish_snapshot,
+        read_snapshot,
+        verify_parquet_manifest,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").limit(40).cache()
+    table = (tmp_path / "corpus").as_uri()
+    assert table.startswith("file://")
+    r1 = publish_snapshot(docs, table)
+    r2 = publish_snapshot(docs.filter(F.col("doc_id") % 2 == 0), table)
+    assert (r1["version"], r2["version"]) == (1, 2)
+    assert r2["diff"]["removed"] == 40 - r2["rows"]
+    assert read_snapshot(spark, table).count() == r2["rows"]
+    for v in (1, 2):
+        assert verify_parquet_manifest(spark, f"{table}/v={v}")["ok"]

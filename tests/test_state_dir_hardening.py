@@ -12,17 +12,17 @@ Contracts under test:
 * `delete_from_index` raises on ids the index id type cannot
   represent instead of writing NULL markers that never match
   (ADVICE r10 low), and drops NULL inputs uncounted;
-* past `DELETE_MARKER_VALUES_CAP` distinct markers, searches switch
-  from the plan-time VALUES list to the eager-localCheckpoint
-  shuffle-hash anti-join with IDENTICAL survivors,
-  `delete_from_index` warns, and `index_cell_stats` flags
-  ``compact_recommended`` (verdict r10 #1 — bounding the one
-  unbounded driver collect);
+* searches anti-join ONE pinned marker snapshot per marker-dir
+  state: a search planned before a marker write collects with the
+  exclusion it was planned with (the plan holds the snapshot's
+  blocks, not the marker files), and searches over unchanged
+  markers reuse the cached snapshot and pin nothing new;
 * review-r11 regressions: ingest batches heal a crashed curated
   compaction swap before appending, and marker reads retry once
   across a concurrent swap window;
-* one directory commit protocol: no package module but
-  ``sources/io.py`` renames through the Hadoop FS API.
+* one directory commit protocol and one Hadoop FS accessor: no
+  package module but ``sources/io.py`` renames through the Hadoop FS
+  API or builds a Hadoop ``Path``/``FileSystem``.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from big_data_bowl___2023_spark.similarity import (
     append_to_index,
     build_ann_index,
     delete_from_index,
-    index_cell_stats,
+    undelete_from_index,
 )
 from big_data_bowl___2023_spark.sources.io import (
     heal_state_dir,
@@ -183,36 +183,6 @@ def test_uncastable_takedown_id_raises(spark, sf_dir, tmp_path):
     assert rep["deleted"] == 2
 
 
-def test_marker_cap_switches_mode_identically(spark, sf_dir,
-                                              tmp_path, monkeypatch):
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    idx = str(tmp_path / "idx")
-    build_ann_index(emb, idx)
-    victims = sorted({nid for _, nid, _, _ in
-                      _topk(spark, idx, queries, k=8)})[:6]
-    assert len(victims) == 6
-
-    # below the cap: the collected-values marker path
-    delete_from_index(spark, idx, victims)
-    want = _topk(spark, idx, queries)
-    assert index_mod._last_marker_mode == "values"
-
-    # past the (shrunken) cap: checkpoint-broadcast mode, identical
-    # survivors, warning on delete, compact_recommended in stats
-    monkeypatch.setattr(index_mod, "DELETE_MARKER_VALUES_CAP", 3)
-    big = ann_index_search(spark, idx, queries, 5)
-    assert index_mod._last_marker_mode == "checkpoint"
-    got = sorted((r["query_id"], r["neighbor_id"], r["cosine"],
-                  r["rank"]) for r in big.collect())
-    assert got == want
-    stats = index_cell_stats(spark, idx)
-    assert stats["pending_deletes"] == len(victims)
-    assert stats["compact_recommended"] is True
-    with pytest.warns(UserWarning, match="DELETE_MARKER_VALUES_CAP"):
-        delete_from_index(spark, idx, [victims[0]])
-
-
 def test_ingest_append_heals_crashed_compaction_swap(spark,
                                                      tmp_path):
     """Review r11: a compact_curated that died between its two
@@ -316,14 +286,19 @@ def test_transient_classifier_on_real_exception_classes(spark,
         FileNotFoundError("genuinely gone"))
 
 
+def _marker_key(spark, idx):
+    """The serving-state cache key of an index's marker snapshot."""
+    return (spark.sparkContext.applicationId,
+            os.path.abspath(f"{idx}/_index_deletes"))
+
+
 def test_overcap_marker_snapshot_cached_per_state(spark, sf_dir,
-                                                  tmp_path,
-                                                  monkeypatch):
-    """ADVICE r11: past the cap, `_minus_deletes` pins ONE marker
-    snapshot per marker-dir STATE and reuses it across searches — a
-    high-QPS serving loop no longer accumulates one localCheckpoint
-    per search. A maintenance write (new marker) changes the dir
-    signature and refreshes the snapshot; survivors track it."""
+                                                  tmp_path):
+    """ADVICE r11: `_minus_deletes` pins ONE marker snapshot per
+    marker-dir STATE and reuses it across searches — a high-QPS
+    serving loop does not accumulate one pin per search. A
+    maintenance write (new marker) changes the dir signature and
+    refreshes the snapshot; survivors track it."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     idx = str(tmp_path / "idx")
@@ -333,18 +308,16 @@ def test_overcap_marker_snapshot_cached_per_state(spark, sf_dir,
                                        exclude_self=False)
                       .collect()})[:6]
     delete_from_index(spark, idx, victims)
-    monkeypatch.setattr(index_mod, "DELETE_MARKER_VALUES_CAP", 3)
     # keyed by (applicationId, path) since review r12 — a pinned
     # snapshot must not outlive its SparkContext
-    key = (spark.sparkContext.applicationId, os.path.abspath(idx))
-    index_mod._MARKER_SNAP_CACHE.pop(key, None)
+    key = _marker_key(spark, idx)
 
     ann_index_search(spark, idx, queries, 5).collect()
-    assert index_mod._last_marker_mode == "checkpoint"
-    sig1, snap1 = index_mod._MARKER_SNAP_CACHE[key]
+    sig1, snap1 = index_mod._ARTIFACT_CACHE[key]
     ann_index_search(spark, idx, queries, 5).collect()
-    sig2, snap2 = index_mod._MARKER_SNAP_CACHE[key]
+    sig2, snap2 = index_mod._ARTIFACT_CACHE[key]
     assert sig2 == sig1 and snap2 is snap1      # reused, not re-pinned
+    assert sorted(r["neighbor_id"] for r in snap1.collect()) == victims
 
     # a new marker changes the state: snapshot refreshes and the
     # freshly-hidden id disappears from the results
@@ -355,19 +328,77 @@ def test_overcap_marker_snapshot_cached_per_state(spark, sf_dir,
     got = {r["neighbor_id"] for r in
            ann_index_search(spark, idx, queries, 5,
                             exclude_self=False).collect()}
-    sig3, snap3 = index_mod._MARKER_SNAP_CACHE[key]
+    sig3, snap3 = index_mod._ARTIFACT_CACHE[key]
     assert sig3 != sig1 and snap3 is not snap1
     assert extra not in got
     for v in victims:
         assert v not in got
-    index_mod._MARKER_SNAP_CACHE.pop(key, None)
 
 
-def test_no_fs_rename_outside_sources_io():
-    """Every live-directory replace and version publish goes through
-    `sources.io` (`staged_replace`, `publish_version`, the heal): a
-    Hadoop FileSystem ``rename(`` anywhere else is a second commit
-    protocol with its own staging names and crash healer."""
+@pytest.mark.parametrize("rewrite", ["delete", "undelete"])
+def test_planned_search_keeps_its_marker_exclusion(spark, sf_dir,
+                                                   tmp_path, rewrite):
+    """A search planned before a marker write collects with the
+    exclusion it was planned with: its plan holds the pinned marker
+    snapshot, not the marker files, so neither `delete_from_index`
+    appending a marker file nor `undelete_from_index` swapping the
+    whole marker dir (staged replace) before the collect tears it or
+    changes its rows. The next search sees the new markers."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    idx = str(tmp_path / "idx")
+    build_ann_index(emb.limit(200), idx)
+    victims = sorted({nid for _, nid, _, _ in
+                      _topk(spark, idx, queries)})[:4]
+    delete_from_index(spark, idx, victims)
+
+    planned = ann_index_search(spark, idx, queries, 5)
+    want = _topk(spark, idx, queries)
+    assert not {nid for _, nid, _, _ in want} & set(victims)
+    if rewrite == "delete":
+        changed = want[0][1]
+        delete_from_index(spark, idx, [changed])
+    else:
+        changed = victims[0]
+        assert undelete_from_index(spark, idx, [changed]) \
+            == {"restored": 1}
+        # three markers remain, so the dir was rewritten and swapped
+        assert read_state_dir(spark, f"{idx}/_index_deletes").count() \
+            == 3
+    got = sorted((r["query_id"], r["neighbor_id"], r["cosine"],
+                  r["rank"]) for r in planned.collect())
+    assert got == want
+    fresh = {nid for _, nid, _, _ in _topk(spark, idx, queries)}
+    assert (changed in fresh) == (rewrite == "undelete")
+
+
+def test_searches_over_unchanged_markers_pin_nothing_new(spark, sf_dir,
+                                                         tmp_path):
+    """A serving loop must not leak persisted blocks: the first
+    search over a marker state pins its snapshot; five more searches
+    over the same markers add no `getPersistentRDDs()` entry."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    idx = str(tmp_path / "idx")
+    build_ann_index(emb.limit(200), idx)
+    victims = sorted({nid for _, nid, _, _ in
+                      _topk(spark, idx, queries)})[:4]
+    delete_from_index(spark, idx, victims)
+    jsc = spark.sparkContext._jsc
+
+    _topk(spark, idx, queries)
+    after_first = set(jsc.getPersistentRDDs().keySet())
+    snap = index_mod._ARTIFACT_CACHE[_marker_key(spark, idx)][1]
+    for _ in range(5):
+        _topk(spark, idx, queries)
+    assert set(jsc.getPersistentRDDs().keySet()) - after_first == set()
+    assert index_mod._ARTIFACT_CACHE[_marker_key(spark, idx)][1] \
+        is snap
+
+
+def _package_lines_outside_io(match):
+    """``path:line`` of every non-comment package line outside
+    ``sources/io.py`` for which ``match(line)`` holds."""
     pkg = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "big_data_bowl___2023_spark")
     allowed = os.path.join(pkg, "sources", "io.py")
@@ -379,9 +410,31 @@ def test_no_fs_rename_outside_sources_io():
                 continue
             with open(path) as fh:
                 for ln, line in enumerate(fh, 1):
-                    if ".rename(" in line \
+                    if match(line) \
                             and not line.lstrip().startswith("#"):
                         offenders.append(f"{path}:{ln}")
+    return offenders
+
+
+def test_no_fs_rename_outside_sources_io():
+    """Every live-directory replace and version publish goes through
+    `sources.io` (`staged_replace`, `publish_version`, the heal): a
+    Hadoop FileSystem ``rename(`` anywhere else is a second commit
+    protocol with its own staging names and crash healer."""
+    offenders = _package_lines_outside_io(lambda line: ".rename(" in line)
     assert not offenders, (
         "FileSystem rename outside sources/io.py: "
+        + ", ".join(offenders))
+
+
+def test_no_hadoop_fs_accessor_outside_sources_io():
+    """`sources.io._fs` is the one place that builds a Hadoop
+    ``Path``/``FileSystem``; every other module asks it (or an io
+    helper) instead of reaching into the JVM by hand."""
+    import re
+
+    pattern = re.compile(r"hadoop\.fs\.(Path|FileSystem)|getFileSystem\(")
+    offenders = _package_lines_outside_io(pattern.search)
+    assert not offenders, (
+        "Hadoop Path/FileSystem built outside sources/io.py: "
         + ", ".join(offenders))

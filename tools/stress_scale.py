@@ -708,27 +708,22 @@ def media_mix_legs(spark, scales) -> None:
 
 
 def marker_legs(spark, emb0, scales) -> None:
-    """Over-cap delete-marker path (verdict r11 #6): the >64k-marker
-    checkpoint+shuffle_hash search path has correctness tests but no
-    scale record. At each scale: build a float index, time a 64-query
-    search (a) with no markers, (b) with 1k markers (VALUES mode),
-    (c) with 110k markers — cold (first search builds the pinned
-    snapshot) and warm (the per-layout snapshot cache reuses it) —
-    then time `compact_index` applying the markers physically and a
-    post-compaction search. Claims under test: the cap's mode switch
-    is the right default (VALUES stays ~free; the over-cap path pays
-    once per marker-dir state, not per search) and compaction returns
-    search to the no-marker floor."""
+    """Delete-marker search path at scale. At each scale: build a
+    float index, time a 64-query search with no markers, with 1k
+    markers and with ~110k markers — cold (the first search pins the
+    marker snapshot) and warm (the cached snapshot is reused) — then
+    time `compact_index` applying the markers physically and a
+    post-compaction search. Claims under test: markers cost one pin
+    per marker-dir state, not one job per search, and compaction
+    returns search to the no-marker floor."""
     import shutil
     import tempfile
-    import warnings
 
     from big_data_bowl___2023_spark.similarity import (
         ann_index_search,
         build_ann_index,
         delete_from_index,
     )
-    from big_data_bowl___2023_spark.similarity import index as im
     from big_data_bowl___2023_spark.streaming.ann_index_stream import (
         compact_index,
     )
@@ -750,39 +745,31 @@ def marker_legs(spark, emb0, scales) -> None:
             build_ann_index(emb, f"{work}/f")
             t_none, rows_none = timed_search(work)
 
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore")  # over-cap advisory
-                delete_from_index(spark, f"{work}/f",
-                                  all_ids.limit(1_000))
-                t_values, _ = timed_search(work)
-                mode_values = im._last_marker_mode
+            delete_from_index(spark, f"{work}/f", all_ids.limit(1_000))
+            t_1k_cold, _ = timed_search(work)
+            t_1k_warm, _ = timed_search(work)
 
-                n_over = min(110_000, max(n - 1_000,
-                                          im.DELETE_MARKER_VALUES_CAP
-                                          + 1_000))
-                delete_from_index(spark, f"{work}/f",
-                                  all_ids.limit(n_over))
-                t_over_cold, rows_over = timed_search(work)
-                mode_over = im._last_marker_mode
-                t_over_warm, _ = timed_search(work)
+            n_many = min(110_000, n - 1_000)
+            delete_from_index(spark, f"{work}/f", all_ids.limit(n_many))
+            t_many_cold, rows_many = timed_search(work)
+            t_many_warm, _ = timed_search(work)
 
-                t0 = time.time()
-                compact_index(spark, f"{work}/f")
-                t_compact = time.time() - t0
+            t0 = time.time()
+            compact_index(spark, f"{work}/f")
+            t_compact = time.time() - t0
             t_after, rows_after = timed_search(work)
         finally:
             shutil.rmtree(work, ignore_errors=True)
         print(json.dumps({
-            "scale": scale, "n_emb": n, "cap":
-                im.DELETE_MARKER_VALUES_CAP,
+            "scale": scale, "n_emb": n,
             "search_rows": rows_none,
             "no_marker_sec": round(t_none, 2),
-            "values_mode": mode_values,
-            "values_1k_sec": round(t_values, 2),
-            "n_markers": n_over, "over_mode": mode_over,
-            "over_cold_sec": round(t_over_cold, 2),
-            "over_warm_sec": round(t_over_warm, 2),
-            "over_rows": rows_over,
+            "markers_1k_cold_sec": round(t_1k_cold, 2),
+            "markers_1k_warm_sec": round(t_1k_warm, 2),
+            "n_markers": n_many,
+            "markers_cold_sec": round(t_many_cold, 2),
+            "markers_warm_sec": round(t_many_warm, 2),
+            "markers_rows": rows_many,
             "compact_apply_sec": round(t_compact, 2),
             "post_compact_sec": round(t_after, 2),
             "post_compact_rows": rows_after,
@@ -803,8 +790,8 @@ def quant_crossover_legs(spark, dims) -> None:
     queries. One JSON line per point with
     the probed-corpus bytes and the quant/float warm ratio; the
     crossover is the first point where the ratio drops below 1.
-    The measured threshold is written into index.py's
-    QUANTIZED_PAYOFF_BYTES note (the r14 PIL-threshold pattern)."""
+    The measured conclusion is stated in the
+    `ann_index_search_quantized` docstring."""
     import shutil
     import statistics
     import tempfile
