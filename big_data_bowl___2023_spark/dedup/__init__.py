@@ -57,7 +57,6 @@ from .clusters import (
 )
 from .bloom import (
     bloom_bytes,
-    bloom_exact_anti_join,
     bloom_parameters,
     bloom_prefilter,
     bloom_summary,
@@ -92,7 +91,7 @@ __all__ = [
     "scrub_repeated_substrings", "scrub_to_fixpoint",
     "canonical_docs", "connected_components", "resolve_clusters",
     "source_overlap_matrix",
-    "bloom_bytes", "bloom_exact_anti_join", "bloom_parameters",
+    "bloom_bytes", "bloom_parameters",
     "bloom_prefilter", "bloom_summary", "merge_blooms",
     "might_contain",
     "contaminated_doc_ids", "contamination_report", "decontaminate",

@@ -12,11 +12,7 @@ bounded bit array with **zero false negatives**: a key the filter has
 never seen always reports "definitely not present", and a key it has
 seen always reports "maybe present" (false positives at a chosen
 rate). So the index compresses to megabytes, broadcasts to every
-executor, and the ingest gate becomes a map-side scan filter. When
-exactness matters, the filter is a *prefilter*: only the "maybe" rows
-(true members + fpr · novel rows) reach the exact anti-join, so the
-join's shuffle shrinks from |batch| to roughly |matches|
-(:func:`bloom_exact_anti_join`).
+executor, and the ingest gate becomes a map-side scan filter.
 
 Spark shape — every stage stays out of Python except bounded
 bit-array folds:
@@ -302,28 +298,3 @@ def bloom_prefilter(df: DataFrame, key_col: str, summary: DataFrame,
     cond = F.col("__maybe") if keep == "maybe" else ~F.col("__maybe")
     return flagged.filter(cond).drop("__maybe")
 
-
-def bloom_exact_anti_join(df: DataFrame, key_col: str,
-                          index: DataFrame, index_key: str,
-                          summary: DataFrame,
-                          broadcast_handle: list | None = None
-                          ) -> DataFrame:
-    """Rows of ``df`` whose key is NOT in ``index`` — EXACTLY the
-    plain anti-join's answer (verified in tests), but the anti-join's
-    shuffle carries only the Bloom "maybe" rows (true members +
-    fpr · novel) instead of the whole batch. ``summary`` must be the
-    filter built over ``index[index_key]``; a stale filter that
-    misses index keys breaks the no-false-negative premise and WILL
-    return rows the index contains. NULL keys keep anti-join
-    semantics: NULL never matches the index, so NULL-key rows
-    survive. ``broadcast_handle`` forwards to :func:`might_contain`
-    for per-micro-batch cleanup."""
-    flagged = might_contain(df, key_col, summary, "__maybe",
-                            broadcast_handle)
-    clear = flagged.filter(F.col("__maybe").isNull()
-                           | ~F.col("__maybe")).drop("__maybe")
-    maybe = flagged.filter(F.col("__maybe")).drop("__maybe")
-    confirmed = maybe.join(
-        index.select(F.col(index_key).alias("__ik")).distinct(),
-        on=F.col(key_col) == F.col("__ik"), how="left_anti")
-    return clear.unionByName(confirmed)

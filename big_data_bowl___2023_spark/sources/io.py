@@ -700,6 +700,34 @@ def read_state_dir(spark: SparkSession, path: str) -> DataFrame | None:
     return None
 
 
+def read_parquet_if_present(spark: SparkSession,
+                            path: str) -> DataFrame | None:
+    """Read a parquet dir, or None ONLY when it is absent or holds no
+    parquet footers yet (the bootstrap states). Every other failure —
+    permissions, torn files, transient storage errors mid-scan —
+    re-raises, so a caller never mistakes 'retry me' for 'nothing
+    established yet' and bootstraps over live state.
+
+    Absence is answered by one ``fs.exists`` RPC before any read
+    planning: letting ``spark.read.parquet`` discover it makes
+    ``FileStreamSink.hasMetadata`` log an 80-line
+    FileNotFoundException WARN stack per probe. An existing dir with
+    no footers surfaces as AnalysisException at read planning; the
+    ``limit(1)`` probe then surfaces runtime scan faults here."""
+    from pyspark.errors import AnalysisException
+
+    fs, P = _fs(spark, path)
+    if not fs.exists(P(path.rstrip("/"))):
+        return None
+    try:
+        spark.catalog.refreshByPath(path)
+        df = spark.read.parquet(path)
+    except AnalysisException:
+        return None
+    df.limit(1).collect()
+    return df
+
+
 def state_dir_signature(spark: SparkSession,
                         path: str) -> tuple | None:
     """(resolved path, mtime, file count, byte length) of the dir

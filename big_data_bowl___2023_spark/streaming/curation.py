@@ -20,12 +20,8 @@ Stream-safe stages (map-side or bounded keyed state):
   fingerprint (state = one entry per distinct fingerprint), or the
   watermark-bounded variant when an event-time column exists;
 * against-history dedup — stream-static LEFT ANTI join on the
-  persisted fingerprint index (no stream-side state buffering);
-  optionally Bloom-gated (dedup/bloom.py): a mergeable filter
-  artifact maintained alongside the index routes "definitely novel"
-  rows around the join map-side, so the exact anti join's shuffle
-  carries only true duplicates + ~fpr of the novel rows — at 100 TB
-  the index probe stops being per-batch full-index work.
+  persisted fingerprint index (no stream-side state buffering; each
+  batch's join reads the whole index).
 
 The row-local stages are the batch chain's gate table
 (``pipelines.curation.curation_gates``, plus the map-side
@@ -51,11 +47,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..dedup.bloom import (
-    bloom_exact_anti_join,
-    bloom_parameters,
-    bloom_summary,
-)
 from ..dedup.decontaminate import DEFAULT_NGRAM
 from ..dedup.ngram import shingle_docs
 from ..functions.redact import redact_documents
@@ -66,43 +57,18 @@ from ..pipelines.curation import (
     drop_lineage,
 )
 from ..session import pin
+from ..sources.io import (
+    drop_state_dir,
+    heal_state_dir,
+    read_parquet_if_present,
+    read_state_dir,
+    replace_state_dir,
+    staged_replace,
+)
 from .dedup_stream import (
     incremental_dedup,
     incremental_dedup_watermarked,
 )
-
-
-def _read_parquet_if_present(spark, path: str) -> DataFrame | None:
-    """Read a parquet dir, or None ONLY when it is genuinely absent
-    or holds no parquet footers yet (the bootstrap states). Every
-    other failure mode — permissions, torn files, transient storage
-    errors mid-scan — re-raises: Spark surfaces dir-absent/empty as
-    AnalysisException at read planning, while transient runtime
-    faults surface as execution errors, so catching only the former
-    cleanly separates 'nothing established yet' from 'retry me'.
-
-    The genuinely-absent case is answered by a Hadoop-FS existence
-    check BEFORE any read planning: letting `spark.read.parquet`
-    discover the absence made `FileStreamSink.hasMetadata` log an
-    80-line WARN stack per bootstrap probe (the unattributed py4j
-    fragment leading BENCH_r15's stderr tail — verdict r15 #6), and
-    a caught exception that still spams the driver log is not a
-    clean probe. One `fs.exists` RPC against the same FileSystem the
-    read would use — object-store-safe, no local-path assumption."""
-    from pyspark.errors import AnalysisException
-
-    from ..sources.io import _fs
-
-    fs, P = _fs(spark, path)
-    if not fs.exists(P(path.rstrip("/"))):
-        return None
-    try:
-        spark.catalog.refreshByPath(path)
-        df = spark.read.parquet(path)
-    except AnalysisException:
-        return None
-    df.limit(1).collect()   # probe the scan; runtime faults raise
-    return df
 
 
 def benchmark_shingle_set(benchmark: DataFrame, n: int = DEFAULT_NGRAM,
@@ -187,9 +153,6 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
                                   min_overlap: int = 1,
                                   bench_text_col: str = "text",
                                   bench_id_col: str = "bench_id",
-                                  bloom_dir: str | None = None,
-                                  bloom_expected_keys: int = 1_000_000,
-                                  bloom_fpr: float = 0.01,
                                   audit_dir: str | None = None,
                                   html_input: bool = False,
                                   lang_keep: list | None = None):
@@ -201,26 +164,12 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
     redeployments, and checkpoint loss), not in stream state.
 
     Within a batch: the stream-safe gates + first-per-fingerprint;
-    across batches: the anti join against the index that the
+    across batches: one ``left_anti`` join against the index that the
     processor itself just updated. The first batch bootstraps both
-    directories. Returns the function to pass to
-    ``stream.writeStream.foreachBatch(...)`` — also directly callable
-    with (batch_df, batch_id) for batch backfills.
-
-    ``bloom_dir`` (optional) turns on the Bloom gate: the loop
-    maintains an APPEND-ONLY dir of per-batch ``bloom_summary``
-    artifacts over the same fingerprints it indexes, and each batch's
-    against-history check becomes :func:`~...dedup.bloom.
-    bloom_exact_anti_join` — same exact answer (zero false negatives;
-    parity-tested), but only the filter's "maybe" rows reach the
-    index join. Appends never rewrite old artifact rows (OR is
-    idempotent; ``bloom_bytes`` folds duplicate words). Sizing is
-    fixed at bootstrap from ``bloom_expected_keys``/``bloom_fpr`` —
-    size for the corpus's LIFETIME distinct-fingerprint count, not
-    one batch (an overfull filter degrades to more "maybe" rows, i.e.
-    gradually back to plain anti-join cost, never to wrong answers).
-    A pre-existing index without a filter is bootstrapped by one full
-    index scan on the first gated batch.
+    directories; a read failure on an established index raises (the
+    batch retries) instead of bootstrapping. Returns the function to
+    pass to ``stream.writeStream.foreachBatch(...)`` — also directly
+    callable with (batch_df, batch_id) for batch backfills.
 
     ``audit_dir`` (optional, verdict r11 #8) makes every micro-batch
     also emit its per-doc first-dropping-stage lineage — the
@@ -255,32 +204,13 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
                 bench_text_col, bench_id_col, html_input, lang_keep))
         return gate_table
 
-    def _read_bloom_dir(spark):
-        """(artifact df | None, dir params | None). Params come from
-        the DIR whenever it exists — never from the constructor args
-        once a dir is established — so a bootstrap append can only
-        ever happen against a genuinely absent dir. A transient read
-        failure on an established dir RE-RAISES (the batch retries)
-        instead of masquerading as dir-absent, which would append
-        constructor-parameter summaries into a dir built with
-        different parameters and brick every later batch."""
-        df = _read_parquet_if_present(spark, bloom_dir)
-        if df is None:
-            return None, None
-        p = df.select("num_bits", "num_hashes").distinct().collect()
-        if len(p) != 1:
-            raise ValueError(
-                f"bloom dir {bloom_dir} mixes filter parameters "
-                f"{p}; it is not a single loop's artifact dir")
-        return df, (int(p[0]["num_bits"]), int(p[0]["num_hashes"]))
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # one maintenance writer per curated corpus: the batch holds
         # the out_dir lease (which by convention covers the paired
-        # fingerprint index + bloom dirs — they always travel
-        # together) so a racing snapshot-diff apply or compaction
-        # fails loudly instead of interleaving (verdict r10 #2)
+        # fingerprint index — they always travel together) so a
+        # racing snapshot-diff apply or compaction fails loudly
+        # instead of interleaving (verdict r10 #2)
         from ..sources.lease import writer_lease
 
         with writer_lease(spark, out_dir,
@@ -294,43 +224,11 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
         # append would recreate a fresh out_dir holding only this
         # batch, and the next compaction would drop the parked
         # pre-crash corpus as a stale __bak
-        from ..sources.io import heal_state_dir
-
         heal_state_dir(spark, out_dir)
         # dir-absent → bootstrap; any OTHER read failure raises (a
         # transient error treated as 'no history' would silently
         # admit every duplicate in this batch)
-        history = _read_parquet_if_present(spark, index_dir)
-        history_bloom = None
-        bloom_params = None
-        if bloom_dir is not None:
-            history_bloom, dir_params = _read_bloom_dir(spark)
-            bloom_params = dir_params or bloom_parameters(
-                bloom_expected_keys, bloom_fpr)
-            if history is not None and history_bloom is None:
-                # index exists but no filter yet: bootstrap from the
-                # full index once, so the no-false-negative premise
-                # holds from the first gated batch. bloom_params
-                # stays the tuple just written — no second parameter
-                # inference to drift from the write. Gate first
-                # (review r12): this is a durable append inside the
-                # leased scope — a zombie batch appending summaries
-                # built with its OWN constructor parameters into a
-                # successor's rebuilt dir would make every later
-                # batch's _read_bloom_dir raise "mixes filter
-                # parameters"
-                from ..sources.lease import commit_gate
-
-                commit_gate(spark, out_dir,
-                            "curation ingest bloom bootstrap")
-                bloom_summary(history, "fingerprint",
-                              *bloom_params) \
-                    .write.mode("append").parquet(bloom_dir)
-                spark.catalog.refreshByPath(bloom_dir)
-                history_bloom = spark.read.parquet(bloom_dir)
-            if history is None:
-                history_bloom = None    # nothing to gate against
-        probe_bcs: list = []
+        history = read_parquet_if_present(spark, index_dir)
         boundaries: dict = {}
 
         def capture(key: str, frame: DataFrame) -> DataFrame:
@@ -348,62 +246,37 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
             boundaries[key] = frame
             return frame
 
-        try:
-            gates = _gates()
-            curated = pin(_stream_chain(
-                batch_df, gates, history=history,
-                history_bloom=history_bloom,
-                broadcast_handle=probe_bcs,
-                stage_hook=capture if audit_dir is not None else None),
-                truncate=True)
-            # the pin above IS the last boundary's materialization —
-            # hand it to the lineage so its joins never re-run the
-            # dedup/anti-join suffix
-            boundaries["after_history_dedup" if history is not None
-                       else "after_stream_dedup"] = curated
-            # renew-or-abort immediately before the batch's first
-            # durable write (verdict r11 #1): a batch stalled past
-            # the TTL must not append beside a new writer
-            from ..sources.lease import commit_gate
+        gates = _gates()
+        curated = pin(_stream_chain(
+            batch_df, gates, history=history,
+            stage_hook=capture if audit_dir is not None else None),
+            truncate=True)
+        # the pin above IS the last boundary's materialization — hand
+        # it to the lineage so its joins never re-run the dedup/anti-
+        # join suffix
+        boundaries["after_history_dedup" if history is not None
+                   else "after_stream_dedup"] = curated
+        # renew-or-abort immediately before the batch's first durable
+        # write (verdict r11 #1): a batch stalled past the TTL must
+        # not append beside a new writer
+        from ..sources.lease import commit_gate
 
-            commit_gate(spark, out_dir,
-                        f"curation_ingest_batch_{batch_id} publish")
-            curated.drop("fingerprint").write.mode("append") \
-                .parquet(out_dir)
-            # the dedup key is already attached (post-redaction text
-            # fingerprint, consistent across batches) — index it
-            # as-is. APPEND ORDER IS LOAD-BEARING: the filter goes
-            # first so a crash between the two writes leaves the
-            # filter AHEAD of the index (harmless: "maybe" rows
-            # still hit the exact join) — never BEHIND it, which
-            # would silently admit duplicates forever after.
-            new_fps = curated.select("fingerprint").distinct()
-            if bloom_dir is not None:
-                # consumed twice (filter summary + index append):
-                # pin so the distinct runs once. ``curated`` is
-                # already a truncated pin, so the lineage below this
-                # point never reaches the target paths either way —
-                # with a single consumer (no bloom gate) the pin is
-                # one whole materialization job of pure overhead per
-                # batch and the write below consumes the distinct
-                # directly.
-                new_fps = pin(new_fps, truncate=True)
-                bloom_summary(new_fps, "fingerprint", *bloom_params) \
-                    .write.mode("append").parquet(bloom_dir)
-            new_fps.write.mode("append").parquet(index_dir)
-            if audit_dir is not None:
-                # per-batch OVERWRITE into batch=N: a replayed batch
-                # rewrites identical lineage (idempotent); distinct
-                # batches never touch each other's subdirs
-                drop_lineage(batch_df, gates, boundaries) \
-                    .write.mode("overwrite") \
-                    .parquet(f"{audit_dir}/batch={batch_id}")
-        finally:
-            # per-batch probe broadcasts (MB-scale dense filters)
-            # are freed eagerly, not left to driver GC — a stream
-            # processes thousands of batches
-            for bc in probe_bcs:
-                bc.unpersist(blocking=False)
+        commit_gate(spark, out_dir,
+                    f"curation_ingest_batch_{batch_id} publish")
+        curated.drop("fingerprint").write.mode("append").parquet(out_dir)
+        # the dedup key is already attached (post-redaction text
+        # fingerprint, consistent across batches) — index it as-is.
+        # The append is the distinct's only consumer, so it is not
+        # pinned: ``curated`` is already a truncated pin.
+        curated.select("fingerprint").distinct() \
+            .write.mode("append").parquet(index_dir)
+        if audit_dir is not None:
+            # per-batch OVERWRITE into batch=N: a replayed batch
+            # rewrites identical lineage (idempotent); distinct
+            # batches never touch each other's subdirs
+            drop_lineage(batch_df, gates, boundaries) \
+                .write.mode("overwrite") \
+                .parquet(f"{audit_dir}/batch={batch_id}")
 
     return process
 
@@ -455,8 +328,6 @@ def curate_document_stream(stream_docs: DataFrame,
                            dedup_delay: str | None = None,
                            bench_text_col: str = "text",
                            bench_id_col: str = "bench_id",
-                           history_bloom: DataFrame | None = None,
-                           broadcast_handle: list | None = None,
                            html_input: bool = False,
                            lang_keep: list | None = None,
                            stage_hook=None,
@@ -484,12 +355,6 @@ def curate_document_stream(stream_docs: DataFrame,
     packing) intentionally have no streaming analogue — run the batch
     pipeline periodically over this stream's accumulated output.
 
-    ``history_bloom`` (a dedup/bloom.py artifact covering EVERY
-    fingerprint in ``history`` — a stale filter breaks the
-    no-false-negative premise) upgrades the against-history anti join
-    to the Bloom-gated exact form: identical answer, join shuffle
-    bounded by the "maybe" rows.
-
     ``stage_hook(key, frame)`` — the hook protocol of
     :func:`pipelines.curation.curation_frame` (verdict r11 #8):
     called at ``stream_input``, ``curation_flags``, every gate view
@@ -509,13 +374,11 @@ def curate_document_stream(stream_docs: DataFrame,
                          bench_id_col, html_input, lang_keep,
                          bench_shingles)
     return _stream_chain(stream_docs, gates, history, ts_col,
-                         dedup_delay, history_bloom, broadcast_handle,
-                         stage_hook)
+                         dedup_delay, stage_hook)
 
 
 def _stream_chain(docs: DataFrame, gates, history=None, ts_col=None,
-                  dedup_delay=None, history_bloom=None,
-                  broadcast_handle=None, stage_hook=None) -> DataFrame:
+                  dedup_delay=None, stage_hook=None) -> DataFrame:
     """The chain behind :func:`curate_document_stream` over a built
     gate table — the ingest loop calls it with the table it built
     once."""
@@ -528,13 +391,8 @@ def _stream_chain(docs: DataFrame, gates, history=None, ts_col=None,
     else:
         out = hook("after_stream_dedup", incremental_dedup(out))
     if history is not None:
-        if history_bloom is not None:
-            out = bloom_exact_anti_join(out, "fingerprint", history,
-                                        "fingerprint", history_bloom,
-                                        broadcast_handle)
-        else:
-            out = out.join(history, "fingerprint", "left_anti")
-        out = hook("after_history_dedup", out)
+        out = hook("after_history_dedup",
+                   out.join(history, "fingerprint", "left_anti"))
     return out
 
 
@@ -563,7 +421,6 @@ def read_curated(spark, out_dir: str) -> DataFrame:
     shuffle; tombstones are diff-sized and broadcast), matching the
     physical-rewrite semantics `compact_curated` applies later."""
     from ..dedup.exact import fingerprint_docs
-    from ..sources.io import read_state_dir
 
     corpus = spark.read.parquet(out_dir)
     tombs = read_state_dir(spark, _tombstone_dir(out_dir))
@@ -597,12 +454,6 @@ def compact_curated(spark, out_dir: str) -> dict:
 
 
 def _compact_curated_unlocked(spark, out_dir):
-    from ..sources.io import (
-        drop_state_dir,
-        heal_state_dir,
-        read_state_dir,
-        staged_replace,
-    )
     from ..sources.lease import commit_gate
 
     # heal a prior hard kill mid-swap BEFORE the read, or the rerun
@@ -757,7 +608,7 @@ def _apply_snapshot_diff_unlocked(spark, old_docs, new_docs, out_dir,
     # mutates the visible state.
     already_current = None
     if ann_index_dirs and counts.get("modified", 0) > 0 \
-            and _read_parquet_if_present(spark, out_dir) is not None:
+            and read_parquet_if_present(spark, out_dir) is not None:
         # broadcast the mod-id side only while the already-known
         # count proves it driver-safe (review r11 fourth pass: a
         # forced broadcast of an unbounded modified set OOMs the
@@ -783,13 +634,6 @@ def _apply_snapshot_diff_unlocked(spark, old_docs, new_docs, out_dir,
     tombstones = pin(old_fp.join(noop, "doc_id", "left_anti"),
                      truncate=True)
     n_tomb = tombstones.count()
-
-    from ..sources.io import (
-        drop_state_dir,
-        heal_state_dir,
-        read_state_dir,
-        replace_state_dir,
-    )
 
     tomb_dir = _tombstone_dir(out_dir)
     # renew-or-abort before the first writer action (verdict r11

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..dedup import minhash as MH
 from ..dedup.ngram import shingle_docs
 from ..functions import text as Tx
+from ..session import pin
 
 
 def _stage_dir(sf_dir: str, name: str) -> str:
@@ -130,11 +131,15 @@ def incremental_minhash_pairs(new_docs: DataFrame, corpus: DataFrame,
     with the corpus docs it near-duplicates, for route-to-reject or
     cluster-attach downstream. Pairs are cross-side only by
     construction; same-side dups are ``incremental_dedup`` (exact) or
-    the batch stack run once over the small batch."""
-    sh_new = shingle_docs(new_docs).cache()
-    sh_old = shingle_docs(corpus).cache()
-    sig_new = _signatures_from_shingles(sh_new, num_perms).cache()
-    sig_old = _signatures_from_shingles(sh_old, num_perms).cache()
+    the batch stack run once over the small batch.
+
+    The shingle and signature tables are each read twice (banding and
+    verification), so each is pinned; the pins free their blocks when
+    the returned frame is garbage-collected."""
+    sh_new = pin(shingle_docs(new_docs))
+    sh_old = pin(shingle_docs(corpus))
+    sig_new = pin(_signatures_from_shingles(sh_new, num_perms))
+    sig_old = pin(_signatures_from_shingles(sh_old, num_perms))
 
     bn = MH._band_df(sig_new, num_perms, bands)
     bo = MH._band_df(sig_old, num_perms, bands)

@@ -66,20 +66,18 @@ def foreach_batch_upsert(stream: DataFrame, table_dir: str,
                          checkpoint: str):
     """Start a streaming query that MERGES each micro-batch into a
     partitioned parquet table (first batch bootstraps the table).
-    Returns the StreamingQuery; callers trigger/await as usual."""
-    from ..sources.io import upsert_partitioned
+    Only an absent table bootstraps: any other read failure fails the
+    batch (and the query) with the table untouched, never an
+    overwrite. Returns the StreamingQuery; callers trigger/await as
+    usual."""
+    from ..sources.io import read_parquet_if_present, upsert_partitioned
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         # dedupe within the batch: last row per key wins is not
         # defined without order, so keep max by partition+key insert
         batch = batch.dropDuplicates(key_cols)
-        try:
-            spark.read.parquet(table_dir).limit(1).collect()
-            exists = True
-        except Exception:
-            exists = False
-        if not exists:
+        if read_parquet_if_present(spark, table_dir) is None:
             (batch.write.mode("overwrite")
              .partitionBy(partition_col).parquet(table_dir))
         else:

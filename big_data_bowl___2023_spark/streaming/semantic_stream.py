@@ -57,7 +57,7 @@ from ..dedup.semantic import (
     scaled_k,
 )
 from ..session import pin
-from .curation import _read_parquet_if_present
+from ..sources.io import read_parquet_if_present
 
 __all__ = ["compact_semantic_corpus", "make_semantic_ingest_batch_fn",
            "pairs_with_centroids"]
@@ -112,7 +112,7 @@ def _compact_semantic_unlocked(spark, out_dir, codebook_path,
     dropped_dir = out_dir.rstrip("/") + "_dropped"
     heal_state_dir(spark, out_dir)
     heal_state_dir(spark, dropped_dir)
-    corpus = _read_parquet_if_present(spark, out_dir)
+    corpus = read_parquet_if_present(spark, out_dir)
     if corpus is None:
         return {"before": 0, "after": 0, "dropped": 0}
     corpus = pin(corpus)
@@ -147,7 +147,7 @@ def _compact_semantic_unlocked(spark, out_dir, codebook_path,
             # union is strictly safe.
             new_drops = corpus.join(kept.select(id_col), id_col,
                                     "left_anti").select(id_col)
-            old_idx = _read_parquet_if_present(spark, dropped_dir)
+            old_idx = read_parquet_if_present(spark, dropped_dir)
             if old_idx is not None:
                 new_drops = new_drops.unionByName(
                     old_idx.select(id_col)).distinct()
@@ -186,15 +186,15 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
     ``stream.writeStream.foreachBatch(...)`` — also directly callable
     with (batch_df, batch_id) for batch backfills.
 
-    Write ordering is load-bearing, like the curation loop's
-    bloom-before-index rule: codebook before corpus at bootstrap (a
-    crash between leaves a codebook with no corpus — harmless,
-    re-bootstrap overwrites — never a corpus whose boundaries would
-    silently retrain), and dropped-ids before corpus on every batch
-    (a crash between leaves dropped ids recorded with no survivors —
-    the replay then re-admits the SAME survivor set, deterministic —
-    never survivors without their dropped witnesses, which would
-    re-adjudicate the remainder against a witness-less corpus).
+    Write ordering is load-bearing: codebook before corpus at
+    bootstrap (a crash between leaves a codebook with no corpus —
+    harmless, re-bootstrap overwrites — never a corpus whose
+    boundaries would silently retrain), and dropped-ids before corpus
+    on every batch (a crash between leaves dropped ids recorded with
+    no survivors — the replay then re-admits the SAME survivor set,
+    deterministic — never survivors without their dropped witnesses,
+    which would re-adjudicate the remainder against a witness-less
+    corpus).
 
     The per-batch gather broadcasts of every pairing stage are freed
     eagerly after the writes (a stream processes thousands of
@@ -239,7 +239,7 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
 
         heal_state_dir(spark, out_dir)
         heal_state_dir(spark, dropped_dir)
-        corpus = _read_parquet_if_present(spark, out_dir)
+        corpus = read_parquet_if_present(spark, out_dir)
         bcs: list = []
         try:
             if corpus is None:
@@ -277,7 +277,7 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
             # precondition)
             fresh = batch_df.join(corpus.select(id_col), id_col,
                                   "left_anti")
-            dropped_idx = _read_parquet_if_present(spark, dropped_dir)
+            dropped_idx = read_parquet_if_present(spark, dropped_dir)
             if dropped_idx is not None:
                 fresh = fresh.join(dropped_idx.select(id_col),
                                    id_col, "left_anti")

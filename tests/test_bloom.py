@@ -10,7 +10,6 @@ Contracts under test:
 * partitioning invariance — the artifact does not depend on layout;
 * parquet round trip of the sparse artifact;
 * probe plan is map-side: no Exchange introduced by might_contain;
-* bloom_exact_anti_join == plain anti-join, exactly, incl. NULL keys;
 * NULL-key three-valued logic and prefilter routing.
 """
 
@@ -23,7 +22,6 @@ from big_data_bowl___2023_spark.dedup.bloom import (
     BloomParams,
     MAX_BITS,
     bloom_bytes,
-    bloom_exact_anti_join,
     bloom_parameters,
     bloom_prefilter,
     bloom_summary,
@@ -170,33 +168,6 @@ def test_probe_plan_is_map_side(spark):
     assert "ArrowEvalPython" in plan
 
 
-def test_bloom_exact_anti_join_matches_plain(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select("doc_id", "text")
-    # index = an arbitrary half of the corpus by id hash, plus the
-    # batch carries a NULL-key row that must survive (anti-join
-    # semantics: NULL never matches)
-    index = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0) \
-        .select(F.col("doc_id").alias("seen_id"))
-    batch = docs.union(
-        spark.createDataFrame([(None, "null-key row")],
-                              docs.schema))
-    n_index = index.count()
-    assert n_index > 0
-    params = bloom_parameters(max(n_index, 10), 0.01)
-    summary = bloom_summary(index, "seen_id", *params)
-
-    via_bloom = bloom_exact_anti_join(batch, "doc_id", index,
-                                      "seen_id", summary)
-    plain = batch.join(index,
-                       batch["doc_id"] == index["seen_id"],
-                       "left_anti")
-    got = {(r["doc_id"], r["text"]) for r in via_bloom.collect()}
-    want = {(r["doc_id"], r["text"]) for r in plain.collect()}
-    assert got == want
-    assert (None, "null-key row") in got
-
-
 def test_append_only_artifact_dir_equals_merged(spark, tmp_path):
     """bloom_bytes over a plain UNION of per-batch artifacts (the
     append-only parquet-dir maintenance mode: each batch appends its
@@ -205,7 +176,7 @@ def test_append_only_artifact_dir_equals_merged(spark, tmp_path):
     params = bloom_parameters(2000, 0.01)
     a = _members(spark, 1000, "a")
     b = _members(spark, 1000, "b")
-    path = str(tmp_path / "bloom_dir")
+    path = str(tmp_path / "bloom_artifacts")
     bloom_summary(a, "k", *params).write.mode("append").parquet(path)
     bloom_summary(b, "k", *params).write.mode("append").parquet(path)
     appended = spark.read.parquet(path)

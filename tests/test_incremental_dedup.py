@@ -87,3 +87,21 @@ def test_incremental_minhash_matches_full_cross_pairs(spark, sf_dir):
         for r in full if (r.doc_a % 2) != (r.doc_b % 2)}
     assert inc == expected
     assert len(inc) > 0
+
+
+def test_incremental_minhash_leaves_no_cached_relations(spark, sf_dir):
+    """Repeated calls (one per ingest batch) register nothing with the
+    session's cache manager — the intermediates are pinned, not
+    ``.cache()``d and forgotten — and return the same pairs."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    corpus = docs.filter(F.col("doc_id") % 2 == 0)
+    new = docs.filter(F.col("doc_id") % 2 == 1)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+
+    runs = [{tuple(r) for r in
+             incremental_minhash_pairs(new, corpus, THRESHOLD).collect()}
+            for _ in range(2)]
+
+    assert cache.cachedData().size() == before
+    assert runs[0] == runs[1] and len(runs[0]) > 0

@@ -206,209 +206,15 @@ def test_curation_ingest_loop_multi_batch(spark, tmp_path):
     assert idx.distinct().count() == 3     # no duplicate index rows
 
 
-def test_curation_ingest_loop_bloom_gated_parity(spark, tmp_path):
-    """The Bloom-gated ingest loop emits EXACTLY the same corpus as
-    the plain loop (zero false negatives -> identical suppression),
-    while maintaining an append-only filter-artifact dir alongside
-    the index (one summary per batch + nothing rewritten)."""
-    from big_data_bowl___2023_spark.streaming import (
-        make_curation_ingest_batch_fn,
-    )
-
-    base = ("a perfectly ordinary paragraph with enough distinct "
-            "words to pass the quality gate and contribute value "
-            "to the corpus in every measurable way today")
-    batches = [
-        [(1, "first " + base, "web"), (2, "second " + base, "web")],
-        [(3, "first " + base, "web"),     # cross-batch dup of 1
-         (4, "third " + base, "web")],    # novel
-        [(5, "second " + base, "web"),    # cross-batch dup of 2
-         (6, "third " + base, "web")],    # cross-batch dup of 4
-    ]
-    plain = make_curation_ingest_batch_fn(
-        str(tmp_path / "p_docs"), str(tmp_path / "p_idx"),
-        min_words=20)
-    gated = make_curation_ingest_batch_fn(
-        str(tmp_path / "g_docs"), str(tmp_path / "g_idx"),
-        min_words=20, bloom_dir=str(tmp_path / "g_bloom"),
-        bloom_expected_keys=1000, bloom_fpr=0.01)
-    for i, rows in enumerate(batches):
-        b = spark.createDataFrame(rows, ["doc_id", "text", "source"])
-        plain(b, i)
-        gated(b, i)
-    for d in ("p_docs", "g_docs", "p_idx", "g_idx", "g_bloom"):
-        spark.catalog.refreshByPath(str(tmp_path / d))
-    p_ids = {r.doc_id for r in
-             spark.read.parquet(str(tmp_path / "p_docs")).collect()}
-    g_ids = {r.doc_id for r in
-             spark.read.parquet(str(tmp_path / "g_docs")).collect()}
-    assert p_ids == g_ids == {1, 2, 4}
-    # index parity too
-    p_fp = {r.fingerprint for r in
-            spark.read.parquet(str(tmp_path / "p_idx")).collect()}
-    g_fp = {r.fingerprint for r in
-            spark.read.parquet(str(tmp_path / "g_idx")).collect()}
-    assert p_fp == g_fp and len(g_fp) == 3
-    # the filter artifact covers every indexed fingerprint
-    from big_data_bowl___2023_spark.dedup.bloom import might_contain
-    bloom = spark.read.parquet(str(tmp_path / "g_bloom"))
-    idx = spark.read.parquet(str(tmp_path / "g_idx"))
-    import pyspark.sql.functions as F
-    assert might_contain(idx, "fingerprint", bloom, "hit") \
-        .filter(~F.col("hit")).count() == 0
-
-
-def test_bloom_gate_bootstraps_from_existing_index(spark, tmp_path):
-    """Turning the Bloom gate on over an index built WITHOUT one:
-    the first gated batch scans the index once to build the filter,
-    so cross-batch duplicates of the pre-gate era are still
-    suppressed (the no-false-negative premise holds from batch 1 of
-    the gated loop)."""
-    from big_data_bowl___2023_spark.streaming import (
-        make_curation_ingest_batch_fn,
-    )
-
-    base = ("a perfectly ordinary paragraph with enough distinct "
-            "words to pass the quality gate and contribute value "
-            "to the corpus in every measurable way today")
-    out_dir = str(tmp_path / "docs")
-    idx_dir = str(tmp_path / "index")
-    bloom_dir = str(tmp_path / "bloom")
-    pre = make_curation_ingest_batch_fn(out_dir, idx_dir,
-                                        min_words=20)
-    pre(spark.createDataFrame(
-        [(1, "first " + base, "web")],
-        ["doc_id", "text", "source"]), 0)
-    assert not (tmp_path / "bloom").exists()
-
-    gated = make_curation_ingest_batch_fn(
-        out_dir, idx_dir, min_words=20, bloom_dir=bloom_dir,
-        bloom_expected_keys=1000)
-    gated(spark.createDataFrame(
-        [(2, "first " + base, "web"),     # dup of pre-gate doc 1
-         (3, "second " + base, "web")],   # novel
-        ["doc_id", "text", "source"]), 1)
-    spark.catalog.refreshByPath(out_dir)
-    ids = {r.doc_id for r in
-           spark.read.parquet(out_dir).collect()}
-    assert ids == {1, 3}
-    assert (tmp_path / "bloom").exists()
-
-
-def test_bloom_dir_params_survive_index_read_failure(spark, tmp_path):
-    """A transient index-read failure must NOT make the loop append
-    summaries sized from the constructor args: once a bloom dir
-    exists, its own parameters win. Simulated by deleting the index
-    dir (the read fails exactly like a transient IO error) while
-    running a loop constructed with DIFFERENT sizing."""
-    import shutil
-
-    from big_data_bowl___2023_spark.streaming import (
-        make_curation_ingest_batch_fn,
-    )
-
-    base = ("a perfectly ordinary paragraph with enough distinct "
-            "words to pass the quality gate and contribute value "
-            "to the corpus in every measurable way today")
-    out_dir = str(tmp_path / "docs")
-    idx_dir = str(tmp_path / "index")
-    bloom_dir = str(tmp_path / "bloom")
-    gated = make_curation_ingest_batch_fn(
-        out_dir, idx_dir, min_words=20, bloom_dir=bloom_dir,
-        bloom_expected_keys=1000)
-    gated(spark.createDataFrame(
-        [(1, "first " + base, "web")],
-        ["doc_id", "text", "source"]), 0)
-    spark.catalog.refreshByPath(bloom_dir)
-    params0 = spark.read.parquet(bloom_dir) \
-        .select("num_bits", "num_hashes").distinct().collect()
-    assert len(params0) == 1
-
-    shutil.rmtree(idx_dir)            # the "transient" failure
-    other = make_curation_ingest_batch_fn(
-        out_dir, idx_dir, min_words=20, bloom_dir=bloom_dir,
-        bloom_expected_keys=50_000)   # different sizing args
-    other(spark.createDataFrame(
-        [(2, "second " + base, "web")],
-        ["doc_id", "text", "source"]), 1)
-    spark.catalog.refreshByPath(bloom_dir)
-    params1 = spark.read.parquet(bloom_dir) \
-        .select("num_bits", "num_hashes").distinct().collect()
-    assert params1 == params0         # dir params won; no mixing
-
-
-def test_bloom_write_precedes_index_write(spark, tmp_path, monkeypatch):
-    """Append order is load-bearing: the filter write lands BEFORE
-    the index write, so a crash between the two leaves the filter
-    AHEAD of the index (harmless: "maybe" rows still hit the exact
-    join) rather than behind it (silent permanent duplicate
-    admission). Simulated by injecting a failure into exactly the
-    INDEX append (round 8: the old simulation corrupted the index
-    dir on disk, which the now-strict history read correctly refuses
-    up-front — before any append): the filter dir must already
-    contain the failed batch's bits."""
-    import numpy as np
-    import pytest
-
-    from big_data_bowl___2023_spark.dedup.bloom import bloom_bytes
-    from big_data_bowl___2023_spark.streaming import (
-        make_curation_ingest_batch_fn,
-    )
-
-    base = ("a perfectly ordinary paragraph with enough distinct "
-            "words to pass the quality gate and contribute value "
-            "to the corpus in every measurable way today")
-    out_dir = str(tmp_path / "docs")
-    idx_dir = str(tmp_path / "index")
-    bloom_dir = str(tmp_path / "bloom")
-    gated = make_curation_ingest_batch_fn(
-        out_dir, idx_dir, min_words=20, bloom_dir=bloom_dir,
-        bloom_expected_keys=1000)
-    gated(spark.createDataFrame(
-        [(1, "first " + base, "web")],
-        ["doc_id", "text", "source"]), 0)
-    spark.catalog.refreshByPath(bloom_dir)
-    before, _ = bloom_bytes(spark.read.parquet(bloom_dir))
-    bits_before = int(np.unpackbits(
-        np.frombuffer(before, dtype=np.uint8)).sum())
-
-    # crash exactly the INDEX append of batch 1 — the bloom append
-    # (which lands first by design) must already be durable
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    orig = DataFrameWriter.parquet
-
-    def crash_index(self, path, *a, **kw):
-        if idx_dir in str(path):
-            raise RuntimeError("injected index-append crash")
-        return orig(self, path, *a, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", crash_index)
-    with pytest.raises(RuntimeError, match="injected index-append"):
-        gated(spark.createDataFrame(
-            [(2, "second " + base, "web")],
-            ["doc_id", "text", "source"]), 1)
-    monkeypatch.undo()
-
-    # the filter is AHEAD: batch 1's fingerprint bits are already in
-    # the dir (single-parameter, densifiable) despite the index crash
-    spark.catalog.refreshByPath(bloom_dir)
-    after, _ = bloom_bytes(spark.read.parquet(bloom_dir))
-    bits_after = int(np.unpackbits(
-        np.frombuffer(after, dtype=np.uint8)).sum())
-    assert bits_after > bits_before
-
-
-def test_transient_bloom_read_failure_raises_not_bootstraps(
+def test_transient_index_read_failure_raises_not_bootstraps(
         spark, tmp_path, monkeypatch):
-    """Round-8 ADVICE #1: a transient read failure on an ESTABLISHED
-    bloom dir must fail the batch (foreachBatch retries it), never be
-    treated as dir-absent — that path appended constructor-parameter
-    summaries into a dir built with different parameters, mixing the
-    dir forever. Injects a runtime fault on exactly the bloom-dir
-    read and asserts the batch raises, nothing was appended, and the
-    dir still holds one parameter set."""
-    import glob
+    """A transient read failure on an ESTABLISHED fingerprint index
+    must fail the batch (foreachBatch retries it), never be treated
+    as index-absent — that would bootstrap and silently admit every
+    duplicate in the batch. Injects a runtime fault on exactly the
+    index read and asserts the batch raises and neither the corpus
+    nor the index dir gained or lost a file."""
+    import os
 
     from pyspark.sql.readwriter import DataFrameReader
 
@@ -421,35 +227,81 @@ def test_transient_bloom_read_failure_raises_not_bootstraps(
             "to the corpus in every measurable way today")
     out_dir = str(tmp_path / "docs")
     idx_dir = str(tmp_path / "index")
-    bloom_dir = str(tmp_path / "bloom")
-    gated = make_curation_ingest_batch_fn(
-        out_dir, idx_dir, min_words=20, bloom_dir=bloom_dir,
-        bloom_expected_keys=1000)
-    gated(spark.createDataFrame(
+    process = make_curation_ingest_batch_fn(out_dir, idx_dir,
+                                            min_words=20)
+    process(spark.createDataFrame(
         [(1, "first " + base, "web")],
         ["doc_id", "text", "source"]), 0)
-    files_before = sorted(glob.glob(f"{bloom_dir}/*.parquet"))
-    assert files_before
+    files_before = (sorted(os.listdir(out_dir)),
+                    sorted(os.listdir(idx_dir)))
+    assert any(f.endswith(".parquet") for f in files_before[1])
 
     orig = DataFrameReader.parquet
 
     def flaky(self, *paths, **kw):
-        if any(bloom_dir in str(p) for p in paths):
+        if any(idx_dir in str(p) for p in paths):
             raise RuntimeError("injected transient storage failure")
         return orig(self, *paths, **kw)
 
     monkeypatch.setattr(DataFrameReader, "parquet", flaky)
     with pytest.raises(RuntimeError, match="injected transient"):
-        gated(spark.createDataFrame(
-            [(2, "second " + base, "web")],
+        process(spark.createDataFrame(
+            [(1, "first " + base, "web"),      # history duplicate
+             (2, "second " + base, "web")],
             ["doc_id", "text", "source"]), 1)
     monkeypatch.undo()
 
-    assert sorted(glob.glob(f"{bloom_dir}/*.parquet")) == files_before
-    spark.catalog.refreshByPath(bloom_dir)
-    params = spark.read.parquet(bloom_dir) \
-        .select("num_bits", "num_hashes").distinct().collect()
-    assert len(params) == 1           # no bootstrap append, no mix
+    assert (sorted(os.listdir(out_dir)),
+            sorted(os.listdir(idx_dir))) == files_before
+
+
+# Spark jobs one batch against history runs, as measured on the
+# fixture below (and per batch by perfbench's stream_ingest): two for
+# the history read (schema, probe), three for the curated pin (its
+# two shuffles and the checkpoint), one for the corpus append, two
+# for the index distinct + append. A new per-batch stage fails here.
+BATCH_JOBS = 8
+
+
+def test_ingest_batch_against_history_job_count(spark, tmp_path):
+    """The loop's per-batch work, pinned: after a bootstrap batch,
+    one batch against history runs at most ``BATCH_JOBS`` Spark jobs
+    (read by job group from the status tracker) and keeps the
+    expected docs."""
+    from big_data_bowl___2023_spark.streaming import (
+        make_curation_ingest_batch_fn,
+    )
+
+    base = ("a perfectly ordinary paragraph with enough distinct "
+            "words to pass the quality gate and contribute value "
+            "to the corpus in every measurable way today")
+    out_dir = str(tmp_path / "docs")
+    process = make_curation_ingest_batch_fn(
+        out_dir, str(tmp_path / "index"), benchmark=_bench(spark),
+        decontaminate_n=N, min_words=20)
+    process(spark.createDataFrame(
+        [(1, "first " + base, "web"), (2, "second " + base, "web")],
+        ["doc_id", "text", "source"]), 0)
+
+    batch = spark.createDataFrame(
+        [(3, "first " + base, "web"),          # history duplicate
+         (4, "third " + base, "web"),          # novel
+         (5, "third " + base, "web"),          # within-batch duplicate
+         (6, "too short", "web")],             # Gopher drop
+        ["doc_id", "text", "source"])
+    sc = spark.sparkContext
+    group = f"ingest-job-count-{id(batch)}"
+    sc.setJobGroup(group, "ingest batch against history")
+    try:
+        process(batch, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= BATCH_JOBS, jobs
+    spark.catalog.refreshByPath(out_dir)
+    ids = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
+    assert len(ids) == 3 and {1, 2} <= ids and len(ids & {4, 5}) == 1
 
 
 def test_ingest_loop_audit_lineage(spark, tmp_path):
@@ -626,18 +478,18 @@ def test_stream_audit_reasons_use_extracted_text(spark, tmp_path):
 
 def test_absent_path_probe_is_silent_and_trace_free(spark, tmp_path,
                                                     capfd):
-    """Verdict r15 #6: probing a not-yet-existing fingerprint/bloom
+    """Verdict r15 #6: probing a not-yet-existing fingerprint index
     dir must not spray a JVM WARN stack (FileStreamSink.hasMetadata's
     80-line FileNotFoundException fragment led BENCH_r15's stderr
     tail). The bootstrap probe now answers absence with one
     Hadoop-FS exists() RPC before any read planning — so a sweep's
     stderr tail holds only ordinary log lines."""
-    from big_data_bowl___2023_spark.streaming.curation import (
-        _read_parquet_if_present,
+    from big_data_bowl___2023_spark.sources.io import (
+        read_parquet_if_present,
     )
     capfd.readouterr()                         # drain prior output
     missing = str(tmp_path / "never_written_fps")
-    assert _read_parquet_if_present(spark, missing) is None
+    assert read_parquet_if_present(spark, missing) is None
     err = capfd.readouterr().err
     assert "FileNotFoundException" not in err
     assert "FileStreamSink" not in err
@@ -645,9 +497,9 @@ def test_absent_path_probe_is_silent_and_trace_free(spark, tmp_path,
     # present-dir behavior unchanged: a real parquet dir still reads
     good = str(tmp_path / "present")
     spark.range(3).write.parquet(good)
-    df = _read_parquet_if_present(spark, good)
+    df = read_parquet_if_present(spark, good)
     assert df is not None and df.count() == 3
     # and an existing-but-empty dir still reads as the bootstrap state
     empty = str(tmp_path / "empty_dir")
     (tmp_path / "empty_dir").mkdir()
-    assert _read_parquet_if_present(spark, empty) is None
+    assert read_parquet_if_present(spark, empty) is None

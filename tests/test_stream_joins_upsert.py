@@ -94,3 +94,42 @@ def test_foreach_batch_upsert_converges(spark):
                for r in spark.read.parquet(table).collect()}
         assert got == {(1, 0, "a1"), (2, 1, "b0"),
                        (3, 0, "c0"), (4, 1, "d0")}
+
+
+def test_foreach_batch_upsert_read_failure_keeps_table(spark, tmp_path,
+                                                       monkeypatch):
+    """A transient read failure on an ESTABLISHED table fails the
+    query and leaves the table as it was — it is never mistaken for
+    an absent table and bootstrapped over with the batch's rows."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameReader
+
+    src, table, ckpt = (str(tmp_path / d) for d in ("src", "table",
+                                                    "ckpt"))
+    rows = [(k, k % 2, f"v{k}") for k in range(10)]
+    (spark.createDataFrame(rows, ["k", "p", "val"])
+     .write.partitionBy("p").parquet(table))
+    (spark.createDataFrame([(42, 0, "new")], ["k", "p", "val"])
+     .coalesce(1).write.parquet(src))
+
+    orig = DataFrameReader.parquet
+    faults = []
+
+    def flaky(self, *paths, **kw):
+        if not faults and any(table in str(p) for p in paths):
+            faults.append(paths)
+            raise RuntimeError("injected transient storage failure")
+        return orig(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", flaky)
+    stream = spark.readStream.schema(
+        spark.read.parquet(src).schema).parquet(src)
+    q = foreach_batch_upsert(stream, table, ["k"], "p", ckpt)
+    with pytest.raises(Exception, match="injected transient"):
+        q.awaitTermination()
+    monkeypatch.undo()
+
+    assert faults
+    spark.catalog.refreshByPath(table)
+    got = {(r.k, r.val) for r in spark.read.parquet(table).collect()}
+    assert got == {(k, v) for k, _, v in rows}

@@ -493,7 +493,7 @@ def codec_floor_legs() -> None:
 def stream_ingest_legs(spark, docs0, scales) -> None:
     """Streaming curation-ingest scale legs (verdict r13 #3): the
     real ``make_curation_ingest_batch_fn`` loop — lease, commit
-    gates, Bloom-gated against-history anti-join, curated/index
+    gates, against-history anti-join, curated/index
     appends — run at growing corpus scales with a FIXED batch count
     (4), i.e. growing batch size, which is how a 100 TB backfill
     actually shapes its micro-batches. Per scale and per mode
